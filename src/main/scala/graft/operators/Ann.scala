@@ -64,44 +64,24 @@ object Ann {
 
   /** Per-cell mean centroids ("trained" coarse quantizer — the given
     * cell assignment plays the role of a k-means codebook). Means are
-    * exact DECIMAL(27,10) arithmetic per dimension so centroid doubles
-    * are independent of aggregation order; since r18 the decimal runs
-    * as BIGINT tick sums ([[graft.plans.DecTicks]]: 21-bit-split
-    * unscaled sums, exact for ≤2^42 rows per cell — far beyond any
-    * training sample — recombined per GROUP by
-    * [[graft.plans.TicksMeanDouble]], bit-identical by construction
-    * and property-proven against the decimal-cast chain). The measured
-    * win: the old per-row×dim `cast(double as decimal(27,10))` bottomed
-    * out in Double.toString → BigDecimal parse plus a non-compact
-    * Decimal buffer rewrite per update. The `dim` per-dimension means
-    * stay parallel aggregates in ONE groupBy(cell) — a posexplode would
-    * 64× the corpus and add a (cell, pos) shuffle before the per-cell
-    * one. */
-  def centroids(corpus: DataFrame, dim: Int = 64): DataFrame = {
-    val aggs = tickSumCols(i => element_at(col("ce"), i + 1), dim) :+
-      count(lit(1)).as("_tn")
-    corpus
-      .groupBy(col("cell"))
-      .agg(aggs.head, aggs.tail: _*)
-      .select(col("cell"),
-        array((0 until dim).map(i => tickMean(i, col("_tn"))): _*).as("ce"))
-  }
+    * exact DECIMAL(27,10) arithmetic per dimension, so centroid doubles
+    * are independent of aggregation order. Each cell's whole mean array
+    * is ONE [[graft.plans.TickMeans]] aggregate (`graft_tick_means`):
+    * a fixed long buffer of split-tick lane sums per dimension,
+    * recombined per GROUP into the exact decimal mean — bit-identical
+    * to the decimal-cast chain (property-proven in ExprProps) and
+    * guarded against the 2^42-rows-per-cell bound of its sums. One
+    * aggregate keeps the plan narrow whatever `dim` is; a posexplode
+    * would 64× the corpus and add a (cell, pos) shuffle before the
+    * per-cell one. */
+  def centroids(corpus: DataFrame, dim: Int = 64): DataFrame =
+    corpus.groupBy(col("cell"))
+      .agg(tickMeans(col("ce"), dim).as("ce"))
 
-  private val TickM21 = (1L << 21) - 1
-
-  /** The three split-tick BIGINT sums per dimension lane (see
-    * [[centroids]]); `elem(i)` supplies the lane's double. */
-  private def tickSumCols(elem: Int => Column, dim: Int): Seq[Column] =
-    (0 until dim).flatMap { i =>
-      val t = call_function("graft_dec_ticks", elem(i).cast("double"))
-      Seq(sum(shiftright(t, 42)).as(s"_ts0_$i"),
-        sum(shiftright(t, 21).bitwiseAND(lit(TickM21))).as(s"_ts1_$i"),
-        sum(t.bitwiseAND(lit(TickM21))).as(s"_ts2_$i"))
-    }
-
-  private def tickMean(i: Int, n: Column): Column =
-    call_function("graft_ticks_mean",
-      col(s"_ts0_$i"), col(s"_ts1_$i"), col(s"_ts2_$i"), n)
+  /** The per-element exact means of the first `dim` elements of `arr`
+    * (see [[centroids]]). */
+  private def tickMeans(arr: Column, dim: Int): Column =
+    call_function("graft_tick_means", arr, lit(dim))
 
   /** IVF-style ANN: probe the nearest `nprobe` centroid cells only, then
     * exact top-k within the probed cells. The centroid table (cells ×
@@ -266,20 +246,22 @@ object Ann {
     * Lloyd's iterations, Spark-shaped: per iteration the KB-sized
     * codebook broadcasts, assignment is a scan-speed argmax
     * ([[assignCells]]), and the update is ONE map-side-combined
-    * groupBy(cell) whose state is k×dim DECIMAL partials — the corpus
-    * crosses the network zero times per iteration. With cosine
-    * assignment the per-cell MEAN is the exact maximizer of the
-    * spherical objective Σ cos(x, c_cell) (the mean is parallel to Σx,
-    * and cos(x, ·) is scale-invariant), so the objective is monotone
-    * non-decreasing per iteration — property-tested in LlmOpsSpec.
+    * groupBy(cell) whose state is one fixed (4·dim+1)-long tick buffer
+    * per cell ([[centroids]]) — the corpus crosses the network zero
+    * times per iteration. With cosine assignment the per-cell MEAN is
+    * the exact maximizer of the spherical objective Σ cos(x, c_cell)
+    * (the mean is parallel to Σx, and cos(x, ·) is scale-invariant), so
+    * the objective is monotone non-decreasing per iteration —
+    * property-tested in LlmOpsSpec.
     *
     * Engine-portable by construction, the same way the rest of the ANN
     * tier is: init picks the k corpus vectors with the smallest salted
     * md5(id) via a distributed TakeOrdered (`orderBy.limit(k)` — no
     * global sort task), assignment compares 1e-6-quantized cosines with
-    * id ties, and centroid means accumulate in DECIMAL(27,10) so the
-    * resulting doubles are independent of partition order — the DuckDB
-    * oracle unrolls the same iterations and hash-matches. A cell that
+    * id ties, and centroid means are exact DECIMAL(27,10) arithmetic
+    * (integer tick sums) so the resulting doubles are independent of
+    * partition order — the DuckDB oracle unrolls the same iterations
+    * and hash-matches. A cell that
     * loses all members drops out of the codebook (k shrinks), exactly
     * as the SQL twin's GROUP BY does.
     *
@@ -287,7 +269,7 @@ object Ann {
     * [[graft.operators.Sampling.stratifiedSample]] upstream — rate
     * choice is corpus-dependent), then run the final [[assignCells]]
     * pass over the full corpus; each training iteration costs one
-    * sample scan + one k×dim aggregate. */
+    * sample scan + one k-group aggregate of one mean array each. */
   def kmeansCodebook(corpus: DataFrame, k: Int, iters: Int, dim: Int = 64,
       seed: String = "km"): DataFrame = {
     require(k > 0 && iters >= 0, s"kmeansCodebook: k=$k iters=$iters")
@@ -325,7 +307,8 @@ object Ann {
   // Engine-portable like the rest of the tier: subspace distances are
   // per-term-floored integer sums (Σ_i ⌊(a_i−b_i)²·1e6⌋ — order-free),
   // codebook training is deterministic hash-seeded Lloyd's with the same
-  // DECIMAL(27,10) means as [[centroids]], and ties break by cell id,
+  // exact DECIMAL(27,10) means as [[centroids]] (one graft_tick_means
+  // aggregate per (sub, cell)), and ties break by cell id,
   // so a SQL twin unrolling the same iterations hash-matches the codes,
   // the distances, and the final ranking bit-for-bit.
 
@@ -363,23 +346,21 @@ object Ann {
       .select(col("corpus_id"), col("sub"), col("m.cell").as("cell"),
         col("m.d").as("d"), col("sv"))
 
-  /** Per-(sub, cell) DECIMAL(27,10) means — [[centroids]] keyed by
-    * subspace (same BIGINT tick-sum form, same exactness argument); a
-    * cell that loses every member drops out (codes never reference it,
+  /** Per-(sub, cell) exact DECIMAL(27,10) means — [[centroids]] keyed
+    * by subspace: one `graft_tick_means` aggregate over the `sd`-wide
+    * subvectors (same exactness argument, same 2^42-row guard); a cell
+    * that loses every member drops out (codes never reference it,
     * search fills its lut slot with a sentinel). */
-  private def pqMeans(assigned: DataFrame, sd: Int): DataFrame = {
-    val aggs = tickSumCols(i => element_at(col("sv"), i + 1), sd) :+
-      count(lit(1)).as("_tn")
+  private[graft] def pqMeans(assigned: DataFrame, sd: Int): DataFrame =
     assigned.groupBy(col("sub"), col("cell"))
-      .agg(aggs.head, aggs.tail: _*)
-      .select(col("sub"), col("cell"),
-        array((0 until sd).map(i => tickMean(i, col("_tn"))): _*).as("sc"))
-  }
+      .agg(tickMeans(col("sv"), sd).as("sc"))
 
   /** Train the m per-subspace codebooks: deterministic md5-seeded
     * initial cells, `iters` Lloyd rounds. Per round the KB-sized
-    * codebook broadcasts and the corpus pays one fixed-width
-    * (corpus × m)-row exchange — at 100 TB, train on a sampled slice
+    * codebook broadcasts, the corpus pays one fixed-width
+    * (corpus × m)-row assignment exchange, and the means are one
+    * (sub, cell)-keyed aggregate of one tick buffer per group
+    * ([[pqMeans]]) — at 100 TB, train on a sampled slice
     * (same guidance as [[kmeansCodebook]]) and encode the full corpus
     * once. Returns (sub, cell, sc). */
   def pqCodebook(corpus: DataFrame, iters: Int, dim: Int = 64, m: Int = 8,

@@ -1,8 +1,12 @@
 package graft.plans
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /** `graft_dec_ticks(x)`: the unscaled BIGINT of `CAST(x AS
@@ -12,15 +16,14 @@ import org.apache.spark.sql.types._
   * `Double.toString` → `BigDecimal` parse → `setScale` → unscaled-
   * byte-array round trip per row.
   *
-  * This is the ANN training tier's exact-mean workhorse: the centroid
-  * aggregations sum these ticks as plain BIGINTs (codegen'd long adds
-  * in the hash-aggregate buffer) instead of DECIMAL(27,10) (non-compact
-  * Decimal — a BigDecimal allocation plus an unscaled-BigInteger
-  * byte-array rewrite per row per dimension in the unsafe buffer), and
-  * [[TicksMeanDouble]] rebuilds the exact decimal mean per GROUP. The
-  * result doubles are bit-identical — property-proven against Spark's
-  * own Cast in ExprProps over randoms and adversarial near-midpoint
-  * values.
+  * This is the ANN training tier's exact-mean workhorse: the
+  * [[TickMeans]] aggregate sums these ticks as plain longs in its
+  * buffer instead of DECIMAL(27,10) (non-compact Decimal — a
+  * BigDecimal allocation plus an unscaled-BigInteger byte-array rewrite
+  * per row per dimension in the unsafe buffer) and rebuilds the exact
+  * decimal mean per GROUP. The tick values are bit-identical to the
+  * cast's — property-proven against Spark's own Cast in ExprProps over
+  * randoms and adversarial near-midpoint values.
   *
   * Fast path: the double's exact value m·2^e is scaled by
   * 1e10 = 5^10·2^10 in 128-bit integer arithmetic (P = m·5^10;
@@ -133,52 +136,142 @@ object DecTicks {
   }
 }
 
-/** `graft_ticks_mean(s0, s1, s2, n)`: the exact DECIMAL mean rebuilt
-  * from 21-bit-split tick sums — bit-identical to
-  * `CAST(SUM(CAST(x AS DECIMAL(27,10))) AS DOUBLE) / COUNT(1)`.
+/** `graft_tick_means(arr, dim)`: per group, the exact DECIMAL(27,10)
+  * mean of each of the first `dim` elements of an `array<double>` (or
+  * `array<float>`, widened exactly) column — bit-identical, lane by
+  * lane, to `CAST(SUM(CAST(arr[i] AS DECIMAL(27,10))) AS DOUBLE) /
+  * COUNT(1)`. The ANN training tier's centroid and PQ means.
   *
-  * The three inputs are `SUM(t >> 42)`, `SUM((t >> 21) & 0x1FFFFF)`,
-  * `SUM(t & 0x1FFFFF)` over per-row ticks t = [[DecTicks]](x): each
-  * part is < 2^21 in magnitude, so the BIGINT sums are exact for up to
-  * 2^42 (≈4.4e12) rows per group — beyond any training-sample group
-  * this tier produces (the operators train on sampled slices at scale;
-  * the bound is documented at the call sites). Recombination
-  * Σt = (Σp0)·2^42 + (Σp1)·2^21 + Σp2 runs per GROUP in BigInteger,
-  * and the final double is `new BigDecimal(Σt, 10).doubleValue / n` —
-  * the very calls Spark's decimal-sum + cast-to-double path bottoms
-  * out in, so rounding is identical by construction. */
-case class TicksMeanDouble(p0: Expression, p1: Expression, p2: Expression,
-    cnt: Expression) extends QuaternaryExpression {
+  * ONE aggregate per mean array: the buffer is a fixed `long[4·dim+1]`
+  * holding, per lane, the three 21-bit parts of the [[DecTicks]] sum
+  * (Σ t>>42, Σ (t>>21)&0x1FFFFF, Σ t&0x1FFFFF) and the lane's non-null
+  * count, then the group's row count. A plan that spells the same sums
+  * as 3·dim `sum` columns (193 aggregate columns at dim 64) is far past
+  * `spark.sql.codegen.maxFields`, and its width, not its rows, sets
+  * its cost.
+  *
+  * Lane rules (those of the `sum`/`count(1)` form): a NULL or
+  * NaN/±Inf element is skipped in its lane (the cast yields NULL); an
+  * all-skipped lane's mean is NULL; the divisor counts every row of
+  * the group, NULL arrays included; an array shorter than `dim` fails,
+  * as element_at does in ANSI mode; the [[DecTicks]] throw domains
+  * (|x| ≥ 1e17, |x| ≳ 9.2e8) stay.
+  *
+  * Bound: each part is < 2^21 in magnitude, so a lane's BIGINT part
+  * sums are exact for up to 2^42 (≈4.4e12) rows per group. The buffer
+  * carries the row count, and a group that passes 2^42 rows — in
+  * `update` or in a partial `merge` — throws instead of letting the
+  * sums wrap. Recombination Σt = (Σp0)·2^42 + (Σp1)·2^21 + Σp2 runs
+  * per GROUP in BigInteger, and the mean is `new BigDecimal(Σt,
+  * 10).doubleValue / n` — the calls Spark's decimal-sum + cast-to-double
+  * path bottoms out in, so rounding is identical by construction. */
+case class TickMeans(child: Expression, dim: Int,
+    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+  extends TypedImperativeAggregate[Array[Long]]
+  with UnaryLike[Expression] {
 
-  override def first: Expression = p0
-  override def second: Expression = p1
-  override def third: Expression = p2
-  override def fourth: Expression = cnt
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case _ if dim < 1 => TypeCheckResult.TypeCheckFailure(s"$prettyName requires dim >= 1, got $dim")
+    case ArrayType(DoubleType | FloatType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires an array<double> or array<float> argument, got ${t.catalogString}")
+  }
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (children.forall(_.dataType == LongType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires four bigint arguments, got " +
-        children.map(_.dataType.catalogString).mkString(", "))
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
+  override def nullable: Boolean = false
+  override def prettyName: String = "graft_tick_means"
 
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_ticks_mean"
+  private lazy val floatElems = child.dataType match {
+    case ArrayType(FloatType, _) => true
+    case _ => false
+  }
+  private def nAt: Int = 4 * dim
 
-  override def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any =
-    TicksMeanDouble.mean(a.asInstanceOf[Long], b.asInstanceOf[Long],
-      c.asInstanceOf[Long], d.asInstanceOf[Long])
+  // lane i at [4i, 4i+4): Σp0, Σp1, Σp2, non-null count; row count at 4·dim
+  override def createAggregationBuffer(): Array[Long] = new Array[Long](nAt + 1)
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, c, d) =>
-      s"${ev.value} = graft.plans.TicksMeanDouble.mean($a, $b, $c, $d);")
+  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
+    buf(nAt) = TickMeans.checkRows(buf(nAt) + 1)
+    val v = child.eval(input)
+    if (v != null) {
+      val a = v.asInstanceOf[ArrayData]
+      if (a.numElements < dim)
+        throw new ArrayIndexOutOfBoundsException(
+          s"$prettyName: index ${a.numElements + 1} is out of bounds; the array has " +
+            s"${a.numElements} elements but dim is $dim")
+      var i = 0
+      while (i < dim) {
+        if (!a.isNullAt(i)) {
+          val d = if (floatElems) a.getFloat(i).toDouble else a.getDouble(i)
+          if (!java.lang.Double.isNaN(d) && !java.lang.Double.isInfinite(d)) {
+            val t = DecTicks.ticks(d)
+            val o = 4 * i
+            buf(o) += t >> 42
+            buf(o + 1) += (t >> 21) & TickMeans.M21
+            buf(o + 2) += t & TickMeans.M21
+            buf(o + 3) += 1
+          }
+        }
+        i += 1
+      }
+    }
+    buf
+  }
 
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression, q: Expression): TicksMeanDouble =
-    copy(p0 = f, p1 = s, p2 = t, cnt = q)
+  override def merge(buf: Array[Long], other: Array[Long]): Array[Long] = {
+    TickMeans.checkRows(buf(nAt) + other(nAt))
+    var i = 0
+    while (i < buf.length) { buf(i) += other(i); i += 1 }
+    buf
+  }
+
+  override def eval(buf: Array[Long]): Any = {
+    val n = buf(nAt)
+    val out = new Array[Any](dim)
+    var i = 0
+    while (i < dim) {
+      val o = 4 * i
+      if (buf(o + 3) > 0) out(i) = TickMeans.mean(buf(o), buf(o + 1), buf(o + 2), n)
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  override def serialize(buf: Array[Long]): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(8 * buf.length)
+    bb.asLongBuffer().put(buf)
+    bb.array()
+  }
+
+  override def deserialize(bytes: Array[Byte]): Array[Long] = {
+    val buf = createAggregationBuffer()
+    require(bytes.length == 8 * buf.length,
+      s"$prettyName: buffer of ${bytes.length} bytes, expected ${8 * buf.length}")
+    java.nio.ByteBuffer.wrap(bytes).asLongBuffer().get(buf)
+    buf
+  }
+
+  override def withNewMutableAggBufferOffset(o: Int): TickMeans =
+    copy(mutableAggBufferOffset = o)
+  override def withNewInputAggBufferOffset(o: Int): TickMeans =
+    copy(inputAggBufferOffset = o)
+  override protected def withNewChildInternal(newChild: Expression): TickMeans =
+    copy(child = newChild)
 }
 
-object TicksMeanDouble {
+object TickMeans {
+  private val M21 = (1L << 21) - 1
+
+  /** Rows per group for which the 21-bit part sums stay exact. */
+  val MaxRows: Long = 1L << 42
+
+  private def checkRows(n: Long): Long =
+    if (n > MaxRows) throw new ArithmeticException(
+      s"graft_tick_means: a group of $n rows passes the 2^42-row bound " +
+        "of its exact tick sums")
+    else n
+
+  /** The exact decimal mean Σt / n, Σt = s0·2^42 + s1·2^21 + s2. */
   def mean(s0: Long, s1: Long, s2: Long, n: Long): Double = {
     val total = java.math.BigInteger.valueOf(s0).shiftLeft(21)
       .add(java.math.BigInteger.valueOf(s1)).shiftLeft(21)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{CollectList, MaxBy}
-import org.apache.spark.sql.types.{BinaryType, StringType}
+import org.apache.spark.sql.types.{BinaryType, IntegerType, StringType}
 
 import graft.functions.Patterns
 
@@ -89,9 +89,13 @@ object GraftFunctions {
       "unscaled BIGINT of CAST(x AS DECIMAL(27,10)) — the exact-mean tier's tick count, string-free", 1) {
       case Seq(d) => DecTicks(d)
     },
-    fn("graft_ticks_mean",
-      "exact DECIMAL(27,10) mean from 21-bit-split tick sums: bit-identical to CAST(SUM(dec) AS DOUBLE)/COUNT(1)", 4) {
-      case Seq(a, b, c, n) => TicksMeanDouble(a, b, c, n)
+    fn("graft_tick_means",
+      "aggregate: per-element exact DECIMAL(27,10) means of the first dim elements of a " +
+        "double/float array — bit-identical to CAST(SUM(CAST(arr[i] AS DECIMAL(27,10))) AS DOUBLE)/COUNT(1)", 2) {
+      // dim sizes the aggregation buffer, so it is fixed at plan time
+      case Seq(a, Literal(dim: Int, IntegerType)) => TickMeans(a, dim)
+      case Seq(_, d) =>
+        throw new IllegalArgumentException(s"graft_tick_means: dim must be an INT literal, got $d")
     },
     fn("graft_wav_pcm",
       "[n_frames, peak_abs, sum_sq, n_zero_cross] of a 16-bit PCM WAV blob; NULL if not one", 1) {

@@ -154,6 +154,38 @@ class PlanSpec extends AnyFunSuite {
     assert(!ivf.contains("SortMergeJoin"), ivf)
   }
 
+  test("centroid training: one graft_tick_means aggregate per mean array, exchanges unchanged") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    // the plan-width tripwire: each centroid / PQ mean array is ONE
+    // aggregate function, never the per-lane `_ts*_` sum columns (3×dim
+    // of them per array) whose width, not rows, set the training cost
+    val corpus = graft.sources.Tables(spark, sfDir).embeddings.filter(col("vec_id") >= 5)
+      .select(col("vec_id").as("corpus_id"), col("embedding").as("ce"))
+    val cases = Seq(
+      // name, plan, exchanges (audited before and after the rewrite),
+      // tick aggregates (partial + final per mean step)
+      ("q_sim_kmeans", SparkEntry.queries("q_sim_kmeans")(spark, sfDir), 2, 4),
+      ("pqCodebook", graft.operators.Ann.pqCodebook(corpus, iters = 2), 5, 6))
+    for ((name, df, exchanges, tickAggs) <- cases) {
+      val plan = physicalPlan(df)
+      val aggs = df.queryExecution.sparkPlan.collect { case a: BaseAggregateExec => a }
+        .filter(_.aggregateExpressions.exists(_.aggregateFunction.isInstanceOf[graft.plans.TickMeans]))
+      assert(aggs.length == tickAggs, s"$name: ${aggs.length} tick-mean aggregates:\n$plan")
+      aggs.foreach(a => assert(a.aggregateExpressions.length == 1,
+        s"$name: a mean array must be one aggregate function:\n$a"))
+      assert(!plan.contains("_ts") && !plan.contains("graft_dec_ticks"),
+        s"$name: per-lane tick-sum columns are back:\n$plan")
+      val n = "Exchange hashpartitioning".r.findAllIn(plan).length +
+        "Exchange rangepartitioning".r.findAllIn(plan).length
+      assert(n == exchanges, s"$name: $n exchanges, audited $exchanges:\n$plan")
+    }
+    // q_sim_pq serves a checkpointed codebook; its lazy plan is unchanged
+    val pq = physicalPlan(SparkEntry.queries("q_sim_pq")(spark, sfDir))
+    assert("Exchange hashpartitioning".r.findAllIn(pq).length +
+      "Exchange rangepartitioning".r.findAllIn(pq).length == 3, pq)
+  }
+
   test("persisted IVF index: query path scans only the codebook and the probed cells") {
     val df = QueriesLlm.simIvfProbe2(spark, sfDir) // builds + loads the index
     val plan = physicalPlan(df)

@@ -240,6 +240,68 @@ object ExprProps extends Properties("CompiledSimilarityExprs") {
     nulls && zeros && exact && longDomain && overflow
   }
 
+  // ---- graft_tick_means: the exact centroid/PQ mean aggregate ------------
+  //
+  // The ground truth is the pre-r18 formula, verbatim: per lane
+  // CAST(SUM(CAST(x AS DECIMAL(27,10))) AS DOUBLE) / COUNT(1). Inputs
+  // mix in every lane rule the aggregate must keep: NULL elements,
+  // NULL arrays (counted in n, no lane), NaN/±Inf (the cast's NULL),
+  // and one lane that never holds a finite value (its mean is NULL).
+  // Three round-robin input partitions split every group, so partial
+  // buffers are serialized, shuffled, deserialized and merged.
+
+  /** A lane value the cast turns into NULL. */
+  private def skipped(rnd: java.util.Random): Option[Double] =
+    rnd.nextInt(4) match {
+      case 0 => None
+      case 1 => Some(Double.NaN)
+      case 2 => Some(Double.PositiveInfinity)
+      case _ => Some(Double.NegativeInfinity)
+    }
+
+  /** `dim` lanes: mostly embedding-magnitude values, a few rough ones,
+    * some skipped; `dead` lanes are always skipped. */
+  private def genVec(rnd: java.util.Random, dim: Int, dead: Set[Int]): Option[Seq[Option[Double]]] =
+    if (rnd.nextInt(12) == 0) None
+    else Some((0 until dim).map { i =>
+      if (dead(i)) skipped(rnd)
+      else rnd.nextInt(14) match {
+        case 0 => skipped(rnd)
+        case 1 => Some(Math.scalb(rnd.nextDouble() - 0.5, rnd.nextInt(40) - 35))
+        case _ => Some((rnd.nextDouble() - 0.5) * 2.0)
+      }
+    })
+
+  /** The pre-r18 decimal-cast chain, keyed like the operator under test. */
+  private def decimalMeans(df: org.apache.spark.sql.DataFrame, keys: Seq[String],
+      arr: String, dim: Int) = {
+    val means = (0 until dim).map(i =>
+      (sum(element_at(col(arr), i + 1).cast("decimal(27,10)")).cast("double") /
+        count(lit(1))).as(s"c$i"))
+    df.groupBy(keys.map(col): _*)
+      .agg(means.head, means.tail: _*)
+      .select(keys.map(col) :+ array((0 until dim).map(i => col(s"c$i")): _*).as(arr): _*)
+  }
+
+  private def meanBits(r: org.apache.spark.sql.Row, i: Int): Seq[Option[Long]] =
+    r.getList[java.lang.Double](i).toArray.toSeq.map(v =>
+      Option(v.asInstanceOf[java.lang.Double]).map(d => java.lang.Double.doubleToLongBits(d)))
+
+  /** Rows of `got` and `want` (same key columns first, means last) are
+    * equal key-for-key and bit-for-bit. */
+  private def sameMeans(got: org.apache.spark.sql.DataFrame,
+      want: org.apache.spark.sql.DataFrame, nKeys: Int): Prop = {
+    val order = got.columns.take(nKeys).map(col).toSeq
+    val g = got.orderBy(order: _*).collect()
+    val w = want.orderBy(order: _*).collect()
+    Prop(g.length == w.length) :| s"${g.length} groups, want ${w.length}" &&
+      Prop.all(g.zip(w).map { case (gr, wr) =>
+        Prop((0 until nKeys).forall(k => gr.get(k) == wr.get(k)) &&
+          meanBits(gr, nKeys) == meanBits(wr, nKeys)) :|
+          s"group ${gr.toSeq.take(nKeys)}: got=${gr.get(nKeys)} want=${wr.get(nKeys)}"
+      }: _*)
+  }
+
   property("tick-sum centroid means ≡ decimal-cast chain, bitwise, on " +
     "random corpora") =
     Prop.forAll(Gen.choose(0L, Long.MaxValue), Gen.choose(2, 5),
@@ -247,31 +309,72 @@ object ExprProps extends Properties("CompiledSimilarityExprs") {
       import TestSpark.spark.implicits._
       val rnd = new java.util.Random(seed0)
       val n = 40 + rnd.nextInt(60)
+      // cell 0's last lane never holds a finite value
       val rows = (0 until n).map { id =>
-        // mostly embedding-magnitude values, a few rough ones
-        val v = Array.fill(dim)(rnd.nextInt(10) match {
-          case 0 => Math.scalb(rnd.nextDouble() - 0.5, rnd.nextInt(40) - 35)
-          case _ => (rnd.nextDouble() - 0.5) * 2.0
-        })
-        (id.toLong, id % cells, v.toSeq)
+        val cell = id % cells
+        (id.toLong, cell, genVec(rnd, dim, if (cell == 0) Set(dim - 1) else Set.empty))
       }
-      val df = rows.toDF("corpus_id", "cell", "ce")
+      val df = rows.toDF("corpus_id", "cell", "ce").repartition(3)
       val got = graft.operators.Ann.centroids(df, dim)
-        .orderBy("cell").collect()
-      // the pre-r18 formula, verbatim
-      val means = (0 until dim).map(i =>
-        (sum(element_at(col("ce"), i + 1).cast("decimal(27,10)")).cast("double") /
-          count(lit(1))).as(s"c$i"))
-      val want = df.groupBy(col("cell"))
-        .agg(means.head, means.tail: _*)
-        .select(col("cell"), array((0 until dim).map(i => col(s"c$i")): _*).as("ce"))
-        .orderBy("cell").collect()
-      val pairs = got.zip(want)
-      Prop.all(pairs.map { case (g, w) =>
-        val gc = g.getSeq[Double](1).map(java.lang.Double.doubleToLongBits)
-        val wc = w.getSeq[Double](1).map(java.lang.Double.doubleToLongBits)
-        Prop(g.getInt(0) == w.getInt(0) && gc == wc) :|
-          s"cell ${g.get(0)}: got=${g.getSeq[Double](1)} want=${w.getSeq[Double](1)}"
-      }: _*) :| s"n=$n dim=$dim cells=$cells"
+      val dead = got.filter(col("cell") === 0).collect().head
+      Prop(df.rdd.getNumPartitions == 3) :| "three input partitions" &&
+        Prop(dead.getList[java.lang.Double](1).get(dim - 1) == null) :|
+          s"all-skipped lane must be NULL: $dead" &&
+        sameMeans(got, decimalMeans(df, Seq("cell"), "ce", dim), 1) :|
+          s"n=$n dim=$dim cells=$cells"
     }
+
+  property("tick-sum (sub, cell) PQ means ≡ decimal-cast chain, bitwise") =
+    Prop.forAll(Gen.choose(0L, Long.MaxValue), Gen.choose(1, 4)) { (seed0, sd) =>
+      import TestSpark.spark.implicits._
+      val rnd = new java.util.Random(seed0)
+      val rows = (0 until 60 + rnd.nextInt(60)).map { id =>
+        (id % 3, rnd.nextInt(4), genVec(rnd, sd, Set.empty))
+      }
+      val df = rows.toDF("sub", "cell", "sv").repartition(3)
+      sameMeans(graft.operators.Ann.pqMeans(df, sd),
+        decimalMeans(df, Seq("sub", "cell"), "sv", sd), 2) :| s"sd=$sd"
+    }
+
+  /** Whether running `f` throws, anywhere in the cause chain, a `T`
+    * whose message mentions `msg`. */
+  private def throwsIn[T <: Throwable](f: => Any, msg: String)(
+      implicit ct: scala.reflect.ClassTag[T]): Boolean =
+    try { f; false }
+    catch {
+      case e: Throwable =>
+        Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(c => ct.runtimeClass.isInstance(c) && String.valueOf(c.getMessage).contains(msg))
+    }
+
+  property("graft_tick_means failure domains: short arrays, |x| ≥ 1e17, " +
+    "the BIGINT tick domain, the 2^42-row bound") = {
+    import TestSpark.spark.implicits._
+    def means(vs: Seq[Double]*) = graft.operators.Ann.centroids(
+      vs.zipWithIndex.map { case (v, i) => (i.toLong, 0, v) }.toDF("corpus_id", "cell", "ce"),
+      dim = 2).collect()
+    val short = Prop(throwsIn[ArrayIndexOutOfBoundsException](
+      means(Seq(0.5, 0.25), Seq(0.5)), "out of bounds")) :| "array shorter than dim"
+    // the ANSI cast and graft_dec_ticks throw here; so does the mean
+    val overflow = Prop(throwsIn[ArithmeticException](
+      means(Seq(0.5, 1e17)), "DECIMAL(27,10)")) :| "|x| >= 1e17 throws"
+    val longDomain = Prop(throwsIn[ArithmeticException](
+      means(Seq(-9.3e8, 0.5)), "BIGINT tick domain")) :| "|x| >= ~9.2e8 throws"
+    // the row-count guard, on synthetic buffers: no 4.4e12-row input
+    val agg = TickMeans(org.apache.spark.sql.catalyst.expressions.Literal(
+      null, org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType)), 2)
+    def buf(n: Long) = {
+      val b = agg.createAggregationBuffer()
+      b(b.length - 1) = n
+      agg.deserialize(agg.serialize(b))
+    }
+    val half = TickMeans.MaxRows / 2
+    val atBound = Prop(agg.merge(buf(half), buf(half)).last == TickMeans.MaxRows) :|
+      "exactly 2^42 rows merge"
+    val pastBound = Prop(throwsIn[ArithmeticException](
+      agg.merge(buf(half), buf(half + 1)), "2^42")) :| "merge past 2^42 rows throws"
+    val updatePast = Prop(throwsIn[ArithmeticException](
+      agg.update(buf(TickMeans.MaxRows), null), "2^42")) :| "update past 2^42 rows throws"
+    short && overflow && longDomain && atBound && pastBound && updatePast
+  }
 }
