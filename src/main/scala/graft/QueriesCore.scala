@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,7 +21,7 @@ object QueriesCore {
 
   type Q = (SparkSession, String) => DataFrame
 
-  import graft.sources.Tables
+  import graft.sources.{Sinks, Store, Tables}
 
   /** Scale-2 unscaled value of a 2-decimal money/rate column: 38.97 → 3897L.
     * The source doubles carry exactly two decimal digits, so `round(x*100)`
@@ -502,28 +502,18 @@ object QueriesCore {
       idCol = "c_custkey", strCol = "c_name",
       index = s.table(servedFuzzyIndexTable(s, dir)), maxDist = 1)
 
-  /** Build-once gate for the bucketed deletion-signature index — the
-    * servedGramIndexTable convention: name keyed on (applicationId,
-    * md5(dir)) so concurrent harness runs cannot race one table and
-    * distinct corpora cannot collide; data external under /tmp
-    * (tmp-cleaner reclaimed; the warehouse would accrete across
-    * harness runs); build serialized per JVM. */
-  private def servedFuzzyIndexTable(s: SparkSession, dir: String): String = {
-    val key = graft.sources.Sinks.servedKey(s, dir)
-    val table = s"graft_fuzzy_idx_${key.replace('/', '_')}"
-    fuzzyIndexBuildLock.synchronized {
-      if (!s.catalog.tableExists(table))
-        graft.sources.Sinks.saveBucketed(
-          operators.Fuzzy.signatureIndex(
-            Tables(s, dir).customer.filter(col("c_custkey") % 10 =!= 0)
-              .select(col("c_custkey"), col("c_name")),
-            idCol = "c_custkey", strCol = "c_name", maxDist = 1),
-          table, Seq("sig"), 32,
-          path = Some(s"/tmp/graft_fuzzy_index/$key"))
-    }
-    table
-  }
-  private val fuzzyIndexBuildLock = new Object
+  /** The bucketed deletion-signature index, a [[Store.once]] store
+    * with its data under the store path. */
+  private def servedFuzzyIndexTable(s: SparkSession, dir: String): String =
+    Store.table(Store.once("fuzzy_index", s, dir)(p =>
+      Sinks.saveBucketed(customerSignatures(s, dir, col("c_custkey") % 10 =!= 0),
+        Store.table(p), Seq("sig"), 32, path = Some(p))))
+
+  /** Deletion signatures (maxDist 1) of the customer names `keep` selects. */
+  private def customerSignatures(s: SparkSession, dir: String, keep: Column): DataFrame =
+    operators.Fuzzy.signatureIndex(
+      Tables(s, dir).customer.filter(keep).select(col("c_custkey"), col("c_name")),
+      idCol = "c_custkey", strCol = "c_name", maxDist = 1)
 
   /** INCREMENTAL form of [[qFuzzyJoinServed]] (r17) — the fuzzy
     * family's maintenance arm, the last standing artifact without one
@@ -549,35 +539,21 @@ object QueriesCore {
       maxDist = 1)
   }
 
-  /** Build-once gate for the base+segment pair: the base index persists
-    * bucketed on `sig` (the servedFuzzyIndexTable convention); the
-    * append segment is a plain delta-sized parquet — the probe's
-    * broadcast semi-side needs no bucket layout on either, and a
-    * bucketed rewrite per append would BE the rebuild the arm avoids.
-    * `_SUCCESS` commits the segment (flat parquet write). */
+  /** The base+segment pair as ONE [[Store.once]] store, so its marker
+    * commits both: `base/` persists bucketed on `sig` (as
+    * [[servedFuzzyIndexTable]]); `seg/` is a plain delta-sized parquet —
+    * the probe's broadcast semi-side needs no bucket layout on either,
+    * and a bucketed rewrite per append would BE the rebuild the arm
+    * avoids. Returns (base table, segment path). */
   private def servedFuzzyIncStores(s: SparkSession, dir: String)
       : (String, String) = {
-    val key = graft.sources.Sinks.servedKey(s, dir)
-    val table = s"graft_fuzzy_idx_inc_${key.replace('/', '_')}"
-    val segPath = s"/tmp/graft_fuzzy_seg/$key"
-    fuzzyIndexBuildLock.synchronized {
-      if (!s.catalog.tableExists(table))
-        graft.sources.Sinks.saveBucketed(
-          operators.Fuzzy.signatureIndex(
-            Tables(s, dir).customer
-              .filter(col("c_custkey") % 10 =!= 0 && col("c_custkey") % 10 =!= 5)
-              .select(col("c_custkey"), col("c_name")),
-            idCol = "c_custkey", strCol = "c_name", maxDist = 1),
-          table, Seq("sig"), 32,
-          path = Some(s"/tmp/graft_fuzzy_index_inc/$key"))
-      if (!graft.sources.Fs.exists(s"$segPath/_SUCCESS"))
-        operators.Fuzzy.signatureIndex(
-            Tables(s, dir).customer.filter(col("c_custkey") % 10 === 5)
-              .select(col("c_custkey"), col("c_name")),
-            idCol = "c_custkey", strCol = "c_name", maxDist = 1)
-          .write.mode("overwrite").parquet(segPath)
+    val p = Store.once("fuzzy_index_inc", s, dir) { p =>
+      val k = col("c_custkey") % 10
+      Sinks.saveBucketed(customerSignatures(s, dir, k =!= 0 && k =!= 5),
+        Store.table(s"$p/base"), Seq("sig"), 32, path = Some(s"$p/base"))
+      customerSignatures(s, dir, k === 5).write.parquet(s"$p/seg")
     }
-    (table, segPath)
+    (Store.table(s"$p/base"), s"$p/seg")
   }
 
   /** Incremental aggregate maintenance over orders: the per-customer

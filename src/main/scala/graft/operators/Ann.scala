@@ -466,8 +466,8 @@ object Ann {
     // appendIvfPqIndex left in a cell the rebuild's data doesn't touch
     // would survive and get served (and re-appended). Deleting the
     // whole store (markers included) also closes the crash window: a
-    // rebuild that dies mid-write leaves no stale coarse/_SUCCESS or
-    // _GRAFT_INC_DONE claiming completeness.
+    // rebuild that dies mid-write leaves no stale coarse/_SUCCESS
+    // claiming completeness.
     graft.sources.Fs.delete(dir)
     // the two trainings are independent and each is a chain of small
     // sequential jobs that leaves most cores idle — overlap them
@@ -484,7 +484,7 @@ object Ann {
       .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/codes")
     pqCb.write.mode("overwrite").parquet(s"$dir/pq")
     // written LAST: a partitionBy write leaves no _SUCCESS marker, so
-    // coarse/_SUCCESS is the build-complete gate callers test
+    // coarse/_SUCCESS is the build-complete check appendIvfPqIndex requires
     coarse.write.mode("overwrite").parquet(s"$dir/coarse")
   }
 

@@ -107,7 +107,8 @@ object TextIndex {
     * does NOT leave a root `_SUCCESS` the way flat parquet writes do
     * (also measured r16: a build-once gate keyed on it silently
     * rebuilt the 2.5 GB index every run), so this writes its own
-    * `_GRAFT_DONE` after the commit — gate on that. */
+    * `_GRAFT_DONE` after the commit, which [[openPositionalIndex]]
+    * requires. */
   def writePositionalIndex(postings: DataFrame, path: String,
       buckets: Int = 64, filesPerDir: Int = 8): Unit = {
     // a REBUILD must start from an empty tree: GraftSession pins

@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
 /** Hadoop-FileSystem helpers for the served-artifact stores — markers,
   * versioned-directory listings, pending clears, listing fingerprints.
   *
-  * Every build-once gate and maintenance loop in the repo keys on
-  * store-side filesystem state. Going through the Hadoop FileSystem API
+  * [[Store.once]]'s completeness marker, the ingest program's versioned
+  * stores and the maintenance loops all key on store-side filesystem
+  * state. Going through the Hadoop FileSystem API
   * instead of `java.io.File` keeps that state wherever the artifact
   * path points — local disk in this sandbox, HDFS or an object store on
   * a real cluster, resolved per path by URI scheme exactly as Spark's

@@ -19,6 +19,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *  - readers filtering on `p_date` prune partitions at planning time
   *    (`PartitionFilters` in the scan) — the property that keeps
   *    dashboard queries off the 100 TB history.
+  *
+  * Served artifact stores (indexes, models, stats dims built once per
+  * corpus) are keyed, located and gated by [[Store]], not here.
   */
 object Sinks {
 
@@ -55,29 +58,15 @@ object Sinks {
   def saveBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
     saveBucketed(df, table, Seq(key), buckets)
 
-  /** The (applicationId, corpus-dir md5) key every served artifact
-    * store uses — ONE definition (r16 review: three copies had grown
-    * across the query families, and a drift in the sanitize/keying
-    * rule would let two stores race or collide): concurrent harness
-    * runs must not race one store, and the dir component is an md5 of
-    * the RAW string because a sanitizing replaceAll would collide
-    * distinct corpora (/data/sf0.1 vs /data-sf0.1 — the round-11
-    * ADVICE). */
-  def servedKey(s: SparkSession, dir: String): String = {
-    val dirKey = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_") + "/" + dirKey
-  }
-
   /** Multi-column bucket key (e.g. a band index on (band, bk)): a join
     * on exactly these columns reads the table pre-partitioned.
     *
     * `path` (optional) makes the table EXTERNAL with its data at that
     * location instead of under the warehouse dir. Bucketing metadata
     * lives in the catalog either way (a path-only parquet read cannot
-    * carry a bucket spec), but an external /tmp location keeps
-    * harness-built throwaway indexes out of the repo-local warehouse —
-    * a per-application catalog entry dies with the session, while
+    * carry a bucket spec), but an external location keeps served
+    * indexes under their [[Store]] path instead of the warehouse — a
+    * per-application catalog entry dies with the session, while
     * warehouse DATA would otherwise accumulate across runs forever. */
   def saveBucketed(df: DataFrame, table: String, keys: Seq[String], buckets: Int,
       path: Option[String] = None): Unit = {

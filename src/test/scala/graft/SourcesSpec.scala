@@ -25,9 +25,15 @@ class SourcesSpec extends AnyFunSuite {
     val repoRoot = findGitRoot()
     assume(repoRoot.isDefined, "no enclosing git working tree")
     val repo = repoRoot.get.getPath
+    // git prints UTF-8: decode it as such, not in the JVM's default
+    // charset (ASCII under a POSIX locale garbles non-ASCII subjects)
+    def git(args: String*): String = {
+      val out = new java.io.ByteArrayOutputStream
+      assert((Process("git" +: "-C" +: repo +: args) #> out).! == 0)
+      new String(out.toByteArray, "UTF-8")
+    }
     val fmt = "%H|%T|%P|%an|%ae|%at|%cn|%ce|%ct"
-    val expected = Process(Seq("git", "-C", repo, "log", "--all",
-      s"--format=$fmt")).!!.trim.linesIterator.map { l =>
+    val expected = git("log", "--all", s"--format=$fmt").trim.linesIterator.map { l =>
       val f = l.split("\\|", -1); f(0) -> f
     }.toMap
     val got = GitRepo.walk(s"$repo/.git")
@@ -43,7 +49,7 @@ class SourcesSpec extends AnyFunSuite {
         c.committer_ts == f(8).toLong, s"committer ${c.sha}")
     }
     // subjects come through the message body intact
-    val head = Process(Seq("git", "-C", repo, "log", "-1", "--format=%H %s")).!!.trim
+    val head = git("log", "-1", "--format=%H %s").trim
     val (hsha, hsubj) = head.splitAt(40)
     assert(got.find(_.sha == hsha).exists(_.message.linesIterator.next() == hsubj.trim))
     // and the source lands in Spark as a queryable DataFrame
