@@ -478,44 +478,31 @@ object Dedup {
     * is hotter), and any residual hot bucket — a cluster of
     * near-identical docs — rebalances through [[explodePairsBalanced]]
     * instead of being dropped: exactness is the contract, so there is no
-    * maxBucket cap here. Three corpus-token shuffles (df, per-doc rank,
-    * verify count) + the candidate-sized joins — the honest price of
-    * exact semantics over the LSH pipelines' two fixed-width shuffles,
-    * still never n²; all of them key/carry the 16-byte binary digest. */
+    * maxBucket cap here. The corpus token stream pays two shuffles (the
+    * `h`-keyed df window and the per-doc rank window), the prefix tokens
+    * alone a third (their `h` buckets), and everything after the
+    * candidate dedup is candidate- or doc-sized: each candidate joins
+    * its two docs' packed digest sets and one compiled merge counts the
+    * common tokens. Still never n², and no row is ever per candidate ×
+    * token. */
   def prefixJaccardPairs(docs: DataFrame, k: Int, minJaccardQ: Long,
       blockSize: Int = 1024): DataFrame = {
     require(minJaccardQ > 0 && minJaccardQ <= 1000000L,
       s"minJaccardQ ($minJaccardQ) must be a scale-6 Jaccard in (0, 1000000]")
-    // token digests from the compiled one-pass shingler (r14,
-    // plans/ShingleMd5s.scala) — digest set identical to
-    // md5(shingled(...)) (asserted), minus the interpreted per-window
-    // transform/concat_ws/array_distinct walk that dominated the
-    // token-stream stage of this operator and every recall-truth row
-    // built on it.
-    // r18: the digest rides as 16-BYTE BINARY (unhex of the lowercase
-    // hex md5 — injective, and byte order ≡ the hex string's
-    // lexicographic order, so the (df, h) prefix ranking is unchanged).
-    // Every corpus-token shuffle of this operator keys or carries `h`,
-    // and the verify fan-out below carries one per candidate×token row
-    // — halving the digest halves the dominant shuffle's payload.
-    // Binary is safe everywhere h goes here (join keys, group keys,
-    // sort keys all compare UnsafeRow bytes); the one BinaryType trap —
-    // array_intersect's quadratic no-proper-equals path — has no
-    // array-typed h anywhere in this plan (the r18 array-verify
-    // experiment hit exactly that, then regressed the mass-duplicate
-    // worst case 10×+ carrying per-candidate arrays through the doc_b
-    // sort, and was reverted; see OPTIMIZATION_r18.md).
+    // Token digests come from the compiled one-pass shingler
+    // (plans/ShingleMd5s.scala) and ride as 16-byte binary: unhex of the
+    // lowercase hex md5 is injective and keeps its byte order, so the
+    // (df, h) prefix ranking is the hex string's.
+    val words = split(col("text"), " ")
     val toks = docs
       .select(col("doc_id"), explode(call_function("graft_shingle_md5s",
-        split(col("text"), " "), lit(k))).as("hx"))
+        words, lit(k))).as("hx"))
       .select(col("doc_id"), unhex(col("hx")).as("h"))
-    val dfs = toks.groupBy(col("h")).agg(count(lit(1)).as("df"))
     val byDoc = Window.partitionBy(col("doc_id"))
-    // the df join-back is pinned sort-merge for the same reason as the
-    // verify joins below: the vocabulary table is corpus-scale by
-    // nature, and a plan-time size guess that broadcasts it is a
-    // multi-GiB exchange build (observed), not a plan choice
-    val ranked = toks.join(dfs.hint("merge"), "h")
+    // df is a window on the h exchange, not an agg + join-back: no
+    // vocabulary-sized table is ever built, broadcast or joined
+    val ranked = toks
+      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("h"))))
       .withColumn("rk", row_number().over(byDoc.orderBy(col("df"), col("h"))))
       .withColumn("nsh", count(lit(1)).over(byDoc))
     // p = n − ⌈τ·n⌉ + 1, all integer: ⌈τQ·n / 10⁶⌉ via (x + 10⁶ − 1) div 10⁶
@@ -532,7 +519,20 @@ object Dedup {
         lit(minJaccardQ) * greatest(col("na"), col("nb")))
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(first(col("na")).as("na"), first(col("nb")).as("nb"))
-    // the verify joins are pinned SORT-MERGE: the candidate table is a
+    // Verify: each doc's distinct digests, sorted and packed 16 bytes per
+    // token (plans/DigestSets.scala), one row per doc (doc_id is the
+    // documents key); one linear merge counts a candidate's common
+    // tokens. A candidate row carries at most two blobs. Blobs, not
+    // arrays: array_intersect over binary elements is quadratic, and
+    // two hex-string arrays per candidate regressed the clique case 10×+
+    // (r18, reverted). Measured on 4 cores against a verify that joined
+    // every candidate to its tokens on (doc_b, h) and re-counted per
+    // pair: the 40-clique × 30-doc × 100-word corpus of
+    // PrefixJoinCliqueSpec (17,400 true pairs) writes 9.1 MB of shuffle
+    // instead of 29.1 MB (steady wall 3.2 → 1.7 s); 2,000 sf0.1 docs run
+    // 9 jobs instead of 12 and write 12.2 MB instead of 19.6 MB.
+    //
+    // The joins are pinned SORT-MERGE: the candidate table is a
     // post-aggregate relation whose size the planner must GUESS, and on
     // a mass-duplicate corpus (every doc in a large near-identical
     // clique) the true candidate count is quadratic in the clique size.
@@ -540,21 +540,17 @@ object Dedup {
     // planner's broadcast guess died building the exchange on the
     // driver, and a shuffled-hash build died too (SHJ's build side
     // cannot spill). SMJ is the one join here that degrades to disk
-    // instead of dying when BOTH sides are corpus-sized — exactness is
+    // instead of dying when both sides are corpus-sized — exactness is
     // the operator's contract, so its worst case must spill, not OOM.
-    // (An r18 per-doc-token-ARRAY verify — one array_intersect row per
-    // candidate instead of this fan-out — won 2× at sf0.1 but carried
-    // two ~doc-sized arrays per candidate through the doc_b sort and
-    // regressed the 30-clique/2.2M-candidate worst case from minutes
-    // to >30 min of multi-GB sort spill; reverted. The fan-out's
-    // skinny rows are what keeps the adversarial sort spillable.)
+    val sets = docs.select(col("doc_id"),
+      call_function("graft_shingle_digest_set", words, lit(k)).as("set"))
     cands
       .hint("merge")
-      .join(toks.select(col("doc_id").as("doc_a"), col("h")), "doc_a")
-      .join(toks.select(col("doc_id").as("doc_b"), col("h")).hint("merge"),
-        Seq("doc_b", "h"))
-      .groupBy(col("doc_a"), col("doc_b"), col("na"), col("nb"))
-      .agg(count(lit(1)).as("n_common"))
+      .join(sets.select(col("doc_id").as("doc_a"), col("set").as("set_a")), "doc_a")
+      .join(sets.select(col("doc_id").as("doc_b"), col("set").as("set_b")).hint("merge"),
+        "doc_b")
+      .select(col("doc_a"), col("doc_b"), col("na"), col("nb"),
+        call_function("graft_digest_set_common", col("set_a"), col("set_b")).as("n_common"))
       .filter(col("n_common") * lit(1000000L) >=
         lit(minJaccardQ) * (col("na") + col("nb") - col("n_common")))
       .select(col("doc_a"), col("doc_b"), col("n_common"),

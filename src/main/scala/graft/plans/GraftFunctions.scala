@@ -153,6 +153,14 @@ object GraftFunctions {
       "distinct k-word-shingle md5 hex digests of a word array, one compiled pass", 2) {
       case Seq(w, k) => ShingleMd5s(w, k)
     },
+    fn("graft_shingle_digest_set",
+      "distinct k-word-shingle md5 digests of a word array, sorted and packed 16 bytes each", 2) {
+      case Seq(w, k) => ShingleDigestSet(w, k)
+    },
+    fn("graft_digest_set_common",
+      "common-token count of two packed sorted digest sets, one linear merge", 2) {
+      case Seq(a, b) => DigestSetCommon(a, b)
+    },
     fn("graft_char_ngrams",
       "all character n-grams of a string, one compiled UTF-8 pass", 2) {
       case Seq(t, n) => CharNgrams(t, n)

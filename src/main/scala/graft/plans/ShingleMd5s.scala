@@ -68,11 +68,14 @@ case class ShingleMd5s(left: Expression, right: Expression)
 object ShingleMd5s {
   private final val HexChars = "0123456789abcdef".toCharArray
 
-  /** NOT named `eval` — the GramHashes static-forwarder rule. */
-  def digests(words: ArrayData, k: Int): GenericArrayData = {
+  /** md5 of every k-word window (the k words joined with one space), in
+    * window order, duplicates kept; null for k <= 0, empty for fewer than
+    * k words. The one hashing loop under this expression and
+    * [[ShingleDigestSet]]. */
+  private[plans] def windowMd5s(words: ArrayData, k: Int): Array[Array[Byte]] = {
     if (k <= 0) return null
     val n = words.numElements()
-    if (n < k) return new GenericArrayData(new Array[Any](0))
+    if (n < k) return new Array[Array[Byte]](0)
     val md = java.security.MessageDigest.getInstance("MD5")
     val sep = " ".getBytes("UTF-8")
     val wb = new Array[Array[Byte]](n)
@@ -82,9 +85,7 @@ object ShingleMd5s {
         else words.getUTF8String(i).getBytes
       i += 1
     }
-    // distinct on the 128-bit digest (two longs), first-occurrence order
-    val seen = new scala.collection.mutable.HashSet[(Long, Long)]
-    val out = new java.util.ArrayList[Any](n - k + 1)
+    val out = new Array[Array[Byte]](n - k + 1)
     var s = 0
     while (s <= n - k) {
       md.reset()
@@ -94,7 +95,20 @@ object ShingleMd5s {
         md.update(wb(s + j))
         j += 1
       }
-      val d = md.digest()
+      out(s) = md.digest()
+      s += 1
+    }
+    out
+  }
+
+  /** NOT named `eval` — the GramHashes static-forwarder rule. */
+  def digests(words: ArrayData, k: Int): GenericArrayData = {
+    val ds = windowMd5s(words, k)
+    if (ds == null) return null
+    // distinct on the 128-bit digest (two longs), first-occurrence order
+    val seen = new scala.collection.mutable.HashSet[(Long, Long)]
+    val out = new java.util.ArrayList[Any](ds.length)
+    for (d <- ds) {
       var h1 = 0L; var h2 = 0L
       var b = 0
       while (b < 8) { h1 = (h1 << 8) | (d(b) & 0xffL); b += 1 }
@@ -109,7 +123,6 @@ object ShingleMd5s {
         }
         out.add(UTF8String.fromBytes(hex))
       }
-      s += 1
     }
     new GenericArrayData(out.toArray)
   }

@@ -245,12 +245,10 @@ class PlanSpec extends AnyFunSuite {
       // deployment appends from the materialized store anyway (the
       // Probe `maintain` cycle prices that shape)
       "q_ingest_index_update" -> 29,
-      // r14 quality row (audited 33, re-read 2026-08-18 after the r18
-      // prefix-verify rewrite): the exact prefix-join truth
-      // (q_simjoin_prefix's chain, now array-verify shaped — see that
-      // entry) + the staged gate chain + the six per-doc decision
-      // joins of the confusion matrix
-      "q_ingest_recall" -> 33,
+      // r14 quality row, EXACT (re-audited with the digest-set verify):
+      // the exact prefix-join truth (q_simjoin_prefix's 9) + the staged
+      // gate chain + the per-doc decision joins of the confusion matrix
+      "q_ingest_recall" -> 28,
       "q_sim_topk" -> 1, "q_sim_ivf" -> 3, "q_sim_ivf_probe2" -> 3,
       "q_text_langid" -> 0, "q_text_quality" -> 0, "q_text_tokens" -> 1,
       "q_text_fingerprint" -> 1, "q_multimodal_meta" -> 0,
@@ -368,24 +366,21 @@ class PlanSpec extends AnyFunSuite {
       // the base side is a localCheckpointed state TABLE (its lineage,
       // and its corpus scan, are gone from this plan by design)
       "q_agg_incremental" -> 2,
-      // prefix join, audited 14 (plan re-read 2026-08-18, r18 verify
-      // rewrite): token df agg + the df join-back re-key + per-doc rank
-      // window + prefix bucket agg + the block-pair rebalancing
-      // repartition + candidate dedup (doc_a,doc_b) + the per-doc
-      // token-ARRAY branch (its own ranked subtree re-key + window +
-      // doc_id agg — plan-time duplicates of the rank chain that AQE
-      // exchange-reuse serves at runtime) + the SMJ verify re-keys
-      // (cands→doc_a, arrays→doc_a, mid→doc_b, arrays→doc_b). MORE
-      // exchanges than the pre-r18 fan-out shape (11) but far fewer
-      // BYTES: the old chain shuffled candidates × tokens rows (sf0.1:
-      // 3.18M rows / 107 MB) into a re-aggregation; the new ones are
-      // candidate-sized or per-doc-sized. The verify joins stay SMJ,
-      // never broadcast / SHUFFLE_HASH: a post-aggregate candidate
-      // table's size is a planner guess, and on a mass-duplicate corpus
-      // the true count is quadratic in clique size — a wrong broadcast
-      // is a driver OOM and SHJ's non-spilling build side dies too
-      // (both measured); SMJ degrades to disk
-      "q_simjoin_prefix" -> 14,
+      // prefix join, EXACT 9: the h exchange (df window) + the per-doc
+      // rank window + the prefix bucket agg + the block-pair rebalancing
+      // repartition + the candidate dedup (doc_a, doc_b) + the verify's
+      // SMJ re-keys (cands→doc_a, sets→doc_a, mid→doc_b, sets→doc_b;
+      // the two digest-set exchanges are one plan that AQE reuses at
+      // runtime). After the dedup every exchange is candidate- or
+      // doc-sized: each candidate carries at most one packed digest set
+      // and one merge counts the common tokens (see the tripwire test
+      // below). The verify joins stay SMJ, never broadcast /
+      // SHUFFLE_HASH: a post-aggregate candidate table's size is a
+      // planner guess, and on a mass-duplicate corpus the true count is
+      // quadratic in clique size — a wrong broadcast is a driver OOM and
+      // SHJ's non-spilling build side dies too (both measured); SMJ
+      // degrades to disk
+      "q_simjoin_prefix" -> 9,
       // PQ: the checkpointed codebook hides training's 5 eager exchanges
       // (init means + 2×(assign + means)); the LAZY plan is encode's
       // single corpus exchange + the two query-sized ones (lut agg,
@@ -399,13 +394,43 @@ class PlanSpec extends AnyFunSuite {
       // checkpointed codebooks. The serving path ALONE is audited at 3
       // in its own PlanSpec test (persisted-index deployment)
       "q_sim_ivfpq" -> 5)
+    // these counts are exact: a plan that drops an exchange must update
+    // its entry too, so the entry keeps describing the plan HEAD runs
+    val exact = Set("q_simjoin_prefix", "q_ingest_recall")
     val over = budget.flatMap { case (name, max) =>
       val plan = physicalPlan(SparkEntry.queries(name)(spark, sfDir))
       val n = "Exchange hashpartitioning".r.findAllIn(plan).length +
         "Exchange rangepartitioning".r.findAllIn(plan).length
-      if (n > max) Some(s"$name: $n > $max") else None
+      if (n > max || (exact(name) && n != max)) Some(s"$name: $n vs $max") else None
     }
     assert(over.isEmpty, s"shuffle budget exceeded: ${over.mkString("; ")}")
+  }
+
+  test("exact prefix join: no token-keyed join or (doc_a, doc_b, na, nb) agg after the " +
+      "candidate dedup, in every consumer") {
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    // the fan-out verify's signature: candidates joined back to the
+    // token stream on h, then re-aggregated per (doc_a, doc_b, na, nb)
+    for (name <- Seq("q_simjoin_prefix", "q_simjoin_blocked", "q_dedup_recall",
+        "q_dedup_recall_geom", "q_dedup_recall_simhash", "q_ingest_recall")) {
+      val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution.sparkPlan
+      def keys(a: BaseAggregateExec) = a.groupingExpressions.map(_.name)
+      val aggs = plan.collect { case a: BaseAggregateExec => a }
+      val dedups = aggs.filter(a => keys(a) == Seq("doc_a", "doc_b"))
+      assert(dedups.nonEmpty, s"$name: no candidate dedup found:\n$plan")
+      assert(!aggs.exists(a => keys(a) == Seq("doc_a", "doc_b", "na", "nb")),
+        s"$name: the per-token verify re-aggregation is back:\n$plan")
+      val downstream = plan.collect {
+        case j: BaseJoinExec if dedups.exists(d => j.find(_ eq d).isDefined) => j
+      }
+      assert(downstream.nonEmpty, s"$name: no verify join found:\n$plan")
+      for (j <- downstream) {
+        val joinKeys = (j.leftKeys ++ j.rightKeys).flatMap(_.references).map(_.name)
+        assert(!joinKeys.contains("h"), s"$name: a join keyed on h follows the " +
+          s"candidate dedup (keys ${joinKeys.mkString(", ")}):\n$plan")
+      }
+    }
   }
 
   test("scale-killer sweep: no query in the registry plans a cartesian product") {

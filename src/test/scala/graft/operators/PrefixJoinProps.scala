@@ -37,21 +37,23 @@ object PrefixJoinProps extends Properties("PrefixJaccardJoin") {
       Prop(base == bal) :| s"blockSize=$blockSize base=$base bal=$bal"
     }
 
-  // tiny vocabulary + short docs → dense overlap structure, boundary
-  // jaccard values (exact thirds/halves) hit the integer τ filter edge
+  // tiny vocabularies + short docs → dense overlap structure, boundary
+  // jaccard values (exact thirds/halves) hit the integer τ filter edge;
+  // docs shorter than k words have no tokens at all, and docs drawn from
+  // the two disjoint vocabularies make pairs sharing zero tokens
   private val genDocs: Gen[List[(Long, String)]] = for {
     n  <- Gen.choose(2, 12)
     ds <- Gen.listOfN(n, for {
-      m  <- Gen.choose(1, 10)
-      ws <- Gen.listOfN(m, Gen.oneOf("a", "b", "c", "d", "e", "f"))
+      m     <- Gen.choose(0, 10)
+      vocab <- Gen.oneOf(Seq("a", "b", "c", "d", "e", "f"), Seq("u", "v", "w"))
+      ws    <- Gen.listOfN(m, Gen.oneOf(vocab))
     } yield ws.mkString(" "))
   } yield ds.zipWithIndex.map { case (t, i) => (i.toLong, t) }
 
   property("prefixJaccardPairs == brute-force exact jaccard") =
-    Prop.forAll(genDocs, Gen.oneOf(300000L, 500000L, 800000L),
-        Gen.choose(2, 5)) { (docsL, tauQ, blockSize) =>
+    Prop.forAll(genDocs, Gen.oneOf(100000L, 300000L, 500000L, 800000L, 1000000L),
+        Gen.choose(2, 5), Gen.choose(1, 3)) { (docsL, tauQ, blockSize, k) =>
       import TestSpark.spark.implicits._
-      val k = 2
       val df = docsL.toDF("doc_id", "text")
       val got = Dedup.prefixJaccardPairs(df, k, tauQ, blockSize)
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
@@ -64,6 +66,6 @@ object PrefixJoinProps extends Properties("PrefixJaccardJoin") {
         o = (sa & sb).size.toLong
         if o * 1000000L >= tauQ * (sa.size + sb.size - o)
       } yield (a, b) -> o).toMap
-      Prop(got == want) :| s"tauQ=$tauQ got=$got want=$want"
+      Prop(got == want) :| s"k=$k tauQ=$tauQ got=$got want=$want"
     }
 }

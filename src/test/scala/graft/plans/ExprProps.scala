@@ -57,6 +57,62 @@ object ExprProps extends Properties("CompiledSimilarityExprs") {
       Prop(viaExpr == viaHof) :| s"k=$k got=$viaExpr want=$viaHof"
     }
 
+  property("graft_shingle_digest_set == sorted distinct unhex(graft_shingle_md5s), packed") =
+    Prop.forAll(genWords, Gen.choose(1, 4)) { (ws, k) =>
+      import TestSpark.spark.implicits._
+      val df = Seq(Tuple1(ws)).toDF("w")
+      val got = df.select(call_function("graft_shingle_digest_set",
+        col("w"), lit(k))).collect().head.getAs[Array[Byte]](0)
+      val want = df.select(call_function("graft_shingle_md5s", col("w"), lit(k)))
+        .collect().head.getSeq[String](0)
+        .map(h => h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray)
+        .sortWith(java.util.Arrays.compareUnsigned(_, _) < 0).flatten.toArray
+      Prop(got.sameElements(want)) :| s"k=$k words=$ws"
+    }
+
+  // digest pool with the merge's traps: lead bytes on both sides of 0x80
+  // (a signed compare misorders them against the unsigned sort) and twin
+  // digests equal in their first 15 bytes
+  private val genDigestSets: Gen[(Option[Array[Byte]], Option[Array[Byte]])] = {
+    val genDigest = Gen.listOfN(16, Gen.oneOf[Int](0x00, 0x01, 0x7f, 0x80, 0x81, 0xfe, 0xff)
+      .map(_.toByte)).map(_.toArray)
+    val genPool = for {
+      ds    <- Gen.listOfN(12, genDigest)
+      twins <- Gen.someOf(ds.indices)
+    } yield ds ++ twins.map { i => val t = ds(i).clone(); t(15) = (t(15) ^ 0x80).toByte; t }
+    def packed(pool: Seq[Array[Byte]]): Gen[Option[Array[Byte]]] = Gen.frequency(
+      1 -> Gen.const(None),
+      8 -> Gen.someOf(pool).map(sub => Some(sub.map(_.toSeq).distinct.map(_.toArray)
+        .sortWith(java.util.Arrays.compareUnsigned(_, _) < 0).flatten.toArray)))
+    for { pool <- genPool; a <- packed(pool); b <- packed(pool) } yield (a, b)
+  }
+
+  property("graft_digest_set_common == Scala set intersection; codegen == interpreted") =
+    Prop.forAll(genDigestSets) { case (a, b) =>
+      import org.apache.spark.sql.catalyst.InternalRow
+      import org.apache.spark.sql.catalyst.expressions.BoundReference
+      import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+      import org.apache.spark.sql.types.BinaryType
+      val want: Option[Long] = for (x <- a; y <- b)
+        yield (x.grouped(16).map(_.toSeq).toSet & y.grouped(16).map(_.toSeq).toSet).size.toLong
+      val e = DigestSetCommon(BoundReference(0, BinaryType, nullable = true),
+        BoundReference(1, BinaryType, nullable = true))
+      val row = InternalRow(a.orNull, b.orNull)
+      val interpreted = Option(e.eval(row)).map(_.asInstanceOf[Long])
+      val out = GenerateUnsafeProjection.generate(Seq(e)).apply(row)
+      val compiled = if (out.isNullAt(0)) None else Some(out.getLong(0))
+      Prop(interpreted == want && compiled == want) :|
+        s"want=$want interpreted=$interpreted compiled=$compiled"
+    }
+
+  property("graft_digest_set_common: NULL for a blob that is not whole digests") =
+    Prop.forAll(Gen.choose(1, 15), Gen.choose(0, 3)) { (ragged, whole) =>
+      import org.apache.spark.sql.catalyst.expressions.Literal
+      val e = DigestSetCommon(Literal(new Array[Byte](16 * whole + ragged)),
+        Literal(new Array[Byte](16)))
+      Prop(e.eval() == null)
+    }
+
   // arbitrary text including multi-byte chars (2-, 3- AND 4-byte
   // sequences — "🌍" is a surrogate pair in the JVM but ONE code
   // point) — the byte-offset walk must count CODE POINTS exactly as
