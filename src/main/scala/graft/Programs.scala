@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.TextFunctions._
-import graft.sources.{Commit, JsonIO, MboxIO, Sinks}
+import graft.sources.{Commit, Fs, JsonIO, MboxIO, Sinks, Store}
 
 /** Deployable twins of the reference's APPLICATION tier — the unit a
   * reference user actually runs (`flink run <program> --start-date ...`),
@@ -259,72 +259,45 @@ object Programs {
 
   /** Bootstrap the standing ingest store from an existing corpus: the
     * three admission artifacts ([[graft.operators.Freq.bloomBuild]] bit
-    * table, minhash band index, gram index) land as version-0 parquet
-    * under `storeDir`, ready for [[ingestProgramStream]] to probe and
-    * maintain. Deployment would build these with `Sinks.saveBucketed`
-    * for the zero-exchange probe reads (the served-tier layout); the
-    * program store keeps plain parquet — the maintenance semantics, not
-    * the exchange count, are what this tier proves. */
+    * table, minhash band index, gram index) commit as version 0 under
+    * `storeDir`, ready for [[ingestProgramStream]] to probe and
+    * maintain. A re-init starts the store over ([[clearStore]]).
+    * Deployment would build these with `Sinks.saveBucketed` for the
+    * zero-exchange probe reads (the served-tier layout); the program
+    * store keeps plain parquet — the maintenance semantics, not the
+    * exchange count, are what this tier proves. */
   def ingestStoreInit(corpus: DataFrame, storeDir: String,
       spanWords: Int = 10, bloomK: Int = 3, bloomWidth: Int = 1 << 20): Unit = {
-    graft.operators.Freq.bloomBuild(
+    clearStore(storeDir, "bits", "band_index", "gram_index")
+    Store.versions(storeDir, "bits").commit(0)(graft.operators.Freq.bloomBuild(
         corpus.select(md5(col("text")).as("item")), bloomK, bloomWidth)
-      .write.mode("overwrite").parquet(s"$storeDir/bits_v0")
-    graft.operators.Dedup.minhashBandIndex(corpus, k = 3, perms = 8, bands = 4)
-      .write.mode("overwrite").parquet(s"$storeDir/band_index_v0")
-    graft.operators.Dedup.gramIndex(corpus, spanWords)
-      .write.mode("overwrite").parquet(s"$storeDir/gram_index_v0")
+      .write.parquet(_))
+    Store.versions(storeDir, "band_index").commit(0)(graft.operators.Dedup
+      .minhashBandIndex(corpus, k = 3, perms = 8, bands = 4).write.parquet(_))
+    Store.versions(storeDir, "gram_index").commit(0)(graft.operators.Dedup
+      .gramIndex(corpus, spanWords).write.parquet(_))
   }
 
-  /** Latest complete version of a store artifact: `_vN` directories are
-    * written whole-then-visible (`_SUCCESS` is the completeness marker),
-    * so a crash mid-write leaves the previous version live — the
-    * versioned-sibling discipline `Layout.compact` enforces for
-    * compaction, applied to index maintenance.
-    *
-    * `upTo` (r15) is the DETERMINISTIC-REPLAY bound: a streaming batch
-    * `b` reads every artifact at the latest version ≤ `b` — the state
-    * that existed when the batch FIRST ran (versions are numbered
-    * batchId + 1 by the writer), never the versions the batch itself
-    * wrote. A batch replayed after a crash therefore reproduces its
-    * original admissions and artifact writes bit-for-bit (per-batch-dir
-    * overwrites make the re-writes idempotent), instead of probing the
-    * post-fold state and refusing its own docs. The keep-two retention
-    * ([[pruneVersions]]) is exactly what guarantees the ≤ b version is
-    * still on disk: Spark replays at most the last uncommitted batch. */
-  private def latestVersion(storeDir: String, name: String,
-      upTo: Long = Long.MaxValue): String = {
-    val versions = graft.sources.Fs.listDirNames(storeDir)
-      .filter(n => n.startsWith(s"${name}_v") &&
-        graft.sources.Fs.exists(s"$storeDir/$n/_SUCCESS"))
-      .map(_.stripPrefix(s"${name}_v").toLong)
-      .filter(_ <= upTo)
-    require(versions.nonEmpty,
-      s"store $storeDir has no complete $name version <= $upTo. A stream " +
-        "must either RESUME its own checkpoint (batch ids continue where " +
-        "the versions do) or run against a freshly initialized store — a " +
-        "new checkpoint restarts batch ids at 0, which cannot read a " +
-        "matured store's pruned early versions (and would re-number new " +
-        "versions below the standing ones). Re-init the store or resume " +
-        "the original checkpoint.")
-    s"$storeDir/${name}_v${versions.max}"
+  /** Start a program store over: drop every version of its artifact
+    * families and its `pending/` docs. A re-initialized store then
+    * holds nothing from its previous life for keep-two retention, a
+    * fold or a reader to pick up — the fresh store the restart
+    * contract asks for. */
+  private def clearStore(storeDir: String, names: String*): Unit = {
+    names.foreach(Store.versions(storeDir, _).clear())
+    Fs.delete(s"$storeDir/pending")
   }
 
-  /** Retain the two newest complete versions of a store artifact and
-    * delete the rest — a long-lived stream would otherwise accrete one
-    * bits directory per micro-batch forever (the /tmp served-store
-    * lesson applied to the program's own store). Two, not one: the
-    * newest version's reader may be mid-flight on the previous one;
-    * incomplete (markerless) versions are never the retained set and
-    * get reclaimed too. */
-  private def pruneVersions(storeDir: String, name: String): Unit = {
-    val all = graft.sources.Fs.listDirNames(storeDir)
-      .filter(_.startsWith(s"${name}_v"))
-    val complete = all
-      .filter(n => graft.sources.Fs.exists(s"$storeDir/$n/_SUCCESS"))
-      .sortBy(_.stripPrefix(s"${name}_v").toLong)
-    val keep = complete.takeRight(2).toSet
-    all.filterNot(keep).foreach(n => graft.sources.Fs.delete(s"$storeDir/$n"))
+  /** The maintenance programs' stream shell: `step` runs every
+    * micro-batch under `checkpoint`; `every` is the program's fold
+    * cadence, named `knob` in its error. */
+  private def programStream(docs: DataFrame, checkpoint: String, knob: String,
+      every: Int)(step: (DataFrame, Long) => Unit): StreamingQuery = {
+    require(every >= 1, s"$knob ($every) must be >= 1")
+    docs.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(step)
+      .start()
   }
 
   /** ONLINE ingest with CLOSED maintenance loop (r14) — the streaming
@@ -341,9 +314,9 @@ object Programs {
     *
     *  - the BLOOM arm folds EVERY batch ([[graft.operators.Freq
     *    .bloomAppend]]): the bit table is KB-scale, the OR-in is
-    *    set-union (re-running a recovered batch is a no-op), and it is
-    *    the gate that refuses exact re-deliveries — freshest where
-    *    staleness costs correctness, cheapest to keep fresh.
+    *    set-union, and it is the gate that refuses exact re-deliveries
+    *    — freshest where staleness costs correctness, cheapest to keep
+    *    fresh.
     *  - the GRAM and BAND arms fold at `maintainEvery`-batch CADENCE
     *    over the accumulated pending docs (`gramIndexAppend` /
     *    `bandIndexAppend`): their rewrite is index-sized I/O — the
@@ -357,51 +330,48 @@ object Programs {
     *
     * Maintenance appends derive from ingestCore's POST-QUOTA output —
     * what the store actually carries (the r13 ADVICE invariant: a
-    * quota-rejected doc is never tombstoned as seen). Artifact rewrites
-    * are versioned-sibling + completeness marker ([[latestVersion]])
-    * with a keep-two retention ([[pruneVersions]]) — never in-place,
-    * never unbounded. Admitted AND pending land per-batch-dir
-    * overwrite, so a replayed micro-batch is idempotent end-to-end
-    * (an appended pending would double its docs into the next fold's
-    * df counts). Stream contract: doc ids are unique across the
-    * stream — the store and the append algebra key on them (the same
-    * disjointness the batch append operators require).
+    * quota-rejected doc is never tombstoned as seen). Every artifact is
+    * a versioned store ([[graft.sources.Store.versions]]): a rewrite
+    * commits a new `<name>_v<batchId+1>` sibling (delete-first,
+    * marker-last), never in place, and keep-two retention bounds the
+    * family. Admitted AND pending land per-batch-dir overwrite, so a
+    * replayed micro-batch is idempotent end-to-end (an appended
+    * pending would double its docs into the next fold's df counts).
+    * Stream contract: doc ids are unique across the stream — the store
+    * and the append algebra key on them (the same disjointness the
+    * batch append operators require).
     *
-    * Crash-replay contract (r15 — closes the boundary the r14 doc
-    * could only document): every batch is a DETERMINISTIC function of
-    * (batchId, input rows, pre-batch store state). Artifact reads are
-    * bounded to versions ≤ batchId ([[latestVersion]]'s `upTo`), so a
-    * batch replayed after any crash probes the SAME state it probed
-    * the first time — its admissions, its per-batch-dir overwrites of
-    * admitted/pending, and its bloom rewrite all reproduce
-    * bit-for-bit; and a cadence fold whose target version is already
-    * complete is SKIPPED (the fold committed before the crash), only
-    * the pending-clear re-runs — so the fold can never double docs'
-    * df counts, whether the crash landed before or after the clear.
-    * StreamingSpec drives both replay windows through
-    * [[ingestBatchStep]] directly.
+    * Crash-replay contract (r15): every batch is a DETERMINISTIC
+    * function of (batchId, input rows, pre-batch store state). Artifact
+    * reads are bounded to committed versions ≤ batchId
+    * (`Versions.latest`), so a batch replayed after any crash probes
+    * the SAME state it probed the first time and reproduces its
+    * admissions and its per-batch-dir overwrites of admitted/pending.
+    * Every version the first run committed is SKIPPED on replay
+    * (`Versions.commit`): the bloom rewrite, and a cadence fold that
+    * committed before the crash — only the pending-clear re-runs, so
+    * the fold can never double docs' df counts, whether the crash
+    * landed before or after the clear. Keep-two retention is exactly
+    * what guarantees the ≤ batchId version is still on disk: Spark
+    * replays at most the last uncommitted batch. StreamingSpec drives
+    * the replay windows through [[ingestBatchStep]] directly.
     *
     * Restart contract (the bound's flip side): a stream must RESUME its
     * own checkpoint (engine batch ids continue where the store's
     * version numbers do) or run against a freshly initialized store — a
     * NEW checkpoint restarts batch ids at 0, which can neither read a
     * matured store's pruned early versions nor safely re-number new
-    * ones below the standing maximum; [[latestVersion]] refuses loudly
+    * ones below the standing maximum; `Versions.latest` refuses loudly
     * with this contract in the message. Applies to
-    * [[lmGateProgramStream]] identically. */
+    * [[lmGateProgramStream]] and [[phraseIndexProgramStream]]
+    * identically. */
   def ingestProgramStream(docs: DataFrame, storeDir: String,
       checkpoint: String, quotaPerSource: Long, spanWords: Int = 10,
       maintainEvery: Int = 4, bloomK: Int = 3,
-      bloomWidth: Int = 1 << 20): StreamingQuery = {
-    require(maintainEvery >= 1, s"maintainEvery ($maintainEvery) must be >= 1")
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatchStep(batch, storeDir, batchId, quotaPerSource, spanWords,
-          maintainEvery, bloomK, bloomWidth)
-      }
-      .start()
-  }
+      bloomWidth: Int = 1 << 20): StreamingQuery =
+    programStream(docs, checkpoint, "maintainEvery", maintainEvery)(
+      ingestBatchStep(_, storeDir, _, quotaPerSource, spanWords,
+        maintainEvery, bloomK, bloomWidth))
 
   /** One micro-batch of [[ingestProgramStream]], factored out so the
     * crash-replay windows can be driven directly (StreamingSpec): the
@@ -415,12 +385,16 @@ object Programs {
     // a second set of defaults would let the test-driven replay path
     // silently drift from the production gate geometry
     val spark = batch.sparkSession
+    val bitsV = Store.versions(storeDir, "bits")
+    val bandV = Store.versions(storeDir, "band_index")
+    val gramV = Store.versions(storeDir, "gram_index")
     // reads bounded to the pre-batch state: a replayed batch must never
     // probe the artifacts its first run wrote (they contain its own
     // docs — it would refuse them and overwrite `admitted` empty)
-    val bits = spark.read.parquet(latestVersion(storeDir, "bits", batchId))
-    val bandIdx = spark.read.parquet(latestVersion(storeDir, "band_index", batchId))
-    val gramIdx = spark.read.parquet(latestVersion(storeDir, "gram_index", batchId))
+    def read(v: Store.Versions) = spark.read.parquet(v.path(v.latest(batchId)))
+    val bits = read(bitsV)
+    val bandIdx = read(bandV)
+    val gramIdx = read(gramV)
     // localCheckpoint: the stored set must be MATERIAL before any
     // artifact it feeds is rewritten (a lazy plan re-reading a
     // replaced version would be undefined)
@@ -434,51 +408,43 @@ object Programs {
     // fold's df counts (append ≡ rebuild would silently break)
     stored.select(col("doc_id"), col("text"))
       .write.mode("overwrite").parquet(s"$storeDir/pending/batch=$batchId")
-    graft.operators.Freq.bloomAppend(bits,
+    bitsV.commit(batchId + 1)(graft.operators.Freq.bloomAppend(bits,
         stored.select(md5(col("text")).as("item")), bloomK, bloomWidth)
-      .localCheckpoint()
-      .write.mode("overwrite").parquet(s"$storeDir/bits_v${batchId + 1}")
-    pruneVersions(storeDir, "bits")
-    if ((batchId + 1) % maintainEvery == 0 &&
-        graft.sources.Fs.isDir(s"$storeDir/pending")) {
-      // skip-if-complete: a fold whose target version already carries
-      // its _SUCCESS marker committed before a crash — re-running it
-      // against the accumulated pending would double df counts (and a
-      // post-clear replay, whose pending holds only the replayed
-      // batch, would UNDERfold). Either way the committed version is
-      // the correct one; only the clear re-runs.
-      val gramDone = graft.sources.Fs.exists(
-        s"$storeDir/gram_index_v${batchId + 1}/_SUCCESS")
-      val bandDone = graft.sources.Fs.exists(
-        s"$storeDir/band_index_v${batchId + 1}/_SUCCESS")
+      .localCheckpoint().write.parquet(_))
+    bitsV.retain()
+    if ((batchId + 1) % maintainEvery == 0 && Fs.isDir(s"$storeDir/pending")) {
+      // a fold version that committed before a crash is skipped by its
+      // commit: re-running it against the accumulated pending would
+      // double df counts (and a post-clear replay, whose pending holds
+      // only the replayed batch, would UNDERfold). Either way the
+      // committed version is the correct one; only the clear re-runs.
+      // An empty pending folds nothing and is just cleared.
       val pending = spark.read.parquet(s"$storeDir/pending")
         .select(col("doc_id"), col("text")).localCheckpoint()
-      if (!pending.isEmpty || gramDone || bandDone) {
-        if (!gramDone)
-          graft.operators.Dedup.gramIndexAppend(gramIdx, pending, spanWords)
-            .write.mode("overwrite")
-            .parquet(s"$storeDir/gram_index_v${batchId + 1}")
-        if (!bandDone)
-          graft.operators.Dedup.bandIndexAppend(bandIdx, pending,
-              k = 3, perms = 8, bands = 4)
-            .write.mode("overwrite")
-            .parquet(s"$storeDir/band_index_v${batchId + 1}")
-        pruneVersions(storeDir, "gram_index")
-        pruneVersions(storeDir, "band_index")
-        graft.sources.Fs.delete(s"$storeDir/pending")
+      if (!pending.isEmpty) {
+        gramV.commit(batchId + 1)(graft.operators.Dedup
+          .gramIndexAppend(gramIdx, pending, spanWords).write.parquet(_))
+        bandV.commit(batchId + 1)(graft.operators.Dedup
+          .bandIndexAppend(bandIdx, pending, k = 3, perms = 8, bands = 4)
+          .write.parquet(_))
+        gramV.retain()
+        bandV.retain()
       }
+      Fs.delete(s"$storeDir/pending")
     }
-    ()
   }
 
   /** Bootstrap the LM quality gate's standing store: the corpus-trained
-    * trigram model ([[graft.operators.TextAnalysis.trigramModel]]) as
-    * version-0 parquet under `storeDir`, ready for
-    * [[lmGateProgramStream]] to serve and maintain. */
+    * trigram model ([[graft.operators.TextAnalysis.trigramModel]])
+    * committed as version 0 under `storeDir`, ready for
+    * [[lmGateProgramStream]] to serve and maintain. A re-init starts
+    * the store over ([[clearStore]]). */
   def lmStoreInit(corpus: DataFrame, storeDir: String,
-      refLang: String = "en"): Unit =
-    graft.operators.TextAnalysis.trigramModel(corpus, refLang)
-      .write.mode("overwrite").parquet(s"$storeDir/lm_model_v0")
+      refLang: String = "en"): Unit = {
+    clearStore(storeDir, "lm_model")
+    Store.versions(storeDir, "lm_model").commit(0)(graft.operators.TextAnalysis
+      .trigramModel(corpus, refLang).write.parquet(_))
+  }
 
   /** ONLINE LM quality gate with CLOSED model-maintenance loop (r15) —
     * the r14 verdict's gap #3: `surprisalGateStream` scores against the
@@ -486,10 +452,11 @@ object Programs {
     * gate goes stale with no re-train path. This program applies the
     * ingest tier's maintenance convention to the LM:
     *
-    *  - each micro-batch scores against the CURRENT persisted model
-    *    version (collected once per version — version dirs are
-    *    immutable behind their `_SUCCESS` marker, so the per-path
-    *    cache can never serve stale) through the same compiled
+    *  - each micro-batch scores against the newest committed model
+    *    version (collected once per version — a committed version is
+    *    never rewritten ([[graft.sources.Store.versions]]), and the
+    *    per-path cache also keys on the listing, so a re-init at the
+    *    same path can never serve stale) through the same compiled
     *    row-local [[graft.operators.TextAnalysis.surprisalServed]]
     *    scorer the stateless gate uses, and admits docs under the
     *    threshold;
@@ -497,7 +464,7 @@ object Programs {
     *    overwrite, replay-idempotent), and at `maintainEvery` cadence
     *    their `refLang` trigram counts FOLD into the model
     *    ([[graft.operators.TextAnalysis.trigramModelAppend]] — a count
-    *    monoid, append ≡ rebuild property-tested), written as a
+    *    monoid, append ≡ rebuild property-tested), committed as a
     *    versioned sibling with keep-two retention.
     *
     * Staleness boundary, priced like the ingest gates: between folds
@@ -510,23 +477,17 @@ object Programs {
     * does). The fold is model-sized I/O (KB–MB — the cheapest
     * maintenance arm in the store family); per-batch folding would
     * also be affordable here, `maintainEvery` just keeps the
-    * freshness/cost knob uniform with the ingest tier. Crash-replay:
-    * same deterministic contract as [[ingestBatchStep]] — reads
-    * bounded to versions ≤ batchId, skip-if-complete fold. Docs
-    * shorter than 3 chars carry no trigram and are dropped by the
-    * scorer, exactly the batch operator's contract. */
+    * freshness/cost knob uniform with the ingest tier. Crash-replay and
+    * restart: the same contracts as [[ingestProgramStream]] — reads
+    * bounded to committed versions ≤ batchId, a committed fold is
+    * skipped on replay. Docs shorter than 3 chars carry no trigram and
+    * are dropped by the scorer, exactly the batch operator's
+    * contract. */
   def lmGateProgramStream(docs: DataFrame, storeDir: String,
       checkpoint: String, keepBelowMb: Long = 7340L,
-      maintainEvery: Int = 4, refLang: String = "en"): StreamingQuery = {
-    require(maintainEvery >= 1, s"maintainEvery ($maintainEvery) must be >= 1")
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        lmBatchStep(batch, storeDir, batchId, keepBelowMb, maintainEvery,
-          refLang)
-      }
-      .start()
-  }
+      maintainEvery: Int = 4, refLang: String = "en"): StreamingQuery =
+    programStream(docs, checkpoint, "maintainEvery", maintainEvery)(
+      lmBatchStep(_, storeDir, _, keepBelowMb, maintainEvery, refLang))
 
   /** One micro-batch of [[lmGateProgramStream]], factored like
     * [[ingestBatchStep]] so tests can drive replay windows directly. */
@@ -534,13 +495,14 @@ object Programs {
       batchId: Long, keepBelowMb: Long, maintainEvery: Int,
       refLang: String): Unit = {
     val spark = batch.sparkSession
-    val modelPath = latestVersion(storeDir, "lm_model", batchId)
-    // keyed (path, content fingerprint), not path alone: lm_model_v0 is
-    // written with overwrite by lmStoreInit, so a same-JVM re-init at
-    // the same storeDir would otherwise serve the previous corpus's
+    val modelV = Store.versions(storeDir, "lm_model")
+    val modelPath = modelV.path(modelV.latest(batchId))
+    // keyed (path, content fingerprint), not path alone: a re-init
+    // commits lm_model_v0 again at the same path, so a same-JVM re-init
+    // at the same storeDir would otherwise serve the previous corpus's
     // cached arrays (the lmModelCache corpusFingerprint lesson)
     val (keys, cnts, tot, v) = lmServedCache.computeIfAbsent(
-      modelPath + "|" + dirFingerprint(modelPath), _ => {
+      modelPath + "|" + Fs.listingFingerprint(modelPath), _ => {
         val m = spark.read.parquet(modelPath).collect()
           .map(r => (r.getLong(0), r.getLong(1)))
         (m.map(_._1), m.map(_._2), m.map(_._2).sum, m.length.toLong)
@@ -552,23 +514,17 @@ object Programs {
       .parquet(s"$storeDir/admitted/batch=$batchId")
     admitted.select(col("doc_id"), col("lang"), col("text"))
       .write.mode("overwrite").parquet(s"$storeDir/pending/batch=$batchId")
-    if ((batchId + 1) % maintainEvery == 0 &&
-        graft.sources.Fs.isDir(s"$storeDir/pending")) {
-      val done = graft.sources.Fs.exists(
-        s"$storeDir/lm_model_v${batchId + 1}/_SUCCESS")
+    if ((batchId + 1) % maintainEvery == 0 && Fs.isDir(s"$storeDir/pending")) {
       val pending = spark.read.parquet(s"$storeDir/pending")
         .select(col("doc_id"), col("lang"), col("text")).localCheckpoint()
-      if (!pending.isEmpty || done) {
-        if (!done)
-          graft.operators.TextAnalysis.trigramModelAppend(
-              spark.read.parquet(modelPath), pending, refLang)
-            .write.mode("overwrite")
-            .parquet(s"$storeDir/lm_model_v${batchId + 1}")
-        pruneVersions(storeDir, "lm_model")
-        graft.sources.Fs.delete(s"$storeDir/pending")
+      if (!pending.isEmpty) {
+        modelV.commit(batchId + 1)(graft.operators.TextAnalysis
+          .trigramModelAppend(spark.read.parquet(modelPath), pending, refLang)
+          .write.parquet(_))
+        modelV.retain()
       }
+      Fs.delete(s"$storeDir/pending")
     }
-    ()
   }
 
   /** Per-model-version served arrays (keyed by version path PLUS a
@@ -577,73 +533,63 @@ object Programs {
   private val lmServedCache = new java.util.concurrent.ConcurrentHashMap[
     String, (Array[Long], Array[Long], Long, Long)]
 
-  /** Driver-side md5 of a directory's sorted (path, length, mtime)
-    * listing — metadata only; any rewrite changes it (the
-    * QueriesLlm.corpusFingerprint convention, via the Hadoop
-    * FileSystem listing so the store can live anywhere Spark reads). */
-  private def dirFingerprint(dir: String): String =
-    graft.sources.Fs.listingFingerprint(dir)
-
   // ---- phrase-index store: streaming maintenance (r17) ---------------------
 
   /** Bootstrap the standing PHRASE store: the corpus's positional
-    * index as base version 0 under `storeDir`, ready for
-    * [[phraseIndexProgramStream]] to grow and compact. */
+    * index committed as base version 0 under `storeDir`, ready for
+    * [[phraseIndexProgramStream]] to grow and compact. A re-init starts
+    * the store over ([[clearStore]]), segments included. */
   def phraseStoreInit(docs: DataFrame, storeDir: String,
-      buckets: Int = 64): Unit =
-    graft.operators.TextIndex.writePositionalIndex(
-      graft.operators.TextIndex.buildPositionalPostings(docs, "doc_id", "text"),
-      s"$storeDir/base_v0", buckets)
+      buckets: Int = 64): Unit = {
+    val TI = graft.operators.TextIndex
+    clearStore(storeDir, "base", "seg")
+    Store.versions(storeDir, "base").commit(0)(TI.writePositionalIndex(
+      TI.buildPositionalPostings(docs, "doc_id", "text"), _, buckets))
+  }
 
   /** ONLINE phrase-index maintenance with CLOSED compaction loop —
     * the ingest/LM program convention applied to the phrase family,
     * closing its lifecycle (build 33g3 → served 33g4 → batch append
-    * 33g5 → this streaming form):
+    * 33g5 → this streaming form). Both artifacts are versioned stores
+    * ([[graft.sources.Store.versions]]) under the same crash-replay and
+    * restart contracts as [[ingestProgramStream]]:
     *
-    *  - each micro-batch's postings land as a SEGMENT mini-index
+    *  - each micro-batch's postings commit as a SEGMENT mini-index
     *    (`seg_v{batchId}` — its own term-digest directories under the
-    *    base's modulus, committed by writePositionalIndex's own
-    *    `_GRAFT_DONE`). Unlike [[graft.operators.TextIndex
+    *    base's modulus). Unlike [[graft.operators.TextIndex
     *    .appendPositionalIndex]] — which appends files INTO the
     *    standing directories and therefore cannot be replayed without
-    *    duplicating postings — a segment is a per-batch-dir
-    *    delete-then-write: a batch replayed after a crash rewrites
-    *    its own segment and nothing else. tf-weighted consumers
-    *    (searchAll/searchRanked) stay exact across replays, which the
-    *    in-place append can only promise for duplicate-insensitive
-    *    phrase queries.
+    *    duplicating postings — a segment is a per-batch version: a
+    *    batch replayed after a crash skips its committed segment, or
+    *    rewrites an uncommitted one from scratch, and touches nothing
+    *    else. tf-weighted consumers (searchAll/searchRanked) stay exact
+    *    across replays, which the in-place append can only promise for
+    *    duplicate-insensitive phrase queries.
     *  - at `compactEvery` cadence the base and its accumulated
     *    segments COMPACT into a versioned base sibling
     *    (`base_v{batchId+1}`) — read from the STORE's own postings,
     *    never a corpus re-scan — with keep-two base retention.
     *    Convention: `base_vN` folds every segment with id < N, so
     *    readers and replays agree on the fold set by arithmetic, not
-    *    bookkeeping. Skip-if-complete: a compaction that committed
-    *    before a crash is not re-run (its marker is the gate). A fold
-    *    window with NO segments skips the rewrite entirely — an idle
-    *    stream must not pay a full-index rewrite per cadence for zero
-    *    change. Folded segments get ONE COMPACTION CYCLE of grace
-    *    before clearing (the clear removes segments the PREVIOUS fold
-    *    already absorbed): an in-flight reader that listed the old
-    *    base still finds them, the same reader-grace argument keep-two
-    *    makes for bases; readers on the new base skip them by the
-    *    ids < N rule, so retained-but-folded segments are invisible,
-    *    never double-counted.
+    *    bookkeeping. A compaction that committed before a crash is not
+    *    re-run. A fold window with NO segments skips the rewrite
+    *    entirely — an idle stream must not pay a full-index rewrite per
+    *    cadence for zero change. Folded segments get ONE COMPACTION
+    *    CYCLE of grace before clearing (the clear removes segments the
+    *    PREVIOUS fold already absorbed): an in-flight reader that
+    *    listed the old base still finds them, the same reader-grace
+    *    argument keep-two makes for bases; readers on the new base skip
+    *    them by the ids < N rule, so retained-but-folded segments are
+    *    invisible, never double-counted.
     *
     * Between compactions a probe unions base + segments — file count
     * grows one mini-index per batch, the measured LSM trade
     * (BENCH_R17_OPS phrase_compaction_cycle: probe degradation is
     * flat at hundreds of files; compact by file-count budget). */
   def phraseIndexProgramStream(docs: DataFrame, storeDir: String,
-      checkpoint: String, compactEvery: Int = 4): StreamingQuery = {
-    require(compactEvery >= 1, s"compactEvery ($compactEvery) must be >= 1")
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        phraseBatchStep(batch, storeDir, batchId, compactEvery)
-      }
-      .start()
-  }
+      checkpoint: String, compactEvery: Int = 4): StreamingQuery =
+    programStream(docs, checkpoint, "compactEvery", compactEvery)(
+      phraseBatchStep(_, storeDir, _, compactEvery))
 
   /** One micro-batch of [[phraseIndexProgramStream]], factored like
     * [[ingestBatchStep]] so tests can drive replay windows directly. */
@@ -651,82 +597,59 @@ object Programs {
       batchId: Long, compactEvery: Int): Unit = {
     val spark = batch.sparkSession
     val TI = graft.operators.TextIndex
+    val baseV = Store.versions(storeDir, "base")
+    val segV = Store.versions(storeDir, "seg")
     // deterministic replay: the modulus comes from the newest base the
     // batch could have seen when it FIRST ran (versions ≤ batchId) —
     // all bases share it, the bound just keeps the read set replayable
-    val bases0 = phraseVersions(storeDir, "base").filter(_ <= batchId)
-    require(bases0.nonEmpty,
-      s"phrase store $storeDir has no complete base version <= $batchId - " +
-        "run phraseStoreInit first (or the init crashed before its marker; " +
-        "re-run it), or resume the store's original checkpoint")
-    val baseVer = bases0.max
-    val buckets = TI.positionalIndexBuckets(s"$storeDir/base_v$baseVer")
+    val baseVer = baseV.latest(batchId)
+    val buckets = TI.positionalIndexBuckets(baseV.path(baseVer))
     val postings = TI.buildPositionalPostings(batch, "doc_id", "text")
       .localCheckpoint()
-    // an empty batch writes no segment (an empty mini-index directory
-    // would hold only a marker and no readable schema); the listings
+    // an empty batch commits no segment (an empty mini-index directory
+    // would hold only markers and no readable schema); the listings
     // enumerate what exists, so gaps in segment ids are expected
     if (!postings.isEmpty)
-      TI.writePositionalIndex(postings, s"$storeDir/seg_v$batchId", buckets)
+      segV.commit(batchId)(TI.writePositionalIndex(postings, _, buckets))
     if ((batchId + 1) % compactEvery == 0) {
-      val target = s"$storeDir/base_v${batchId + 1}"
       // read set excludes segments the base being read has already
       // folded (ids < baseVer): a retained-or-stale already-folded
       // segment is not input — folding it again would double its
       // postings into the new base
-      val folded = phraseVersions(storeDir, "seg")
-        .filter(j => j >= baseVer && j <= batchId)
+      val folded = segV.committed.filter(j => j >= baseVer && j <= batchId)
       // an empty fold window writes NO new base: an idle stream must
       // not pay a full-index rewrite per cadence for zero change
-      if (folded.nonEmpty &&
-          !graft.sources.Fs.exists(s"$target/_GRAFT_DONE")) {
-        val parts = (s"$storeDir/base_v$baseVer" +:
-          folded.map(j => s"$storeDir/seg_v$j"))
-          .map(p => spark.read.parquet(p)
-            .select(col("doc_id"), col("pos"), col("term")))
-        TI.writePositionalIndex(parts.reduce(_.unionByName(_)), target, buckets)
-      }
+      if (folded.nonEmpty)
+        baseV.commit(batchId + 1)(TI.writePositionalIndex(
+          (baseV.path(baseVer) +: folded.map(segV.path))
+            .map(p => spark.read.parquet(p)
+              .select(col("doc_id"), col("pos"), col("term")))
+            .reduce(_.unionByName(_)), _, buckets))
       // keep-two bases; clear only segments the PREVIOUS fold already
       // absorbed (ids < baseVer) — the just-folded generation gets one
       // compaction cycle of reader grace (see the program scaladoc);
       // deterministic on replay: base_vN folds ids < N
-      val bases = phraseVersions(storeDir, "base").sorted
-      bases.dropRight(2).foreach(v =>
-        graft.sources.Fs.delete(s"$storeDir/base_v$v"))
-      phraseVersions(storeDir, "seg").filter(_ < baseVer)
-        .foreach(j => graft.sources.Fs.delete(s"$storeDir/seg_v$j"))
+      baseV.retain()
+      segV.dropBelow(baseVer)
     }
-    ()
   }
 
-  /** Complete (marker-carrying) versions of a phrase-store artifact. */
-  private def phraseVersions(storeDir: String, name: String): Seq[Long] =
-    graft.sources.Fs.listDirNames(storeDir)
-      .filter(_.startsWith(s"${name}_v"))
-      .map(_.stripPrefix(s"${name}_v").toLong)
-      .filter(v => graft.sources.Fs.exists(
-        s"$storeDir/${name}_v$v/_GRAFT_DONE"))
-
-  /** The phrase store's current view: the newest complete base UNION
+  /** The phrase store's current view: the newest committed base UNION
     * every committed segment the base has not folded (`base_vN` folds
     * ids < N), plus the store's bucket modulus — feed the pair to
     * [[graft.operators.TextIndex.prunePositionalIndex]] /
-    * [[graft.operators.TextIndex.searchPhrase]]. A markerless segment
+    * [[graft.operators.TextIndex.searchPhrase]]. An uncommitted segment
     * is the in-flight batch (its offsets are uncommitted too) and is
     * skipped — the store view is always a committed prefix. */
   def phraseStorePostings(spark: SparkSession, storeDir: String)
       : (DataFrame, Int) = {
-    val bases = phraseVersions(storeDir, "base")
-    require(bases.nonEmpty,
-      s"phrase store $storeDir has no complete base version - run " +
-        "phraseStoreInit first (or the init crashed before its marker)")
-    val baseVer = bases.max
-    val paths = s"$storeDir/base_v$baseVer" +:
-      phraseVersions(storeDir, "seg").filter(_ >= baseVer)
-        .map(j => s"$storeDir/seg_v$j")
+    val baseV = Store.versions(storeDir, "base")
+    val segV = Store.versions(storeDir, "seg")
+    val baseVer = baseV.latest()
+    val paths = baseV.path(baseVer) +:
+      segV.committed.filter(_ >= baseVer).map(segV.path)
     (paths.map(spark.read.parquet(_)).reduce(_.unionByName(_)),
-      graft.operators.TextIndex.positionalIndexBuckets(
-        s"$storeDir/base_v$baseVer"))
+      graft.operators.TextIndex.positionalIndexBuckets(baseV.path(baseVer)))
   }
 
   /** Streaming curation program: the watermark-bounded pipeline twin

@@ -28,7 +28,17 @@ import org.apache.spark.sql.SparkSession
   * holds wherever the path points. Bucketed tables keep their data
   * under the store path and take their catalog name from it
   * ([[table]]); the catalog is the application's in-memory one, and the
-  * key already carries the applicationId. */
+  * key already carries the applicationId.
+  *
+  * Versioned stores ([[versions]]) are the streaming programs' standing
+  * artifacts: siblings `<dir>/<name>_v<n>` under the same marker and
+  * the same two rules. A version is committed exactly when its marker
+  * exists, and only committed versions are read. A committed version
+  * is never rewritten, so a replayed batch skips what its first run
+  * committed. Retention keeps the two newest committed versions (the
+  * newest's reader may still be on the previous one) and drops every
+  * version below them, marker or not. One writer per family — the
+  * stream's own micro-batch — so commits take no lock. */
 object Store {
 
   private val Root = "/tmp/"
@@ -55,14 +65,65 @@ object Store {
     * rules). */
   def once(kind: String, spark: SparkSession, dir: String)(build: String => Unit): String = {
     val p = path(kind, spark, dir)
-    locks.computeIfAbsent(p, _ => new Object).synchronized {
-      if (!Fs.exists(s"$p/$Marker")) {
-        Fs.delete(p)
-        build(p)
-        Fs.writeString(s"$p/$Marker", "ok\n")
-      }
-    }
+    locks.computeIfAbsent(p, _ => new Object).synchronized(commitAt(p)(build))
     p
+  }
+
+  /** Delete-first, `write(p)`, marker-last — unless `p` already carries
+    * its marker. */
+  private def commitAt(p: String)(write: String => Unit): Unit =
+    if (!Fs.exists(s"$p/$Marker")) {
+      Fs.delete(p)
+      write(p)
+      Fs.writeString(s"$p/$Marker", "ok\n")
+    }
+
+  /** The versioned family `<dir>/<name>_v<n>` (see the object doc). */
+  def versions(dir: String, name: String): Versions = new Versions(dir, name)
+
+  /** The one restart contract every versioned read fails with. */
+  private[graft] def restartContract(dir: String, name: String, upTo: Long): String =
+    s"store $dir has no committed $name version" +
+      (if (upTo == Long.MaxValue) "" else s" <= $upTo") + ". A stream must " +
+      "either RESUME its own checkpoint (batch ids continue where the " +
+      "versions do) or run against a freshly initialized store: a new " +
+      "checkpoint restarts batch ids at 0, which cannot read a matured " +
+      "store's pruned early versions (and would re-number new versions " +
+      "below the standing ones). Re-init the store or resume the " +
+      "original checkpoint."
+
+  final class Versions private[Store] (dir: String, name: String) {
+    private val Dir = (java.util.regex.Pattern.quote(name) + "_v(\\d+)").r
+    def path(v: Long): String = s"$dir/${name}_v$v"
+    private def listed: Seq[Long] = Fs.listDirNames(dir).collect { case Dir(v) => v.toLong }
+    private def isCommitted(v: Long): Boolean = Fs.exists(s"${path(v)}/$Marker")
+    private def drop(vs: Seq[Long], cut: Long): Unit =
+      vs.filter(_ < cut).foreach(v => Fs.delete(path(v)))
+
+    /** Committed versions, ascending. */
+    def committed: Seq[Long] = listed.filter(isCommitted).sorted
+
+    /** The newest committed version `<= upTo`, else the restart contract. */
+    def latest(upTo: Long = Long.MaxValue): Long = {
+      val vs = committed.filter(_ <= upTo)
+      require(vs.nonEmpty, restartContract(dir, name, upTo))
+      vs.last
+    }
+
+    /** [[once]]'s body without the lock: a no-op if `v` is committed. */
+    def commit(v: Long)(write: String => Unit): Unit = commitAt(path(v))(write)
+
+    /** Keep the two newest committed versions, drop everything below. */
+    def retain(): Unit = {
+      val vs = listed
+      vs.filter(isCommitted).sorted.takeRight(2).headOption.foreach(drop(vs, _))
+    }
+
+    /** Drop every version below `cut`, marker or not. */
+    def dropBelow(cut: Long): Unit = drop(listed, cut)
+
+    /** Drop the whole family. */
+    def clear(): Unit = dropBelow(Long.MaxValue)
   }
 
   /** Catalog name of the bucketed table whose data lives at `location`

@@ -200,8 +200,9 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("shuffle budget: every query stays within its audited exchange count") {
-    // Measured with Probe's `shuffles` mode; a regression here means a
-    // plan gained a shuffle (the thing that breaks first at 100 TB).
+    // Counted from each query's physical plan on every run of this
+    // test; a regression here means a plan gained a shuffle (the thing
+    // that breaks first at 100 TB).
     // Counts exclude broadcasts (those are the point) and are upper
     // bounds. Two-phase exact distinct and salted aggs legitimately
     // need 2; dedup pipelines need one per keyed stage.
@@ -242,8 +243,8 @@ class PlanSpec extends AnyFunSuite {
       // pass from the main pass's exchanges (measured: an eager
       // localCheckpoint of the cut output bought ZERO steady-state time
       // at sf1m, 9.19 vs 9.31 s, while regressing the cold run 6×);
-      // deployment appends from the materialized store anyway (the
-      // Probe `maintain` cycle prices that shape)
+      // deployment appends from the materialized store anyway (perfbench's
+      // `ingest` workload times that maintenance cycle)
       "q_ingest_index_update" -> 29,
       // r14 quality row, EXACT (re-audited with the digest-set verify):
       // the exact prefix-join truth (q_simjoin_prefix's 9) + the staged

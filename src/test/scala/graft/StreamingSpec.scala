@@ -2,8 +2,10 @@ package graft
 
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, Encoder, SQLContext}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.sources.{Fs, Store}
 import graft.streaming.StreamingJobs
 
 /** Streaming twins (SURVEY rows 42-44) driven through MemoryStream:
@@ -785,9 +787,9 @@ class StreamingSpec extends AnyFunSuite {
       assert(b1.map(_._1).toSet == Set(201L),
         s"batch 1 must admit exactly the quota-reject re-delivery: ${b1.toSeq}")
       // after batch 1 (maintainEvery = 2) the gram/band arms folded
-      assert(new java.io.File(s"$dir/gram_index_v2/_SUCCESS").isFile,
+      assert(new java.io.File(s"$dir/gram_index_v2/${Store.Marker}").isFile,
         "cadence fold must write a new gram index version")
-      assert(new java.io.File(s"$dir/band_index_v2/_SUCCESS").isFile)
+      assert(new java.io.File(s"$dir/band_index_v2/${Store.Marker}").isFile)
       assert(!new java.io.File(s"$dir/pending").exists,
         "folded pending docs must be cleared")
       // batch 2: a novel doc QUOTING 10 consecutive words of the
@@ -808,7 +810,7 @@ class StreamingSpec extends AnyFunSuite {
         cutText.contains("qz2"),
         "the quoted passage must be cut, the doc's own words kept")
       // the bloom arm versioned every batch; gram/band only at cadence
-      assert(new java.io.File(s"$dir/bits_v3/_SUCCESS").isFile)
+      assert(new java.io.File(s"$dir/bits_v3/${Store.Marker}").isFile)
       assert(!new java.io.File(s"$dir/gram_index_v3").exists,
         "gram index must fold at cadence, not per batch")
     } finally q.stop()
@@ -858,7 +860,7 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()
       assert(admitted(0) == Set(100L),
         s"v0 must admit A and refuse D: ${admitted(0)}")
-      assert(new java.io.File(s"$dir/lm_model_v1/_SUCCESS").isFile,
+      assert(new java.io.File(s"$dir/lm_model_v1/${Store.Marker}").isFile,
         "cadence fold must write a new model version")
       // batch 1: the same D content under a fresh id now PASSES — the
       // in-stream fold changed the verdict exactly as the re-train did
@@ -890,7 +892,7 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val aText = commonText + " " + ("q" * 41)
     step(0, (100L, aText, "en")) // admits A (threshold infinite), folds v1
-    assert(new java.io.File(s"$dir/lm_model_v1/_SUCCESS").isFile)
+    assert(new java.io.File(s"$dir/lm_model_v1/${Store.Marker}").isFile)
     val v1 = modelMap(s"$dir/lm_model_v1")
     // fold ≡ rebuild over corpus ∪ A
     assert(v1 == TextAnalysis.trigramModel(
@@ -973,14 +975,14 @@ class StreamingSpec extends AnyFunSuite {
     val b3 = Seq(12L -> "alpha beta end")
     // batch 0: segment append, no compaction yet
     step(0, b0: _*)
-    assert(graft.sources.Fs.exists(s"$dir/seg_v0/_GRAFT_DONE"))
+    assert(graft.sources.Fs.exists(s"$dir/seg_v0/${Store.Marker}"))
     assert(served() == inline(b0) && served().exists(_._1 == 10L))
     // batch 1: compaction fold — base_v2 commits; the just-folded
     // segments are RETAINED one cycle for reader grace but must be
     // invisible to the new base's readers (ids < N rule): the posting
     // multiset proves no double counting
     step(1, b1: _*)
-    assert(graft.sources.Fs.exists(s"$dir/base_v2/_GRAFT_DONE"))
+    assert(graft.sources.Fs.exists(s"$dir/base_v2/${Store.Marker}"))
     assert(graft.sources.Fs.exists(s"$dir/seg_v0") &&
       graft.sources.Fs.exists(s"$dir/seg_v1"),
       "just-folded segments keep one cycle of reader grace")
@@ -1000,7 +1002,7 @@ class StreamingSpec extends AnyFunSuite {
     // PREVIOUS generation's folded segments now clear, keep-two prunes
     // the oldest base
     step(3, b3: _*)
-    assert(graft.sources.Fs.exists(s"$dir/base_v4/_GRAFT_DONE"))
+    assert(graft.sources.Fs.exists(s"$dir/base_v4/${Store.Marker}"))
     assert(!graft.sources.Fs.exists(s"$dir/base_v0"),
       "keep-two must prune the oldest base")
     assert(!graft.sources.Fs.exists(s"$dir/seg_v0") &&
@@ -1016,9 +1018,15 @@ class StreamingSpec extends AnyFunSuite {
     // would double its postings), and re-run the clear
     TextIndex.writePositionalIndex(TextIndex.buildPositionalPostings(
       b0.toDF("doc_id", "text"), "doc_id", "text"), s"$dir/seg_v0", 16)
+    // the same stale generation, committed through the store's own path
+    Store.versions(dir, "seg").commit(1)(TextIndex.writePositionalIndex(
+      TextIndex.buildPositionalPostings(b1.toDF("doc_id", "text"), "doc_id", "text"),
+      _, 16))
     step(3, b3: _*)
     assert(!graft.sources.Fs.exists(s"$dir/seg_v0"),
       "the replayed clear must remove the stale segment")
+    assert(!graft.sources.Fs.exists(s"$dir/seg_v1"),
+      "the replayed clear must remove the committed stale segment too")
     assert(served() == inline(b0 ++ b1 ++ b3) &&
       storePostingRows() == inlinePostingRows(b0 ++ b1 ++ b3),
       "a stale folded segment must never re-fold")
@@ -1098,5 +1106,233 @@ class StreamingSpec extends AnyFunSuite {
     // and the loop continues normally after a replay
     step(2, (300L, (1 to 12).map(i => s"zw$i").mkString(" "), "s"))
     assert(admittedRows(2L).map(_._1) == Set(300L))
+  }
+
+  // ---- versioned program stores: restart, re-init, crash leftovers --------
+
+  private def words(prefix: String, n: Int): String =
+    (1 to n).map(i => s"$prefix$i").mkString(" ")
+
+  private def rowsOf(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  private def rowsAt(path: String): Seq[String] = rowsOf(spark.read.parquet(path))
+
+  /** Feeds `batches` to `program` as micro-batches 0, 1, … of a stream on
+    * a new checkpoint. */
+  private def runProgram[A <: Product : Encoder](cols: String*)(batches: Seq[Seq[A]])(
+      program: (DataFrame, String) => StreamingQuery): Unit = {
+    implicit val ctx: SQLContext = spark.sqlContext
+    val in = MemoryStream[A]
+    val q = program(in.toDF().toDF(cols: _*), s"/tmp/graft_program_cp/${System.nanoTime()}")
+    try batches.foreach(b => feed(q)(in.addData(b)))
+    finally q.stop()
+  }
+
+  /** The message of the `require` a program stream died with. */
+  private def requireFailure(run: => Unit): String = {
+    val e = intercept[Exception](run)
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case i: IllegalArgumentException => i.getMessage }
+      .getOrElse(throw e)
+  }
+
+  /** A crash leftover at `path`: a truncated part-file plus `_SUCCESS`
+    * (a write can die after Spark's job commit), but no store marker. */
+  private def plantCrashed(path: String): Unit = {
+    Fs.delete(path)
+    Fs.writeString(s"$path/part-00000-crashed.snappy.parquet", "PAR1 truncated")
+    Fs.writeString(s"$path/_SUCCESS", "")
+  }
+
+  private def latestRows(dir: String, name: String): (Long, Seq[String]) = {
+    val v = Store.versions(dir, name)
+    val n = v.latest()
+    (n, rowsAt(v.path(n)))
+  }
+
+  test("ingest store: a new checkpoint on a matured store fails with the restart contract, and a re-init starts it over") {
+    val corpus = Seq((1L, words("cw", 30), "base")).toDF("doc_id", "text", "source")
+    // the second life re-delivers the first life's last text: a stale
+    // pending/ or index version would refuse it, a fresh store admits it
+    val life1 = Seq(Seq((100L, words("aw", 12), "s")), Seq((101L, words("bw", 12), "s")),
+      Seq((102L, words("dw", 12), "s")))
+    val life2 = Seq(Seq((200L, words("ew", 12), "s")), Seq((201L, words("fw", 12), "s")),
+      Seq((202L, words("dw", 12), "t")))
+    def ingest(dir: String)(df: DataFrame, cp: String) =
+      Programs.ingestProgramStream(df, dir, cp, quotaPerSource = 5L, maintainEvery = 2)
+    def results(dir: String) = (rowsAt(s"$dir/admitted"),
+      Seq("bits", "band_index", "gram_index").map(latestRows(dir, _)))
+    val dir = s"/tmp/graft_ingest_reinit/${System.nanoTime()}"
+    Programs.ingestStoreInit(corpus, dir)
+    runProgram("doc_id", "text", "source")(life1)(ingest(dir))
+    assert(!Fs.exists(s"$dir/bits_v0") && Fs.isDir(s"$dir/pending"),
+      "the first life must end past its first retention, with docs pending")
+    assert(requireFailure(runProgram("doc_id", "text", "source")(life2)(ingest(dir))) ==
+      "requirement failed: " + Store.restartContract(dir, "bits", 0))
+    Programs.ingestStoreInit(corpus, dir)
+    runProgram("doc_id", "text", "source")(life2)(ingest(dir))
+    val fresh = s"/tmp/graft_ingest_reinit/${System.nanoTime()}_fresh"
+    Programs.ingestStoreInit(corpus, fresh)
+    runProgram("doc_id", "text", "source")(life2)(ingest(fresh))
+    assert(results(dir) == results(fresh), "a re-initialized store must equal a fresh one")
+    assert(spark.read.parquet(s"$fresh/admitted").count() == 3)
+  }
+
+  test("LM store: a new checkpoint on a matured store fails with the restart contract, and a re-init starts it over") {
+    val common = (1 to 20).map(_ => "the cat sat on the mat").mkString(" ")
+    val corpus = (1L to 10L).map(i => (i, common, "en")).toDF("doc_id", "text", "lang")
+    def life(base: Long, word: String) =
+      (0 until 5).map(i => Seq((base + i, s"$common $word$i $word", "en")))
+    val (life1, life2) = (life(100L, "zebra"), life(200L, "quokka"))
+    def gate(dir: String)(df: DataFrame, cp: String) =
+      Programs.lmGateProgramStream(df, dir, cp, keepBelowMb = Long.MaxValue, maintainEvery = 2)
+    def results(dir: String) = (rowsAt(s"$dir/admitted"), latestRows(dir, "lm_model"))
+    val dir = s"/tmp/graft_lm_reinit/${System.nanoTime()}"
+    Programs.lmStoreInit(corpus, dir)
+    runProgram("doc_id", "text", "lang")(life1)(gate(dir))
+    assert(!Fs.exists(s"$dir/lm_model_v0") && Fs.isDir(s"$dir/pending"),
+      "the first life must end past its first retention, with docs pending")
+    assert(requireFailure(runProgram("doc_id", "text", "lang")(life2)(gate(dir))) ==
+      "requirement failed: " + Store.restartContract(dir, "lm_model", 0))
+    Programs.lmStoreInit(corpus, dir)
+    runProgram("doc_id", "text", "lang")(life2)(gate(dir))
+    val fresh = s"/tmp/graft_lm_reinit/${System.nanoTime()}_fresh"
+    Programs.lmStoreInit(corpus, fresh)
+    runProgram("doc_id", "text", "lang")(life2)(gate(fresh))
+    assert(results(dir) == results(fresh), "a re-initialized store must equal a fresh one")
+  }
+
+  test("phrase store: a new checkpoint on a matured store fails with the restart contract, and a re-init starts it over") {
+    val corpus = Seq((1L, "alpha beta gamma"), (2L, "beta alpha")).toDF("doc_id", "text")
+    val life1 = (0 until 4).map(i => Seq((100L + i, s"alpha beta old$i")))
+    val life2 = (0 until 4).map(i => Seq((200L + i, s"new$i alpha beta")))
+    def index(dir: String)(df: DataFrame, cp: String) =
+      Programs.phraseIndexProgramStream(df, dir, cp, compactEvery = 2)
+    def results(dir: String) = (rowsOf(Programs.phraseStorePostings(spark, dir)._1),
+      Store.versions(dir, "base").committed)
+    val dir = s"/tmp/graft_phrase_reinit/${System.nanoTime()}"
+    Programs.phraseStoreInit(corpus, dir, buckets = 16)
+    runProgram("doc_id", "text")(life1)(index(dir))
+    assert(!Fs.exists(s"$dir/base_v0") && Fs.exists(s"$dir/seg_v3"),
+      "the first life must end past its first retention, with a segment in grace")
+    assert(requireFailure(runProgram("doc_id", "text")(life2)(index(dir))) ==
+      "requirement failed: " + Store.restartContract(dir, "base", 0))
+    Programs.phraseStoreInit(corpus, dir, buckets = 16)
+    runProgram("doc_id", "text")(life2)(index(dir))
+    val fresh = s"/tmp/graft_phrase_reinit/${System.nanoTime()}_fresh"
+    Programs.phraseStoreInit(corpus, fresh, buckets = 16)
+    runProgram("doc_id", "text")(life2)(index(fresh))
+    assert(results(dir) == results(fresh), "a re-initialized store must equal a fresh one")
+  }
+
+  test("ingest store crash leftovers: a markerless version is replaced at commit and never read") {
+    val corpus = Seq((1L, words("cw", 30), "base")).toDF("doc_id", "text", "source")
+    val batches = Seq(Seq((100L, words("aw", 12), "s")), Seq((101L, words("bw", 12), "s")))
+    def run(dir: String)(plant: Long => Unit): Unit = {
+      Programs.ingestStoreInit(corpus, dir)
+      for ((rows, id) <- batches.zipWithIndex) {
+        plant(id.toLong)
+        Programs.ingestBatchStep(rows.toDF("doc_id", "text", "source"), dir, id.toLong,
+          quotaPerSource = 5L, spanWords = 10, maintainEvery = 2, bloomK = 3,
+          bloomWidth = 1 << 20)
+      }
+    }
+    val clean = s"/tmp/graft_ingest_crash/${System.nanoTime()}"
+    val dir = s"${clean}_planted"
+    run(clean)(_ => ())
+    run(dir) {
+      case 0L => plantCrashed(s"$dir/bits_v1")
+      case _ =>
+        Seq("bits_v2", "gram_index_v2", "band_index_v2").foreach(n => plantCrashed(s"$dir/$n"))
+        // complete data at a version batch 1 would read if markers were
+        // not the rule: it holds batch 1's own text, so reading it
+        // would cut the whole doc
+        graft.operators.Dedup.gramIndex(
+            batches(1).map(r => (r._1, r._2)).toDF("doc_id", "text"), 10)
+          .write.parquet(s"$dir/gram_index_v1")
+    }
+    for (n <- Seq("bits_v1", "bits_v2", "gram_index_v2", "band_index_v2")) {
+      assert(Fs.exists(s"$dir/$n/${Store.Marker}"), s"$n must be committed")
+      assert(rowsAt(s"$dir/$n") == rowsAt(s"$clean/$n"), s"$n must equal the unplanted run")
+    }
+    assert(rowsAt(s"$clean/admitted").length == 2)
+    assert(rowsAt(s"$dir/admitted") == rowsAt(s"$clean/admitted"),
+      "the uncommitted gram_index_v1 must never be read")
+  }
+
+  test("LM store crash leftovers: a markerless version is replaced at commit, never read, and dropped by retention") {
+    val common = (1 to 20).map(_ => "the cat sat on the mat").mkString(" ")
+    val corpus = (1L to 10L).map(i => (i, common, "en")).toDF("doc_id", "text", "lang")
+    val batches = (0 until 4).map(i => Seq((100L + i, s"$common zebra$i zebra", "en")))
+    def run(dir: String)(plant: Long => Unit): Unit = {
+      Programs.lmStoreInit(corpus, dir)
+      for ((rows, id) <- batches.zipWithIndex) {
+        plant(id.toLong)
+        Programs.lmBatchStep(rows.toDF("doc_id", "text", "lang"), dir, id.toLong,
+          keepBelowMb = Long.MaxValue, maintainEvery = 2, refLang = "en")
+      }
+    }
+    val clean = s"/tmp/graft_lm_crash/${System.nanoTime()}"
+    val dir = s"${clean}_planted"
+    run(clean)(_ => ())
+    run(dir) {
+      case 1L =>
+        plantCrashed(s"$dir/lm_model_v2")
+        // a complete model of other text at a version batch 1 would read
+        // if markers were not the rule
+        graft.operators.TextAnalysis.trigramModel(
+            Seq((1L, "xyzzy plugh", "en")).toDF("doc_id", "text", "lang"))
+          .write.parquet(s"$dir/lm_model_v1")
+      case 3L => plantCrashed(s"$dir/lm_model_v4")
+      case _ =>
+    }
+    for (n <- Seq("lm_model_v2", "lm_model_v4")) {
+      assert(Fs.exists(s"$dir/$n/${Store.Marker}"), s"$n must be committed")
+      assert(rowsAt(s"$dir/$n") == rowsAt(s"$clean/$n"), s"$n must equal the unplanted run")
+    }
+    assert(rowsAt(s"$dir/admitted") == rowsAt(s"$clean/admitted"),
+      "the uncommitted lm_model_v1 must never be read")
+    assert(!Fs.exists(s"$dir/lm_model_v1"),
+      "retention must drop an uncommitted version below the two it keeps")
+  }
+
+  test("phrase store crash leftovers: a markerless segment or base is replaced at commit and never read") {
+    import graft.operators.TextIndex
+    val corpus = Seq((1L, "alpha beta gamma"), (2L, "beta alpha")).toDF("doc_id", "text")
+    val batches = Seq(Seq((10L, "alpha beta alpha")), Seq((11L, "gg alpha beta")))
+    def run(dir: String)(plant: Long => Unit): Unit = {
+      Programs.phraseStoreInit(corpus, dir, buckets = 16)
+      for ((rows, id) <- batches.zipWithIndex) {
+        plant(id.toLong)
+        Programs.phraseBatchStep(rows.toDF("doc_id", "text"), dir, id.toLong, compactEvery = 2)
+      }
+    }
+    // the operator's own marker does not commit a store version
+    def plantIndexCrashed(path: String): Unit = {
+      plantCrashed(path)
+      Fs.writeString(s"$path/_GRAFT_DONE", "buckets=16\n")
+    }
+    val clean = s"/tmp/graft_phrase_crash/${System.nanoTime()}"
+    val dir = s"${clean}_planted"
+    run(clean)(_ => ())
+    run(dir) {
+      case 0L => plantIndexCrashed(s"$dir/seg_v0")
+      case _ =>
+        plantIndexCrashed(s"$dir/seg_v1")
+        plantIndexCrashed(s"$dir/base_v2")
+        // a complete index of other docs at a version batch 1 would read
+        // (and fold) if markers were not the rule
+        TextIndex.writePositionalIndex(TextIndex.buildPositionalPostings(
+            Seq((99L, "alpha beta stale")).toDF("doc_id", "text"), "doc_id", "text"),
+          s"$dir/base_v1", 16)
+    }
+    for (n <- Seq("seg_v0", "seg_v1", "base_v2")) {
+      assert(Fs.exists(s"$dir/$n/${Store.Marker}"), s"$n must be committed")
+      assert(rowsAt(s"$dir/$n") == rowsAt(s"$clean/$n"), s"$n must equal the unplanted run")
+    }
+    assert(rowsOf(Programs.phraseStorePostings(spark, dir)._1) ==
+      rowsOf(Programs.phraseStorePostings(spark, clean)._1),
+      "the uncommitted base_v1 must never be read")
   }
 }
