@@ -214,11 +214,18 @@ object Programs {
     * index-side exchange); this core takes them as inputs so the
     * program and its tests run the same graph the deployment runs.
     * Accepted rows carry the cut audit columns (n_removed, n_spans)
-    * alongside qrank. */
+    * alongside qrank.
+    *
+    * `stage` is applied to each frame that two consumers read: gate 1's
+    * survivors (the band probe and its anti-join) and the cut (the
+    * quota's counts and its ranks). A query keeps the default, one lazy
+    * plan; the streaming step passes a materialization, so each
+    * batch-sized frame is computed once ([[ingestBatchStep]]). */
   def ingestCore(bits: DataFrame, bandIndex: DataFrame, gramIndex: DataFrame,
-      batch: DataFrame, quotaPerSource: Long, spanWords: Int = 10): DataFrame =
+      batch: DataFrame, quotaPerSource: Long, spanWords: Int = 10,
+      stage: DataFrame => DataFrame = identity): DataFrame =
     graft.operators.Sampling.quotaCap(
-      admissionCut(bits, bandIndex, gramIndex, batch, spanWords),
+      stage(admissionCut(bits, bandIndex, gramIndex, batch, spanWords, stage)),
       "source", "doc_id", quotaPerSource, seed = "ingest0")
 
   /** Gates 1–3 of [[ingestCore]] — the admission CUT (everything up to
@@ -229,15 +236,20 @@ object Programs {
     * (md5-ordered sample vs first-arrivals — the 44g asymmetry), so the
     * shared surface ends here. */
   def admissionCut(bits: DataFrame, bandIndex: DataFrame, gramIndex: DataFrame,
-      batch: DataFrame, spanWords: Int = 10): DataFrame = {
-    val fresh = graft.operators.Freq.bloomProbe(
+      batch: DataFrame, spanWords: Int = 10,
+      stage: DataFrame => DataFrame = identity): DataFrame = {
+    val fresh = stage(graft.operators.Freq.bloomProbe(
         bits, batch.withColumn("item", md5(col("text"))), k = 3, width = 1 << 20)
       .filter(!col("maybe_member"))
-      .drop("item", "n_hits", "maybe_member")
+      .drop("item", "n_hits", "maybe_member"))
     val nearDups = graft.operators.Dedup.probeBandIndex(
         fresh, bandIndex, k = 3, perms = 8, bands = 4)
       .select(col("doc_id"))
-    val novel = fresh.join(nearDups, Seq("doc_id"), "left_anti")
+    // pinned sort-merge: the collided ids arrive hash-partitioned by
+    // their distinct, so AQE's switch to a broadcast would only add a job,
+    // and the doc_id partitioning the join leaves serves gate 3's join
+    // back to its flagged starts
+    val novel = fresh.join(nearDups.hint("merge"), Seq("doc_id"), "left_anti")
     graft.operators.Dedup.probeGramIndex(novel, gramIndex, spanWords)
       .withColumn("text", col("clean_text"))
       .drop("clean_text")
@@ -328,6 +340,18 @@ object Programs {
     *    boundary, priced per-gate instead of papered over (the
     *    curation program's span-stage posture).
     *
+    * One pass per micro-batch. The stream holds one
+    * [[graft.sources.Store.Resolver]]: each committed artifact version is
+    * resolved once (its schema taken from the family, so no read runs a
+    * schema-inference job) and serves every batch until retention drops
+    * it. Each batch-sized frame is computed once: [[ingestCore]]
+    * checkpoints gate 1's survivors and the admission cut where two
+    * consumers read them, and the admitted write materializes the stored
+    * set, which the pending write and the bloom rewrite read back. A
+    * probe batch runs 18 Spark jobs; a fold batch 31, or 30 when no
+    * admitted doc lands in a standing band bucket (StreamingSpec pins
+    * both).
+    *
     * Maintenance appends derive from ingestCore's POST-QUOTA output —
     * what the store actually carries (the r13 ADVICE invariant: a
     * quota-rejected doc is never tombstoned as seen). Every artifact is
@@ -369,21 +393,24 @@ object Programs {
       checkpoint: String, quotaPerSource: Long, spanWords: Int = 10,
       maintainEvery: Int = 4, bloomK: Int = 3,
       bloomWidth: Int = 1 << 20): StreamingQuery =
-    programStream(docs, checkpoint, "maintainEvery", maintainEvery)(
+    programStream(docs, checkpoint, "maintainEvery", maintainEvery) {
+      val resolver = new Store.Resolver
       ingestBatchStep(_, storeDir, _, quotaPerSource, spanWords,
-        maintainEvery, bloomK, bloomWidth))
+        maintainEvery, bloomK, bloomWidth, resolver)
+    }
 
   /** One micro-batch of [[ingestProgramStream]], factored out so the
     * crash-replay windows can be driven directly (StreamingSpec): the
-    * stream's foreachBatch delegates here verbatim. Deterministic in
-    * (batchId, batch rows, versions ≤ batchId) — see the replay
-    * contract on [[ingestProgramStream]]. */
+    * stream's foreachBatch delegates here verbatim, with the stream's
+    * one `resolver`. Deterministic in (batchId, batch rows, versions ≤
+    * batchId) — see the replay contract on [[ingestProgramStream]]. */
   private[graft] def ingestBatchStep(batch: DataFrame, storeDir: String,
       batchId: Long, quotaPerSource: Long, spanWords: Int,
-      maintainEvery: Int, bloomK: Int, bloomWidth: Int): Unit = {
-    // no defaults here: the stream passes every argument explicitly, and
-    // a second set of defaults would let the test-driven replay path
-    // silently drift from the production gate geometry
+      maintainEvery: Int, bloomK: Int, bloomWidth: Int,
+      resolver: Store.Resolver = new Store.Resolver): Unit = {
+    // no defaults for the gate geometry: the stream passes every argument
+    // explicitly, and a second set of defaults would let the test-driven
+    // replay path silently drift from the production gate geometry
     val spark = batch.sparkSession
     val bitsV = Store.versions(storeDir, "bits")
     val bandV = Store.versions(storeDir, "band_index")
@@ -391,26 +418,28 @@ object Programs {
     // reads bounded to the pre-batch state: a replayed batch must never
     // probe the artifacts its first run wrote (they contain its own
     // docs — it would refuse them and overwrite `admitted` empty)
-    def read(v: Store.Versions) = spark.read.parquet(v.path(v.latest(batchId)))
+    def read(v: Store.Versions) = resolver.frame(spark, v, resolver.latest(v, batchId))
     val bits = read(bitsV)
     val bandIdx = read(bandV)
     val gramIdx = read(gramV)
-    // localCheckpoint: the stored set must be MATERIAL before any
-    // artifact it feeds is rewritten (a lazy plan re-reading a
-    // replaced version would be undefined)
-    val stored = ingestCore(bits, bandIdx, gramIdx, batch,
-      quotaPerSource, spanWords).localCheckpoint()
-    stored.write.mode("overwrite")
-      .parquet(s"$storeDir/admitted/batch=$batchId")
+    // gate 1's survivors and the cut are checkpointed where ingestCore
+    // stages them, so each is computed once; the admitted write then
+    // materializes the stored set, and every later write reads it back,
+    // so no artifact is rewritten from a lazy plan over a replaced version
+    val core = ingestCore(bits, bandIdx, gramIdx, batch, quotaPerSource,
+      spanWords, _.localCheckpoint())
+    val admitted = s"$storeDir/admitted/batch=$batchId"
+    core.write.mode("overwrite").parquet(admitted)
+    val stored = spark.read.schema(core.schema).parquet(admitted)
     // pending is per-batch-dir OVERWRITE, like admitted: a batch
     // replayed after a crash lands in the same directory instead of
     // appending twice — a doubled pending doc would inflate the next
     // fold's df counts (append ≡ rebuild would silently break)
-    stored.select(col("doc_id"), col("text"))
-      .write.mode("overwrite").parquet(s"$storeDir/pending/batch=$batchId")
+    val pendingDocs = stored.select(col("doc_id"), col("text"))
+    pendingDocs.write.mode("overwrite").parquet(s"$storeDir/pending/batch=$batchId")
     bitsV.commit(batchId + 1)(graft.operators.Freq.bloomAppend(bits,
         stored.select(md5(col("text")).as("item")), bloomK, bloomWidth)
-      .localCheckpoint().write.parquet(_))
+      .write.parquet(_))
     bitsV.retain()
     if ((batchId + 1) % maintainEvery == 0 && Fs.isDir(s"$storeDir/pending")) {
       // a fold version that committed before a crash is skipped by its
@@ -419,8 +448,8 @@ object Programs {
       // only the replayed batch, would UNDERfold). Either way the
       // committed version is the correct one; only the clear re-runs.
       // An empty pending folds nothing and is just cleared.
-      val pending = spark.read.parquet(s"$storeDir/pending")
-        .select(col("doc_id"), col("text")).localCheckpoint()
+      val pending = spark.read.schema(pendingDocs.schema).parquet(s"$storeDir/pending")
+        .select(col("doc_id"), col("text"))
       if (!pending.isEmpty) {
         gramV.commit(batchId + 1)(graft.operators.Dedup
           .gramIndexAppend(gramIdx, pending, spanWords).write.parquet(_))
@@ -453,13 +482,13 @@ object Programs {
     * ingest tier's maintenance convention to the LM:
     *
     *  - each micro-batch scores against the newest committed model
-    *    version (collected once per version — a committed version is
-    *    never rewritten ([[graft.sources.Store.versions]]), and the
-    *    per-path cache also keys on the listing, so a re-init at the
-    *    same path can never serve stale) through the same compiled
-    *    row-local [[graft.operators.TextAnalysis.surprisalServed]]
-    *    scorer the stateless gate uses, and admits docs under the
-    *    threshold;
+    *    version (collected once per version by the stream's
+    *    [[graft.sources.Store.Resolver]] — a committed version is never
+    *    rewritten, and a re-init starts a new stream with a new
+    *    resolver, so a re-initialized store is never served stale)
+    *    through the same compiled row-local
+    *    [[graft.operators.TextAnalysis.surprisalServed]] scorer the
+    *    stateless gate uses, and admits docs under the threshold;
     *  - admitted docs accumulate under `pending/` (per-batch-dir
     *    overwrite, replay-idempotent), and at `maintainEvery` cadence
     *    their `refLang` trigram counts FOLD into the model
@@ -486,52 +515,44 @@ object Programs {
   def lmGateProgramStream(docs: DataFrame, storeDir: String,
       checkpoint: String, keepBelowMb: Long = 7340L,
       maintainEvery: Int = 4, refLang: String = "en"): StreamingQuery =
-    programStream(docs, checkpoint, "maintainEvery", maintainEvery)(
-      lmBatchStep(_, storeDir, _, keepBelowMb, maintainEvery, refLang))
+    programStream(docs, checkpoint, "maintainEvery", maintainEvery) {
+      val resolver = new Store.Resolver
+      lmBatchStep(_, storeDir, _, keepBelowMb, maintainEvery, refLang, resolver)
+    }
 
   /** One micro-batch of [[lmGateProgramStream]], factored like
     * [[ingestBatchStep]] so tests can drive replay windows directly. */
   private[graft] def lmBatchStep(batch: DataFrame, storeDir: String,
       batchId: Long, keepBelowMb: Long, maintainEvery: Int,
-      refLang: String): Unit = {
+      refLang: String, resolver: Store.Resolver = new Store.Resolver): Unit = {
     val spark = batch.sparkSession
     val modelV = Store.versions(storeDir, "lm_model")
-    val modelPath = modelV.path(modelV.latest(batchId))
-    // keyed (path, content fingerprint), not path alone: a re-init
-    // commits lm_model_v0 again at the same path, so a same-JVM re-init
-    // at the same storeDir would otherwise serve the previous corpus's
-    // cached arrays (the lmModelCache corpusFingerprint lesson)
-    val (keys, cnts, tot, v) = lmServedCache.computeIfAbsent(
-      modelPath + "|" + Fs.listingFingerprint(modelPath), _ => {
-        val m = spark.read.parquet(modelPath).collect()
-          .map(r => (r.getLong(0), r.getLong(1)))
-        (m.map(_._1), m.map(_._2), m.map(_._2).sum, m.length.toLong)
-      })
+    val version = resolver.latest(modelV, batchId)
+    val model = resolver.frame(spark, modelV, version)
+    // the served arrays are collected once per version: the resolver
+    // lives as long as the stream, and a re-init starts a new stream
+    val (keys, cnts, tot, v) = resolver.derive(modelV, version) {
+      val m = model.collect().map(r => (r.getLong(0), r.getLong(1)))
+      (m.map(_._1), m.map(_._2), m.map(_._2).sum, m.length.toLong)
+    }
     val admitted = graft.operators.TextAnalysis
       .surprisalServed(batch, keys, cnts, tot, v, keepBelowMb)
       .filter(col("keep")).localCheckpoint()
     admitted.write.mode("overwrite")
       .parquet(s"$storeDir/admitted/batch=$batchId")
-    admitted.select(col("doc_id"), col("lang"), col("text"))
-      .write.mode("overwrite").parquet(s"$storeDir/pending/batch=$batchId")
+    val pendingDocs = admitted.select(col("doc_id"), col("lang"), col("text"))
+    pendingDocs.write.mode("overwrite").parquet(s"$storeDir/pending/batch=$batchId")
     if ((batchId + 1) % maintainEvery == 0 && Fs.isDir(s"$storeDir/pending")) {
-      val pending = spark.read.parquet(s"$storeDir/pending")
-        .select(col("doc_id"), col("lang"), col("text")).localCheckpoint()
+      val pending = spark.read.schema(pendingDocs.schema).parquet(s"$storeDir/pending")
+        .select(col("doc_id"), col("lang"), col("text"))
       if (!pending.isEmpty) {
         modelV.commit(batchId + 1)(graft.operators.TextAnalysis
-          .trigramModelAppend(spark.read.parquet(modelPath), pending, refLang)
-          .write.parquet(_))
+          .trigramModelAppend(model, pending, refLang).write.parquet(_))
         modelV.retain()
       }
       Fs.delete(s"$storeDir/pending")
     }
   }
-
-  /** Per-model-version served arrays (keyed by version path PLUS a
-    * listing fingerprint — see [[lmBatchStep]]); KB-scale entries,
-    * bounded by folds per application. */
-  private val lmServedCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Long], Array[Long], Long, Long)]
 
   // ---- phrase-index store: streaming maintenance (r17) ---------------------
 
@@ -588,13 +609,16 @@ object Programs {
     * flat at hundreds of files; compact by file-count budget). */
   def phraseIndexProgramStream(docs: DataFrame, storeDir: String,
       checkpoint: String, compactEvery: Int = 4): StreamingQuery =
-    programStream(docs, checkpoint, "compactEvery", compactEvery)(
-      phraseBatchStep(_, storeDir, _, compactEvery))
+    programStream(docs, checkpoint, "compactEvery", compactEvery) {
+      val resolver = new Store.Resolver
+      phraseBatchStep(_, storeDir, _, compactEvery, resolver)
+    }
 
   /** One micro-batch of [[phraseIndexProgramStream]], factored like
     * [[ingestBatchStep]] so tests can drive replay windows directly. */
   private[graft] def phraseBatchStep(batch: DataFrame, storeDir: String,
-      batchId: Long, compactEvery: Int): Unit = {
+      batchId: Long, compactEvery: Int,
+      resolver: Store.Resolver = new Store.Resolver): Unit = {
     val spark = batch.sparkSession
     val TI = graft.operators.TextIndex
     val baseV = Store.versions(storeDir, "base")
@@ -602,8 +626,9 @@ object Programs {
     // deterministic replay: the modulus comes from the newest base the
     // batch could have seen when it FIRST ran (versions ≤ batchId) —
     // all bases share it, the bound just keeps the read set replayable
-    val baseVer = baseV.latest(batchId)
-    val buckets = TI.positionalIndexBuckets(baseV.path(baseVer))
+    val baseVer = resolver.latest(baseV, batchId)
+    val buckets = resolver.derive(baseV, baseVer)(
+      TI.positionalIndexBuckets(baseV.path(baseVer)))
     val postings = TI.buildPositionalPostings(batch, "doc_id", "text")
       .localCheckpoint()
     // an empty batch commits no segment (an empty mini-index directory
@@ -616,14 +641,13 @@ object Programs {
       // folded (ids < baseVer): a retained-or-stale already-folded
       // segment is not input — folding it again would double its
       // postings into the new base
-      val folded = segV.committed.filter(j => j >= baseVer && j <= batchId)
+      val folded = resolver.committed(segV).filter(j => j >= baseVer && j <= batchId)
       // an empty fold window writes NO new base: an idle stream must
       // not pay a full-index rewrite per cadence for zero change
       if (folded.nonEmpty)
         baseV.commit(batchId + 1)(TI.writePositionalIndex(
-          (baseV.path(baseVer) +: folded.map(segV.path))
-            .map(p => spark.read.parquet(p)
-              .select(col("doc_id"), col("pos"), col("term")))
+          (resolver.frame(spark, baseV, baseVer) +: folded.map(resolver.frame(spark, segV, _)))
+            .map(_.select(col("doc_id"), col("pos"), col("term")))
             .reduce(_.unionByName(_)), _, buckets))
       // keep-two bases; clear only segments the PREVIOUS fold already
       // absorbed (ids < baseVer) — the just-folded generation gets one

@@ -170,7 +170,7 @@ object QueriesLlm {
     Programs.ingestCore(
         graft.operators.Freq.bloomBuild(
           ingestCorpus(s, dir).select(md5(col("text")).as("item")),
-          k = 3, width = 1 << 20),
+          k = 3, width = 1 << 20).localCheckpoint(),
         Dedup.minhashBandIndex(ingestCorpus(s, dir), k = 3, perms = 8, bands = 4),
         Dedup.gramIndex(ingestCorpus(s, dir), spanWords = 10),
         ingestBatch(s, dir), quotaPerSource = 8L)
@@ -217,7 +217,7 @@ object QueriesLlm {
   val ingestIndexUpdate: Q = (s, dir) => {
     val bits = graft.operators.Freq.bloomBuild(
       ingestCorpus(s, dir).select(md5(col("text")).as("item")),
-      k = 3, width = 1 << 20)
+      k = 3, width = 1 << 20).localCheckpoint()
     val stored = Programs.ingestCore(bits,
       Dedup.minhashBandIndex(ingestCorpus(s, dir), k = 3, perms = 8, bands = 4),
       Dedup.gramIndex(ingestCorpus(s, dir), spanWords = 10),
@@ -255,7 +255,7 @@ object QueriesLlm {
     val corpus = ingestCorpus(s, dir)
     val batch = ingestBatch(s, dir)
     val bits = graft.operators.Freq.bloomBuild(
-      corpus.select(md5(col("text")).as("item")), k = 3, width = 1 << 20)
+      corpus.select(md5(col("text")).as("item")), k = 3, width = 1 << 20).localCheckpoint()
     val bandIdx = Dedup.minhashBandIndex(corpus, k = 3, perms = 8, bands = 4)
     val gramIdx = Dedup.gramIndex(corpus, spanWords = 10)
     val fresh = graft.operators.Freq.bloomProbe(
@@ -638,7 +638,7 @@ object QueriesLlm {
     val probes = d.filter(col("doc_id") % 10 === 0)
       .select(col("doc_id"), md5(col("text")).as("item"))
     operators.Freq.bloomProbe(
-        operators.Freq.bloomBuild(corpus, k = 3, width = 16384),
+        operators.Freq.bloomBuild(corpus, k = 3, width = 16384).localCheckpoint(),
         probes, k = 3, width = 16384)
       .select(col("doc_id"), col("n_hits"), col("maybe_member"))
   }

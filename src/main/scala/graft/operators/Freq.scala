@@ -254,11 +254,14 @@ object Freq {
     * deduplicated bit positions, never the items. Persist the result
     * next to the corpus and every future ingest batch probes it for the
     * cost of a broadcast. */
-  def bloomBuild(items: DataFrame, k: Int, width: Int): DataFrame = {
+  def bloomBuild(items: DataFrame, k: Int, width: Int): DataFrame =
+    bitRows(items, k, width).distinct()
+
+  /** Every item's k (j, pos) rows, duplicates kept. */
+  private def bitRows(items: DataFrame, k: Int, width: Int): DataFrame = {
     require(k >= 1 && width >= 2, s"bloomBuild: k=$k width=$width")
     items.select(col("item").cast("string")).filter(col("item").isNotNull)
       .select(posexplode(bloomBits(col("item"), k, width)).as(Seq("j", "pos")))
-      .distinct()
   }
 
   /** OR an admitted batch's items into a standing bit table (r13 — the
@@ -267,9 +270,11 @@ object Freq {
     * exactly set union of the (j, pos) rows. Equivalence
     * `bloomAppend(bloomBuild(c), b) ≡ bloomBuild(c ∪ b)` is
     * property-tested. Everything here is ≤ k×width rows (KBs) plus the
-    * batch's own bit derivation — maintenance is as cheap as the probe. */
+    * batch's own bit derivation — maintenance is as cheap as the probe.
+    * That bound is why the union dedups in ONE task: no shuffle, and the
+    * rewrite is a single job. */
   def bloomAppend(bits: DataFrame, items: DataFrame, k: Int, width: Int): DataFrame =
-    bits.unionByName(bloomBuild(items, k, width)).distinct()
+    bits.unionByName(bitRows(items, k, width)).coalesce(1).distinct()
 
   // ---- HyperLogLog ---------------------------------------------------------
   //
@@ -402,12 +407,13 @@ object Freq {
     * that matters when "probes" is every arriving document at ingest
     * rate. A NULL item probes to n_hits = 0, maybe_member = false.
     *
-    * The bit table is MATERIALIZED once up front (localCheckpoint —
-    * KB-sized by construction): each of the k joins references it, and
-    * without the cut the build subtree would re-plan (and its distinct
-    * re-shuffle) once per hash row. In the persisted deployment the
-    * caller passes a parquet-backed bit table and the materialization is
-    * a no-op read. */
+    * ONE broadcast serves all k lanes: every lane joins the same build
+    * side, the bit table keyed `j·width + pos`, so the planner reuses a
+    * single broadcast (a per-lane filter would make k different ones).
+    * The operator runs no job of its own: pass a materialized bit table
+    * (a persisted parquet version, or a checkpointed build) — an inline
+    * [[bloomBuild]] stays one lazy subtree whose distinct runs with the
+    * probe. */
   def bloomProbe(bits: DataFrame, probes: DataFrame, k: Int, width: Int): DataFrame = {
     require(k >= 1 && width >= 2, s"bloomProbe: k=$k width=$width")
     val reserved = (0 until k).flatMap(j => Seq(s"_bp$j", s"_hit$j")) ++
@@ -415,12 +421,11 @@ object Freq {
     val clash = probes.columns.filter(reserved.contains)
     require(clash.isEmpty,
       s"bloomProbe: input columns collide with reserved working names: ${clash.mkString(", ")}")
-    val b = bits.localCheckpoint()
+    val key = col("j").cast("long") * width + col("pos")
     val joined = (0 until k).foldLeft(probes) { (acc, j) =>
       acc.join(
-        broadcast(b.filter(col("j") === j)
-          .select(col("pos").as(s"_bp$j"), lit(1).as(s"_hit$j"))),
-        bloomBit(col("item"), j, width) === col(s"_bp$j"), "left")
+        broadcast(bits.select(key.as(s"_bp$j"), lit(1).as(s"_hit$j"))),
+        lit(j.toLong * width) + bloomBit(col("item"), j, width) === col(s"_bp$j"), "left")
         .drop(s"_bp$j")
     }
     joined

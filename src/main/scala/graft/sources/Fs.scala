@@ -1,7 +1,11 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Hadoop-FileSystem helpers for the served-artifact stores — markers,
   * versioned-directory listings, pending clears, listing fingerprints.
@@ -92,5 +96,24 @@ object Fs {
     val listing = files.sorted.mkString("\n")
     java.security.MessageDigest.getInstance("MD5")
       .digest(listing.getBytes("UTF-8")).map("%02x".format(_)).mkString
+  }
+
+  /** The Spark schema of the parquet data under `dir`, from the footer of
+    * its first data file, read on the driver: the schema Spark's own
+    * inference answers, without the job that inference runs to read
+    * footers. */
+  def parquetSchema(dir: String): StructType = {
+    val (fs, p) = fsOf(dir)
+    val files = fs.listFiles(p, true)
+    var data: Option[FileStatus] = None
+    while (data.isEmpty && files.hasNext) {
+      val st = files.next()
+      if (st.getPath.getName.endsWith(".parquet")) data = Some(st)
+    }
+    val st = data.getOrElse(throw new IllegalArgumentException(s"no parquet data under $dir"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, fs.getConf))
+    val footer = try reader.getFooter finally reader.close()
+    ParquetFileFormat.readSchemaFromFooter(new Footer(st.getPath, footer),
+      new ParquetToSparkSchemaConverter(SparkSession.active.sessionState.conf))
   }
 }

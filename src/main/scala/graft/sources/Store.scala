@@ -1,7 +1,10 @@
 package graft.sources
 
 import java.util.concurrent.ConcurrentHashMap
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Served artifact stores: a corpus artifact (an index, a model, a
   * stats dim) built once per (application, corpus) and read by every
@@ -38,7 +41,9 @@ import org.apache.spark.sql.SparkSession
   * committed. Retention keeps the two newest committed versions (the
   * newest's reader may still be on the previous one) and drops every
   * version below them, marker or not. One writer per family — the
-  * stream's own micro-batch — so commits take no lock. */
+  * stream's own micro-batch — so commits take no lock. A stream reads
+  * its versions through one [[Resolver]], which resolves each version
+  * once. */
 object Store {
 
   private val Root = "/tmp/"
@@ -93,6 +98,7 @@ object Store {
       "original checkpoint."
 
   final class Versions private[Store] (dir: String, name: String) {
+    private[Store] val family = s"$dir/$name"
     private val Dir = (java.util.regex.Pattern.quote(name) + "_v(\\d+)").r
     def path(v: Long): String = s"$dir/${name}_v$v"
     private def listed: Seq[Long] = Fs.listDirNames(dir).collect { case Dir(v) => v.toLong }
@@ -104,8 +110,10 @@ object Store {
     def committed: Seq[Long] = listed.filter(isCommitted).sorted
 
     /** The newest committed version `<= upTo`, else the restart contract. */
-    def latest(upTo: Long = Long.MaxValue): Long = {
-      val vs = committed.filter(_ <= upTo)
+    def latest(upTo: Long = Long.MaxValue): Long = latestOf(committed, upTo)
+
+    private[Store] def latestOf(live: Seq[Long], upTo: Long): Long = {
+      val vs = live.filter(_ <= upTo)
       require(vs.nonEmpty, restartContract(dir, name, upTo))
       vs.last
     }
@@ -124,6 +132,59 @@ object Store {
 
     /** Drop the whole family. */
     def clear(): Unit = dropBelow(Long.MaxValue)
+  }
+
+  /** One stream's reads of its versioned families. A committed version
+    * is never rewritten, so its relation — and whatever a program derives
+    * from it, such as a collected model — is resolved the first time the
+    * stream reads that version and then serves every later batch.
+    *
+    *  - Schema: a family's versions are read with the schema of the first
+    *    one this resolver met, taken from its parquet footer on the
+    *    driver, so no read runs a schema-inference job.
+    *  - Listing: [[latest]] and [[committed]] list the family on every
+    *    call, so only committed versions are served, a replayed batch
+    *    resolves the same `latest(batchId)` its first run did, and a
+    *    version retention dropped is forgotten.
+    *  - Lifetime: the stream's own; a direct step call without one gets
+    *    its own. Nothing here is JVM-static, and one micro-batch at a
+    *    time uses it, so it takes no lock. */
+  final class Resolver {
+    private final class Family {
+      var schema: Option[StructType] = None
+      val frames = mutable.HashMap.empty[Long, DataFrame]
+      val derived = mutable.HashMap.empty[Long, Any]
+    }
+    private val families = mutable.HashMap.empty[String, Family]
+    private def of(v: Versions) = families.getOrElseUpdate(v.family, new Family)
+
+    /** [[Versions.committed]], forgetting every other version. */
+    def committed(v: Versions): Seq[Long] = {
+      val live = v.committed
+      val keep = live.toSet
+      val f = of(v)
+      f.frames.filterInPlace((n, _) => keep(n))
+      f.derived.filterInPlace((n, _) => keep(n))
+      live
+    }
+
+    /** [[Versions.latest]], through [[committed]]. */
+    def latest(v: Versions, upTo: Long): Long = v.latestOf(committed(v), upTo)
+
+    /** Version `n`'s relation, read once. */
+    def frame(spark: SparkSession, v: Versions, n: Long): DataFrame = {
+      val f = of(v)
+      f.frames.getOrElseUpdate(n, {
+        val p = v.path(n)
+        val schema = f.schema.getOrElse(Fs.parquetSchema(p))
+        f.schema = Some(schema)
+        spark.read.schema(schema).parquet(p)
+      })
+    }
+
+    /** `make`, run once for version `n` (a program's derived value). */
+    def derive[T](v: Versions, n: Long)(make: => T): T =
+      of(v).derived.getOrElseUpdate(n, make).asInstanceOf[T]
   }
 
   /** Catalog name of the bucketed table whose data lives at `location`

@@ -1834,7 +1834,8 @@ class LlmOpsSpec extends AnyFunSuite {
   test("bloom: no false negatives ever; probe path is broadcast-only, scan speed") {
     val (k, width) = (3, 16384)
     val corpus = docs.filter(col("doc_id") % 10 =!= 0).select(md5(col("text")).as("item"))
-    val bits = Freq.bloomBuild(corpus, k, width)
+    // the caller materializes the bit table (bloomProbe runs no job)
+    val bits = Freq.bloomBuild(corpus, k, width).localCheckpoint()
     // probe EVERY doc: the corpus split's rows are true members by
     // construction, and any probe sharing a corpus text is one too
     val res = Freq.bloomProbe(bits,
@@ -1865,6 +1866,11 @@ class LlmOpsSpec extends AnyFunSuite {
     assert("Exchange hashpartitioning".r.findAllIn(plan).length == 0,
       s"probe side must not shuffle:\n$plan")
     assert(!plan.contains("SortMergeJoin"), plan)
+    // the k lanes share ONE broadcast: the executed plan builds it once
+    // and reuses it for the other k - 1 lanes
+    res.collect()
+    val ran = physicalPlan(res)
+    assert("ReusedExchange \\[[^\\]]*\\], BroadcastExchange".r.findAllIn(ran).length == k - 1, ran)
   }
 
   test("snapshot diff: all four statuses; the join moves digests, not documents") {

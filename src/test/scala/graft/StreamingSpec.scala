@@ -1261,6 +1261,115 @@ class StreamingSpec extends AnyFunSuite {
       "the uncommitted gram_index_v1 must never be read")
   }
 
+  /** Runs `f` and returns the Spark jobs it ran on this thread and the
+    * file indexes its queries read. Jobs are tagged with a local
+    * property; a marker job posted last drains the listener bus, which
+    * also carries the query-execution events, in order. The suite runs
+    * one query at a time, so every query event in the window is `f`'s. */
+  private def jobsAndReads(f: => Unit): (Int, Seq[org.apache.spark.sql.execution.datasources.FileIndex]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val sc = spark.sparkContext
+    val key = "graft.test.stepProbe"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val reads = new java.util.concurrent.ConcurrentLinkedQueue[FileIndex]
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
+          case Some("step") => jobs.incrementAndGet()
+          case Some("marker") => marker.countDown()
+          case _ =>
+        }
+    }
+    val queries = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.analyzed.foreach {
+          case l: LogicalRelation => l.relation match {
+            case h: HadoopFsRelation => reads.add(h.location)
+            case _ =>
+          }
+          case _ =>
+        }
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    sc.addSparkListener(listener)
+    spark.listenerManager.register(queries)
+    try {
+      sc.setLocalProperty(key, "step")
+      f
+      sc.setLocalProperty(key, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+      spark.listenerManager.unregister(queries)
+    }
+    import scala.jdk.CollectionConverters._
+    (jobs.get, reads.asScala.toSeq)
+  }
+
+  test("ingest step job budget: a probe batch runs 18 jobs and a fold batch 30; each version is resolved once per stream and only while committed") {
+    // One resolver across the direct step calls, as the stream holds
+    // one. Every batch meets every gate: a re-delivery (gate 1), a near
+    // copy (gate 2), a quoted passage (gate 3) and novel docs, so no
+    // probe stage is skipped for an empty input. The fold's count is 30
+    // here: no admitted doc lands in a standing band bucket, so AQE skips
+    // bandIndexAppend's broadcast of touched-bucket sizes (31 when one
+    // does, as in the benchmark's ingest stream).
+    val corpus = (1 to 12).map(i => (i.toLong, words(s"c${i}w", 30), s"s${i % 3}"))
+      .toDF("doc_id", "text", "source")
+    val dir = s"/tmp/graft_ingest_jobs/${System.nanoTime()}"
+    Programs.ingestStoreInit(corpus, dir)
+    val resolver = new Store.Resolver
+    def batch(b: Int) = {
+      val near = words(s"c${b + 1}w", 30).replace(s"c${b + 1}w7 ", "swap ")
+      val quote = words(s"q${b}w", 30) + " " + words(s"c${b + 5}w", 14).split(" ").drop(2).mkString(" ")
+      Seq((100L * b + 1, words(s"c${b + 2}w", 30), "s0"), (100L * b + 2, near, "s1"),
+        (100L * b + 3, quote, "s2"), (100L * b + 4, words(s"n${b}a", 20), "s0"),
+        (100L * b + 5, words(s"n${b}b", 20), "s1")).toDF("doc_id", "text", "source")
+    }
+    def step(b: Int) = jobsAndReads(Programs.ingestBatchStep(batch(b), dir, b.toLong,
+      quotaPerSource = 5L, spanWords = 10, maintainEvery = 4, bloomK = 3,
+      bloomWidth = 1 << 20, resolver))
+    val Version = ".*/((?:bits|band_index|gram_index)_v\\d+)".r
+    def versions(reads: Seq[org.apache.spark.sql.execution.datasources.FileIndex]) =
+      reads.flatMap(i => i.rootPaths.map(_.toString).collect { case Version(n) => n -> i })
+    def latest(b: Int) = Seq("bits", "band_index", "gram_index")
+      .map(n => s"${n}_v${Store.versions(dir, n).latest(b.toLong)}").toSet
+    val runs = (0 to 3).map { b =>
+      val want = latest(b)
+      val (jobs, reads) = step(b)
+      // the versions read are exactly the newest committed ones ≤ b at
+      // the step's start, and retention keeps every one of them
+      assert(versions(reads).map(_._1).toSet == want, s"batch $b")
+      want.foreach(n => assert(Fs.exists(s"$dir/$n/${Store.Marker}"), s"batch $b read $n"))
+      // gates 1 and 2 refused their docs, gate 3 cut the 12 quoted words
+      assert(spark.read.parquet(s"$dir/admitted/batch=$b").select("doc_id", "n_removed")
+        .collect().map(r => r.getLong(0) - 100L * b -> r.getLong(1)).toSet ==
+        Set(3L -> 12L, 4L -> 0L, 5L -> 0L), s"batch $b")
+      (jobs, versions(reads))
+    }
+    assert(runs.map(_._1) == Seq(18, 18, 18, 30),
+      "jobs per batch (batch 3 folds): 18 per probe batch, 30 per fold batch")
+    // batches 1 and 2 read band_index_v0 and gram_index_v0 through the
+    // same file index: resolved once, not re-resolved per batch
+    for (n <- Seq("band_index_v0", "gram_index_v0")) {
+      val (one, two) = (runs(1)._2.filter(_._1 == n), runs(2)._2.filter(_._1 == n))
+      assert(one.nonEmpty && two.nonEmpty && one.forall(a => two.forall(_._2 eq a._2)),
+        s"$n was resolved again")
+    }
+    assert(!Fs.exists(s"$dir/bits_v2") && Fs.exists(s"$dir/bits_v4"),
+      "retention dropped the early bits versions")
+    // a replay of the fold batch through the same resolver reads the
+    // same versions its first run did, though newer ones now exist
+    val (_, replayed) = step(3)
+    assert(versions(replayed).map(_._1).toSet == runs(3)._2.map(_._1).toSet)
+  }
+
   test("LM store crash leftovers: a markerless version is replaced at commit, never read, and dropped by retention") {
     val common = (1 to 20).map(_ => "the cat sat on the mat").mkString(" ")
     val corpus = (1L to 10L).map(i => (i, common, "en")).toDF("doc_id", "text", "lang")
