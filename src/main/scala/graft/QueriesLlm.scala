@@ -410,37 +410,28 @@ object QueriesLlm {
 
   /** The embedding rung's quality row (r12), completing the set — every
     * approximate dedup rung (minhash-LSH, SimHash, hyperplane-LSH) now
-    * carries measured recall AND precision: candidates from the banded
-    * random-hyperplane pipeline, truth from the exact all-pairs
-    * quantized cosine at the same τ (0.45). The truth side broadcasts
-    * one copy of the vectors and streams the other — O(n²) compute by
-    * definition; an eval runs on the benchmark corpus, and at 100 TB
-    * you grade on a sample, never the corpus (the q_sim_recall
-    * posture). */
-  val dedupRecallEmbcos: Q = (s, dir) => {
-    val e = Tables(s, dir).embeddings
-      .select(col("vec_id"), col("embedding").as("ce"))
-    val truth = e.select(col("vec_id").as("doc_a"), col("ce").as("ca"))
-      .join(broadcast(e.select(col("vec_id").as("doc_b"), col("ce").as("cb"))),
-        col("doc_a") < col("doc_b"))
-      .filter(floor(call_function("graft_cosine", col("ca"), col("cb"))
-        * lit(1000000.0)).cast("long") >= 450000L)
-    val cand = Dedup.embeddingCosPairs(e, tables = 8, bitsPerTable = 4,
-        minCosQ = 450000L)
-      .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
-    pairEvalMetrics(truth, cand)
-  }
+    * carries measured recall AND precision: candidates from
+    * [[Dedup.embeddingCosPairs]], the same call [[dedupEmbCos]] runs,
+    * truth from [[Dedup.cosinePairs]], the exact all-pairs quantized
+    * cosine at the same τ (0.45). The truth is O(n²) by definition; an
+    * eval runs on the benchmark corpus, and at 100 TB you grade on a
+    * sample, never the corpus (the q_sim_recall posture). */
+  val dedupRecallEmbcos: Q = (s, dir) =>
+    pairEvalMetrics(Dedup.cosinePairs(embVecs(s, dir), MinCosQ),
+      embcosCandidates(s, dir)
+        .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
 
   /** SemDeDup (semantic dedup over embeddings — the published recipe
     * from the public SemDeDup paper, Abbas et al. 2023): the all-pairs
     * cosine quadratic bounded by TRAINED kmeans cells instead of
     * [[dedupEmbCos]]'s random-hyperplane buckets. Cluster with the SAME
     * deterministic md5-seeded Lloyd codebook the IVF family trains
-    * (q_sim_kmeans's exact chain, k = 4, 2 iterations), then drop every
-    * vector cosine-≥τ similar to a LOWER-id vector in its OWN cell; the
-    * surviving lowest id is the cluster representative. τ = 0.45
-    * matches the embcos rung, so the two candidate-generation
-    * strategies grade against each other row-for-row.
+    * ([[semdedupCells]]: q_sim_kmeans's chain, k = 4, 2 iterations),
+    * then drop every vector cosine-≥τ similar to a LOWER-id vector in
+    * its OWN cell ([[operators.Ann.cellPairs]]); the surviving lowest id
+    * is the cluster representative. τ = 0.45 matches the embcos rung, so
+    * the two candidate-generation strategies grade against each other
+    * row-for-row.
     *
     * At 100 TB, k grows with the corpus so cells stay ~constant-sized
     * (the published recipe trains k ∝ n) — the per-cell quadratic is
@@ -450,63 +441,21 @@ object QueriesLlm {
     * Plan shape: training is the zero-corpus-exchange Lloyd loop,
     * assignment is scan-speed broadcast argmax, and the pair join is an
     * equi-join on cell — never a cartesian. */
-  val dedupSemantic: Q = (s, dir) => {
-    val corpus = Tables(s, dir).embeddings.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("corpus_id"), col("embedding").as("ce"))
-    val cb = operators.Ann.kmeansCodebook(corpus, k = 4, iters = 2)
-    // the assignment is consumed three times (both pair sides + the
-    // verdict join): localCheckpoint stands in for the PERSISTED
-    // cluster assignment a deployment dedups against (the pqCodebook
-    // convention) — without it the Lloyd training lazily re-runs per
-    // consumer (measured 2.35 → 1.2 s at sf0.1)
-    val cells = operators.Ann.assignCells(cb, corpus)
-      .select(col("corpus_id"), col("ce"), col("cell"))
-      .localCheckpoint()
-    val pairs = cells
-      .select(col("cell"), col("corpus_id").as("va"), col("ce").as("ca"))
-      .join(cells.select(col("cell"), col("corpus_id").as("vb"), col("ce").as("vb_ce")),
-        Seq("cell"))
-      .filter(col("va") < col("vb") &&
-        floor(call_function("graft_cosine", col("ca"), col("vb_ce"))
-          * lit(1000000.0)).cast("long") >= 450000L)
-    val drops = pairs.groupBy(col("vb")).agg(min(col("va")).as("dup_of"))
-    cells.join(drops, cells("corpus_id") === drops("vb"), "left")
-      .select(col("corpus_id"), col("cell"), col("dup_of"),
-        col("dup_of").isNull.as("keep"))
-  }
+  val dedupSemantic: Q = (s, dir) =>
+    semdedupVerdicts(semdedupCells(s, dir, operators.Ann.assignCells))
 
   /** SemDeDup's quality row: the kmeans-cell candidate strategy graded
-    * against the SAME exact all-pairs cosine truth the embcos eval
-    * uses (τ = 0.45 everywhere). Cells are a COST choice — the
-    * bounded quadratic — and this row MEASURES what the choice loses:
-    * every true pair whose two vectors landed in different cells is a
-    * cross-cell miss (recall < 100), while precision is 100 by
-    * construction (in-cell candidates are exact-cosine-filtered before
-    * grading). The number an operator weighs against 31b's
+    * against the exact all-pairs cosine truth ([[Dedup.cosinePairs]],
+    * τ = 0.45 everywhere). The candidates are [[dedupSemantic]]'s own
+    * [[semdedupCells]] and [[operators.Ann.cellPairs]] calls. Cells are a
+    * COST choice — the bounded quadratic — and this row MEASURES what
+    * the choice loses: every true pair whose two vectors landed in
+    * different cells is a cross-cell miss (recall < 100), while precision
+    * is 100 by construction (in-cell candidates are exact-cosine-filtered
+    * before grading). The number an operator weighs against 31b's
     * hyperplane-bucket recall when picking a semantic-dedup rung. */
-  val dedupRecallSemdedup: Q = (s, dir) => {
-    val e = Tables(s, dir).embeddings.filter(col("vec_id") >= 5)
-      .select(col("vec_id"), col("embedding").as("ce"))
-    val truth = e.select(col("vec_id").as("doc_a"), col("ce").as("ca"))
-      .join(broadcast(e.select(col("vec_id").as("doc_b"), col("ce").as("cb"))),
-        col("doc_a") < col("doc_b"))
-      .filter(floor(call_function("graft_cosine", col("ca"), col("cb"))
-        * lit(1000000.0)).cast("long") >= 450000L)
-    val corpus = e.select(col("vec_id").as("corpus_id"), col("ce"))
-    val cb = operators.Ann.kmeansCodebook(corpus, k = 4, iters = 2)
-    val cells = operators.Ann.assignCells(cb, corpus)
-      .select(col("corpus_id"), col("ce"), col("cell"))
-      .localCheckpoint()
-    val cand = cells
-      .select(col("cell"), col("corpus_id").as("doc_a"), col("ce").as("ca"))
-      .join(cells.select(col("cell"), col("corpus_id").as("doc_b"), col("ce").as("cb")),
-        Seq("cell"))
-      .filter(col("doc_a") < col("doc_b") &&
-        floor(call_function("graft_cosine", col("ca"), col("cb"))
-          * lit(1000000.0)).cast("long") >= 450000L)
-      .select(col("doc_a"), col("doc_b"))
-    pairEvalMetrics(truth, cand)
-  }
+  val dedupRecallSemdedup: Q = (s, dir) =>
+    semdedupEval(s, dir, operators.Ann.assignCells)
 
   /** SemDeDup with CELL PROBING (r15) — the nprobe=2 mitigation for the
     * cross-cell miss class the r14 quality row measured (49–64%
@@ -525,57 +474,67 @@ object QueriesLlm {
     * per-cell quadratic by a small constant — the standard
     * recall-vs-cost knob, measured against the same exact-cosine truth
     * in [[dedupRecallSemdedupProbe2]]. */
-  val dedupSemanticProbe2: Q = (s, dir) => {
-    val corpus = Tables(s, dir).embeddings.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("corpus_id"), col("embedding").as("ce"))
-    val cb = operators.Ann.kmeansCodebook(corpus, k = 4, iters = 2)
-    val cells2 = operators.Ann.assignCellsTop2(cb, corpus)
-      .select(col("corpus_id"), col("ce"), col("cell"), col("rk"))
+  val dedupSemanticProbe2: Q = (s, dir) =>
+    semdedupVerdicts(semdedupCells(s, dir, operators.Ann.assignCellsTop2))
+
+  /** The probe2 QUALITY row (r15): [[dedupSemanticProbe2]]'s candidate
+    * strategy graded against the IDENTICAL exact all-pairs cosine truth
+    * [[dedupRecallSemdedup]] uses — the two rows differ ONLY in the
+    * assignment passed to [[semdedupCells]] (top-1 vs top-2 cells), so
+    * their recall gap IS the measured value of probing. Precision stays
+    * 100 by construction (candidates are exact-cosine-filtered). */
+  val dedupRecallSemdedupProbe2: Q = (s, dir) =>
+    semdedupEval(s, dir, operators.Ann.assignCellsTop2)
+
+  /** τ = 0.45 in 1e-6 quantized-cosine ticks: the verify threshold of
+    * every embedding dedup rung, its exact truth and their oracles. */
+  private val MinCosQ = 450000L
+
+  /** The embedding table as (vec_id, ce) — the embcos rung's input. */
+  private def embVecs(s: SparkSession, dir: String): DataFrame =
+    Tables(s, dir).embeddings.select(col("vec_id"), col("embedding").as("ce"))
+
+  /** The embcos rung's candidates: 8 tables × 4-bit random-hyperplane
+    * LSH with the exact quantized-cosine verify at τ. */
+  private def embcosCandidates(s: SparkSession, dir: String): DataFrame =
+    Dedup.embeddingCosPairs(embVecs(s, dir), tables = 8, bitsPerTable = 4,
+      minCosQ = MinCosQ)
+
+  /** SemDeDup's cells: the q_sim_kmeans codebook (k = 4, 2 iterations)
+    * over the ANN corpus, every vector placed by `assign`
+    * ([[operators.Ann.assignCells]] or [[operators.Ann.assignCellsTop2]]).
+    * The assignment is consumed three times (both pair sides + the
+    * verdict join): localCheckpoint stands in for the PERSISTED cluster
+    * assignment a deployment dedups against (the pqCodebook convention)
+    * — without it the Lloyd training lazily re-runs per consumer
+    * (measured 2.35 → 1.2 s at sf0.1). */
+  private def semdedupCells(s: SparkSession, dir: String,
+      assign: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val corpus = annCorpus(s, dir).drop("cell")
+    assign(operators.Ann.kmeansCodebook(corpus, k = 4, iters = 2), corpus)
+      .drop("cscore")
       .localCheckpoint()
-    val pairs = cells2
-      .select(col("cell"), col("corpus_id").as("va"), col("ce").as("ca"))
-      .join(cells2.select(col("cell"), col("corpus_id").as("vb"),
-        col("ce").as("vb_ce")), Seq("cell"))
-      .filter(col("va") < col("vb") &&
-        floor(call_function("graft_cosine", col("ca"), col("vb_ce"))
-          * lit(1000000.0)).cast("long") >= 450000L)
-      .select(col("va"), col("vb")).distinct()
-    val drops = pairs.groupBy(col("vb")).agg(min(col("va")).as("dup_of"))
-    cells2.filter(col("rk") === 1)
-      .join(drops, cells2("corpus_id") === drops("vb"), "left")
+  }
+
+  /** SemDeDup's verdict per vector: each in-cell candidate pair drops
+    * its higher id, the lowest co-bucketed id is `dup_of`; the verdict
+    * row keys on the primary (rk = 1) cell of a top-2 assignment. */
+  private def semdedupVerdicts(cells: DataFrame): DataFrame = {
+    val drops = operators.Ann.cellPairs(cells, MinCosQ)
+      .groupBy(col("doc_b")).agg(min(col("doc_a")).as("dup_of"))
+    val primary = if (cells.columns.contains("rk")) cells.filter(col("rk") === 1) else cells
+    primary.join(drops, cells("corpus_id") === drops("doc_b"), "left")
       .select(col("corpus_id"), col("cell"), col("dup_of"),
         col("dup_of").isNull.as("keep"))
   }
 
-  /** The probe2 QUALITY row (r15): [[dedupSemanticProbe2]]'s candidate
-    * strategy graded against the IDENTICAL exact all-pairs cosine truth
-    * [[dedupRecallSemdedup]] uses — the two rows differ ONLY in
-    * candidate generation (top-1 vs top-2 cells), so their recall gap
-    * IS the measured value of probing. Precision stays 100 by
-    * construction (candidates are exact-cosine-filtered). */
-  val dedupRecallSemdedupProbe2: Q = (s, dir) => {
-    val e = Tables(s, dir).embeddings.filter(col("vec_id") >= 5)
-      .select(col("vec_id"), col("embedding").as("ce"))
-    val truth = e.select(col("vec_id").as("doc_a"), col("ce").as("ca"))
-      .join(broadcast(e.select(col("vec_id").as("doc_b"), col("ce").as("cb"))),
-        col("doc_a") < col("doc_b"))
-      .filter(floor(call_function("graft_cosine", col("ca"), col("cb"))
-        * lit(1000000.0)).cast("long") >= 450000L)
-    val corpus = e.select(col("vec_id").as("corpus_id"), col("ce"))
-    val cb = operators.Ann.kmeansCodebook(corpus, k = 4, iters = 2)
-    val cells2 = operators.Ann.assignCellsTop2(cb, corpus)
-      .select(col("corpus_id"), col("ce"), col("cell"))
-      .localCheckpoint()
-    val cand = cells2
-      .select(col("cell"), col("corpus_id").as("doc_a"), col("ce").as("ca"))
-      .join(cells2.select(col("cell"), col("corpus_id").as("doc_b"),
-        col("ce").as("cb")), Seq("cell"))
-      .filter(col("doc_a") < col("doc_b") &&
-        floor(call_function("graft_cosine", col("ca"), col("cb"))
-          * lit(1000000.0)).cast("long") >= 450000L)
-      .select(col("doc_a"), col("doc_b")).distinct()
-    pairEvalMetrics(truth, cand)
-  }
+  /** A SemDeDup rung's quality row: its in-cell candidates graded
+    * against the exact all-pairs cosine truth over the same corpus. */
+  private def semdedupEval(s: SparkSession, dir: String,
+      assign: (DataFrame, DataFrame) => DataFrame): DataFrame =
+    pairEvalMetrics(
+      Dedup.cosinePairs(embVecs(s, dir).filter(col("vec_id") >= 5), MinCosQ),
+      operators.Ann.cellPairs(semdedupCells(s, dir, assign), MinCosQ))
 
   /** Shared pair-eval tail: full outer join on the (doc_a, doc_b) key,
     * one global aggregate, DIV-floored integer percentages. */
@@ -590,6 +549,18 @@ object QueriesLlm {
         expr("CASE WHEN n_true > 0 THEN n_caught * 100 DIV n_true END").as("recall_pct"),
         expr("CASE WHEN n_cand > 0 THEN n_caught * 100 DIV n_cand END").as("precision_pct"))
   }
+
+  /** Shared recall@k tail of the ANN quality rows: each exact top-k
+    * (query_id, corpus_id) row of `truth` left-joined to the rung's
+    * top-k `cand`, then per query the hits and recall_pct = hits·100/k
+    * (integer-exact for k dividing 100). */
+  private[graft] def topkEvalMetrics(truth: DataFrame, cand: DataFrame,
+      k: Int): DataFrame =
+    truth.select(col("query_id"), col("corpus_id"))
+      .join(cand.select(col("query_id"), col("corpus_id"), lit(1).as("hit")),
+        Seq("query_id", "corpus_id"), "left")
+      .groupBy(col("query_id"))
+      .agg(count(col("hit")).as("n_hits"), (count(col("hit")) * (100 / k)).as("recall_pct"))
 
   /** Exact heavy hitters (vocabulary items above 2% of the token stream)
     * via the Misra-Gries sketch + exact-verify two-pass: the corpus-wide
@@ -901,15 +872,16 @@ object QueriesLlm {
 
   /** Embedding-cosine near-dup pairs: 8 tables × 4-bit random-hyperplane
     * LSH, exact quantized-cosine verify at 0.45. */
-  val dedupEmbCos: Q = (s, dir) =>
-    Dedup.embeddingCosPairs(
-      Tables(s, dir).embeddings.select(col("vec_id"), col("embedding").as("ce")),
-      tables = 8, bitsPerTable = 4, minCosQ = 450000L)
+  val dedupEmbCos: Q = (s, dir) => embcosCandidates(s, dir)
+
+  /** The exact top-k of the ANN queries over the ANN corpus — the
+    * q_sim_topk baseline and the ground truth of every recall row. */
+  private def annBrute(s: SparkSession, dir: String, k: Int): DataFrame =
+    operators.Ann.bruteForceTopK(annQueries(s, dir), annCorpus(s, dir).drop("cell"), k)
 
   /** Brute-force cosine top-10 baseline (exact). */
   val simTopk: Q = (s, dir) =>
-    operators.Ann.bruteForceTopK(annQueries(s, dir),
-        annCorpus(s, dir).drop("cell"), k = 10)
+    annBrute(s, dir, k = 10)
       .select(col("query_id"), col("corpus_id"), col("rnk"), col("score_q"))
 
   /** k-NN majority-label classification over the embedding corpus (k=10,
@@ -951,18 +923,10 @@ object QueriesLlm {
     * hash-matches. Scale shape: ground truth is brute force over the
     * QUERY SAMPLE (the standard offline eval — queries broadcast, the
     * corpus streams once per side, the join is query-sized). */
-  val simRecall: Q = (s, dir) => {
-    val brute = operators.Ann.bruteForceTopK(annQueries(s, dir),
-        annCorpus(s, dir).drop("cell"), k = 10)
-      .select(col("query_id"), col("corpus_id"))
-    val ivf = operators.Ann.ivfTopK(annQueries(s, dir), annCorpus(s, dir),
-        k = 10, nprobe = 1)
-      .select(col("query_id"), col("corpus_id"), lit(1).as("hit"))
-    brute.join(ivf, Seq("query_id", "corpus_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(col("hit")).as("n_hits"),
-        (count(col("hit")) * 10).as("recall_pct"))
-  }
+  val simRecall: Q = (s, dir) =>
+    topkEvalMetrics(annBrute(s, dir, k = 10),
+      operators.Ann.ivfTopK(annQueries(s, dir), annCorpus(s, dir), k = 10, nprobe = 1),
+      k = 10)
 
   /** The recall-vs-nprobe CURVE in one table (r12): recall@10 of the
     * IVF probe at nprobe ∈ {1, 2, 4, 8, 10} (the corpus labels give 10
@@ -978,18 +942,12 @@ object QueriesLlm {
     * oracle that unions the five unrolled IVF chains over one brute
     * CTE. */
   val simRecallSweep: Q = (s, dir) => {
-    val brute = operators.Ann.bruteForceTopK(annQueries(s, dir),
-        annCorpus(s, dir).drop("cell"), k = 10)
-      .select(col("query_id"), col("corpus_id"))
+    val brute = annBrute(s, dir, k = 10).select(col("query_id"), col("corpus_id"))
       .localCheckpoint()
     Seq(1, 2, 4, 8, 10).map { np =>
-      val ivf = operators.Ann.ivfTopK(annQueries(s, dir), annCorpus(s, dir),
-          k = 10, nprobe = np)
-        .select(col("query_id"), col("corpus_id"), lit(1).as("hit"))
-      brute.join(ivf, Seq("query_id", "corpus_id"), "left")
-        .groupBy(col("query_id"))
-        .agg(count(col("hit")).as("n_hits"),
-          (count(col("hit")) * 10).as("recall_pct"))
+      topkEvalMetrics(brute,
+          operators.Ann.ivfTopK(annQueries(s, dir), annCorpus(s, dir), k = 10, nprobe = np),
+          k = 10)
         .select(lit(np).cast("long").as("nprobe"), col("query_id"),
           col("n_hits"), col("recall_pct"))
     }.reduce(_ unionByName _)
@@ -1023,20 +981,19 @@ object QueriesLlm {
     * Codes, distances and ranking are integer-exact, so the oracle —
     * which unrolls the identical training and scores via a (sub, cell)
     * join instead of the packed-code lut — hash-matches bit-for-bit. */
-  val simPq: Q = (s, dir) => {
-    val emb = Tables(s, dir).embeddings
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("corpus_id"), col("embedding").as("ce"))
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+  val simPq: Q = (s, dir) =>
+    pqTop5(s, dir)
+      .select(col("query_id"), col("corpus_id"), col("dist_q"),
+        col("rnk").cast("long").as("rnk"))
+
+  /** The PQ rung's top-5, shared by [[simPq]] and its recall row. */
+  private def pqTop5(s: SparkSession, dir: String): DataFrame = {
+    val corpus = annCorpus(s, dir).drop("cell")
     // the KB-sized codebook is consumed twice (encode + query luts):
     // localCheckpoint stands in for the PERSISTED codebook a serving
     // deployment reads, so training runs once, not per consumer
     val cb = operators.Ann.pqCodebook(corpus, iters = 2).localCheckpoint()
-    val codes = operators.Ann.pqEncode(cb, corpus)
-    operators.Ann.pqTopK(cb, codes, queries, k = 5)
-      .select(col("query_id"), col("corpus_id"), col("dist_q"),
-        col("rnk").cast("long").as("rnk"))
+    operators.Ann.pqTopK(cb, operators.Ann.pqEncode(cb, corpus), annQueries(s, dir), k = 5)
   }
 
   /** IVF-PQ composed serving search: the coarse k-means cells prune
@@ -1133,26 +1090,12 @@ object QueriesLlm {
 
   /** Recall@5 of the PQ ADC rung against the exact top-5 (r12,
     * completing the quality ladder the r11 verdict left at the IVF
-    * rung): [[simRecall]]'s composition with the brute ground truth at
-    * k=5 and the PQ codes as the candidate set. Integer-exact
+    * rung): [[topkEvalMetrics]] over the brute ground truth at k=5 and
+    * [[simPq]]'s own [[pqTop5]] as the candidate set. Integer-exact
     * (n_hits, recall_pct = n_hits·20), so it hash-matches an oracle
     * that unrolls the identical PQ training. */
-  val simRecallPq: Q = (s, dir) => {
-    val emb = Tables(s, dir).embeddings
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("corpus_id"), col("embedding").as("ce"))
-    val cb = operators.Ann.pqCodebook(corpus, iters = 2).localCheckpoint()
-    val pq = operators.Ann.pqTopK(cb, operators.Ann.pqEncode(cb, corpus),
-        annQueries(s, dir), k = 5)
-      .select(col("query_id"), col("corpus_id"), lit(1).as("hit"))
-    val brute = operators.Ann.bruteForceTopK(annQueries(s, dir),
-        annCorpus(s, dir).drop("cell"), k = 5)
-      .select(col("query_id"), col("corpus_id"))
-    brute.join(pq, Seq("query_id", "corpus_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(col("hit")).as("n_hits"),
-        (count(col("hit")) * 20).as("recall_pct"))
-  }
+  val simRecallPq: Q = (s, dir) =>
+    topkEvalMetrics(annBrute(s, dir, k = 5), pqTop5(s, dir), k = 5)
 
   /** Recall@5 of the SERVED IVF-PQ index (the deployment path, r12):
     * the persisted composed index's top-5 against the exact top-5 —
@@ -1160,18 +1103,11 @@ object QueriesLlm {
     * headline, so the probe/recall trade of the path users actually
     * run is measured, not assumed. Same store as [[simIvfPqServed]]
     * (built once per application), same shared oracle lineage. */
-  val simRecallIvfPq: Q = (s, dir) => {
-    val served = operators.Ann.searchIvfPqIndex(s, servedIvfPqStore(s, dir),
-        annQueries(s, dir), k = 5, nprobe = 2)
-      .select(col("query_id"), col("corpus_id"), lit(1).as("hit"))
-    val brute = operators.Ann.bruteForceTopK(annQueries(s, dir),
-        annCorpus(s, dir).drop("cell"), k = 5)
-      .select(col("query_id"), col("corpus_id"))
-    brute.join(served, Seq("query_id", "corpus_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(col("hit")).as("n_hits"),
-        (count(col("hit")) * 20).as("recall_pct"))
-  }
+  val simRecallIvfPq: Q = (s, dir) =>
+    topkEvalMetrics(annBrute(s, dir, k = 5),
+      operators.Ann.searchIvfPqIndex(s, servedIvfPqStore(s, dir), annQueries(s, dir),
+        k = 5, nprobe = 2),
+      k = 5)
 
   /** Snapshot diff between the corpus and a synthetic next version
     * (every 31st doc dropped, every 17th doc's text edited, three new
@@ -1790,24 +1726,71 @@ object QueriesLlm {
        |GROUP BY 1
        |""".stripMargin
 
-  /** Naive inverted-index oracle for the exact τ-Jaccard join — the
-    * clearest spec of the survivor set; shared verbatim by the
-    * production-geometry and forced-block-decomposition queries. */
-  private val prefixJoinOracle: String =
-    "WITH " + shinglesCte + """,
-sizes AS (
+  /** Per-doc shingle counts `sizes` and per-pair shared-shingle counts
+    * `common` over the distinct shingles `sh0` — the inverted-index
+    * core of the exact τ-Jaccard join. */
+  private val jaccardCommonCtes: String =
+    """sizes AS (
   SELECT doc_id, count(*) AS nsh FROM sh0 GROUP BY 1
 ), common AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
   FROM sh0 a JOIN sh0 b ON a.s = b.s AND a.doc_id < b.doc_id
   GROUP BY 1, 2
-)
+)"""
+
+  /** The exact τ=0.8 Jaccard truth pairs `truth` (q_simjoin_prefix's
+    * join) — the ground truth of every minhash/simhash quality row. */
+  private def jaccardTruthSql(materialized: Boolean): String =
+    jaccardCommonCtes + s""", truth AS ${if (materialized) "MATERIALIZED " else ""}(
+  SELECT doc_a, doc_b FROM common
+  JOIN sizes na ON doc_a = na.doc_id
+  JOIN sizes nb ON doc_b = nb.doc_id
+  WHERE n_common * 1000000 >= 800000 * (na.nsh + nb.nsh - n_common)
+)"""
+
+  /** Naive inverted-index oracle for the exact τ-Jaccard join — the
+    * clearest spec of the survivor set; shared verbatim by the
+    * production-geometry and forced-block-decomposition queries. */
+  private val prefixJoinOracle: String =
+    "WITH " + shinglesCte + ",\n" + jaccardCommonCtes + """
 SELECT doc_a, doc_b, n_common,
   CAST(n_common AS DOUBLE) / (na.nsh + nb.nsh - n_common) AS jaccard
 FROM common
 JOIN sizes na ON doc_a = na.doc_id
 JOIN sizes nb ON doc_b = nb.doc_id
 WHERE n_common * 1000000 >= 800000 * (na.nsh + nb.nsh - n_common)"""
+
+  /** The (doc_a, doc_b) join key of a truth row `t` and a candidate `m`. */
+  private val pairKeySql = "t.doc_a = m.doc_a AND t.doc_b = m.doc_b"
+
+  /** The truth/candidate membership flags of one full-joined pair row. */
+  private val pairFlagsSql = "t.doc_a IS NOT NULL AS is_t, m.doc_a IS NOT NULL AS is_c"
+
+  /** pairEvalMetrics' three counts over the flagged rows. */
+  private val pairCountsSql =
+    """SELECT CAST(COALESCE(SUM(CASE WHEN is_t THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_true,
+         CAST(COALESCE(SUM(CASE WHEN is_c THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_cand,
+         CAST(COALESCE(SUM(CASE WHEN is_t AND is_c THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_caught"""
+
+  /** pairEvalMetrics' DIV-floored percentages over the counts. */
+  private val pairPctSql =
+    """  CASE WHEN n_true > 0 THEN n_caught * 100 // n_true END AS recall_pct,
+  CASE WHEN n_cand > 0 THEN n_caught * 100 // n_cand END AS precision_pct"""
+
+  /** pairEvalMetrics' SQL twin, as the tail of a WITH: `u` flags each
+    * row of `fullJoin` (the FROM clause full-joining the `truth t` pairs
+    * with the candidate pairs `m`), `agg` counts, the SELECT grades. */
+  private def pairEvalSql(fullJoin: String): String =
+    s"""u AS (
+  SELECT $pairFlagsSql
+  $fullJoin
+), agg AS (
+  $pairCountsSql
+  FROM u
+)
+SELECT n_true, n_cand, n_caught,
+$pairPctSql
+FROM agg"""
 
   /** DuckDB twin of Similarity.shingleHash: first 15 md5 hex nibbles →
     * 60-bit BIGINT (column `hx` holds the md5 hex) — the ONE shared
@@ -1904,16 +1887,13 @@ mh_pairs AS (
   private def geomEval(tag: String, bands: Int): String =
     s"""SELECT CAST($bands AS INT) AS bands, CAST(${8 / bands} AS INT) AS rows_per_band,
   n_true, n_cand, n_caught,
-  CASE WHEN n_true > 0 THEN n_caught * 100 // n_true END AS recall_pct,
-  CASE WHEN n_cand > 0 THEN n_caught * 100 // n_cand END AS precision_pct
+$pairPctSql
 FROM (
-  SELECT CAST(COALESCE(SUM(CASE WHEN is_t THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_true,
-         CAST(COALESCE(SUM(CASE WHEN is_c THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_cand,
-         CAST(COALESCE(SUM(CASE WHEN is_t AND is_c THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_caught
+  $pairCountsSql
   FROM (
-    SELECT t.doc_a IS NOT NULL AS is_t, m.doc_a IS NOT NULL AS is_c
+    SELECT $pairFlagsSql
     FROM truth t FULL JOIN cand$tag m
-      ON t.doc_a = m.doc_a AND t.doc_b = m.doc_b) u) agg"""
+      ON $pairKeySql) u) agg"""
 
   /** Transitive closure over `mh_pairs` ending in `lbl` (id → component
     * minimum) — shared by the cluster and survivor oracles so the three
@@ -1945,10 +1925,7 @@ sym AS (
        |  GROUP BY 1, 2
        |), cvec AS (
        |  SELECT cell, list(c ORDER BY i) AS ce FROM cent GROUP BY 1
-       |), q AS (
-       |  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qe
-       |  FROM embeddings WHERE vec_id < 5
-       |), probe AS (
+       |), $embQueryCte, probe AS (
        |  SELECT query_id, qe, cell FROM (
        |    SELECT query_id, qe, cell,
        |      ROW_NUMBER() OVER (PARTITION BY query_id
@@ -1973,6 +1950,22 @@ sym AS (
        |                               ORDER BY score_q DESC, corpus_id ASC) AS rnk
        |  FROM scored) t
        |WHERE rnk <= 10""".stripMargin
+
+  /** The ANN corpus CTE `name` (twin of annCorpus without the label):
+    * every vector but the five queries, cast to DOUBLE[]; `where`
+    * narrows it (the incremental oracle's base slice). */
+  private def embCorpusCte(name: String = "c", where: String = "vec_id >= 5"): String =
+    s"""$name AS (
+       |  SELECT vec_id AS corpus_id, CAST(embedding AS DOUBLE[]) AS ce
+       |  FROM embeddings WHERE $where
+       |)""".stripMargin
+
+  /** The five ANN queries as the CTE `q` (twin of annQueries). */
+  private val embQueryCte: String =
+    """q AS (
+      |  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qe
+      |  FROM embeddings WHERE vec_id < 5
+      |)""".stripMargin
 
   /** 1e-6-quantized cosine in DuckDB — the SQL twin of Ann.cosQ /
     * graft_cosine (same floor, same tick). */
@@ -2094,15 +2087,12 @@ FROM scored s, tot t"""
        |                                k.cell ASC) AS rk
        |  FROM c, $cents k) x WHERE rk <= 2""".stripMargin
 
-  /** The hash-seeded 2-iteration Lloyd chain ending in `cellof` (the
-    * q_sim_kmeans / IVF-PQ training prefix) — factored for the
-    * SemDeDup oracle so its cells can never train apart from the ANN
-    * family's. */
-  private lazy val kmCellsChain: String =
-    s"""c AS (
-       |  SELECT vec_id AS corpus_id, CAST(embedding AS DOUBLE[]) AS ce
-       |  FROM embeddings WHERE vec_id >= 5
-       |), seeds AS (
+  /** The hash-seeded 2-iteration Lloyd training over the corpus CTE
+    * `c`, ending in the codebook `k2` (twin of Ann.kmeansCodebook with
+    * k = 4, iters = 2) — shared by q_sim_kmeans, the IVF-PQ oracles and
+    * SemDeDup's cells, so none of them can train apart. */
+  private def kmTrainCtes(materializeK2: Boolean): String =
+    s"""seeds AS (
        |  SELECT corpus_id, ce, md5('km|' || CAST(corpus_id AS VARCHAR)) AS h
        |  FROM c ORDER BY h, corpus_id LIMIT 4
        |), k0 AS (
@@ -2111,61 +2101,73 @@ FROM scored s, tot t"""
        |), a1 AS (${kmAssign("k0")}
        |), k1 AS (${kmMeans("a1")}
        |), a2 AS (${kmAssign("k1")}
-       |), k2 AS MATERIALIZED (${kmMeans("a2")}
-       |), cellof AS MATERIALIZED (${kmAssign("k2")}
+       |), k2 AS ${if (materializeK2) "MATERIALIZED " else ""}(${kmMeans("a2")}
        |)""".stripMargin
 
-  /** The unrolled PQ train+ADC oracle — shared by q_sim_pq and its
-    * recall row so candidate set and graded set can never train apart. */
-  private lazy val oraclePq: String =
-    s"""WITH c AS (
-       |  SELECT vec_id AS corpus_id, CAST(embedding AS DOUBLE[]) AS ce
-       |  FROM embeddings WHERE vec_id >= 5
-       |), q AS (
-       |  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qe
-       |  FROM embeddings WHERE vec_id < 5
-       |), sv AS MATERIALIZED (
+  /** The corpus subvectors CTE `name` over the corpus CTE `corpus`:
+    * one 8-dim slice per (vector, subspace), as Ann.pqSubvecs cuts it. */
+  private def pqSubvecsCte(name: String, corpus: String): String =
+    s"""$name AS MATERIALIZED (
        |  SELECT corpus_id, s.sub, ce[s.sub*8+1 : s.sub*8+8] AS sv
-       |  FROM c, (SELECT unnest(generate_series(0, 7)) AS sub) s
-       |), a0 AS (
-       |  SELECT corpus_id, sub,
-       |    CAST(strpos('0123456789abcdef',
-       |      substr(md5('pq|' || CAST(sub AS VARCHAR) || '|'
-       |                 || CAST(corpus_id AS VARCHAR)), 1, 1)) - 1 AS INT) AS cell,
-       |    sv
-       |  FROM sv
-       |), k0 AS MATERIALIZED (${pqMeansSql("SELECT * FROM a0")}
-       |), a1 AS (${pqAssignSql("k0")}
-       |), k1 AS MATERIALIZED (${pqMeansSql("SELECT * FROM a1")}
-       |), a2 AS (${pqAssignSql("k1")}
-       |), k2 AS MATERIALIZED (${pqMeansSql("SELECT * FROM a2")}
-       |), af AS MATERIALIZED (${pqAssignSql("k2")}
-       |), qs AS (
+       |  FROM $corpus, (SELECT unnest(generate_series(0, 7)) AS sub) s
+       |)""".stripMargin
+
+  /** The hash-seeded 2-round PQ codebook training over the corpus CTE
+    * `c` (twin of Ann.pqCodebook with iters = 2), ending in the
+    * codebook `${p}k2` — shared by the PQ and both IVF-PQ oracles. The
+    * initial cells come from one md5 hex digit per (sub, vector). */
+  private def pqTrainCtes(p: String): String =
+    pqSubvecsCte("sv", "c") + ", " +
+      s"""${p}a0 AS (
+         |  SELECT corpus_id, sub,
+         |    CAST(strpos('0123456789abcdef',
+         |      substr(md5('pq|' || CAST(sub AS VARCHAR) || '|'
+         |                 || CAST(corpus_id AS VARCHAR)), 1, 1)) - 1 AS INT) AS cell,
+         |    sv
+         |  FROM sv
+         |), ${p}k0 AS MATERIALIZED (${pqMeansSql(s"SELECT * FROM ${p}a0")}
+         |), ${p}a1 AS (${pqAssignSql(s"${p}k0")}
+         |), ${p}k1 AS MATERIALIZED (${pqMeansSql(s"SELECT * FROM ${p}a1")}
+         |), ${p}a2 AS (${pqAssignSql(s"${p}k1")}
+         |), ${p}k2 AS MATERIALIZED (${pqMeansSql(s"SELECT * FROM ${p}a2")}
+         |)""".stripMargin
+
+  /** The query subvectors `qs` and each query's subspace distance
+    * lookup table `lq` against the codebook CTE `cb` (twin of
+    * Ann.pqLut). */
+  private def pqLutCtes(cb: String): String =
+    s"""qs AS (
        |  SELECT query_id, s.sub, qe[s.sub*8+1 : s.sub*8+8] AS qsv
        |  FROM q, (SELECT unnest(generate_series(0, 7)) AS sub) s
        |), lq AS (
        |  SELECT g.query_id, k.sub, k.cell, ${pqDqSql("g.qsv", "k.sc")} AS lq
-       |  FROM qs g JOIN k2 k ON k.sub = g.sub
-       |), d AS (
-       |  SELECT l.query_id, a.corpus_id, CAST(SUM(l.lq) AS BIGINT) AS dist_q
-       |  FROM af a JOIN lq l ON l.sub = a.sub AND l.cell = a.cell
-       |  GROUP BY 1, 2
-       |)
-       |SELECT query_id, corpus_id, dist_q, rnk FROM (
+       |  FROM qs g JOIN $cb k ON k.sub = g.sub
+       |)""".stripMargin
+
+  /** The top-5 by ADC distance over the scored CTE `d`, emitting `cols`. */
+  private def pqRankSql(cols: String): String =
+    s"""SELECT $cols FROM (
        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
        |                               ORDER BY dist_q ASC, corpus_id ASC) AS rnk
        |  FROM d) t
        |WHERE rnk <= 5""".stripMargin
 
-  /** Recall@5 oracle shape shared by the PQ and served-IVF-PQ quality
-    * rows: brute exact top-5 (the q_sim_topk cosine at k=5) left-joined
-    * with the candidate rung's top-5, embedded as a nested subquery the
-    * way q_sim_recall embeds ivfOracle. */
-  private def recall5Oracle(candidate: String): String =
-    // the candidate body substitutes in AFTER stripMargin: its lines can
-    // start with whitespace + `||` (string concat), and a second margin
-    // strip would eat the first pipe and corrupt the SQL
-    s"""WITH brute AS (
+  /** The unrolled PQ train+ADC oracle — shared by q_sim_pq and its
+    * recall row so candidate set and graded set can never train apart. */
+  private lazy val oraclePq: String =
+    "WITH " + embCorpusCte() + ", " + embQueryCte + ", " + pqTrainCtes("") +
+      s", af AS MATERIALIZED (${pqAssignSql("k2")}\n), " + pqLutCtes("k2") +
+      """, d AS (
+        |  SELECT l.query_id, a.corpus_id, CAST(SUM(l.lq) AS BIGINT) AS dist_q
+        |  FROM af a JOIN lq l ON l.sub = a.sub AND l.cell = a.cell
+        |  GROUP BY 1, 2
+        |)
+        |""".stripMargin + pqRankSql("query_id, corpus_id, dist_q, rnk")
+
+  /** The exact top-k CTE `brute` (twin of annBrute: the q_sim_topk
+    * cosine) — the ground truth of every recall oracle. */
+  private def bruteTopkSql(k: Int): String =
+    s"""brute AS (
        |  SELECT query_id, corpus_id FROM (
        |    SELECT query_id, corpus_id,
        |      ROW_NUMBER() OVER (PARTITION BY query_id
@@ -2175,157 +2177,118 @@ FROM scored s, tot t"""
        |        ${cosSql("CAST(q.embedding AS DOUBLE[])", "CAST(c.embedding AS DOUBLE[])")} AS score_q
        |      FROM embeddings q, embeddings c
        |      WHERE q.vec_id < 5 AND c.vec_id >= 5) s) t
-       |  WHERE rnk <= 5
-       |), cand AS (
+       |  WHERE rnk <= $k
+       |)""".stripMargin
+
+  /** topkEvalMetrics' SQL twin: the brute top-k left-joined with the
+    * candidate rung's top-k — its whole oracle `candidate`, nested as
+    * the subquery `alias` of the CTE `cte` — then per query the hits
+    * and recall_pct = hits·100/k. */
+  private def topkRecallSql(k: Int, cte: String, alias: String,
+      candidate: String): String =
+    // the candidate joins in AFTER stripMargin: its lines can start with
+    // whitespace + `||` (string concat), and a second margin strip would
+    // eat the first pipe and corrupt the SQL
+    s"""WITH ${bruteTopkSql(k)}, $cte AS (
        |  SELECT query_id, corpus_id, 1 AS hit FROM (
-       |@@CANDIDATE@@
-       |  ) cd
-       |)
-       |SELECT b.query_id,
-       |  CAST(COUNT(i.hit) AS BIGINT) AS n_hits,
-       |  CAST(COUNT(i.hit) * 20 AS BIGINT) AS recall_pct
-       |FROM brute b
-       |LEFT JOIN cand i ON i.query_id = b.query_id AND i.corpus_id = b.corpus_id
-       |GROUP BY 1""".stripMargin
-      .replace("@@CANDIDATE@@",
-        candidate.linesIterator.map("    " + _).mkString("\n"))
+       |""".stripMargin + candidate.linesIterator.map("    " + _).mkString("\n") +
+      s"""
+         |  ) $alias
+         |)
+         |SELECT b.query_id,
+         |  CAST(COUNT(i.hit) AS BIGINT) AS n_hits,
+         |  CAST(COUNT(i.hit) * ${100 / k} AS BIGINT) AS recall_pct
+         |FROM brute b
+         |LEFT JOIN $cte i ON i.query_id = b.query_id AND i.corpus_id = b.corpus_id
+         |GROUP BY 1""".stripMargin
 
   /** The unrolled IVF-PQ train+probe oracle — shared by the inline
     * (q_sim_ivfpq) and served (q_sim_ivfpq_served) formulations so
-    * the two can never train apart. */
+    * the two can never train apart: the kmeans chain trains the coarse
+    * cells, the PQ chain the fine codebooks, then [[ivfPqSearchSql]]. */
   private lazy val oracleIvfPq: String =
-      s"""WITH c AS (
-         |  SELECT vec_id AS corpus_id, CAST(embedding AS DOUBLE[]) AS ce
-         |  FROM embeddings WHERE vec_id >= 5
-         |), q AS (
-         |  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qe
-         |  FROM embeddings WHERE vec_id < 5
-         |), seeds AS (
-         |  SELECT corpus_id, ce, md5('km|' || CAST(corpus_id AS VARCHAR)) AS h
-         |  FROM c ORDER BY h, corpus_id LIMIT 4
-         |), k0 AS (
-         |  SELECT CAST(ROW_NUMBER() OVER (ORDER BY h, corpus_id) - 1 AS INT) AS cell, ce
-         |  FROM seeds
-         |), a1 AS (${kmAssign("k0")}
-         |), k1 AS (${kmMeans("a1")}
-         |), a2 AS (${kmAssign("k1")}
-         |), k2 AS MATERIALIZED (${kmMeans("a2")}
-         |), cellof AS MATERIALIZED (${kmAssign("k2")}
-         |), sv AS MATERIALIZED (
-         |  SELECT corpus_id, s.sub, ce[s.sub*8+1 : s.sub*8+8] AS sv
-         |  FROM c, (SELECT unnest(generate_series(0, 7)) AS sub) s
-         |), pa0 AS (
-         |  SELECT corpus_id, sub,
-         |    CAST(strpos('0123456789abcdef',
-         |      substr(md5('pq|' || CAST(sub AS VARCHAR) || '|'
-         |                 || CAST(corpus_id AS VARCHAR)), 1, 1)) - 1 AS INT) AS cell,
-         |    sv
-         |  FROM sv
-         |), pk0 AS MATERIALIZED (${pqMeansSql("SELECT * FROM pa0")}
-         |), pa1 AS (${pqAssignSql("pk0")}
-         |), pk1 AS MATERIALIZED (${pqMeansSql("SELECT * FROM pa1")}
-         |), pa2 AS (${pqAssignSql("pk1")}
-         |), pk2 AS MATERIALIZED (${pqMeansSql("SELECT * FROM pa2")}
-         |), paf AS MATERIALIZED (${pqAssignSql("pk2")}
-         |), probe AS (
-         |  SELECT query_id, cell FROM (
-         |    SELECT q.query_id, k.cell,
-         |      ROW_NUMBER() OVER (PARTITION BY q.query_id
-         |                         ORDER BY ${cosSql("q.qe", "k.ce")} DESC, k.cell ASC) AS crnk
-         |    FROM q, k2 k) x WHERE crnk <= 2
-         |), qs AS (
-         |  SELECT query_id, s.sub, qe[s.sub*8+1 : s.sub*8+8] AS qsv
-         |  FROM q, (SELECT unnest(generate_series(0, 7)) AS sub) s
-         |), lq AS (
-         |  SELECT g.query_id, k.sub, k.cell, ${pqDqSql("g.qsv", "k.sc")} AS lq
-         |  FROM qs g JOIN pk2 k ON k.sub = g.sub
-         |), d AS (
-         |  SELECT l.query_id, cf.cell, a.corpus_id,
-         |    CAST(SUM(l.lq) AS BIGINT) AS dist_q
-         |  FROM paf a
-         |  JOIN lq l ON l.sub = a.sub AND l.cell = a.cell
-         |  JOIN cellof cf ON cf.corpus_id = a.corpus_id
-         |  JOIN probe p ON p.query_id = l.query_id AND p.cell = cf.cell
-         |  GROUP BY 1, 2, 3
-         |)
-         |SELECT query_id, cell, corpus_id, dist_q, rnk FROM (
-         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |                               ORDER BY dist_q ASC, corpus_id ASC) AS rnk
-         |  FROM d) t
-         |WHERE rnk <= 5""".stripMargin
+    "WITH " + embCorpusCte() + ", " + embQueryCte + ", " +
+      kmTrainCtes(materializeK2 = true) +
+      s", cellof AS MATERIALIZED (${kmAssign("k2")}\n), " + pqTrainCtes("p") +
+      s", paf AS MATERIALIZED (${pqAssignSql("pk2")}\n), " + ivfPqSearchSql
 
   /** The INCREMENTAL IVF-PQ oracle (r17): codebooks trained on the
     * BASE slice only (vec_id % 10 ≠ 0 — the standing index), the FULL
-    * corpus encoded and cell-assigned against them, same probe/ADC/
+    * corpus `ca` encoded and cell-assigned against them, same probe/ADC/
     * top-k. This IS what build-then-append produces (encode and
     * assignment are deterministic given the codebooks), so the one SQL
     * proves the append lost and invented nothing. */
   private lazy val oracleIvfPqInc: String =
-      s"""WITH c AS (
-         |  SELECT vec_id AS corpus_id, CAST(embedding AS DOUBLE[]) AS ce
-         |  FROM embeddings WHERE vec_id >= 5 AND vec_id % 10 <> 0
-         |), ca AS (
-         |  SELECT vec_id AS corpus_id, CAST(embedding AS DOUBLE[]) AS ce
-         |  FROM embeddings WHERE vec_id >= 5
-         |), q AS (
-         |  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qe
-         |  FROM embeddings WHERE vec_id < 5
-         |), seeds AS (
-         |  SELECT corpus_id, ce, md5('km|' || CAST(corpus_id AS VARCHAR)) AS h
-         |  FROM c ORDER BY h, corpus_id LIMIT 4
-         |), k0 AS (
-         |  SELECT CAST(ROW_NUMBER() OVER (ORDER BY h, corpus_id) - 1 AS INT) AS cell, ce
-         |  FROM seeds
-         |), a1 AS (${kmAssign("k0")}
-         |), k1 AS (${kmMeans("a1")}
-         |), a2 AS (${kmAssign("k1")}
-         |), k2 AS MATERIALIZED (${kmMeans("a2")}
-         |), cellof AS MATERIALIZED (${kmAssign("k2", "ca")}
-         |), sv AS MATERIALIZED (
-         |  SELECT corpus_id, s.sub, ce[s.sub*8+1 : s.sub*8+8] AS sv
-         |  FROM c, (SELECT unnest(generate_series(0, 7)) AS sub) s
-         |), pa0 AS (
-         |  SELECT corpus_id, sub,
-         |    CAST(strpos('0123456789abcdef',
-         |      substr(md5('pq|' || CAST(sub AS VARCHAR) || '|'
-         |                 || CAST(corpus_id AS VARCHAR)), 1, 1)) - 1 AS INT) AS cell,
-         |    sv
-         |  FROM sv
-         |), pk0 AS MATERIALIZED (${pqMeansSql("SELECT * FROM pa0")}
-         |), pa1 AS (${pqAssignSql("pk0")}
-         |), pk1 AS MATERIALIZED (${pqMeansSql("SELECT * FROM pa1")}
-         |), pa2 AS (${pqAssignSql("pk1")}
-         |), pk2 AS MATERIALIZED (${pqMeansSql("SELECT * FROM pa2")}
-         |), sva AS MATERIALIZED (
-         |  SELECT corpus_id, s.sub, ce[s.sub*8+1 : s.sub*8+8] AS sv
-         |  FROM ca, (SELECT unnest(generate_series(0, 7)) AS sub) s
-         |), paf AS MATERIALIZED (${pqAssignSql("pk2", "sva")}
-         |), probe AS (
-         |  SELECT query_id, cell FROM (
-         |    SELECT q.query_id, k.cell,
-         |      ROW_NUMBER() OVER (PARTITION BY q.query_id
-         |                         ORDER BY ${cosSql("q.qe", "k.ce")} DESC, k.cell ASC) AS crnk
-         |    FROM q, k2 k) x WHERE crnk <= 2
-         |), qs AS (
-         |  SELECT query_id, s.sub, qe[s.sub*8+1 : s.sub*8+8] AS qsv
-         |  FROM q, (SELECT unnest(generate_series(0, 7)) AS sub) s
-         |), lq AS (
-         |  SELECT g.query_id, k.sub, k.cell, ${pqDqSql("g.qsv", "k.sc")} AS lq
-         |  FROM qs g JOIN pk2 k ON k.sub = g.sub
-         |), d AS (
-         |  SELECT l.query_id, cf.cell, a.corpus_id,
-         |    CAST(SUM(l.lq) AS BIGINT) AS dist_q
-         |  FROM paf a
-         |  JOIN lq l ON l.sub = a.sub AND l.cell = a.cell
-         |  JOIN cellof cf ON cf.corpus_id = a.corpus_id
-         |  JOIN probe p ON p.query_id = l.query_id AND p.cell = cf.cell
-         |  GROUP BY 1, 2, 3
-         |)
-         |SELECT query_id, cell, corpus_id, dist_q, rnk FROM (
-         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |                               ORDER BY dist_q ASC, corpus_id ASC) AS rnk
-         |  FROM d) t
-         |WHERE rnk <= 5""".stripMargin
+    "WITH " + embCorpusCte(where = "vec_id >= 5 AND vec_id % 10 <> 0") + ", " +
+      embCorpusCte("ca") + ", " + embQueryCte + ", " + kmTrainCtes(materializeK2 = true) +
+      s", cellof AS MATERIALIZED (${kmAssign("k2", "ca")}\n), " + pqTrainCtes("p") +
+      ", " + pqSubvecsCte("sva", "ca") +
+      s", paf AS MATERIALIZED (${pqAssignSql("pk2", "sva")}\n), " + ivfPqSearchSql
+
+  /** The IVF-PQ search over the coarse codebook `k2`, the cells
+    * `cellof`, the fine codebook `pk2` and the codes `paf`: `probe`
+    * keeps each query's 2 best coarse cells, and the ADC join is
+    * restricted to codes whose coarse cell that query probed. */
+  private lazy val ivfPqSearchSql: String =
+    s"""probe AS (
+       |  SELECT query_id, cell FROM (
+       |    SELECT q.query_id, k.cell,
+       |      ROW_NUMBER() OVER (PARTITION BY q.query_id
+       |                         ORDER BY ${cosSql("q.qe", "k.ce")} DESC, k.cell ASC) AS crnk
+       |    FROM q, k2 k) x WHERE crnk <= 2
+       |), ${pqLutCtes("pk2")}, d AS (
+       |  SELECT l.query_id, cf.cell, a.corpus_id,
+       |    CAST(SUM(l.lq) AS BIGINT) AS dist_q
+       |  FROM paf a
+       |  JOIN lq l ON l.sub = a.sub AND l.cell = a.cell
+       |  JOIN cellof cf ON cf.corpus_id = a.corpus_id
+       |  JOIN probe p ON p.query_id = l.query_id AND p.cell = cf.cell
+       |  GROUP BY 1, 2, 3
+       |)
+       |${pqRankSql("query_id, cell, corpus_id, dist_q, rnk")}""".stripMargin
+
+  /** SemDeDup's oracle prefix: the shared kmeans training, every
+    * corpus vector's k2 cell `cellof`, then (top2) the top-2
+    * assignment `cellof2`. */
+  private def semdedupCellsSql(top2: Boolean): String =
+    "WITH " + embCorpusCte() + ", " + kmTrainCtes(materializeK2 = true) +
+      s", cellof AS MATERIALIZED (${kmAssign("k2")}\n)" +
+      (if (top2) s",\ncellof2 AS MATERIALIZED (${kmAssignTop2("k2")}\n), " else ",\n")
+
+  /** Ann.cellPairs' SQL twin, the CTE `name` of (a, b) pairs: in-cell
+    * pairs with the exact cosine verify, DISTINCT over the top-2
+    * assignment, where a pair can share both its cells. */
+  private def cellPairsSql(name: String, top2: Boolean, a: String, b: String): String = {
+    val cells = if (top2) "cellof2" else "cellof"
+    s"""$name AS (
+  SELECT ${if (top2) "DISTINCT " else ""}a.corpus_id AS $a, b.corpus_id AS $b
+  FROM $cells a JOIN $cells b ON a.cell = b.cell AND a.corpus_id < b.corpus_id
+  JOIN c ea ON ea.corpus_id = a.corpus_id
+  JOIN c eb ON eb.corpus_id = b.corpus_id
+  WHERE ${cosSql("ea.ce", "eb.ce")} >= $MinCosQ
+)"""
+  }
+
+  /** A SemDeDup rung's verdicts: each pair drops its higher id, and a
+    * top-2 rung's verdict row keys on the primary (rk = 1) cell. */
+  private def semdedupOracle(top2: Boolean): String =
+    semdedupCellsSql(top2) + cellPairsSql("pairs", top2, "va", "vb") + s""", drops AS (
+  SELECT vb, CAST(MIN(va) AS BIGINT) AS dup_of FROM pairs GROUP BY 1
+)
+SELECT f.corpus_id, f.cell, d.dup_of, d.dup_of IS NULL AS keep
+FROM ${if (top2) "cellof2" else "cellof"} f LEFT JOIN drops d ON d.vb = f.corpus_id""" +
+      (if (top2) "\nWHERE f.rk = 1" else "")
+
+  /** A SemDeDup rung's quality row: the exact all-pairs quantized
+    * cosine truth over the same corpus, graded against the rung's own
+    * [[cellPairsSql]] candidates. */
+  private def semdedupRecallOracle(top2: Boolean): String =
+    semdedupCellsSql(top2) + s"""truth AS (
+  SELECT a.corpus_id AS doc_a, b.corpus_id AS doc_b
+  FROM c a, c b
+  WHERE a.corpus_id < b.corpus_id AND ${cosSql("a.ce", "b.ce")} >= $MinCosQ
+), """ + cellPairsSql("candp", top2, "doc_a", "doc_b") + ", " +
+      pairEvalSql(s"FROM truth t FULL JOIN candp m ON $pairKeySql")
 
   /** Exact quantized-cosine SQL fragment (1e-6 floor ticks) — the ONE
     * formula shared by the embcos pair row and its quality row. */
@@ -2614,41 +2577,27 @@ SELECT n_batch, n_true_admit, n_true_refuse, n_admitted, n_fr_bloom,
 FROM agg"""
 
   val oracle: Map[String, String] = Map(
-    "q_sim_kmeans" ->
-      s"""WITH c AS (
-         |  SELECT vec_id AS corpus_id, CAST(embedding AS DOUBLE[]) AS ce
-         |  FROM embeddings WHERE vec_id >= 5
-         |), seeds AS (
-         |  SELECT corpus_id, ce, md5('km|' || CAST(corpus_id AS VARCHAR)) AS h
-         |  FROM c ORDER BY h, corpus_id LIMIT 4
-         |), k0 AS (
-         |  SELECT CAST(ROW_NUMBER() OVER (ORDER BY h, corpus_id) - 1 AS INT) AS cell, ce
-         |  FROM seeds
-         |), a1 AS (${kmAssign("k0")}
-         |), k1 AS (${kmMeans("a1")}
-         |), a2 AS (${kmAssign("k1")}
-         |), k2 AS (${kmMeans("a2")}
-         |)
-         |SELECT corpus_id, cell,
-         |  CAST(floor(score / 1000.0) AS BIGINT) AS score_mq
-         |FROM (${kmAssign("k2")}) f""".stripMargin,
+    "q_sim_kmeans" -> (
+      "WITH " + embCorpusCte() + ", " + kmTrainCtes(materializeK2 = false) +
+        s"""
+           |SELECT corpus_id, cell,
+           |  CAST(floor(score / 1000.0) AS BIGINT) AS score_mq
+           |FROM (${kmAssign("k2")}) f""".stripMargin),
 
     // PQ: identical hash-seeded per-subspace Lloyd training, then ADC
     // scoring via a (sub, cell) join — the packed-code lut lookup and
     // this join are the same Σ of assigned-cell subspace distances
     "q_sim_pq" -> oraclePq,
 
-    // recall rows for the lossy rungs that actually serve (r12): the
-    // candidate top-5 sets are the full oraclePq / oracleIvfPq chains
-    // nested, so the graded set can never drift from the graded query
-    "q_sim_recall_pq" -> recall5Oracle(oraclePq),
-    "q_sim_recall_ivfpq" -> recall5Oracle(oracleIvfPq),
+    // recall rows for the lossy rungs that actually serve (r12):
+    // topkRecallSql grades the rung's own oracle (oraclePq /
+    // oracleIvfPq) as the candidate top-5, so the graded set can never
+    // drift from the graded query
+    "q_sim_recall_pq" -> topkRecallSql(5, "cand", "cd", oraclePq),
+    "q_sim_recall_ivfpq" -> topkRecallSql(5, "cand", "cd", oracleIvfPq),
 
-    // IVF-PQ composition: the kmeans chain (c/seeds/k0..k2 — identical
-    // to q_sim_kmeans's) trains the coarse cells, the PQ chain (sv/pa0
-    // ..pk2 — q_sim_pq's up to CTE renaming) trains the fine codebooks;
-    // probe keeps each query's 2 best coarse cells and the ADC join is
-    // restricted to codes whose coarse cell that query probed
+    // IVF-PQ composition: q_sim_kmeans's kmTrainCtes trains the coarse
+    // cells, q_sim_pq's pqTrainCtes the fine codebooks
     "q_sim_ivfpq" -> oracleIvfPq,
     "q_dedup_exact" ->
       """SELECT md5(text) AS digest, MIN(doc_id) AS survivor, COUNT(*) AS n_copies
@@ -2996,61 +2945,24 @@ WHERE CAST(n_common AS DOUBLE) / (na.nsh + nb.nsh - n_common) >= 0.3"""),
     "q_dedup_minhash" -> (
       "WITH " + minhashPairsChain + "\nSELECT doc_a, doc_b, n_bands FROM mh_pairs"),
 
-    // dedup quality eval (r12): the LSH candidate chain (mh_pairs —
-    // q_dedup_minhash's verbatim) full-joined against the exact τ=0.8
-    // inverted-index truth (q_simjoin_prefix's CTEs, reusing the chain's
-    // sh0) — the two graded sets are nested so the eval can never drift
-    // from the graded queries
+    // dedup quality eval (r12): q_dedup_minhash's minhashPairsChain
+    // graded by pairEvalSql against jaccardTruthSql (q_simjoin_prefix's
+    // join over the chain's sh0) — both graded sets are the graded
+    // queries' own CTEs, so the eval can never drift from them
     "q_dedup_recall" -> (
-      "WITH " + minhashPairsChain + """,
-sizes AS (
-  SELECT doc_id, count(*) AS nsh FROM sh0 GROUP BY 1
-), common AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-  FROM sh0 a JOIN sh0 b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), truth AS (
-  SELECT doc_a, doc_b FROM common
-  JOIN sizes na ON doc_a = na.doc_id
-  JOIN sizes nb ON doc_b = nb.doc_id
-  WHERE n_common * 1000000 >= 800000 * (na.nsh + nb.nsh - n_common)
-), u AS (
-  SELECT t.doc_a IS NOT NULL AS is_t, m.doc_a IS NOT NULL AS is_c
-  FROM truth t
+      "WITH " + minhashPairsChain + ",\n" + jaccardTruthSql(materialized = false) + ", " +
+        pairEvalSql(s"""FROM truth t
   FULL JOIN (SELECT doc_a, doc_b FROM mh_pairs) m
-    ON t.doc_a = m.doc_a AND t.doc_b = m.doc_b
-), agg AS (
-  SELECT CAST(COALESCE(SUM(CASE WHEN is_t THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_true,
-         CAST(COALESCE(SUM(CASE WHEN is_c THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_cand,
-         CAST(COALESCE(SUM(CASE WHEN is_t AND is_c THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_caught
-  FROM u
-)
-SELECT n_true, n_cand, n_caught,
-  CASE WHEN n_true > 0 THEN n_caught * 100 // n_true END AS recall_pct,
-  CASE WHEN n_cand > 0 THEN n_caught * 100 // n_cand END AS precision_pct
-FROM agg"""),
+    ON $pairKeySql""")),
 
     // geometry sweep: THREE bandings of the SAME signature CTEs, each
     // graded against the SAME (materialized) exact-truth join — the
     // S-curve knob measured, not argued
     "q_dedup_recall_geom" -> (
       "WITH " + minhashSigsChain + ",\n" +
-        geomCtes("8", 8) + ",\n" + geomCtes("4", 4) + ",\n" +
-        geomCtes("2", 2) + """,
-sizes AS (
-  SELECT doc_id, count(*) AS nsh FROM sh0 GROUP BY 1
-), common AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-  FROM sh0 a JOIN sh0 b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), truth AS MATERIALIZED (
-  SELECT doc_a, doc_b FROM common
-  JOIN sizes na ON doc_a = na.doc_id
-  JOIN sizes nb ON doc_b = nb.doc_id
-  WHERE n_common * 1000000 >= 800000 * (na.nsh + nb.nsh - n_common)
-)
-""" + geomEval("8", 8) + "\nUNION ALL\n" + geomEval("4", 4) +
-        "\nUNION ALL\n" + geomEval("2", 2)),
+        Seq(8, 4, 2).map(b => geomCtes(b.toString, b)).mkString(",\n") + ",\n" +
+        jaccardTruthSql(materialized = true) + "\n" +
+        Seq(8, 4, 2).map(b => geomEval(b.toString, b)).mkString("\nUNION ALL\n")),
 
     // transitive closure of the SAME candidate pairs (shared CTE chain):
     // component = minimum doc reachable over the pair graph. The
@@ -3094,173 +3006,48 @@ FROM hits GROUP BY 1"""),
 SELECT doc_a, doc_b, hamming(sig_a, sig_b) AS hamming
 FROM sh_cand WHERE hamming(sig_a, sig_b) <= 8"""),
 
-    // simhash quality row (r12): the SAME candidate chain full-joined
-    // against the SAME exact-truth CTEs q_dedup_recall uses — all three
-    // graded sets are nested, none can drift
+    // simhash quality row (r12): q_dedup_simhash's simhashChain graded
+    // by pairEvalSql against q_dedup_recall's jaccardTruthSql
     "q_dedup_recall_simhash" -> (
-      "WITH " + shinglesCte + ",\n" + simhashChain + """,
-sizes AS (
-  SELECT doc_id, count(*) AS nsh FROM sh0 GROUP BY 1
-), common AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-  FROM sh0 a JOIN sh0 b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), truth AS (
-  SELECT doc_a, doc_b FROM common
-  JOIN sizes na ON doc_a = na.doc_id
-  JOIN sizes nb ON doc_b = nb.doc_id
-  WHERE n_common * 1000000 >= 800000 * (na.nsh + nb.nsh - n_common)
-), u AS (
-  SELECT t.doc_a IS NOT NULL AS is_t, m.doc_a IS NOT NULL AS is_c
-  FROM truth t
+      "WITH " + shinglesCte + ",\n" + simhashChain + ",\n" +
+        jaccardTruthSql(materialized = false) + ", " + pairEvalSql(s"""FROM truth t
   FULL JOIN (SELECT doc_a, doc_b FROM sh_cand
              WHERE hamming(sig_a, sig_b) <= 8) m
-    ON t.doc_a = m.doc_a AND t.doc_b = m.doc_b
-), agg AS (
-  SELECT CAST(COALESCE(SUM(CASE WHEN is_t THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_true,
-         CAST(COALESCE(SUM(CASE WHEN is_c THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_cand,
-         CAST(COALESCE(SUM(CASE WHEN is_t AND is_c THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_caught
-  FROM u
-)
-SELECT n_true, n_cand, n_caught,
-  CASE WHEN n_true > 0 THEN n_caught * 100 // n_true END AS recall_pct,
-  CASE WHEN n_cand > 0 THEN n_caught * 100 // n_cand END AS precision_pct
-FROM agg"""),
+    ON $pairKeySql""")),
 
     "q_dedup_embcos" -> (
-      "WITH " + embcosChain + """
+      "WITH " + embcosChain + s"""
 SELECT vec_a, vec_b, cos_q FROM (
-  SELECT vec_a, vec_b,""" + embCosQSql("ea.v", "eb.v") + """ AS cos_q
+  SELECT vec_a, vec_b,${embCosQSql("ea.v", "eb.v")} AS cos_q
   FROM ec_cand JOIN e ea ON vec_a = ea.vec_id JOIN e eb ON vec_b = eb.vec_id) t
-WHERE cos_q >= 450000"""),
+WHERE cos_q >= $MinCosQ"""),
 
-    // embedding-rung quality row (r12): the SAME candidate chain
-    // full-joined against the exact all-pairs cosine truth at the same
-    // tau - nothing can drift between the rung and its grade
+    // embedding-rung quality row (r12): q_dedup_embcos's embcosChain,
+    // verified at the same MinCosQ, graded by pairEvalSql against the
+    // exact all-pairs cosine truth
     "q_dedup_recall_embcos" -> (
-      "WITH " + embcosChain + """,
+      "WITH " + embcosChain + s""",
 truth AS (
   SELECT ea.vec_id AS doc_a, eb.vec_id AS doc_b
   FROM e ea, e eb
   WHERE ea.vec_id < eb.vec_id
-    AND""" + embCosQSql("ea.v", "eb.v") + """ >= 450000
-), u AS (
-  SELECT t.doc_a IS NOT NULL AS is_t, m.doc_a IS NOT NULL AS is_c
-  FROM truth t
+    AND${embCosQSql("ea.v", "eb.v")} >= $MinCosQ
+), """ + pairEvalSql(s"""FROM truth t
   FULL JOIN (
     SELECT vec_a AS doc_a, vec_b AS doc_b FROM (
-      SELECT vec_a, vec_b,""" + embCosQSql("ea.v", "eb.v") + """ AS cos_q
+      SELECT vec_a, vec_b,${embCosQSql("ea.v", "eb.v")} AS cos_q
       FROM ec_cand JOIN e ea ON vec_a = ea.vec_id JOIN e eb ON vec_b = eb.vec_id) cq
-    WHERE cos_q >= 450000
-  ) m ON t.doc_a = m.doc_a AND t.doc_b = m.doc_b
-), agg AS (
-  SELECT CAST(COALESCE(SUM(CASE WHEN is_t THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_true,
-         CAST(COALESCE(SUM(CASE WHEN is_c THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_cand,
-         CAST(COALESCE(SUM(CASE WHEN is_t AND is_c THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_caught
-  FROM u
-)
-SELECT n_true, n_cand, n_caught,
-  CASE WHEN n_true > 0 THEN n_caught * 100 // n_true END AS recall_pct,
-  CASE WHEN n_cand > 0 THEN n_caught * 100 // n_cand END AS precision_pct
-FROM agg"""),
+    WHERE cos_q >= $MinCosQ
+  ) m ON $pairKeySql""")),
 
-    // SemDeDup: cells from the SHARED kmeans chain (q_sim_kmeans's
-    // training, verbatim), pair cosine from the SHARED 1e-6-quantized
-    // fragment — neither the clustering nor the similarity can drift
-    // from the rows that already grade them
-    "q_dedup_semdedup" -> (
-      "WITH " + kmCellsChain + s""",
-pairs AS (
-  SELECT a.corpus_id AS va, b.corpus_id AS vb
-  FROM cellof a JOIN cellof b ON a.cell = b.cell AND a.corpus_id < b.corpus_id
-  JOIN c ea ON ea.corpus_id = a.corpus_id
-  JOIN c eb ON eb.corpus_id = b.corpus_id
-  WHERE ${cosSql("ea.ce", "eb.ce")} >= 450000
-), drops AS (
-  SELECT vb, CAST(MIN(va) AS BIGINT) AS dup_of FROM pairs GROUP BY 1
-)
-SELECT f.corpus_id, f.cell, d.dup_of, d.dup_of IS NULL AS keep
-FROM cellof f LEFT JOIN drops d ON d.vb = f.corpus_id"""),
-
-    // SemDeDup quality row: truth = exact all-pairs quantized cosine
-    // over the same corpus, candidates = the SAME cellof chain + the
-    // SAME cosine fragment the graded q_dedup_semdedup row uses —
-    // grade and graded strategy share every CTE
-    "q_dedup_recall_semdedup" -> (
-      "WITH " + kmCellsChain + s""",
-truth AS (
-  SELECT a.corpus_id AS doc_a, b.corpus_id AS doc_b
-  FROM c a, c b
-  WHERE a.corpus_id < b.corpus_id AND ${cosSql("a.ce", "b.ce")} >= 450000
-), candp AS (
-  SELECT a.corpus_id AS doc_a, b.corpus_id AS doc_b
-  FROM cellof a JOIN cellof b ON a.cell = b.cell AND a.corpus_id < b.corpus_id
-  JOIN c ea ON ea.corpus_id = a.corpus_id
-  JOIN c eb ON eb.corpus_id = b.corpus_id
-  WHERE ${cosSql("ea.ce", "eb.ce")} >= 450000
-), u AS (
-  SELECT t.doc_a IS NOT NULL AS is_t, m.doc_a IS NOT NULL AS is_c
-  FROM truth t FULL JOIN candp m ON t.doc_a = m.doc_a AND t.doc_b = m.doc_b
-), agg AS (
-  SELECT CAST(COALESCE(SUM(CASE WHEN is_t THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_true,
-         CAST(COALESCE(SUM(CASE WHEN is_c THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_cand,
-         CAST(COALESCE(SUM(CASE WHEN is_t AND is_c THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_caught
-  FROM u
-)
-SELECT n_true, n_cand, n_caught,
-  CASE WHEN n_true > 0 THEN n_caught * 100 // n_true END AS recall_pct,
-  CASE WHEN n_cand > 0 THEN n_caught * 100 // n_cand END AS precision_pct
-FROM agg"""),
-
-    // SemDeDup probe2: the SAME shared kmeans chain extended one CTE
-    // (top-2 assignment), candidate pairs DISTINCT over co-bucketed
-    // cells, drop semantics verbatim from q_dedup_semdedup; the verdict
-    // row keys on the rk=1 slice of the same assignment
-    "q_dedup_semdedup_probe2" -> (
-      "WITH " + kmCellsChain + s""",
-cellof2 AS MATERIALIZED (${kmAssignTop2("k2")}
-), pairs AS (
-  SELECT DISTINCT a.corpus_id AS va, b.corpus_id AS vb
-  FROM cellof2 a JOIN cellof2 b ON a.cell = b.cell AND a.corpus_id < b.corpus_id
-  JOIN c ea ON ea.corpus_id = a.corpus_id
-  JOIN c eb ON eb.corpus_id = b.corpus_id
-  WHERE ${cosSql("ea.ce", "eb.ce")} >= 450000
-), drops AS (
-  SELECT vb, CAST(MIN(va) AS BIGINT) AS dup_of FROM pairs GROUP BY 1
-)
-SELECT f.corpus_id, f.cell, d.dup_of, d.dup_of IS NULL AS keep
-FROM cellof2 f LEFT JOIN drops d ON d.vb = f.corpus_id
-WHERE f.rk = 1"""),
-
-    // probe2 quality row: identical truth to q_dedup_recall_semdedup,
-    // candidates from the top-2 assignment — the recall gap between the
-    // two rows is the measured value of probing
-    "q_dedup_recall_semdedup_probe2" -> (
-      "WITH " + kmCellsChain + s""",
-cellof2 AS MATERIALIZED (${kmAssignTop2("k2")}
-), truth AS (
-  SELECT a.corpus_id AS doc_a, b.corpus_id AS doc_b
-  FROM c a, c b
-  WHERE a.corpus_id < b.corpus_id AND ${cosSql("a.ce", "b.ce")} >= 450000
-), candp AS (
-  SELECT DISTINCT a.corpus_id AS doc_a, b.corpus_id AS doc_b
-  FROM cellof2 a JOIN cellof2 b ON a.cell = b.cell AND a.corpus_id < b.corpus_id
-  JOIN c ea ON ea.corpus_id = a.corpus_id
-  JOIN c eb ON eb.corpus_id = b.corpus_id
-  WHERE ${cosSql("ea.ce", "eb.ce")} >= 450000
-), u AS (
-  SELECT t.doc_a IS NOT NULL AS is_t, m.doc_a IS NOT NULL AS is_c
-  FROM truth t FULL JOIN candp m ON t.doc_a = m.doc_a AND t.doc_b = m.doc_b
-), agg AS (
-  SELECT CAST(COALESCE(SUM(CASE WHEN is_t THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_true,
-         CAST(COALESCE(SUM(CASE WHEN is_c THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_cand,
-         CAST(COALESCE(SUM(CASE WHEN is_t AND is_c THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_caught
-  FROM u
-)
-SELECT n_true, n_cand, n_caught,
-  CASE WHEN n_true > 0 THEN n_caught * 100 // n_true END AS recall_pct,
-  CASE WHEN n_cand > 0 THEN n_caught * 100 // n_cand END AS precision_pct
-FROM agg"""),
+    // SemDeDup and its probe2 rung, each with its quality row: cells
+    // from the SHARED kmeans chain (q_sim_kmeans's training), in-cell
+    // pairs from [[cellPairsSql]] — the clustering, the similarity and
+    // the candidate set are the same CTEs in a rung and its grade
+    "q_dedup_semdedup" -> semdedupOracle(top2 = false),
+    "q_dedup_semdedup_probe2" -> semdedupOracle(top2 = true),
+    "q_dedup_recall_semdedup" -> semdedupRecallOracle(top2 = false),
+    "q_dedup_recall_semdedup_probe2" -> semdedupRecallOracle(top2 = true),
 
     "q_text_langid" -> (
       """WITH words AS (
@@ -3604,13 +3391,7 @@ SELECT lang, CAST(floor((cum - bpe_tokens) / 4096) AS BIGINT) AS pack_id,
 FROM c GROUP BY 1, 2"""),
 
     "q_sim_topk" ->
-      """WITH q AS (
-        |  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qe
-        |  FROM embeddings WHERE vec_id < 5
-        |), c AS (
-        |  SELECT vec_id AS corpus_id, CAST(embedding AS DOUBLE[]) AS ce
-        |  FROM embeddings WHERE vec_id >= 5
-        |), s AS (
+      s"""WITH $embQueryCte, ${embCorpusCte()}, s AS (
         |  SELECT query_id, corpus_id,
         |    CAST(floor(list_dot_product(qe, ce)
         |          / (sqrt(list_dot_product(qe, qe)) * sqrt(list_dot_product(ce, ce)))
@@ -3626,49 +3407,15 @@ FROM c GROUP BY 1, 2"""),
     "q_sim_ivf" -> ivfOracle(nprobe = 1),
     "q_sim_ivf_probe2" -> ivfOracle(nprobe = 2),
 
-    // recall twin: the brute top-10 (the q_sim_topk shape) left-joined
-    // with the IVF top-10 (the full ivfOracle body as a subquery — its
-    // own WITH nests legally); counts are integer-exact
-    "q_sim_recall" ->
-      s"""WITH brute AS (
-         |  SELECT query_id, corpus_id FROM (
-         |    SELECT query_id, corpus_id,
-         |      ROW_NUMBER() OVER (PARTITION BY query_id
-         |                         ORDER BY score_q DESC, corpus_id ASC) AS rnk
-         |    FROM (
-         |      SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-         |        ${cosSql("CAST(q.embedding AS DOUBLE[])", "CAST(c.embedding AS DOUBLE[])")} AS score_q
-         |      FROM embeddings q, embeddings c
-         |      WHERE q.vec_id < 5 AND c.vec_id >= 5) s) t
-         |  WHERE rnk <= 10
-         |), ivf AS (
-         |  SELECT query_id, corpus_id, 1 AS hit FROM (
-         |${ivfOracle(nprobe = 1).linesIterator.map("    " + _).mkString("\n")}
-         |  ) iv
-         |)
-         |SELECT b.query_id,
-         |  CAST(COUNT(i.hit) AS BIGINT) AS n_hits,
-         |  CAST(COUNT(i.hit) * 10 AS BIGINT) AS recall_pct
-         |FROM brute b
-         |LEFT JOIN ivf i ON i.query_id = b.query_id AND i.corpus_id = b.corpus_id
-         |GROUP BY 1""".stripMargin,
+    // recall twin: topkRecallSql grades q_sim_ivf's own ivfOracle (a
+    // subquery — its WITH nests legally) against the brute top-10
+    "q_sim_recall" -> topkRecallSql(10, "ivf", "iv", ivfOracle(nprobe = 1)),
 
-    // the nprobe sweep (r12): five arms over ONE brute CTE, each arm
-    // nesting the unrolled IVF chain at its nprobe — the same chain the
-    // single-point eval nests, so the curve and the point cannot drift
+    // the nprobe sweep (r12): five arms over ONE bruteTopkSql CTE, each
+    // arm nesting ivfOracle at its nprobe — the chain the single-point
+    // eval grades, so the curve and the point cannot drift
     "q_sim_recall_sweep" ->
-      s"""WITH brute AS (
-         |  SELECT query_id, corpus_id FROM (
-         |    SELECT query_id, corpus_id,
-         |      ROW_NUMBER() OVER (PARTITION BY query_id
-         |                         ORDER BY score_q DESC, corpus_id ASC) AS rnk
-         |    FROM (
-         |      SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-         |        ${cosSql("CAST(q.embedding AS DOUBLE[])", "CAST(c.embedding AS DOUBLE[])")} AS score_q
-         |      FROM embeddings q, embeddings c
-         |      WHERE q.vec_id < 5 AND c.vec_id >= 5) s) t
-         |  WHERE rnk <= 10
-         |)
+      s"""WITH ${bruteTopkSql(10)}
          |${Seq(1, 2, 4, 8, 10).map { np =>
              s"""SELECT CAST($np AS BIGINT) AS nprobe, b.query_id,
                 |  CAST(COUNT(i$np.hit) AS BIGINT) AS n_hits,
@@ -3685,10 +3432,7 @@ FROM c GROUP BY 1, 2"""),
     // identical top-k rank semantics as q_sim_topk, then the majority
     // vote with ties to the smallest label — integer end to end
     "q_sim_knn" ->
-      """WITH q AS (
-        |  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qe
-        |  FROM embeddings WHERE vec_id < 5
-        |), c AS (
+      s"""WITH $embQueryCte, c AS (
         |  SELECT vec_id AS corpus_id, CAST(embedding AS DOUBLE[]) AS ce, label
         |  FROM embeddings WHERE vec_id >= 5
         |), s AS (

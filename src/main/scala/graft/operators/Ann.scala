@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
 object Ann {
 
   /** Quantized cosine via the codegen expression (see Similarity.cosineQ). */
-  private def cosQ(a: Column, b: Column): Column =
+  private[operators] def cosQ(a: Column, b: Column): Column =
     floor(call_function("graft_cosine", a, b) * lit(1000000.0)).cast("long")
 
   /** Brute-force exact top-k: corpus ⨯ broadcast(queries), ranked per
@@ -237,6 +237,24 @@ object Ann {
       .select(col("corpus_id"), col("ce"),
         col("_slot.cell").as("cell"), col("_slot.cscore").as("cscore"),
         (col("_p") + 1).cast("int").as("rk"))
+  }
+
+  /** In-cell candidate pairs: every (doc_a < doc_b) pair of vectors
+    * sharing a cell whose quantized cosine is ≥ `minCosQ` — the
+    * SemDeDup candidate set, verified exactly inside the cell. `cells`
+    * is an [[assignCells]] or [[assignCellsTop2]] output (corpus_id,
+    * ce, cell); an `rk` column marks the top-2 assignment, where a pair
+    * co-bucketed in both its cells would come out twice, so the pairs
+    * are deduplicated. The pair join is an equi-join on cell, never a
+    * cartesian: the quadratic is bounded per cell. */
+  def cellPairs(cells: DataFrame, minCosQ: Long): DataFrame = {
+    val pairs = cells
+      .select(col("cell"), col("corpus_id").as("doc_a"), col("ce").as("ca"))
+      .join(cells.select(col("cell"), col("corpus_id").as("doc_b"), col("ce").as("cb")),
+        Seq("cell"))
+      .filter(col("doc_a") < col("doc_b") && cosQ(col("ca"), col("cb")) >= minCosQ)
+      .select(col("doc_a"), col("doc_b"))
+    if (cells.columns.contains("rk")) pairs.distinct() else pairs
   }
 
   /** Distributed spherical k-means — the TRAINED coarse quantizer the

@@ -779,6 +779,19 @@ object Dedup {
       }
     }
 
+  /** EXACT embedding-cosine near-dup pairs: every (doc_a < doc_b) pair
+    * of (vec_id, ce) vectors whose quantized cosine is ≥ `minCosQ` — the
+    * ground truth the bucketed rungs ([[embeddingCosPairs]], the
+    * SemDeDup cells of [[Ann.cellPairs]]) are graded against. One copy
+    * of the vectors broadcasts and the other streams: O(n²) compute by
+    * definition, so an eval runs it on a sample, never the corpus. */
+  def cosinePairs(e: DataFrame, minCosQ: Long): DataFrame =
+    e.select(col("vec_id").as("doc_a"), col("ce").as("ca"))
+      .join(broadcast(e.select(col("vec_id").as("doc_b"), col("ce").as("cb"))),
+        col("doc_a") < col("doc_b"))
+      .filter(Ann.cosQ(col("ca"), col("cb")) >= minCosQ)
+      .select(col("doc_a"), col("doc_b"))
+
   /** Embedding-cosine near-dup pairs via banded random-hyperplane LSH.
     *
     * Each vector's bucket in table t is the `bitsPerTable`-bit sign
@@ -843,9 +856,7 @@ object Dedup {
     explodePairs(buckets, "ds", carry = Seq("t"))
       .filter(firstMatchCols(ms, col("t")))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        floor(call_function("graft_cosine",
-          col("a").getField("ce"), col("b").getField("ce")) * lit(1000000.0))
-          .cast("long").as("cos_q"))
+        Ann.cosQ(col("a").getField("ce"), col("b").getField("ce")).as("cos_q"))
       .filter(col("cos_q") >= minCosQ)
   }
 

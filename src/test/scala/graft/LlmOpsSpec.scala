@@ -65,6 +65,52 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(precision == nCaught * 100 / nCand && precision >= 0 && precision <= 100)
   }
 
+  test("pairEvalMetrics and topkEvalMetrics: hand-built fixtures, empty sides, full hit") {
+    import spark.implicits._
+    def pairRow(truth: Seq[(Long, Long)], cand: Seq[(Long, Long)]) = {
+      val r = QueriesLlm.pairEvalMetrics(truth.toDF("doc_a", "doc_b"),
+        cand.toDF("doc_a", "doc_b")).collect().head
+      def pct(i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
+      (r.getLong(0), r.getLong(1), r.getLong(2), pct(3), pct(4))
+    }
+    // 3 true pairs, 4 candidates, 2 caught: 200/3 and 200/4, floored
+    assert(pairRow(Seq((1L, 2L), (1L, 3L), (2L, 3L)),
+      Seq((1L, 2L), (2L, 3L), (4L, 5L), (1L, 9L))) == ((3L, 4L, 2L, Some(66L), Some(50L))))
+    // an empty truth set has no recall; an empty candidate set no precision
+    assert(pairRow(Nil, Seq((1L, 2L))) == ((0L, 1L, 0L, None, Some(0L))))
+    assert(pairRow(Seq((1L, 2L)), Nil) == ((1L, 0L, 0L, Some(0L), None)))
+    assert(pairRow(Nil, Nil) == ((0L, 0L, 0L, None, None)))
+    assert(pairRow(Seq((1L, 2L), (3L, 4L)), Seq((3L, 4L), (1L, 2L))) ==
+      ((2L, 2L, 2L, Some(100L), Some(100L))))
+
+    def topk(truth: Seq[(Long, Long)], cand: Seq[(Long, Long)], k: Int) =
+      QueriesLlm.topkEvalMetrics(truth.toDF("query_id", "corpus_id"),
+          cand.toDF("query_id", "corpus_id"), k)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+    val truth5 = (10L to 14L).map(1L -> _) ++ (20L to 24L).map(2L -> _)
+    // query 1 finds 3 of its 5 (two candidates are misses), query 2 none
+    assert(topk(truth5, Seq(1L -> 10L, 1L -> 12L, 1L -> 14L, 1L -> 98L, 1L -> 99L) ++
+      (30L to 34L).map(2L -> _), k = 5) == Seq((1L, 3L, 60L), (2L, 0L, 0L)))
+    // no candidates: every truth query reads zero; a full hit at k = 10 reads 100
+    assert(topk(truth5, Nil, k = 5) == Seq((1L, 0L, 0L), (2L, 0L, 0L)))
+    val truth10 = (0L until 10L).map(7L -> _)
+    assert(topk(truth10, truth10.reverse, k = 10) == Seq((7L, 10L, 100L)))
+    // no truth rows: no queries to grade
+    assert(topk(Nil, truth10, k = 10).isEmpty)
+  }
+
+  test("oracle map: every key is a registry query and every text is fully substituted") {
+    val oracles = SparkEntry.oracleSql
+    assert(oracles.keySet.subsetOf(SparkEntry.queries.keySet),
+      s"oracles without a query: ${oracles.keySet -- SparkEntry.queries.keySet}")
+    oracles.foreach { case (name, sql) =>
+      assert("@@[^@\\s]*@@".r.findFirstIn(sql).isEmpty, s"$name: an @@…@@ placeholder is left")
+      assert(!sql.contains("${"), s"$name: a literal $${ is left")
+      // a helper val read before its initialization concatenates as "null"
+      assert("\\bnull\\b".r.findFirstIn(sql).isEmpty, s"$name: an uninitialized fragment")
+    }
+  }
+
   test("ingest admission quality row: decision accounting closes exactly") {
     // r14: the flagship composition's quality row. The confusion matrix
     // must CLOSE — admitted = truth-admits − false refusals + false

@@ -296,6 +296,23 @@ class PlanSpec extends AnyFunSuite {
       // recall eval (r11): brute rank window + the IVF chain's probe and
       // result windows + the query-sized join/agg — all query-keyed
       "q_sim_recall" -> 7,
+      // the other recall@k rows: the sweep is five such arms over one
+      // checkpointed brute truth; the PQ rows add their rung's own
+      // query-sized exchanges (the codebooks are checkpointed or served)
+      "q_sim_recall_sweep" -> 30, "q_sim_recall_pq" -> 7, "q_sim_recall_ivfpq" -> 9,
+      // pair-eval rows: the graded rung's exchanges + its truth's + the
+      // full join's (doc_a, doc_b) re-keys (the global count's
+      // SinglePartition exchange is not counted); the geometry sweep is
+      // three minhash arms over one exact truth. The embedding truth is a
+      // broadcast nested-loop join (zero exchanges)
+      "q_dedup_recall" -> 12, "q_dedup_recall_geom" -> 36,
+      "q_dedup_recall_simhash" -> 13, "q_dedup_recall_embcos" -> 3,
+      // SemDeDup: training and assignment hide behind the checkpointed
+      // cells and the in-cell pair join broadcasts; the rung pays the
+      // drop aggregate + the verdict join-back, the quality row the full
+      // join's two sides
+      "q_dedup_semdedup" -> 2, "q_dedup_semdedup_probe2" -> 2,
+      "q_dedup_recall_semdedup" -> 2, "q_dedup_recall_semdedup_probe2" -> 2,
       // decode rungs are row-local fan-outs: zero exchanges, ever
       "q_image_jpeg" -> 0, "q_video_demux" -> 0,
       // chunked as-of: the bounded (key, chunk) window [the only
@@ -387,17 +404,29 @@ class PlanSpec extends AnyFunSuite {
       // single corpus exchange + the two query-sized ones (lut agg,
       // rank window) — the codes scan itself never shuffles
       "q_sim_pq" -> 3,
-      // IVF-PQ, audited 5 (plan read 2026-08-14): index build = encode's
-      // groupBy(corpus_id) + assignCells' corpus_id rank window — their
-      // join reuses that shared partitioning, no third corpus exchange —
-      // plus the three query-sized serving exchanges (probe window, lut
-      // agg, result rank window); both trainings hide behind the
-      // checkpointed codebooks. The serving path ALONE is audited at 3
-      // in its own PlanSpec test (persisted-index deployment)
-      "q_sim_ivfpq" -> 5)
+      // IVF-PQ, EXACT 4: index build = encode's groupBy(corpus_id) (the
+      // cell assignment is a broadcast fold, so its join adds no corpus
+      // exchange) plus the three query-sized serving
+      // exchanges (probe window, lut agg, result rank window); both
+      // trainings hide behind the checkpointed codebooks. The serving
+      // path ALONE is audited at 3 in its own PlanSpec test
+      // (persisted-index deployment)
+      "q_sim_ivfpq" -> 4,
+      // count-min: the corpus sketch's (j, bucket) count agg + the probe
+      // words' distinct; the KB-scale sketch broadcasts into the probe
+      "q_freq_cms" -> 2,
+      // k-means: one centroid aggregate per Lloyd iteration (the
+      // assignments are broadcast folds)
+      "q_sim_kmeans" -> 2)
     // these counts are exact: a plan that drops an exchange must update
     // its entry too, so the entry keeps describing the plan HEAD runs
-    val exact = Set("q_simjoin_prefix", "q_ingest_recall")
+    val exact = Set("q_simjoin_prefix", "q_ingest_recall",
+      "q_dedup_recall", "q_dedup_recall_geom", "q_dedup_recall_simhash",
+      "q_dedup_recall_embcos", "q_dedup_semdedup", "q_dedup_recall_semdedup",
+      "q_dedup_semdedup_probe2", "q_dedup_recall_semdedup_probe2",
+      "q_sim_recall", "q_sim_recall_sweep", "q_sim_recall_pq", "q_sim_recall_ivfpq",
+      "q_bloom_probe", "q_freq_cms", "q_join_star", "q_pagerank", "q_sim_ivfpq",
+      "q_sim_kmeans")
     val over = budget.flatMap { case (name, max) =>
       val plan = physicalPlan(SparkEntry.queries(name)(spark, sfDir))
       val n = "Exchange hashpartitioning".r.findAllIn(plan).length +
