@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.TextFunctions._
 import graft.sources.{Commit, Fs, JsonIO, MboxIO, Sinks, Store}
@@ -291,13 +292,13 @@ object Programs {
   }
 
   /** Start a program store over: drop every version of its artifact
-    * families and its `pending/` docs. A re-initialized store then
+    * families and every `admitted/` batch. A re-initialized store then
     * holds nothing from its previous life for keep-two retention, a
-    * fold or a reader to pick up — the fresh store the restart
+    * fold window or a reader to pick up — the fresh store the restart
     * contract asks for. */
   private def clearStore(storeDir: String, names: String*): Unit = {
     names.foreach(Store.versions(storeDir, _).clear())
-    Fs.delete(s"$storeDir/pending")
+    Fs.delete(s"$storeDir/admitted")
   }
 
   /** The maintenance programs' stream shell: `step` runs every
@@ -330,8 +331,10 @@ object Programs {
     *    — freshest where staleness costs correctness, cheapest to keep
     *    fresh.
     *  - the GRAM and BAND arms fold at `maintainEvery`-batch CADENCE
-    *    over the accumulated pending docs (`gramIndexAppend` /
-    *    `bandIndexAppend`): their rewrite is index-sized I/O — the
+    *    (`gramIndexAppend` / `bandIndexAppend`) by the stores' one fold
+    *    rule: `<name>_v<N>` folds every admitted batch below N, so a fold
+    *    reads the admitted batches its family's version has not folded
+    *    ([[foldAdmitted]]). Their rewrite is index-sized I/O — the
     *    compaction-cadence cost the append operators document — and
     *    paying it per micro-batch is not the 100 TB shape. Between
     *    folds, gates 2–3 run against the last fold's versions: a
@@ -347,10 +350,9 @@ object Programs {
     * it. Each batch-sized frame is computed once: [[ingestCore]]
     * checkpoints gate 1's survivors and the admission cut where two
     * consumers read them, and the admitted write materializes the stored
-    * set, which the pending write and the bloom rewrite read back. A
-    * probe batch runs 18 Spark jobs; a fold batch 31, or 30 when no
-    * admitted doc lands in a standing band bucket (StreamingSpec pins
-    * both).
+    * set, which the bloom rewrite reads back. A probe batch runs 17 Spark
+    * jobs; a fold batch 30, or 29 when no admitted doc lands in a
+    * standing band bucket (StreamingSpec pins both).
     *
     * Maintenance appends derive from ingestCore's POST-QUOTA output —
     * what the store actually carries (the r13 ADVICE invariant: a
@@ -358,9 +360,9 @@ object Programs {
     * a versioned store ([[graft.sources.Store.versions]]): a rewrite
     * commits a new `<name>_v<batchId+1>` sibling (delete-first,
     * marker-last), never in place, and keep-two retention bounds the
-    * family. Admitted AND pending land per-batch-dir overwrite, so a
-    * replayed micro-batch is idempotent end-to-end (an appended
-    * pending would double its docs into the next fold's df counts).
+    * family. Admitted docs land per-batch-dir overwrite, so a replayed
+    * micro-batch is idempotent end-to-end (an appended batch would
+    * double its docs into the next fold's df counts).
     * Stream contract: doc ids are unique across the stream — the store
     * and the append algebra key on them (the same disjointness the
     * batch append operators require).
@@ -370,14 +372,14 @@ object Programs {
     * reads are bounded to committed versions ≤ batchId
     * (`Versions.latest`), so a batch replayed after any crash probes
     * the SAME state it probed the first time and reproduces its
-    * admissions and its per-batch-dir overwrites of admitted/pending.
-    * Every version the first run committed is SKIPPED on replay
+    * admissions and its per-batch-dir overwrite of `admitted`. Every
+    * version the first run committed is SKIPPED on replay
     * (`Versions.commit`): the bloom rewrite, and a cadence fold that
-    * committed before the crash — only the pending-clear re-runs, so
-    * the fold can never double docs' df counts, whether the crash
-    * landed before or after the clear. Keep-two retention is exactly
-    * what guarantees the ≤ batchId version is still on disk: Spark
-    * replays at most the last uncommitted batch. StreamingSpec drives
+    * committed before the crash. A fold that did not commit re-reads
+    * the same window (the fold rule fixes it by arithmetic), so no
+    * replay can double or drop docs' df counts. Keep-two retention is
+    * exactly what guarantees the ≤ batchId version is still on disk:
+    * Spark replays at most the last uncommitted batch. StreamingSpec drives
     * the replay windows through [[ingestBatchStep]] directly.
     *
     * Restart contract (the bound's flip side): a stream must RESUME its
@@ -403,7 +405,8 @@ object Programs {
     * crash-replay windows can be driven directly (StreamingSpec): the
     * stream's foreachBatch delegates here verbatim, with the stream's
     * one `resolver`. Deterministic in (batchId, batch rows, versions ≤
-    * batchId) — see the replay contract on [[ingestProgramStream]]. */
+    * batchId, the admitted batches its fold window reads) — see the
+    * replay contract on [[ingestProgramStream]]. */
   private[graft] def ingestBatchStep(batch: DataFrame, storeDir: String,
       batchId: Long, quotaPerSource: Long, spanWords: Int,
       maintainEvery: Int, bloomK: Int, bloomWidth: Int,
@@ -431,35 +434,43 @@ object Programs {
     val admitted = s"$storeDir/admitted/batch=$batchId"
     core.write.mode("overwrite").parquet(admitted)
     val stored = spark.read.schema(core.schema).parquet(admitted)
-    // pending is per-batch-dir OVERWRITE, like admitted: a batch
-    // replayed after a crash lands in the same directory instead of
-    // appending twice — a doubled pending doc would inflate the next
-    // fold's df counts (append ≡ rebuild would silently break)
-    val pendingDocs = stored.select(col("doc_id"), col("text"))
-    pendingDocs.write.mode("overwrite").parquet(s"$storeDir/pending/batch=$batchId")
     bitsV.commit(batchId + 1)(graft.operators.Freq.bloomAppend(bits,
         stored.select(md5(col("text")).as("item")), bloomK, bloomWidth)
       .write.parquet(_))
     bitsV.retain()
-    if ((batchId + 1) % maintainEvery == 0 && Fs.isDir(s"$storeDir/pending")) {
-      // a fold version that committed before a crash is skipped by its
-      // commit: re-running it against the accumulated pending would
-      // double df counts (and a post-clear replay, whose pending holds
-      // only the replayed batch, would UNDERfold). Either way the
-      // committed version is the correct one; only the clear re-runs.
-      // An empty pending folds nothing and is just cleared.
-      val pending = spark.read.schema(pendingDocs.schema).parquet(s"$storeDir/pending")
-        .select(col("doc_id"), col("text"))
-      if (!pending.isEmpty) {
-        gramV.commit(batchId + 1)(graft.operators.Dedup
-          .gramIndexAppend(gramIdx, pending, spanWords).write.parquet(_))
-        bandV.commit(batchId + 1)(graft.operators.Dedup
-          .bandIndexAppend(bandIdx, pending, k = 3, perms = 8, bands = 4)
-          .write.parquet(_))
-        gramV.retain()
-        bandV.retain()
+    if ((batchId + 1) % maintainEvery == 0)
+      foldAdmitted(spark, resolver, storeDir, core.schema, batchId, "doc_id", "text")(
+        (gramV, graft.operators.Dedup.gramIndexAppend(gramIdx, _, spanWords).write.parquet(_)),
+        (bandV, graft.operators.Dedup
+          .bandIndexAppend(bandIdx, _, k = 3, perms = 8, bands = 4).write.parquet(_)))
+  }
+
+  /** The program stores' one fold rule: `<name>_v<N>` folds every
+    * per-batch output below N. A cadence fold at `batchId` commits
+    * version `batchId + 1` of each arm's family from the admitted batches
+    * its standing version `ver` (the newest committed ≤ batchId) has not
+    * folded — every `admitted/batch=b` with `ver ≤ b ≤ batchId`, read
+    * with `schema` and projected to `cols` — through the arm's
+    * `write(docs, path)`. Each arm's window follows its own family's
+    * version, so a crash between two arms' commits still folds the second
+    * arm exactly on replay; arms at one version share one window read. A
+    * version committed before a crash is skipped on replay
+    * ([[graft.sources.Store.Versions.commit]]), and an empty window
+    * commits nothing: an idle stream pays no index-sized rewrite. The
+    * phrase program applies the same rule to its segments
+    * ([[phraseBatchStep]]). */
+  private def foldAdmitted(spark: SparkSession, resolver: Store.Resolver, storeDir: String,
+      schema: StructType, batchId: Long, cols: String*)(
+      arms: (Store.Versions, (DataFrame, String) => Unit)*): Unit = {
+    val batches = Fs.listDirNames(s"$storeDir/admitted").collect { case s"batch=$b" => b.toLong }
+    for ((ver, same) <- arms.groupBy(arm => resolver.latest(arm._1, batchId))) {
+      val docs = spark.read.schema(schema)
+        .parquet(batches.filter(b => b >= ver && b <= batchId).map(b => s"$storeDir/admitted/batch=$b"): _*)
+        .select(cols.map(col): _*)
+      if (!docs.isEmpty) same.foreach { case (family, write) =>
+        family.commit(batchId + 1)(write(docs, _))
+        family.retain()
       }
-      Fs.delete(s"$storeDir/pending")
     }
   }
 
@@ -489,9 +500,11 @@ object Programs {
     *    through the same compiled row-local
     *    [[graft.operators.TextAnalysis.surprisalServed]] scorer the
     *    stateless gate uses, and admits docs under the threshold;
-    *  - admitted docs accumulate under `pending/` (per-batch-dir
+    *  - admitted docs land under `admitted/batch=<id>` (per-batch-dir
     *    overwrite, replay-idempotent), and at `maintainEvery` cadence
-    *    their `refLang` trigram counts FOLD into the model
+    *    the `refLang` trigram counts of the batches the model has not
+    *    folded ([[foldAdmitted]]: `lm_model_v<N>` folds every admitted
+    *    batch below N) FOLD into the model
     *    ([[graft.operators.TextAnalysis.trigramModelAppend]] — a count
     *    monoid, append ≡ rebuild property-tested), committed as a
     *    versioned sibling with keep-two retention.
@@ -537,21 +550,12 @@ object Programs {
     }
     val admitted = graft.operators.TextAnalysis
       .surprisalServed(batch, keys, cnts, tot, v, keepBelowMb)
-      .filter(col("keep")).localCheckpoint()
+      .filter(col("keep"))
     admitted.write.mode("overwrite")
       .parquet(s"$storeDir/admitted/batch=$batchId")
-    val pendingDocs = admitted.select(col("doc_id"), col("lang"), col("text"))
-    pendingDocs.write.mode("overwrite").parquet(s"$storeDir/pending/batch=$batchId")
-    if ((batchId + 1) % maintainEvery == 0 && Fs.isDir(s"$storeDir/pending")) {
-      val pending = spark.read.schema(pendingDocs.schema).parquet(s"$storeDir/pending")
-        .select(col("doc_id"), col("lang"), col("text"))
-      if (!pending.isEmpty) {
-        modelV.commit(batchId + 1)(graft.operators.TextAnalysis
-          .trigramModelAppend(model, pending, refLang).write.parquet(_))
-        modelV.retain()
-      }
-      Fs.delete(s"$storeDir/pending")
-    }
+    if ((batchId + 1) % maintainEvery == 0)
+      foldAdmitted(spark, resolver, storeDir, admitted.schema, batchId, "doc_id", "lang", "text")(
+        (modelV, graft.operators.TextAnalysis.trigramModelAppend(model, _, refLang).write.parquet(_)))
   }
 
   // ---- phrase-index store: streaming maintenance (r17) ---------------------

@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, Pa
 import org.apache.spark.sql.types.StructType
 
 /** Hadoop-FileSystem helpers for the served-artifact stores — markers,
-  * versioned-directory listings, pending clears, listing fingerprints.
+  * versioned-directory listings, store clears, listing fingerprints.
   *
   * [[Store.once]]'s completeness marker, the ingest program's versioned
   * stores and the maintenance loops all key on store-side filesystem
@@ -37,10 +37,6 @@ object Fs {
 
   def exists(path: String): Boolean = {
     val (fs, p) = fsOf(path); fs.exists(p)
-  }
-
-  def isDir(path: String): Boolean = {
-    val (fs, p) = fsOf(path); fs.isDirectory(p)
   }
 
   /** Write a small marker/metadata file (create-overwrite then close —
@@ -81,8 +77,8 @@ object Fs {
   /** md5 of the sorted (path, length, mtime) listing under `dir` —
     * metadata only, so it is cheap, and any rewrite (new part files,
     * new sizes, new mtimes) changes it. The corpusFingerprint
-    * convention, shared by every served-store cache key. Missing dirs
-    * fingerprint as the empty listing. */
+    * convention; the LM model's served-store cache key in QueriesLlm is
+    * its one user. Missing dirs fingerprint as the empty listing. */
   def listingFingerprint(dir: String): String = {
     val (fs, p) = fsOf(dir)
     val files = scala.collection.mutable.ArrayBuffer.empty[String]

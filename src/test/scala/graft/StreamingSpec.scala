@@ -790,8 +790,6 @@ class StreamingSpec extends AnyFunSuite {
       assert(new java.io.File(s"$dir/gram_index_v2/${Store.Marker}").isFile,
         "cadence fold must write a new gram index version")
       assert(new java.io.File(s"$dir/band_index_v2/${Store.Marker}").isFile)
-      assert(!new java.io.File(s"$dir/pending").exists,
-        "folded pending docs must be cleared")
       // batch 2: a novel doc QUOTING 10 consecutive words of the
       // batch-0 admission → the folded gram index cuts the passage
       // in-flight; a re-delivery of batch-1's admission is refused
@@ -898,17 +896,22 @@ class StreamingSpec extends AnyFunSuite {
     assert(v1 == TextAnalysis.trigramModel(
         corpus.unionByName(Seq((100L, aText, "en")).toDF("doc_id", "text", "lang")))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
-    // window (a): crash after fold, before pending clear — restore
-    // pending and replay batch 0: the complete v1 must be skipped, not
-    // re-folded (re-folding would double A's trigram counts)
-    Seq((100L, "en", aText)).toDF("doc_id", "lang", "text")
-      .select(col("doc_id"), col("lang"), col("text"))
-      .write.mode("overwrite").parquet(s"$dir/pending/batch=0")
+    // window (a): the checkpoint commit was lost after the fold — replay
+    // batch 0, whose window still holds A: the complete v1 must be
+    // skipped, not re-folded (re-folding would double A's trigram counts)
     step(0, (100L, aText, "en"))
     assert(modelMap(s"$dir/lm_model_v1") == v1,
       "replayed fold must skip the complete version, not double-fold")
-    assert(!new java.io.File(s"$dir/pending").exists,
-      "the replayed clear must run")
+    // an empty cadence window commits no model; the next fold folds the
+    // batches since v1 (the empty batch 1 and batch 2's B), not A again
+    val bText = commonText + " " + ("z" * 41)
+    step(1)
+    assert(!Fs.exists(s"$dir/lm_model_v2"), "an empty window must commit no rewrite")
+    step(2, (101L, bText, "en"))
+    assert(modelMap(s"$dir/lm_model_v3") == TextAnalysis.trigramModel(corpus.unionByName(
+        Seq((100L, aText, "en"), (101L, bText, "en")).toDF("doc_id", "text", "lang")))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
+      "the fold after an empty window must fold exactly the docs since v1")
     // (b) same-JVM store RE-INIT over the same dir: the served cache
     // must not serve the stale v0 — a doc made entirely of 'q' trigrams
     // is OOV under the original corpus model but in-model after a
@@ -1044,13 +1047,16 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("ingest crash-replay at the fold boundary: re-running the fold batch neither double-folds nor loses admissions") {
-    // r15 (the r14 verdict's wrong #3): the fold-vs-clear crash window.
-    // Drives Programs.ingestBatchStep directly (the stream's
-    // foreachBatch delegates to it verbatim) to replay batch 1 in BOTH
-    // crash windows: (a) fold committed, pending/ NOT yet cleared;
-    // (b) pending cleared but the engine replays the batch anyway
-    // (checkpoint commit lost). Deterministic version reads (≤ batchId)
-    // + skip-if-complete folds make both replays idempotent.
+    // Drives Programs.ingestBatchStep directly (the stream's foreachBatch
+    // delegates to it verbatim). A fold reads the admitted batches its
+    // family's version has not folded (`<name>_v<N>` folds every batch
+    // below N), so replaying the fold batch after its checkpoint commit
+    // was lost skips the committed versions; a crash between the gram and
+    // the band commit re-folds the band alone over the same window; and a
+    // cadence window that admitted nothing commits nothing, leaving the
+    // next fold every batch since the last committed version.
+    // Deterministic version reads (≤ batchId) + skip-if-complete folds
+    // make every replay idempotent.
     implicit val ctx = spark.sqlContext
     import org.apache.spark.sql.functions._
     val dir = s"/tmp/graft_ingest_replay/${System.nanoTime()}"
@@ -1059,53 +1065,62 @@ class StreamingSpec extends AnyFunSuite {
     Programs.ingestStoreInit(corpus, dir)
     val tA = (1 to 12).map(i => s"aw$i").mkString(" ")
     val tB = (1 to 12).map(i => s"bw$i").mkString(" ")
+    val tC = (1 to 12).map(i => s"zw$i").mkString(" ")
+    val tD = (1 to 12).map(i => s"yw$i").mkString(" ")
     def step(id: Long, rows: (Long, String, String)*): Unit =
       Programs.ingestBatchStep(rows.toDF("doc_id", "text", "source"), dir,
         id, quotaPerSource = 5L, spanWords = 10, maintainEvery = 2,
         bloomK = 3, bloomWidth = 1 << 20)
-    def gramV2 = spark.read.parquet(s"$dir/gram_index_v2")
+    def at(path: String) = spark.read.parquet(path).collect().map(_.toString).toSet
+    def gram(v: Long) = spark.read.parquet(s"$dir/gram_index_v$v")
       .select("h1", "h2", "df").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    // the fold must equal a full rebuild over corpus ∪ everything stored
+    def rebuilt(texts: String*) = graft.operators.Dedup.gramIndex(
+        corpus.select(col("doc_id"), col("text"))
+          .unionByName(texts.zipWithIndex.map { case (t, i) => (1000L + i, t) }
+            .toDF("doc_id", "text")), 10)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     def admittedRows(b: Long) = spark.read.parquet(s"$dir/admitted")
       .filter(col("batch") === b).select("doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     step(0, (100L, tA, "s"))
-    step(1, (101L, tB, "s")) // cadence fold → gram/band v2, pending cleared
-    val foldSnapshot = gramV2
+    step(1, (101L, tB, "s")) // cadence fold → gram/band v2
+    val foldSnapshot = gram(2)
+    val bandSnapshot = at(s"$dir/band_index_v2")
     val admitted1 = admittedRows(1L)
     assert(admitted1.map(_._1) == Set(101L))
-    // the fold must equal a full rebuild over corpus ∪ everything stored
-    val rebuilt = graft.operators.Dedup.gramIndex(
-        corpus.select(col("doc_id"), col("text"))
-          .unionByName(Seq((100L, tA), (101L, tB)).toDF("doc_id", "text")), 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(foldSnapshot == rebuilt, "fold must equal the rebuild")
-    // window (a): crash AFTER the fold committed, BEFORE pending/
-    // cleared — reconstruct pending exactly as the steps wrote it
-    // (per-batch-dir (doc_id, text) of the stored docs), then replay
-    Seq((100L, tA)).toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$dir/pending/batch=0")
-    Seq((101L, tB)).toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$dir/pending/batch=1")
+    assert(foldSnapshot == rebuilt(tA, tB), "fold must equal the rebuild")
+    // window (a): the checkpoint commit was lost after the fold committed
+    // — the engine replays batch 1, whose window still holds batches 0-1
     step(1, (101L, tB, "s"))
-    assert(gramV2 == foldSnapshot,
-      "window (a): replay must not double-fold the pending docs")
+    assert(gram(2) == foldSnapshot,
+      "window (a): replay must not double-fold the window's docs")
     assert(admittedRows(1L) == admitted1,
       "window (a): replayed admissions must reproduce (not self-refuse)")
-    assert(!new java.io.File(s"$dir/pending").exists,
-      "window (a): the replayed clear must run")
-    // window (b): pending already cleared, the batch replays anyway —
-    // its own pending re-write must be skipped-then-cleared, not folded
+    // window (b): crash after the gram commit, before the band commit —
+    // the replay skips the gram fold and folds the band from its own v0
+    Fs.delete(s"$dir/band_index_v2")
     step(1, (101L, tB, "s"))
-    assert(gramV2 == foldSnapshot,
-      "window (b): replay must not re-fold the replayed batch's docs")
-    assert(admittedRows(1L) == admitted1,
-      "window (b): replayed admissions must reproduce")
-    assert(!new java.io.File(s"$dir/pending").exists,
-      "window (b): pending must be cleared again")
-    // and the loop continues normally after a replay
-    step(2, (300L, (1 to 12).map(i => s"zw$i").mkString(" "), "s"))
-    assert(admittedRows(2L).map(_._1) == Set(300L))
+    assert(gram(2) == foldSnapshot, "window (b): the committed gram fold is skipped")
+    assert(at(s"$dir/band_index_v2") == bandSnapshot,
+      "window (b): the band fold must equal its first run")
+    assert(admittedRows(1L) == admitted1, "window (b): replayed admissions must reproduce")
+    // an empty cadence window: batches 2-3 only re-deliver stored text, so
+    // the fold at 3 commits nothing, and the fold at 5 folds exactly the
+    // docs admitted since v2 (batches 2-5), none of batches 0-1 again
+    step(2, (200L, tA, "s"))
+    step(3, (201L, tB, "s"))
+    assert(admittedRows(2L).isEmpty && admittedRows(3L).isEmpty)
+    assert(!Fs.exists(s"$dir/gram_index_v4") && !Fs.exists(s"$dir/band_index_v4"),
+      "an empty window must commit no rewrite")
+    // and the loop continues normally after replays and an idle window
+    step(4, (300L, tC, "s"))
+    step(5, (301L, tD, "s"))
+    assert(admittedRows(4L).map(_._1) == Set(300L) && admittedRows(5L).map(_._1) == Set(301L))
+    assert(Fs.exists(s"$dir/band_index_v6/${Store.Marker}"))
+    assert(gram(6) == rebuilt(tA, tB, tC, tD),
+      "the fold after an empty window must fold exactly the docs since v2")
   }
 
   // ---- versioned program stores: restart, re-init, crash leftovers --------
@@ -1154,8 +1169,11 @@ class StreamingSpec extends AnyFunSuite {
   test("ingest store: a new checkpoint on a matured store fails with the restart contract, and a re-init starts it over") {
     val corpus = Seq((1L, words("cw", 30), "base")).toDF("doc_id", "text", "source")
     // the second life re-delivers the first life's last text: a stale
-    // pending/ or index version would refuse it, a fresh store admits it
+    // index version would refuse it, a fresh store admits it. The first
+    // life is longer, so a re-init that kept its admitted batches would
+    // leave batches the second life never overwrites
     val life1 = Seq(Seq((100L, words("aw", 12), "s")), Seq((101L, words("bw", 12), "s")),
+      Seq((103L, words("gw", 12), "s")), Seq((104L, words("hw", 12), "s")),
       Seq((102L, words("dw", 12), "s")))
     val life2 = Seq(Seq((200L, words("ew", 12), "s")), Seq((201L, words("fw", 12), "s")),
       Seq((202L, words("dw", 12), "t")))
@@ -1166,8 +1184,8 @@ class StreamingSpec extends AnyFunSuite {
     val dir = s"/tmp/graft_ingest_reinit/${System.nanoTime()}"
     Programs.ingestStoreInit(corpus, dir)
     runProgram("doc_id", "text", "source")(life1)(ingest(dir))
-    assert(!Fs.exists(s"$dir/bits_v0") && Fs.isDir(s"$dir/pending"),
-      "the first life must end past its first retention, with docs pending")
+    assert(!Fs.exists(s"$dir/bits_v0") && Fs.exists(s"$dir/admitted/batch=${life2.length}"),
+      "the first life must end past its first retention, longer than the second")
     assert(requireFailure(runProgram("doc_id", "text", "source")(life2)(ingest(dir))) ==
       "requirement failed: " + Store.restartContract(dir, "bits", 0))
     Programs.ingestStoreInit(corpus, dir)
@@ -1182,17 +1200,19 @@ class StreamingSpec extends AnyFunSuite {
   test("LM store: a new checkpoint on a matured store fails with the restart contract, and a re-init starts it over") {
     val common = (1 to 20).map(_ => "the cat sat on the mat").mkString(" ")
     val corpus = (1L to 10L).map(i => (i, common, "en")).toDF("doc_id", "text", "lang")
-    def life(base: Long, word: String) =
-      (0 until 5).map(i => Seq((base + i, s"$common $word$i $word", "en")))
-    val (life1, life2) = (life(100L, "zebra"), life(200L, "quokka"))
+    def life(base: Long, word: String, n: Int) =
+      (0 until n).map(i => Seq((base + i, s"$common $word$i $word", "en")))
+    // the first life is longer: a re-init that kept its admitted batches
+    // would leave batches the second life never overwrites
+    val (life1, life2) = (life(100L, "zebra", 7), life(200L, "quokka", 5))
     def gate(dir: String)(df: DataFrame, cp: String) =
       Programs.lmGateProgramStream(df, dir, cp, keepBelowMb = Long.MaxValue, maintainEvery = 2)
     def results(dir: String) = (rowsAt(s"$dir/admitted"), latestRows(dir, "lm_model"))
     val dir = s"/tmp/graft_lm_reinit/${System.nanoTime()}"
     Programs.lmStoreInit(corpus, dir)
     runProgram("doc_id", "text", "lang")(life1)(gate(dir))
-    assert(!Fs.exists(s"$dir/lm_model_v0") && Fs.isDir(s"$dir/pending"),
-      "the first life must end past its first retention, with docs pending")
+    assert(!Fs.exists(s"$dir/lm_model_v0") && Fs.exists(s"$dir/admitted/batch=${life2.length}"),
+      "the first life must end past its first retention, longer than the second")
     assert(requireFailure(runProgram("doc_id", "text", "lang")(life2)(gate(dir))) ==
       "requirement failed: " + Store.restartContract(dir, "lm_model", 0))
     Programs.lmStoreInit(corpus, dir)
@@ -1261,29 +1281,14 @@ class StreamingSpec extends AnyFunSuite {
       "the uncommitted gram_index_v1 must never be read")
   }
 
-  /** Runs `f` and returns the Spark jobs it ran on this thread and the
-    * file indexes its queries read. Jobs are tagged with a local
-    * property; a marker job posted last drains the listener bus, which
-    * also carries the query-execution events, in order. The suite runs
+  /** Runs `f` and returns the Spark jobs it ran on this thread
+    * ([[JobProbe]]) and the file indexes its queries read. The suite runs
     * one query at a time, so every query event in the window is `f`'s. */
   private def jobsAndReads(f: => Unit): (Int, Seq[org.apache.spark.sql.execution.datasources.FileIndex]) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation}
     import org.apache.spark.sql.util.QueryExecutionListener
-    val sc = spark.sparkContext
-    val key = "graft.test.stepProbe"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
     val reads = new java.util.concurrent.ConcurrentLinkedQueue[FileIndex]
-    val marker = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
-          case Some("step") => jobs.incrementAndGet()
-          case Some("marker") => marker.countDown()
-          case _ =>
-        }
-    }
     val queries = new QueryExecutionListener {
       def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
         qe.analyzed.foreach {
@@ -1295,30 +1300,19 @@ class StreamingSpec extends AnyFunSuite {
         }
       def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    sc.addSparkListener(listener)
     spark.listenerManager.register(queries)
-    try {
-      sc.setLocalProperty(key, "step")
-      f
-      sc.setLocalProperty(key, "marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-      spark.listenerManager.unregister(queries)
-    }
     import scala.jdk.CollectionConverters._
-    (jobs.get, reads.asScala.toSeq)
+    try (JobProbe(f).starts.size, reads.asScala.toSeq)
+    finally spark.listenerManager.unregister(queries)
   }
 
-  test("ingest step job budget: a probe batch runs 18 jobs and a fold batch 30; each version is resolved once per stream and only while committed") {
+  test("ingest step job budget: a probe batch runs 17 jobs and a fold batch 29; each version is resolved once per stream and only while committed") {
     // One resolver across the direct step calls, as the stream holds
     // one. Every batch meets every gate: a re-delivery (gate 1), a near
     // copy (gate 2), a quoted passage (gate 3) and novel docs, so no
-    // probe stage is skipped for an empty input. The fold's count is 30
+    // probe stage is skipped for an empty input. The fold's count is 29
     // here: no admitted doc lands in a standing band bucket, so AQE skips
-    // bandIndexAppend's broadcast of touched-bucket sizes (31 when one
+    // bandIndexAppend's broadcast of touched-bucket sizes (30 when one
     // does, as in the benchmark's ingest stream).
     val corpus = (1 to 12).map(i => (i.toLong, words(s"c${i}w", 30), s"s${i % 3}"))
       .toDF("doc_id", "text", "source")
@@ -1353,8 +1347,8 @@ class StreamingSpec extends AnyFunSuite {
         Set(3L -> 12L, 4L -> 0L, 5L -> 0L), s"batch $b")
       (jobs, versions(reads))
     }
-    assert(runs.map(_._1) == Seq(18, 18, 18, 30),
-      "jobs per batch (batch 3 folds): 18 per probe batch, 30 per fold batch")
+    assert(runs.map(_._1) == Seq(17, 17, 17, 29),
+      "jobs per batch (batch 3 folds): 17 per probe batch, 29 per fold batch")
     // batches 1 and 2 read band_index_v0 and gram_index_v0 through the
     // same file index: resolved once, not re-resolved per batch
     for (n <- Seq("band_index_v0", "gram_index_v0")) {
@@ -1368,6 +1362,27 @@ class StreamingSpec extends AnyFunSuite {
     // same versions its first run did, though newer ones now exist
     val (_, replayed) = step(3)
     assert(versions(replayed).map(_._1).toSet == runs(3)._2.map(_._1).toSet)
+  }
+
+  test("LM step job budget: a probe batch runs 1 job, a fold batch 5, and each model version is collected once") {
+    // One resolver across the direct step calls, as the stream holds one.
+    // A probe batch's one job is its admitted write; the fold adds the
+    // window's emptiness check and the model rewrite's three; batches 0
+    // and 4 also collect the model version they are the first to serve.
+    val common = (1 to 20).map(_ => "the cat sat on the mat").mkString(" ")
+    val corpus = (1L to 10L).map(i => (i, common, "en")).toDF("doc_id", "text", "lang")
+    val dir = s"/tmp/graft_lm_jobs/${System.nanoTime()}"
+    Programs.lmStoreInit(corpus, dir)
+    val resolver = new Store.Resolver
+    val jobs = (0 to 4).map { b =>
+      JobProbe(Programs.lmBatchStep(Seq((100L + b, s"$common zebra$b zebra", "en"))
+          .toDF("doc_id", "text", "lang"), dir, b.toLong, keepBelowMb = Long.MaxValue,
+        maintainEvery = 4, refLang = "en", resolver)).starts.size
+    }
+    assert(jobs == Seq(2, 1, 1, 5, 2),
+      "jobs per batch (batch 3 folds; batches 0 and 4 collect a model version)")
+    assert(Store.versions(dir, "lm_model").committed == Seq(0L, 4L))
+    assert(spark.read.parquet(s"$dir/admitted").count() == 5)
   }
 
   test("LM store crash leftovers: a markerless version is replaced at commit, never read, and dropped by retention") {

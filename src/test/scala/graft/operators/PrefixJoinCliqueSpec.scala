@@ -1,12 +1,8 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{JobProbe, TestSpark}
 
 /** The exact prefix join's adversarial input: a mass-duplicate corpus in
   * which every doc sits in a clique of near-identical docs, so the
@@ -36,39 +32,10 @@ class PrefixJoinCliqueSpec extends AnyFunSuite {
     }
   }
 
-  /** Shuffle bytes written by the jobs `f` runs on this thread. The jobs
-    * are tagged with a local property; a marker job posted last drains
-    * the listener bus, whose events arrive in order. */
-  private def shuffleWriteBytes(f: => Unit): Long = {
-    val sc = spark.sparkContext
-    val key = "graft.test.shuffleProbe"
-    val stages = ConcurrentHashMap.newKeySet[Int]()
-    val bytes = new AtomicLong
-    val marker = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
-          case Some("op") => e.stageIds.foreach(stages.add(_))
-          case Some("marker") => marker.countDown()
-          case _ =>
-        }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (stages.contains(e.stageId) && e.taskMetrics != null)
-          bytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, "op")
-      f
-      sc.setLocalProperty(key, "marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
-    bytes.get
-  }
+  /** Shuffle bytes written by the jobs `f` runs on this thread. */
+  private def shuffleWriteBytes(f: => Unit): Long =
+    JobProbe(f).taskEnds.filter(_.taskMetrics != null)
+      .map(_.taskMetrics.shuffleWriteMetrics.bytesWritten).sum
 
   test("mass-duplicate cliques: pairs equal brute-force exact Jaccard, shuffle bytes stay " +
       "token- and candidate-sized") {
