@@ -351,7 +351,7 @@ object Programs {
     * checkpoints gate 1's survivors and the admission cut where two
     * consumers read them, and the admitted write materializes the stored
     * set, which the bloom rewrite reads back. A probe batch runs 17 Spark
-    * jobs; a fold batch 30, or 29 when no admitted doc lands in a
+    * jobs; a fold batch 29, or 28 when no admitted doc lands in a
     * standing band bucket (StreamingSpec pins both).
     *
     * Maintenance appends derive from ingestCore's POST-QUOTA output —
@@ -451,9 +451,13 @@ object Programs {
     * its standing version `ver` (the newest committed ≤ batchId) has not
     * folded — every `admitted/batch=b` with `ver ≤ b ≤ batchId`, read
     * with `schema` and projected to `cols` — through the arm's
-    * `write(docs, path)`. Each arm's window follows its own family's
-    * version, so a crash between two arms' commits still folds the second
-    * arm exactly on replay; arms at one version share one window read. A
+    * `write(docs, path)`. The driver's work is the window's: each batch
+    * dir in it is looked up by id (a missing one, a gap, is skipped) and
+    * its emptiness read from its parquet footers, so a fold neither lists
+    * all of `admitted/` nor runs a job to find an empty window. Each
+    * arm's window follows its own family's version, so a crash between
+    * two arms' commits still folds the second arm exactly on replay;
+    * arms at one version share one window read. A
     * version committed before a crash is skipped on replay
     * ([[graft.sources.Store.Versions.commit]]), and an empty window
     * commits nothing: an idle stream pays no index-sized rewrite. The
@@ -462,14 +466,15 @@ object Programs {
   private def foldAdmitted(spark: SparkSession, resolver: Store.Resolver, storeDir: String,
       schema: StructType, batchId: Long, cols: String*)(
       arms: (Store.Versions, (DataFrame, String) => Unit)*): Unit = {
-    val batches = Fs.listDirNames(s"$storeDir/admitted").collect { case s"batch=$b" => b.toLong }
     for ((ver, same) <- arms.groupBy(arm => resolver.latest(arm._1, batchId))) {
-      val docs = spark.read.schema(schema)
-        .parquet(batches.filter(b => b >= ver && b <= batchId).map(b => s"$storeDir/admitted/batch=$b"): _*)
-        .select(cols.map(col): _*)
-      if (!docs.isEmpty) same.foreach { case (family, write) =>
-        family.commit(batchId + 1)(write(docs, _))
-        family.retain()
+      val window = (ver to batchId).map(b => s"$storeDir/admitted/batch=$b")
+        .filter(Fs.parquetRows(_) > 0)
+      if (window.nonEmpty) {
+        val docs = spark.read.schema(schema).parquet(window: _*).select(cols.map(col): _*)
+        same.foreach { case (family, write) =>
+          family.commit(batchId + 1)(write(docs, _))
+          family.retain()
+        }
       }
     }
   }

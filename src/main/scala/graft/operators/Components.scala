@@ -50,13 +50,8 @@ object Components {
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 30): DataFrame = {
     require(maxIter > 0)
-    val sc = pairs.sparkSession.sparkContext
-    // reliable (disk) checkpointing for the edge list; default the dir
-    // per-application when the deployment has not set one (a cluster
-    // points this at durable storage via setCheckpointDir)
-    if (sc.getCheckpointDir.isEmpty)
-      sc.setCheckpointDir(
-        s"${System.getProperty("java.io.tmpdir")}/graft-cc-${sc.applicationId}")
+    // reliable (disk) checkpointing for the edge list
+    graft.sources.Store.checkpointDir(pairs.sparkSession.sparkContext)
     // symmetric, deduplicated edge set, materialized once
     val e = pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
       .unionByName(pairs.select(col(bCol).cast("long").as("src"), col(aCol).cast("long").as("dst")))

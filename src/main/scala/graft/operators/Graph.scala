@@ -71,10 +71,7 @@ object Graph {
     require(iters >= 1, s"pageRank: iters=$iters")
     require(scale >= 100, s"pageRank: scale=$scale must carry the DIV 100 damping")
     require(checkpointEvery >= 1, s"pageRank: checkpointEvery=$checkpointEvery")
-    val sc = edges.sparkSession.sparkContext
-    if (sc.getCheckpointDir.isEmpty)
-      sc.setCheckpointDir(
-        s"${System.getProperty("java.io.tmpdir")}/graft-pr-${sc.applicationId}")
+    graft.sources.Store.checkpointDir(edges.sparkSession.sparkContext)
     // stored pre-partitioned on src: every iteration's rank⋈edges join
     // then co-locates against this one materialization — zero edge-side
     // exchange per round (the repartition is the one time the corpus
@@ -156,10 +153,7 @@ object Graph {
     * edge list is checkpointed once (it is read three times — as apex
     * adjacency twice and as the closure probe side). */
   def triangleCounts(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val sc = edges.sparkSession.sparkContext
-    if (sc.getCheckpointDir.isEmpty)
-      sc.setCheckpointDir(
-        s"${System.getProperty("java.io.tmpdir")}/graft-tri-${sc.applicationId}")
+    graft.sources.Store.checkpointDir(edges.sparkSession.sparkContext)
     val e0 = edges.select(
         least(col(aCol).cast("long"), col(bCol).cast("long")).as("a"),
         greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("b"))

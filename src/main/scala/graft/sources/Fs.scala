@@ -1,14 +1,17 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
 /** Hadoop-FileSystem helpers for the served-artifact stores — markers,
-  * versioned-directory listings, store clears, listing fingerprints.
+  * versioned-directory listings, store clears, parquet footers.
   *
   * [[Store.once]]'s completeness marker, the ingest program's versioned
   * stores and the maintenance loops all key on store-side filesystem
@@ -74,24 +77,27 @@ object Fs {
     else fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath.getName)
   }
 
-  /** md5 of the sorted (path, length, mtime) listing under `dir` —
-    * metadata only, so it is cheap, and any rewrite (new part files,
-    * new sizes, new mtimes) changes it. The corpusFingerprint
-    * convention; the LM model's served-store cache key in QueriesLlm is
-    * its one user. Missing dirs fingerprint as the empty listing. */
-  def listingFingerprint(dir: String): String = {
+  /** Bytes under `dir`, recursively (0 for a missing dir). */
+  def bytes(dir: String): Long = {
     val (fs, p) = fsOf(dir)
-    val files = scala.collection.mutable.ArrayBuffer.empty[String]
-    if (fs.exists(p)) {
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val st = it.next()
-        files += s"${st.getPath}:${st.getLen}:${st.getModificationTime}"
-      }
+    if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
+  }
+
+  /** The footers of the parquet data files under `dir`, recursively,
+    * each read on the driver when the iterator reaches it (none for a
+    * missing dir). */
+  private def footers(dir: String): Iterator[(FileStatus, ParquetMetadata)] = {
+    val (fs, p) = fsOf(dir)
+    if (!fs.exists(p)) Iterator.empty
+    else {
+      val files = fs.listFiles(p, true)
+      Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+        .filter(_.getPath.getName.endsWith(".parquet"))
+        .map { st =>
+          val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, fs.getConf))
+          st -> (try reader.getFooter finally reader.close())
+        }
     }
-    val listing = files.sorted.mkString("\n")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(listing.getBytes("UTF-8")).map("%02x".format(_)).mkString
   }
 
   /** The Spark schema of the parquet data under `dir`, from the footer of
@@ -99,17 +105,14 @@ object Fs {
     * inference answers, without the job that inference runs to read
     * footers. */
   def parquetSchema(dir: String): StructType = {
-    val (fs, p) = fsOf(dir)
-    val files = fs.listFiles(p, true)
-    var data: Option[FileStatus] = None
-    while (data.isEmpty && files.hasNext) {
-      val st = files.next()
-      if (st.getPath.getName.endsWith(".parquet")) data = Some(st)
-    }
-    val st = data.getOrElse(throw new IllegalArgumentException(s"no parquet data under $dir"))
-    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, fs.getConf))
-    val footer = try reader.getFooter finally reader.close()
+    val (st, footer) = footers(dir).nextOption()
+      .getOrElse(throw new IllegalArgumentException(s"no parquet data under $dir"))
     ParquetFileFormat.readSchemaFromFooter(new Footer(st.getPath, footer),
       new ParquetToSparkSchemaConverter(SparkSession.active.sessionState.conf))
   }
+
+  /** Rows in the parquet data under `dir` (0 for a missing dir), summed
+    * from its files' footers on the driver, so counting runs no job. */
+  def parquetRows(dir: String): Long =
+    footers(dir).map(_._2.getBlocks.asScala.map(_.getRowCount).sum).sum
 }

@@ -1,8 +1,11 @@
 package graft.sources
 
 import java.util.concurrent.ConcurrentHashMap
+import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
 
+import org.apache.spark.{SparkContext, SparkFiles}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -12,13 +15,15 @@ import org.apache.spark.sql.types.StructType
   * the lock and the completeness marker — so no query carries a gate
   * of its own.
   *
-  *  - Key: the sanitised applicationId, then the md5 of the
-  *    RAW corpus dir. Concurrent applications never share a store, and
-  *    dirs that differ only in punctuation never collide.
-  *  - Path: `/tmp/graft_<kind>/<key>` — tmp-cleaner reclaimed, and out
-  *    of the warehouse, whose data would outlive the in-memory catalog.
-  *  - Lock: one per path, so concurrent callers in one JVM wait for the
-  *    first build instead of racing its writes.
+  *  - Path: `<scope root>/graft_<kind>/<key>`, inside the application's
+  *    scope (below), never in the warehouse, whose data would outlive
+  *    the in-memory catalog.
+  *  - Key: the md5 of the RAW corpus dir. The scope already separates
+  *    applications, and dirs that differ only in punctuation never
+  *    collide.
+  *  - Lock: one per path in the scope's memo, so concurrent callers in
+  *    one application wait for the first build instead of racing its
+  *    writes.
   *  - Delete-first: a store without its marker was never built, or a
   *    build died in it; the path is deleted before `build` runs, so
   *    part-files a crashed build left can never be served.
@@ -27,50 +32,93 @@ import org.apache.spark.sql.types.StructType
   *    one `build` with one marker, and a crash between its steps
   *    rebuilds both.
   *
+  * Lifetime: every store, cache and scratch dir graft keeps for an
+  * application lives in that application's scope, and dies with its
+  * SparkContext. The scope root is `graft/` under the application's
+  * Spark-managed driver scratch dir (`SparkFiles.getRootDirectory`),
+  * which Spark deletes on `SparkContext.stop()` and at JVM shutdown; it
+  * also holds the default reliable-checkpoint dir ([[checkpointDir]]).
+  * The scope's in-memory [[memo]] (the `Tables` relations, the served LM
+  * model, the build locks) is dropped by one `onApplicationEnd` listener
+  * that the scope registers when it is first used.
+  *
   * The marker lives on the store's own filesystem ([[Fs]]), so the gate
   * holds wherever the path points. Bucketed tables keep their data
   * under the store path and take their catalog name from it
-  * ([[table]]); the catalog is the application's in-memory one, and the
-  * key already carries the applicationId.
+  * ([[table]]); the catalog is the application's in-memory one, like
+  * the scope.
   *
   * Versioned stores ([[versions]]) are the streaming programs' standing
   * artifacts: siblings `<dir>/<name>_v<n>` under the same marker and
-  * the same two rules. A version is committed exactly when its marker
-  * exists, and only committed versions are read. A committed version
-  * is never rewritten, so a replayed batch skips what its first run
-  * committed. Retention keeps the two newest committed versions (the
-  * newest's reader may still be on the previous one) and drops every
-  * version below them, marker or not. One writer per family — the
-  * stream's own micro-batch — so commits take no lock. A stream reads
-  * its versions through one [[Resolver]], which resolves each version
-  * once. */
+  * the same two rules. They live in the user's dir, not in the scope,
+  * because a restarted stream resumes them. A version is committed
+  * exactly when its marker exists, and only committed versions are
+  * read. A committed version is never rewritten, so a replayed batch
+  * skips what its first run committed. Retention keeps the two newest
+  * committed versions (the newest's reader may still be on the previous
+  * one) and drops every version below them, marker or not. One writer
+  * per family — the stream's own micro-batch — so commits take no lock.
+  * A stream reads its versions through one [[Resolver]], which resolves
+  * each version once. */
 object Store {
 
-  private val Root = "/tmp/"
   private[graft] val Marker = "_GRAFT_STORE"
-  private val locks = new ConcurrentHashMap[String, Object]
 
-  /** `<sanitised applicationId>/<md5 of the raw dir>`. A sanitising
-    * replace on the dir itself would collide distinct corpora
-    * (`/data/sf0.1` vs `/data-sf0.1`), so the dir is hashed, never
-    * rewritten. */
-  private def key(s: SparkSession, dir: String): String = {
-    val dirKey = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_") + "/" + dirKey
+  /** One application's scratch root and memo. */
+  private final class Scope(val root: String) {
+    val memo = TrieMap.empty[Any, AnyRef]
+  }
+
+  /** The live applications' scopes: graft's one JVM-static map of
+    * per-application state, each entry dropped at its application's end. */
+  private val scopes = new ConcurrentHashMap[SparkContext, Scope]
+
+  private def scope(sc: SparkContext): Scope = scopes.computeIfAbsent(sc, _ => {
+    require(!sc.isStopped, s"application ${sc.applicationId} has stopped")
+    sc.addSparkListener(new SparkListener {
+      override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit = scopes.remove(sc)
+    })
+    new Scope(s"${SparkFiles.getRootDirectory()}/graft")
+  })
+
+  /** Whether `sc`'s application holds a scope. */
+  private[graft] def live(sc: SparkContext): Boolean = scopes.containsKey(sc)
+
+  /** The application's scope root (see the object doc). */
+  private[graft] def root(sc: SparkContext): String = scope(sc).root
+
+  /** `make`'s value for `key` in the application's memo, made on the
+    * first call. Keys are tuples that name what they hold, so the memo's
+    * users never meet: `(session, path)` for a `Tables` relation,
+    * `("lm_model", dir)`, `("lock", path)`. Concurrent first calls may
+    * both run `make`; every caller gets the one value the memo keeps. */
+  private[graft] def memo[T <: AnyRef](sc: SparkContext, key: Any)(make: => T): T =
+    scope(sc).memo.getOrElseUpdate(key, make).asInstanceOf[T]
+
+  /** Give the application a reliable-checkpoint dir, `<scope
+    * root>/checkpoint`, unless the deployment set one (a cluster points
+    * it at durable storage). */
+  def checkpointDir(sc: SparkContext): Unit = scope(sc).synchronized {
+    if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(s"${root(sc)}/checkpoint")
   }
 
   /** Where a `kind` store for `dir` lives — for artifacts that are
-    * rebuilt on purpose (no marker, no lock) but keyed like the rest. */
-  def path(kind: String, s: SparkSession, dir: String): String =
-    s"${Root}graft_$kind/${key(s, dir)}"
+    * rebuilt on purpose (no marker, no lock) but keyed like the rest. A
+    * sanitising replace on the dir would collide distinct corpora
+    * (`/data/sf0.1` vs `/data-sf0.1`), so the dir is hashed, never
+    * rewritten. */
+  def path(kind: String, s: SparkSession, dir: String): String = {
+    val key = java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    s"${root(s.sparkContext)}/graft_$kind/$key"
+  }
 
   /** The store's path, built by `build(path)` first if its marker is
     * missing (see the object doc for the delete-first and marker-last
     * rules). */
   def once(kind: String, spark: SparkSession, dir: String)(build: String => Unit): String = {
     val p = path(kind, spark, dir)
-    locks.computeIfAbsent(p, _ => new Object).synchronized(commitAt(p)(build))
+    memo(spark.sparkContext, ("lock", p))(new Object).synchronized(commitAt(p)(build))
     p
   }
 
@@ -188,7 +236,8 @@ object Store {
   }
 
   /** Catalog name of the bucketed table whose data lives at `location`
-    * (a store path or a directory inside one). */
+    * (a store path or a directory inside one): the path from its
+    * `graft_<kind>` segment on. */
   def table(location: String): String =
-    location.stripPrefix(Root).replace('/', '_')
+    location.substring(location.lastIndexOf("/graft_") + 1).replace('/', '_')
 }

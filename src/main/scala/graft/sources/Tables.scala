@@ -73,9 +73,10 @@ final case class Tables(spark: SparkSession, dir: String) {
 }
 
 object Tables {
-  // Resolved-relation catalog: one `spark.read.parquet` per
-  // (session, path). Re-resolving a parquet relation costs 110-175 ms
-  // WARM (datasource resolution + file listing + footer schema read —
+  // Resolved-relation memo: one `spark.read.parquet` per (session,
+  // path), held in the application's scope ([[Store.memo]]) and dropped
+  // with it. Re-resolving a parquet relation costs 110-175 ms WARM
+  // (datasource resolution + file listing + footer schema read —
   // measured r18), and the query registry pays it 1-4x per query PER
   // EXECUTION; a real engine resolves a table once into its catalog
   // and plans against the resolved relation. This memo holds ONLY
@@ -86,19 +87,6 @@ object Tables {
   // before its first read); a path rewritten after first resolution
   // would serve a stale file listing, exactly as a catalog table
   // would.
-  private val catalog =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, DataFrame]]()
-
-  private def resolved(spark: SparkSession, path: String): DataFrame = {
-    val m = catalog.synchronized {
-      var mm = catalog.get(spark)
-      if (mm == null) {
-        mm = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-        catalog.put(spark, mm)
-      }
-      mm
-    }
-    m.getOrElseUpdate(path, spark.read.parquet(path))
-  }
+  private def resolved(spark: SparkSession, path: String): DataFrame =
+    Store.memo(spark.sparkContext, (spark, path))(spark.read.parquet(path))
 }

@@ -32,7 +32,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("z-ordered box read: exact box rows back, zkey range pushed to the scan") {
-    val dir = "/tmp/graft_zorder/" + spark.sparkContext.applicationId + "/roundtrip"
+    val dir = scratch("zorder/roundtrip")
     Layout.writeZOrdered(ev, "ux", "uy", bits = 12, nFiles = 16, path = dir)
     // the user dimension is low-cardinality at this SF (ids 0..14) — a
     // realistic "these users, this time range" box
@@ -53,7 +53,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("locality: an aligned box's matches touch few z-ordered files, many hash files") {
-    val base = "/tmp/graft_zorder/" + spark.sparkContext.applicationId
+    val base = scratch("zorder")
     // coordinates quantized to a 16×16 grid (bits=4): ux = user id
     // (0..14 at this SF), uy = time bucket. The box is the (4..7)²
     // aligned tile, whose z interval is exactly one second-level
@@ -78,7 +78,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("compact: small files collapse to the byte-target count, rows identical") {
-    val base = "/tmp/graft_compact/" + spark.sparkContext.applicationId
+    val base = scratch("compact")
     val small = s"$base/small"
     val out = s"$base/compacted"
     val docs = Tables(spark, sfDir).documents

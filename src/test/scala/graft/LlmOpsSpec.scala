@@ -584,7 +584,7 @@ class LlmOpsSpec extends AnyFunSuite {
       Dedup.gramIndexAppend(idx, delta, spanWords = 8))
     assert(e2.getMessage.contains("spanWords=10"))
     // ...and the width survives the parquet round-trip deployment uses
-    val pdir = s"/tmp/graft_gramwidth/${System.nanoTime()}"
+    val pdir = s"${scratch("gramwidth")}/${System.nanoTime()}"
     idx.write.parquet(pdir)
     intercept[IllegalArgumentException](
       Dedup.probeGramIndex(delta, spark.read.parquet(pdir), spanWords = 12))
@@ -620,7 +620,7 @@ class LlmOpsSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     spark.sql("DROP TABLE IF EXISTS b_gram_index")
     org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File("spark-warehouse/b_gram_index"))
+      new java.io.File(scratch("warehouse/b_gram_index")))
     Sinks.saveBucketed(Dedup.gramIndex(corpus, 10), "b_gram_index",
       Seq("h1", "h2"), 8)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -1048,7 +1048,7 @@ class LlmOpsSpec extends AnyFunSuite {
     val delta = d.filter(col("doc_id") % 10 === 0)
     spark.sql("DROP TABLE IF EXISTS b_mh_index")
     org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File("spark-warehouse/b_mh_index"))
+      new java.io.File(scratch("warehouse/b_mh_index")))
     Sinks.saveBucketed(Dedup.minhashBandIndex(corpus, 3, 8, 4),
       "b_mh_index", Seq("band", "bk"), 8)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -1168,7 +1168,7 @@ class LlmOpsSpec extends AnyFunSuite {
     // plant exact copies (vec_id + 10000): identical vectors assign to
     // the SAME cell (assignment is a pure function of the vector) and
     // cosine 1.0 ≥ τ, so every copy MUST drop to a lower-id neighbor
-    val tmp = java.nio.file.Files.createTempDirectory("semdedup").toString
+    val tmp = scratch("semdedup")
     val base = Tables(spark, sfDir).embeddings
     base.unionByName(base.filter(col("vec_id") >= 5)
         .withColumn("vec_id", col("vec_id") + 10000L))
@@ -1868,7 +1868,7 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(!plan.contains("Join"), s"ranked search must be join-free:\n$plan")
     assert(plan.contains("TakeOrderedAndProject"), plan)
     // the parquet-scan pushdown itself, through a persisted index
-    val idxDir = "/tmp/graft_ranked_idx/" + spark.sparkContext.applicationId
+    val idxDir = scratch("ranked_idx")
     postings.write.mode("overwrite").parquet(idxDir)
     val persisted = TextIndex.searchRanked(spark.read.parquet(idxDir),
       Seq("rare", "common"), nDocs = 10L, k = 3)
@@ -1946,7 +1946,7 @@ class LlmOpsSpec extends AnyFunSuite {
     import graft.operators.TextIndex
     // deployment shape: postings persisted once, searched many times —
     // the probe filter must push into the PERSISTED index scan
-    val idxDir = "/tmp/graft_postings/" + spark.sparkContext.applicationId
+    val idxDir = scratch("postings")
     TextIndex.buildPostings(docs, "doc_id", "text")
       .write.mode("overwrite").parquet(idxDir)
     val postings = spark.read.parquet(idxDir)
@@ -1972,7 +1972,7 @@ class LlmOpsSpec extends AnyFunSuite {
     // prune to the probe terms' DIRECTORIES (not a bucketed table —
     // bucket = one scan task, the measured parallelism wall at 5M
     // docs) and reproduce the inline build+search
-    val idxDir = "/tmp/graft_pos_part_test/" + spark.sparkContext.applicationId
+    val idxDir = scratch("pos_part_test")
     TextIndex.writePositionalIndex(
       TextIndex.buildPositionalPostings(docs, "doc_id", "text"), idxDir)
     // the driver-side digest must agree with the in-plan one — the
@@ -2010,7 +2010,7 @@ class LlmOpsSpec extends AnyFunSuite {
     // the 31c4 convention on the phrase family: the standing corpus
     // builds once, the delta APPENDS at delta cost, and the probe over
     // the appended artifact must reproduce a full rebuild exactly
-    val idxDir = "/tmp/graft_pos_append_test/" + spark.sparkContext.applicationId
+    val idxDir = scratch("pos_append_test")
     val corpus = docs.filter(col("doc_id") % 10 =!= 0)
     val delta  = docs.filter(col("doc_id") % 10 === 0)
     // NON-default bucket count: the append must read the modulus from
@@ -2218,7 +2218,7 @@ class LlmOpsSpec extends AnyFunSuite {
     val base  = (10 until 40).map(i => (i.toLong, vec(i))).toDF("corpus_id", "ce")
     val delta = (40 until 52).map(i => (i.toLong, vec(i))).toDF("corpus_id", "ce")
     val queries = Seq((11L, vec(11)), (45L, vec(45))).toDF("query_id", "qe")
-    val store = "/tmp/graft_ivfpq_append_test/" + spark.sparkContext.applicationId
+    val store = scratch("ivfpq_append_test")
     Ann.buildIvfPqIndex(base, store, kCells = 4, iters = 1)
     Ann.appendIvfPqIndex(spark, store, delta)
     val served = Ann.searchIvfPqIndex(spark, store, queries, k = 5, nprobe = 2)
@@ -2262,7 +2262,7 @@ class LlmOpsSpec extends AnyFunSuite {
     def vec(i: Int): Seq[Double] =
       (0 until 64).map(d => ((i * 31 + d * 7) % 97) / 97.0)
     val base = (10 until 40).map(i => (i.toLong, vec(i))).toDF("corpus_id", "ce")
-    val store = "/tmp/graft_ivfpq_rebuild_test/" + spark.sparkContext.applicationId
+    val store = scratch("ivfpq_rebuild_test")
     Ann.buildIvfPqIndex(base, store, kCells = 4, iters = 1)
     // plant a crashed-append leftover: a code row in a cell id no
     // rebuild of `base` will ever touch (cell ids are 0 until kCells)

@@ -40,7 +40,7 @@ class PlanSpec extends AnyFunSuite {
       (1002L, "Nobody#Like#This")).toDF("id", "s")
     spark.sql("DROP TABLE IF EXISTS b_fuzzy_index")
     org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File("spark-warehouse/b_fuzzy_index"))
+      new java.io.File(scratch("warehouse/b_fuzzy_index")))
     Sinks.saveBucketed(Fuzzy.signatureIndex(corpus, "id", "s", maxDist = 1),
       "b_fuzzy_index", Seq("sig"), 8)
     val savedThreshold =
@@ -99,7 +99,7 @@ class PlanSpec extends AnyFunSuite {
       (1001L, "Customer#00000003")).toDF("id", "s") // dist 1 into the base
     spark.sql("DROP TABLE IF EXISTS b_fuzzy_seg_base")
     org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File("spark-warehouse/b_fuzzy_seg_base"))
+      new java.io.File(scratch("warehouse/b_fuzzy_seg_base")))
     Sinks.saveBucketed(Fuzzy.signatureIndex(base, "id", "s", maxDist = 1),
       "b_fuzzy_seg_base", Seq("sig"), 8)
     val segIdx = Fuzzy.signatureIndex(seg, "id", "s", maxDist = 1)
@@ -539,7 +539,7 @@ class PlanSpec extends AnyFunSuite {
     // a type whose user_id values are ALL null has no HLL sketch at all:
     // emitting 512 (m - 0) there would diverge from the oracle's absent
     // hll row — the contract is NULL for both sketch columns
-    val dir = java.nio.file.Files.createTempDirectory("pfnull").toString
+    val dir = scratch("pfnull")
     Seq(
       (1L, Some(10L), "click", Some(1.5), java.sql.Timestamp.valueOf("2024-01-01 00:00:00")),
       (2L, Some(11L), "click", Some(2.5), java.sql.Timestamp.valueOf("2024-01-01 01:00:00")),

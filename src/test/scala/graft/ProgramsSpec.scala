@@ -12,7 +12,7 @@ import graft.sources.{JsonIO, MboxIO, Sinks}
 class ProgramsSpec extends AnyFunSuite {
   import TestSpark._
 
-  private val root = "/tmp/graft_programs"
+  private val root = scratch("programs")
   private def fresh(sub: String): String = {
     val d = s"$root/$sub"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d))

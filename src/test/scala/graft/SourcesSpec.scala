@@ -66,7 +66,7 @@ class SourcesSpec extends AnyFunSuite {
     // branch-reachable — the double-emission trap), a tag-of-a-tag on
     // the same target, and an annotated tag on an ORPHAN commit that is
     // reachable only through the tag chain
-    val dir = java.nio.file.Files.createTempDirectory("graft_git_tags").toFile
+    val dir = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(scratch("git_tags"))).toFile
     def git(args: String*): String =
       Process(Seq("git", "-C", dir.getPath) ++ args,
         None,
@@ -106,7 +106,7 @@ class SourcesSpec extends AnyFunSuite {
   test("github replay: commits round-trip API pages entity-identically, user fill is real") {
     import org.apache.spark.sql.Encoders
     import spark.implicits._
-    val api = "/tmp/graft_github_api_commits"
+    val api = scratch("github_api_commits")
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(api))
     GithubUserCache.invalidate(s"$api/users")
     val entities = Synth.commits(Tables(spark, sfDir).events)
@@ -141,7 +141,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("github replay: pulls round-trip incl. merged-state derivation and weight") {
     import org.apache.spark.sql.Encoders
-    val api = "/tmp/graft_github_api_pulls"
+    val api = scratch("github_api_pulls")
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(api))
     GithubUserCache.invalidate(s"$api/users")
     val entities = Synth.pulls(Tables(spark, sfDir).orders)
@@ -158,10 +158,10 @@ class SourcesSpec extends AnyFunSuite {
     // fixture stays in the API's open/closed vocabulary)
     assert(got.map(_.state) == Set("open", "closed", "merged"))
     // the import program twin: JSON-lines out == readPulls back
-    Programs.pullsImport(spark, api, "/tmp/graft_pulls_import")
-    assert(JsonIO.readPulls(spark, "/tmp/graft_pulls_import").collect().toSet == expected)
+    Programs.pullsImport(spark, api, scratch("pulls_import"))
+    assert(JsonIO.readPulls(spark, scratch("pulls_import")).collect().toSet == expected)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(api))
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File("/tmp/graft_pulls_import"))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(scratch("pulls_import")))
   }
 
   test("github replay: LRU user cache bounds entries with access-ordered eviction") {
@@ -176,7 +176,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("github replay stream: checkpointed page cursor is exactly-once across restarts") {
     import spark.implicits._
-    val root = "/tmp/graft_github_stream"
+    val root = scratch("github_stream")
     val api = s"$root/api"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
     new java.io.File(s"$api/commits").mkdirs()
@@ -243,7 +243,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("partitioned result sink: idempotent dynamic overwrite + partition-pruned reads") {
     import org.apache.spark.sql.functions._
-    val dir = "/tmp/graft_sink_test"
+    val dir = scratch("sink_test")
     val res = QueriesRef.componentActivity(spark, sfDir)
     Sinks.writePartitioned(res, dir, "w_start")
     // pruned read: the scan must carry a partition filter, not a data filter
@@ -267,10 +267,10 @@ class SourcesSpec extends AnyFunSuite {
     import spark.implicits._
     val in = MemoryStream[(Timestamp, String, Double)]
     val df = in.toDF().toDF("ts", "event_type", "value")
-    val out = "/tmp/graft_stream_sink/out"
+    val out = scratch("stream_sink/out")
     val q = Sinks.streamToParquet(
       graft.streaming.StreamingJobs.tumbleAgg(df, "1 hour", "10 minutes"),
-      out, "/tmp/graft_stream_sink/ckpt")
+      out, scratch("stream_sink/ckpt"))
     try {
       in.addData((new Timestamp(90000L * 1000), "core", 5.0))
       q.processAllAvailable()
@@ -282,14 +282,14 @@ class SourcesSpec extends AnyFunSuite {
     } finally {
       q.stop()
       // clean checkpoints so re-runs in the same /tmp start fresh
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File("/tmp/graft_stream_sink"))
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(scratch("stream_sink")))
     }
   }
 
   test("mbox archive round-trips Email entities through From_-delimited text") {
     import org.apache.spark.sql.functions._
     val t = Tables(spark, sfDir)
-    val dir = "/tmp/graft_mbox_test"
+    val dir = scratch("mbox_test")
     // single-line bodies only: mbox headers cannot carry embedded
     // newlines, and multi-line bodies are exercised separately below
     val emails = t.emailsTyped.filter((e: Email) => !e.subject.contains("\n")).limit(100)
@@ -314,7 +314,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("mbox DataSource V2 connector parses identically to MboxIO and prunes columns") {
     val t = Tables(spark, sfDir)
-    val dir = "/tmp/graft_mbox_dsv2"
+    val dir = scratch("mbox_dsv2")
     val emails = t.emailsTyped.filter((e: Email) => !e.subject.contains("\n")).limit(100)
     MboxIO.write(emails, dir)
 
@@ -356,7 +356,7 @@ class SourcesSpec extends AnyFunSuite {
     for (tbl <- Seq("b_orders", "b_customer")) {
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
       org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(s"spark-warehouse/$tbl"))
+        new java.io.File(scratch(s"warehouse/$tbl")))
     }
     Sinks.saveBucketed(t.orders.select("o_orderkey", "o_custkey", "o_totalprice"),
       "b_orders", "o_custkey", 8)
@@ -391,7 +391,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("mbox V2 write path round-trips through both readers and truncates on overwrite") {
     import spark.implicits._
-    val dir = "/tmp/graft_mbox_v2_write"
+    val dir = scratch("mbox_v2_write")
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     def email(i: Long) = Email(i, new java.sql.Timestamp(86400000L + i * 60000L),
       s"subject $i", s"User $i <u$i@x.org>", s"u$i@x.org",
@@ -411,7 +411,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("mbox V2 connector streams micro-batches with an offset high-water mark") {
     import spark.implicits._
-    val root = "/tmp/graft_mbox_v2_stream"
+    val root = scratch("mbox_v2_stream")
     val dir = s"$root/in"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
     new java.io.File(dir).mkdirs()
@@ -452,7 +452,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("mbox stream fails loudly when a backfill lands below the committed watermark") {
-    val root = "/tmp/graft_mbox_backfill"
+    val root = scratch("mbox_backfill")
     val dir = s"$root/in"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
     new java.io.File(dir).mkdirs()
@@ -482,7 +482,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("mbox stream fails loudly when a delete cancels a backfill in the count") {
-    val root = "/tmp/graft_mbox_cancel"
+    val root = scratch("mbox_cancel")
     val dir = s"$root/in"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
     new java.io.File(dir).mkdirs()
@@ -517,7 +517,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("CRLF mbox archives parse identically to LF in both readers") {
     import spark.implicits._
-    val root = "/tmp/graft_mbox_crlf"
+    val root = scratch("mbox_crlf")
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
     // write a normal LF archive, then clone it byte-for-byte with CRLF
     // line endings — a real-world mbox fetched over SMTP/NNTP is CRLF
@@ -547,7 +547,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("mbox byte-range splits read one archive as N partitions, row-identical to unsplit") {
     import spark.implicits._
-    val dir = "/tmp/graft_mbox_split"
+    val dir = scratch("mbox_split")
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     // ONE archive of 500 multi-line messages (~60 KB) — split at 4 KB it
     // must fan out into many tasks with the From_-delimiter resync
@@ -572,7 +572,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("folded RFC 5322 headers unfold identically in both mbox parsers") {
-    val dir = "/tmp/graft_mbox_folded"
+    val dir = scratch("mbox_folded")
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     new java.io.File(dir).mkdirs()
     // a real-world archive folds long headers: continuation lines start
@@ -596,7 +596,7 @@ class SourcesSpec extends AnyFunSuite {
   test("mbox writers map null fields to empty and reject newline-bearing headers") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val root = "/tmp/graft_mbox_nulls"
+    val root = scratch("mbox_nulls")
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
     val ts = new java.sql.Timestamp(1709251200L * 1000)
     // null subject/from_raw/text_body: both writers emit "" (mbox cannot
@@ -625,7 +625,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("streaming mbox source discovers and parses archives incrementally") {
     import spark.implicits._
-    val root = "/tmp/graft_mbox_stream"
+    val root = scratch("mbox_stream")
     val dir = s"$root/in"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
     new java.io.File(dir).mkdirs()
@@ -656,7 +656,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("JSON lines round-trip preserves the typed entities exactly") {
     val t = Tables(spark, sfDir)
-    val dir = "/tmp/graft_json_test"
+    val dir = scratch("json_test")
     val commits = t.commitsTyped
     JsonIO.write(commits, s"$dir/commits")
     val back = JsonIO.readCommits(spark, s"$dir/commits")

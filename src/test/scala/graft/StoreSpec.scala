@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -12,10 +11,10 @@ import graft.sources.{Fs, Store, Tables}
 
 /** The served-store primitive: one key, one path layout, one lock and
   * one marker for every corpus artifact a served query persists. */
-class StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StoreSpec extends AnyFunSuite {
   import TestSpark._
 
-  private val root = Files.createTempDirectory("store-spec")
+  private val root = Paths.get(scratch("store"))
 
   /** A fresh copy of the test corpus at `<root>/<rel>` — a dir no store
     * has been built for yet. */
@@ -28,12 +27,6 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Shared by the crash and layout tests: the crash test builds every
     * store on it, the layout test then inspects them. */
   private lazy val corpus = fixture("sf")
-
-  override def afterAll(): Unit = {
-    for (d <- Seq(corpus, s"$root/x/sf", s"$root/x-sf"); k <- kinds.map(_._1) :+ "ivf_index")
-      Fs.delete(Store.path(k, spark, d))
-    org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
-  }
 
   private def rows(df: DataFrame, cols: Seq[String]): Seq[String] =
     df.select(cols.map(col): _*).collect().map(_.toSeq.mkString("|")).toSeq.sorted
@@ -158,26 +151,95 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("served stores: on-disk layout is /tmp/graft_<kind>/<sanitised appId>/<md5 of dir>") {
-    // the layout perfbench's store cleanup and store_bytes layer glob on
+  test("served stores: on-disk layout is <scope root>/graft_<kind>/<md5 of dir>") {
+    // the layout Bench's tmp_store_bytes sizes: every store lives in the
+    // application's scope and dies with it
     val dir = corpus
-    val app = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
+    val scope = Store.root(spark.sparkContext)
     val md5 = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val layout = s"/tmp/graft_([a-z_]+)/\\Q$app\\E/[0-9a-f]{32}".r
+    val layout = s"\\Q$scope\\E/graft_([a-z_]+)/[0-9a-f]{32}".r
     val expected = kinds.map(_._1).toSet + "ivf_index"
     (kinds.map(_._2) :+ "q_sim_ivf_probe2").distinct.foreach(q(_)(spark, dir).collect())
     for (kind <- expected)
       assert(layout.matches(Store.path(kind, spark, dir)), Store.path(kind, spark, dir))
     // every store built for this dir is one of the known kinds, at
     // exactly that layout
-    val found = Files.list(Paths.get("/tmp")).toArray.map(_.toString)
-      .filter(_.startsWith("/tmp/graft_"))
-      .map(r => s"$r/$app/$md5").filter(p => Files.isDirectory(Paths.get(p)))
+    val found = Files.list(Paths.get(scope)).toArray.map(_.toString)
+      .filter(_.startsWith(s"$scope/graft_"))
+      .map(r => s"$r/$md5").filter(p => Files.isDirectory(Paths.get(p)))
       .map {
         case p @ layout(kind) => assert(p == Store.path(kind, spark, dir)); kind
         case p => fail(s"store off the layout: $p")
       }.toSet
     assert(found == expected)
+  }
+
+  test("application scope: a stopped application leaves no store, checkpoint or memo behind") {
+    // two applications in sequence in one child JVM (this JVM's shared
+    // session must stay up for later suites); the child reports what it
+    // saw as `key=value` lines
+    val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
+      .toArray.map(_.toString).filter(_.startsWith("--add-opens"))
+    val log = new java.io.File(scratch("scope-apps.log"))
+    val child = new ProcessBuilder((Seq(s"${sys.props("java.home")}/bin/java", "-Xmx1g",
+        "-Dspark.ui.enabled=false") ++ jvm ++
+        Seq("-cp", sys.props("java.class.path"), "graft.StoreSpec", sfDir)): _*)
+      .redirectError(log).start()
+    val out = scala.io.Source.fromInputStream(child.getInputStream).getLines().toList
+    assert(child.waitFor(300, TimeUnit.SECONDS) && child.exitValue == 0,
+      scala.io.Source.fromFile(log).getLines().toSeq.takeRight(30).mkString("\n"))
+    val seen = out.collect { case s"scope.$k=$v" => k -> v }.toMap
+    val (a, b) = (seen("a.app"), seen("b.app"))
+    assert(a != b)
+    val root = seen("a.root")
+    assert(seen("a.store").startsWith(s"$root/graft_bpe_model/"), seen("a.store"))
+    assert(seen("a.checkpoint").startsWith(s"file:$root/checkpoint"), seen("a.checkpoint"))
+    assert(seen("a.built") == "true" && seen("a.live") == "true")
+    // after A stops: its scope root is gone, the registry forgot it, and
+    // nothing keyed by its applicationId is left in /tmp or the tmpdir
+    assert(seen("a.stopped.root") == "false" && seen("a.stopped.live") == "false")
+    for (d <- Seq("/tmp", sys.props("java.io.tmpdir")); f <- new java.io.File(d).listFiles())
+      if (f.getName.startsWith("graft")) for (k <- Seq(a, a.replaceAll("[^A-Za-z0-9]", "_")))
+        assert(!f.getName.endsWith(k) && !new java.io.File(f, k).exists, s"$f holds $k")
+    // B builds its own stores again and returns the same rows
+    assert(seen("b.built") == "true" && !seen("b.store").startsWith(root))
+    assert(seen("b.rows") == seen("a.rows") && seen("a.rows").nonEmpty)
+  }
+}
+
+/** The child JVM of the application-scope test: runs application A and
+  * then application B on the corpus `args(0)`, each building a served
+  * store, resolving `Tables`, serving the LM model and running connected
+  * components, and prints what it saw as `scope.<key>=<value>` lines. */
+object StoreSpec {
+  def main(args: Array[String]): Unit = {
+    val dir = args(0)
+    def put(k: String, v: Any): Unit = println(s"scope.$k=$v")
+    for (tag <- Seq("a", "b")) {
+      val spark = GraftSession.builder(s"graft-scope-$tag", "2").getOrCreate()
+      import spark.implicits._
+      val sc = spark.sparkContext
+      val root = Store.root(sc)
+      val store = Store.path("bpe_model", spark, dir)
+      val served = Seq("q_bpe_tokenize_served", "q_text_perplexity_served")
+        .map(n => SparkEntry.queries(n)(spark, dir).collect().map(_.mkString("|")).sorted.mkString(";"))
+      val docs = Tables(spark, dir).documents.count()
+      val cc = graft.operators.Components.connectedComponents(
+        Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("a", "b"), "a", "b")
+        .collect().map(_.mkString("|")).sorted.mkString(";")
+      put(s"$tag.app", sc.applicationId)
+      put(s"$tag.root", root)
+      put(s"$tag.store", store)
+      put(s"$tag.built", Fs.exists(s"$store/${Store.Marker}"))
+      put(s"$tag.checkpoint", sc.getCheckpointDir.getOrElse(""))
+      put(s"$tag.live", Store.live(sc))
+      val digest = java.security.MessageDigest.getInstance("MD5")
+        .digest((served :+ docs.toString :+ cc).mkString("\n").getBytes("UTF-8"))
+      put(s"$tag.rows", digest.map("%02x".format(_)).mkString)
+      spark.stop()
+      put(s"$tag.stopped.root", new java.io.File(root).exists)
+      put(s"$tag.stopped.live", Store.live(sc))
+    }
   }
 }

@@ -7,8 +7,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * is the production GraftSession one, so plan-shape assertions hold for
   * the engine users actually run. */
 object TestSpark {
+  /** Every test fixture, test-owned store and the session's warehouse
+    * live under one per-run root, deleted when the test JVM exits. */
+  private lazy val root = {
+    val r = java.nio.file.Files.createTempDirectory("graft-test-")
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(r.toFile))
+    r
+  }
+
+  /** `<per-run root>/<name>`, not created: a test's scratch path. */
+  def scratch(name: String): String = s"$root/$name"
+
   lazy val spark: SparkSession = {
-    val s = GraftSession.builder("graft-test", "4").getOrCreate()
+    val s = GraftSession.builder("graft-test", "4")
+      .config("spark.sql.warehouse.dir", scratch("warehouse")).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
