@@ -101,14 +101,14 @@ object Bench {
     // artifact from a 3.4-load window that distorted the shuffle-heavy
     // queries ~2x while still passing the 4.0 gate. On 32 CPUs a 1-min
     // load of 2 is genuinely idle; anything above it is the neighbors.
-    val maxLoad = sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_LOAD", "2.0").toDouble
-    val maxWait = sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_WAIT_SEC", "1800").toInt
+    val maxLoad = 2.0
+    val maxWait = 1800
     // per-query contention gate: average CPU cores burned by OTHER
     // processes during the timed run. 1.0 core on a 32-core host is the
     // noise floor of system daemons; a neighbor build or bench shows as
     // many cores. A steady run above the gate is re-tried (bounded).
-    val maxOthers = sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_OTHERS_CORES", "1.0").toDouble
-    val maxRetries = sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_RETRIES", "3").toInt
+    val maxOthers = 1.0
+    val maxRetries = 3
     val loadStart = awaitIdle(maxLoad, maxWait)
     val spark = GraftSession.builder("graft-bench", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,11 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.functions.TextFunctions._
+import graft.operators.{Dedup, Freq}
 import graft.sources.{Commit, Fs, JsonIO, MboxIO, Sinks, Store}
 
 /** Deployable twins of the reference's APPLICATION tier — the unit a
@@ -196,7 +197,7 @@ object Programs {
     *   3. substring boilerplate CUT (r13,
     *      [[graft.operators.Dedup.probeGramIndex]]): surviving docs —
     *      new as WHOLES — probe the corpus's gram-digest index, and any
-    *      `spanWords`-word PASSAGE already standing in the corpus
+    *      10-word PASSAGE already standing in the corpus
     *      (quoted paragraphs, license headers, re-crawled boilerplate)
     *      is cut from the arriving text before it is stored; a doc
     *      whose every word was standing content drops entirely. The
@@ -208,8 +209,8 @@ object Programs {
     *      accepted batch — admission control against a crawl dump.
     *
     * In deployment the bit table, band index and gram index are
-    * PERSISTED artifacts maintained with the corpus (bloomBuild once +
-    * incremental OR-in; minhashBandIndex and gramIndex via
+    * PERSISTED artifacts maintained with the corpus ([[Admission]]'s
+    * builders once, then its appends; the indexes via
     * Sinks.saveBucketed — the gram index bucketed on its (h1, h2)
     * digest lanes so gate 3's probe join reads it with zero
     * index-side exchange); this core takes them as inputs so the
@@ -223,10 +224,10 @@ object Programs {
     * plan; the streaming step passes a materialization, so each
     * batch-sized frame is computed once ([[ingestBatchStep]]). */
   def ingestCore(bits: DataFrame, bandIndex: DataFrame, gramIndex: DataFrame,
-      batch: DataFrame, quotaPerSource: Long, spanWords: Int = 10,
+      batch: DataFrame, quotaPerSource: Long,
       stage: DataFrame => DataFrame = identity): DataFrame =
     graft.operators.Sampling.quotaCap(
-      stage(admissionCut(bits, bandIndex, gramIndex, batch, spanWords, stage)),
+      stage(admissionCut(bits, bandIndex, gramIndex, batch, stage)),
       "source", "doc_id", quotaPerSource, seed = "ingest0")
 
   /** Gates 1–3 of [[ingestCore]] — the admission CUT (everything up to
@@ -237,24 +238,76 @@ object Programs {
     * (md5-ordered sample vs first-arrivals — the 44g asymmetry), so the
     * shared surface ends here. */
   def admissionCut(bits: DataFrame, bandIndex: DataFrame, gramIndex: DataFrame,
-      batch: DataFrame, spanWords: Int = 10,
-      stage: DataFrame => DataFrame = identity): DataFrame = {
-    val fresh = stage(graft.operators.Freq.bloomProbe(
-        bits, batch.withColumn("item", md5(col("text"))), k = 3, width = 1 << 20)
-      .filter(!col("maybe_member"))
-      .drop("item", "n_hits", "maybe_member"))
-    val nearDups = graft.operators.Dedup.probeBandIndex(
-        fresh, bandIndex, k = 3, perms = 8, bands = 4)
-      .select(col("doc_id"))
+      batch: DataFrame, stage: DataFrame => DataFrame = identity): DataFrame = {
+    val fresh = stage(Admission.bloomNovel(bits, batch))
+    val nearDups = Admission.bandProbe(fresh, bandIndex)
     // pinned sort-merge: the collided ids arrive hash-partitioned by
     // their distinct, so AQE's switch to a broadcast would only add a job,
     // and the doc_id partitioning the join leaves serves gate 3's join
     // back to its flagged starts
     val novel = fresh.join(nearDups.hint("merge"), Seq("doc_id"), "left_anti")
-    graft.operators.Dedup.probeGramIndex(novel, gramIndex, spanWords)
+    Admission.gramProbe(novel, gramIndex)
       .withColumn("text", col("clean_text"))
       .drop("clean_text")
       .filter(length(col("text")) > 0)
+  }
+
+  /** The admission gates' one geometry and the artifacts it fixes: every
+    * site that builds, probes or maintains the bloom bit table, the
+    * minhash band index or the gram index goes through here — the batch
+    * and served queries, the program store and its folds, and the
+    * streaming gates. An artifact is only meaningful under the geometry
+    * it was built with (a bit table of another width misses every stored
+    * doc at gate 1), so the geometry is not a parameter anywhere. */
+  object Admission {
+    /** Gate 1: hash functions per item and bit-table width. */
+    val BloomK = 3
+    val BloomWidth: Int = 1 << 20
+    /** Gate 2: shingle words, minhash permutations, bands, and the bucket
+      * size above which a band bucket is boilerplate and never probed. */
+    val ShingleK = 3
+    val Perms = 8
+    val Bands = 4
+    val MaxBucket = 10000
+    /** Gate 3: words per gram. */
+    val SpanWords = 10
+
+    /** A doc's gate-1 item: the md5 of its text. */
+    private def item: Column = md5(col("text"))
+
+    def bloomBuild(corpus: DataFrame): DataFrame =
+      Freq.bloomBuild(corpus.select(item.as("item")), BloomK, BloomWidth)
+
+    def minhashBandIndex(corpus: DataFrame): DataFrame =
+      Dedup.minhashBandIndex(corpus, ShingleK, Perms, Bands)
+
+    def gramIndex(corpus: DataFrame): DataFrame = Dedup.gramIndex(corpus, SpanWords)
+
+    /** Gate 1: the batch without every doc the bit table may hold. */
+    def bloomNovel(bits: DataFrame, batch: DataFrame): DataFrame =
+      Freq.bloomProbe(bits, batch.withColumn("item", item), BloomK, BloomWidth)
+        .filter(!col("maybe_member"))
+        .drop("item", "n_hits", "maybe_member")
+
+    /** Gate 2: the ids of the docs that share a band bucket under the
+      * cap with the index ([[Dedup.probeBandIndex]]). */
+    def bandProbe(docs: DataFrame, bandIndex: DataFrame): DataFrame =
+      Dedup.probeBandIndex(docs, bandIndex, ShingleK, Perms, Bands, MaxBucket)
+        .select(col("doc_id"))
+
+    /** Gate 3's cut ([[Dedup.probeGramIndex]]). */
+    def gramProbe(docs: DataFrame, gramIndex: DataFrame): DataFrame =
+      Dedup.probeGramIndex(docs, gramIndex, SpanWords)
+
+    /** OR the stored docs' items into the bit table. */
+    def bloomAppend(bits: DataFrame, stored: DataFrame): DataFrame =
+      Freq.bloomAppend(bits, stored.select(item.as("item")), BloomK, BloomWidth)
+
+    def gramIndexAppend(gramIndex: DataFrame, admitted: DataFrame): DataFrame =
+      Dedup.gramIndexAppend(gramIndex, admitted, SpanWords)
+
+    def bandIndexAppend(bandIndex: DataFrame, admitted: DataFrame): DataFrame =
+      Dedup.bandIndexAppend(bandIndex, admitted, ShingleK, Perms, Bands)
   }
 
   /** Batch ingest program: build the corpus artifacts, admit the batch
@@ -262,33 +315,25 @@ object Programs {
     * (per-source audits read back with partition pruning). */
   def ingestProgram(spark: SparkSession, corpus: DataFrame, batch: DataFrame,
       out: String, quotaPerSource: Long): Unit =
-    ingestCore(
-      graft.operators.Freq.bloomBuild(
-        corpus.select(md5(col("text")).as("item")), k = 3, width = 1 << 20),
-      graft.operators.Dedup.minhashBandIndex(corpus, k = 3, perms = 8, bands = 4),
-      graft.operators.Dedup.gramIndex(corpus, spanWords = 10),
-      batch, quotaPerSource)
+    ingestCore(Admission.bloomBuild(corpus), Admission.minhashBandIndex(corpus),
+        Admission.gramIndex(corpus), batch, quotaPerSource)
       .write.mode("overwrite").partitionBy("source").parquet(out)
 
   /** Bootstrap the standing ingest store from an existing corpus: the
-    * three admission artifacts ([[graft.operators.Freq.bloomBuild]] bit
-    * table, minhash band index, gram index) commit as version 0 under
-    * `storeDir`, ready for [[ingestProgramStream]] to probe and
-    * maintain. A re-init starts the store over ([[clearStore]]).
-    * Deployment would build these with `Sinks.saveBucketed` for the
-    * zero-exchange probe reads (the served-tier layout); the program
-    * store keeps plain parquet — the maintenance semantics, not the
-    * exchange count, are what this tier proves. */
-  def ingestStoreInit(corpus: DataFrame, storeDir: String,
-      spanWords: Int = 10, bloomK: Int = 3, bloomWidth: Int = 1 << 20): Unit = {
+    * three [[Admission]] artifacts (bloom bit table, minhash band index,
+    * gram index) commit as version 0 under `storeDir`, ready for
+    * [[ingestProgramStream]] to probe and maintain. A re-init starts the
+    * store over ([[clearStore]]). Deployment would build these with
+    * `Sinks.saveBucketed` for the zero-exchange probe reads (the
+    * served-tier layout); the program store keeps plain parquet — the
+    * maintenance semantics, not the exchange count, are what this tier
+    * proves. */
+  def ingestStoreInit(corpus: DataFrame, storeDir: String): Unit = {
     clearStore(storeDir, "bits", "band_index", "gram_index")
-    Store.versions(storeDir, "bits").commit(0)(graft.operators.Freq.bloomBuild(
-        corpus.select(md5(col("text")).as("item")), bloomK, bloomWidth)
-      .write.parquet(_))
-    Store.versions(storeDir, "band_index").commit(0)(graft.operators.Dedup
-      .minhashBandIndex(corpus, k = 3, perms = 8, bands = 4).write.parquet(_))
-    Store.versions(storeDir, "gram_index").commit(0)(graft.operators.Dedup
-      .gramIndex(corpus, spanWords).write.parquet(_))
+    Store.versions(storeDir, "bits").commit(0)(Admission.bloomBuild(corpus).write.parquet(_))
+    Store.versions(storeDir, "band_index").commit(0)(
+      Admission.minhashBandIndex(corpus).write.parquet(_))
+    Store.versions(storeDir, "gram_index").commit(0)(Admission.gramIndex(corpus).write.parquet(_))
   }
 
   /** Start a program store over: drop every version of its artifact
@@ -323,7 +368,9 @@ object Programs {
     * Shape: foreachBatch — each micro-batch runs the BATCH
     * [[ingestCore]] (all four gates, per-batch quota) against the
     * store's CURRENT artifact versions, appends the stored docs
-    * (idempotently, partitioned by batch id), and then maintains:
+    * (idempotently, partitioned by batch id), and then maintains. The
+    * gate geometry is [[Admission]]'s, the one [[ingestStoreInit]] built
+    * the store with; the stream sets only the quota and the fold cadence.
     *
     *  - the BLOOM arm folds EVERY batch ([[graft.operators.Freq
     *    .bloomAppend]]): the bit table is KB-scale, the OR-in is
@@ -392,13 +439,11 @@ object Programs {
     * [[lmGateProgramStream]] and [[phraseIndexProgramStream]]
     * identically. */
   def ingestProgramStream(docs: DataFrame, storeDir: String,
-      checkpoint: String, quotaPerSource: Long, spanWords: Int = 10,
-      maintainEvery: Int = 4, bloomK: Int = 3,
-      bloomWidth: Int = 1 << 20): StreamingQuery =
+      checkpoint: String, quotaPerSource: Long,
+      maintainEvery: Int = 4): StreamingQuery =
     programStream(docs, checkpoint, "maintainEvery", maintainEvery) {
       val resolver = new Store.Resolver
-      ingestBatchStep(_, storeDir, _, quotaPerSource, spanWords,
-        maintainEvery, bloomK, bloomWidth, resolver)
+      ingestBatchStep(_, storeDir, _, quotaPerSource, maintainEvery, resolver)
     }
 
   /** One micro-batch of [[ingestProgramStream]], factored out so the
@@ -408,12 +453,8 @@ object Programs {
     * batchId, the admitted batches its fold window reads) — see the
     * replay contract on [[ingestProgramStream]]. */
   private[graft] def ingestBatchStep(batch: DataFrame, storeDir: String,
-      batchId: Long, quotaPerSource: Long, spanWords: Int,
-      maintainEvery: Int, bloomK: Int, bloomWidth: Int,
+      batchId: Long, quotaPerSource: Long, maintainEvery: Int,
       resolver: Store.Resolver = new Store.Resolver): Unit = {
-    // no defaults for the gate geometry: the stream passes every argument
-    // explicitly, and a second set of defaults would let the test-driven
-    // replay path silently drift from the production gate geometry
     val spark = batch.sparkSession
     val bitsV = Store.versions(storeDir, "bits")
     val bandV = Store.versions(storeDir, "band_index")
@@ -430,19 +471,16 @@ object Programs {
     // materializes the stored set, and every later write reads it back,
     // so no artifact is rewritten from a lazy plan over a replaced version
     val core = ingestCore(bits, bandIdx, gramIdx, batch, quotaPerSource,
-      spanWords, _.localCheckpoint())
+      _.localCheckpoint())
     val admitted = s"$storeDir/admitted/batch=$batchId"
     core.write.mode("overwrite").parquet(admitted)
     val stored = spark.read.schema(core.schema).parquet(admitted)
-    bitsV.commit(batchId + 1)(graft.operators.Freq.bloomAppend(bits,
-        stored.select(md5(col("text")).as("item")), bloomK, bloomWidth)
-      .write.parquet(_))
+    bitsV.commit(batchId + 1)(Admission.bloomAppend(bits, stored).write.parquet(_))
     bitsV.retain()
     if ((batchId + 1) % maintainEvery == 0)
       foldAdmitted(spark, resolver, storeDir, core.schema, batchId, "doc_id", "text")(
-        (gramV, graft.operators.Dedup.gramIndexAppend(gramIdx, _, spanWords).write.parquet(_)),
-        (bandV, graft.operators.Dedup
-          .bandIndexAppend(bandIdx, _, k = 3, perms = 8, bands = 4).write.parquet(_)))
+        (gramV, Admission.gramIndexAppend(gramIdx, _).write.parquet(_)),
+        (bandV, Admission.bandIndexAppend(bandIdx, _).write.parquet(_)))
   }
 
   /** The program stores' one fold rule: `<name>_v<N>` folds every
@@ -521,8 +559,9 @@ object Programs {
     * HARDER, nothing wrong is admitted), and the fold brings the
     * verdict back to the batch re-train's (StreamingSpec proves a
     * same-stream fold flips a borderline doc exactly as re-training
-    * does). The fold is model-sized I/O (KB–MB — the cheapest
-    * maintenance arm in the store family); per-batch folding would
+    * does). The fold is one Spark job of model-sized I/O (KB–MB — the
+    * cheapest maintenance arm in the store family: a fold batch runs 2
+    * jobs, a probe batch 1); per-batch folding would
     * also be affordable here, `maintainEvery` just keeps the
     * freshness/cost knob uniform with the ingest tier. Crash-replay and
     * restart: the same contracts as [[ingestProgramStream]] — reads

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Multimodal, Sampling, TextAnalysis}
+import graft.Programs.Admission
 import graft.sources.{Sinks, Store, Tables}
 
 /** §2.d — LLM-training-data pipeline operators over the `documents`
@@ -141,8 +142,8 @@ object QueriesLlm {
     * and the hash gate proves it. */
   val dedupSubstrServed: Q = (s, dir) => {
     val d = docs(s, dir)
-    Dedup.probeGramIndex(d.filter(col("doc_id") % 10 === 0),
-        s.table(servedGramIndexTable(s, dir)), spanWords = 10)
+    Admission.gramProbe(d.filter(col("doc_id") % 10 === 0),
+        s.table(servedGramIndexTable(s, dir)))
       .select(col("doc_id"), col("clean_text"), col("n_removed"), col("n_spans"))
   }
 
@@ -150,8 +151,7 @@ object QueriesLlm {
     * corpus) by [[Store.once]] with its data under the store path. */
   private def servedGramIndexTable(s: SparkSession, dir: String): String =
     Store.table(Store.once("gram_index", s, dir)(p =>
-      Sinks.saveBucketed(
-        Dedup.gramIndex(docs(s, dir).filter(col("doc_id") % 10 =!= 0), 10),
+      Sinks.saveBucketed(Admission.gramIndex(ingestCorpus(s, dir)),
         Store.table(p), Seq("h1", "h2"), 32, path = Some(p))))
 
   /** The FOUR-GATE admission pipeline as one oracle-checked query (r13):
@@ -167,13 +167,9 @@ object QueriesLlm {
     * gates' own verified CTE chains so the pipeline and its parts
     * cannot drift. */
   val ingestGates: Q = (s, dir) =>
-    Programs.ingestCore(
-        graft.operators.Freq.bloomBuild(
-          ingestCorpus(s, dir).select(md5(col("text")).as("item")),
-          k = 3, width = 1 << 20).localCheckpoint(),
-        Dedup.minhashBandIndex(ingestCorpus(s, dir), k = 3, perms = 8, bands = 4),
-        Dedup.gramIndex(ingestCorpus(s, dir), spanWords = 10),
-        ingestBatch(s, dir), quotaPerSource = 8L)
+    Programs.ingestCore(Admission.bloomBuild(ingestCorpus(s, dir)).localCheckpoint(),
+        Admission.minhashBandIndex(ingestCorpus(s, dir)),
+        Admission.gramIndex(ingestCorpus(s, dir)), ingestBatch(s, dir), quotaPerSource = 8L)
       .select(col("doc_id"), col("source"), col("n_removed"), col("n_spans"),
         col("qrank"))
 
@@ -215,15 +211,10 @@ object QueriesLlm {
     * with text equality), so this row hash-checks the maintenance
     * algebra: output = the appended (j, pos) bit set. */
   val ingestIndexUpdate: Q = (s, dir) => {
-    val bits = graft.operators.Freq.bloomBuild(
-      ingestCorpus(s, dir).select(md5(col("text")).as("item")),
-      k = 3, width = 1 << 20).localCheckpoint()
-    val stored = Programs.ingestCore(bits,
-      Dedup.minhashBandIndex(ingestCorpus(s, dir), k = 3, perms = 8, bands = 4),
-      Dedup.gramIndex(ingestCorpus(s, dir), spanWords = 10),
-      ingestBatch(s, dir), quotaPerSource = 8L)
-    graft.operators.Freq.bloomAppend(bits,
-        stored.select(md5(col("text")).as("item")), k = 3, width = 1 << 20)
+    val bits = Admission.bloomBuild(ingestCorpus(s, dir)).localCheckpoint()
+    val stored = Programs.ingestCore(bits, Admission.minhashBandIndex(ingestCorpus(s, dir)),
+      Admission.gramIndex(ingestCorpus(s, dir)), ingestBatch(s, dir), quotaPerSource = 8L)
+    Admission.bloomAppend(bits, stored)
       .select(col("j").cast("int").as("j"), col("pos").cast("long").as("pos"))
   }
 
@@ -254,18 +245,13 @@ object QueriesLlm {
   val ingestRecall: Q = (s, dir) => {
     val corpus = ingestCorpus(s, dir)
     val batch = ingestBatch(s, dir)
-    val bits = graft.operators.Freq.bloomBuild(
-      corpus.select(md5(col("text")).as("item")), k = 3, width = 1 << 20).localCheckpoint()
-    val bandIdx = Dedup.minhashBandIndex(corpus, k = 3, perms = 8, bands = 4)
-    val gramIdx = Dedup.gramIndex(corpus, spanWords = 10)
-    val fresh = graft.operators.Freq.bloomProbe(
-        bits, batch.withColumn("item", md5(col("text"))), k = 3, width = 1 << 20)
-      .filter(!col("maybe_member"))
-      .drop("item", "n_hits", "maybe_member")
-    val collided = Dedup.probeBandIndex(fresh, bandIdx, k = 3, perms = 8,
-      bands = 4).select(col("doc_id"))
+    val bits = Admission.bloomBuild(corpus).localCheckpoint()
+    val bandIdx = Admission.minhashBandIndex(corpus)
+    val gramIdx = Admission.gramIndex(corpus)
+    val fresh = Admission.bloomNovel(bits, batch)
+    val collided = Admission.bandProbe(fresh, bandIdx)
     val novel = fresh.join(collided, Seq("doc_id"), "left_anti")
-    val admitted = Dedup.probeGramIndex(novel, gramIdx, spanWords = 10)
+    val admitted = Admission.gramProbe(novel, gramIdx)
       .filter(length(col("clean_text")) > 0)
       .select(col("doc_id"))
     val exactDup = batch.select(col("doc_id"), md5(col("text")).as("item"))
@@ -278,8 +264,7 @@ object QueriesLlm {
       .select(when(col("doc_a") % 10 === 0, col("doc_a"))
         .otherwise(col("doc_b")).as("doc_id"))
       .distinct()
-    val truthCut = Dedup.probeGramIndex(
-        docs(s, dir).filter(col("doc_id") % 10 === 0), gramIdx, spanWords = 10)
+    val truthCut = Admission.gramProbe(docs(s, dir).filter(col("doc_id") % 10 === 0), gramIdx)
       .select(col("doc_id"), (length(col("clean_text")) === 0).as("cut_empty"))
     val verdicts = batch.select(col("doc_id"))
       .join(exactDup.withColumn("is_exact", lit(true)), Seq("doc_id"), "left")
@@ -330,19 +315,14 @@ object QueriesLlm {
   /** The persisted bloom bit table (KB-scale (j, pos) parquet), a
     * [[Store.once]] store. */
   private def servedBloomBitsPath(s: SparkSession, dir: String): String =
-    Store.once("bloom_bits", s, dir)(
-      graft.operators.Freq.bloomBuild(
-          ingestCorpus(s, dir).select(md5(col("text")).as("item")),
-          k = 3, width = 1 << 20)
-        .write.parquet(_))
+    Store.once("bloom_bits", s, dir)(Admission.bloomBuild(ingestCorpus(s, dir)).write.parquet(_))
 
   /** The bucketed minhash band index table — [[servedGramIndexTable]]
     * on the (band, bk) lanes, so the probe join reads the index side
     * with zero exchange. */
   private def servedBandIndexTable(s: SparkSession, dir: String): String =
     Store.table(Store.once("band_index", s, dir)(p =>
-      Sinks.saveBucketed(
-        Dedup.minhashBandIndex(ingestCorpus(s, dir), k = 3, perms = 8, bands = 4),
+      Sinks.saveBucketed(Admission.minhashBandIndex(ingestCorpus(s, dir)),
         Store.table(p), Seq("band", "bk"), 32, path = Some(p))))
 
   /** DEDUP QUALITY evaluation (r12) — the q_sim_recall posture applied

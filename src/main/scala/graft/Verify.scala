@@ -1,7 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json for the DuckDB compare and headline.json (the
+  * SparkEntry.headline names) for tools/bench_baseline.py. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -26,6 +27,8 @@ object Verify {
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${Jsons.str(k)}: ${Jsons.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/headline.json"), SparkEntry.headline
+      .filter(q => only.forall(_.contains(q))).map(Jsons.str).mkString("[", ",", "]"))
     spark.stop()
   }
 }

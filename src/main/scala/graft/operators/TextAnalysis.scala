@@ -256,10 +256,13 @@ object TextAnalysis {
     * the `lang = refLang` slice — the artifact a deployment persists
     * beside the corpus and the serving/streaming scorer embeds. */
   def trigramModel(docs: DataFrame, refLang: String = "en"): DataFrame =
+    trigrams(docs, refLang).groupBy(col("tri")).agg(count(lit(1)).as("cnt"))
+
+  /** One `tri` row per trigram occurrence in the `lang = refLang` docs. */
+  private def trigrams(docs: DataFrame, refLang: String): DataFrame =
     docs.filter(length(col("text")) >= 3 && col("lang") === refLang)
       .select(explode(call_function("graft_char_ngram_codes",
         col("text"), lit(3))).as("tri"))
-      .groupBy(col("tri")).agg(count(lit(1)).as("cnt"))
 
   /** CCNet head/middle/tail perplexity BUCKETING (r15) — the published
     * recipe's final step over [[trigramSurprisal]]'s scores: per
@@ -303,16 +306,19 @@ object TextAnalysis {
     * documents, so `trigramModelAppend(trigramModel(c), d) ≡
     * trigramModel(c ∪ d)` for ANY split — empty sides included
     * (property-tested; the gramIndexAppend / aggState algebra applied
-    * to the LM). Scale shape: the delta's trigram aggregate is
-    * delta-sized and the merge aggregate shuffles only the model table
-    * (alphabet³-bounded, KB–MB). Contract: the delta's docs are NEW to
+    * to the LM). Scale shape: the model is alphabet³-bounded (KB–MB) and
+    * the delta is a fold window of admitted docs, so the model and the
+    * delta's trigram occurrences sum in ONE task — no shuffle, and the
+    * rewrite is a single job (the [[Freq.bloomAppend]] shape; the LM
+    * program already collects every model version onto the driver).
+    * Contract: the delta's docs are NEW to
     * the model's corpus — a re-delivered doc double-counts, which is
     * why the maintenance arm folds POST-ADMISSION docs only, behind
     * gates that refuse re-delivery. */
   def trigramModelAppend(model: DataFrame, delta: DataFrame,
       refLang: String = "en"): DataFrame =
-    model.unionByName(trigramModel(delta, refLang))
-      .groupBy(col("tri")).agg(sum(col("cnt")).as("cnt"))
+    model.unionByName(trigrams(delta, refLang).withColumn("cnt", lit(1L)))
+      .coalesce(1).groupBy(col("tri")).agg(sum(col("cnt")).as("cnt"))
 
   /** ROW-LOCAL surprisal scoring against an EMBEDDED model — the
     * serving/streaming face of [[trigramSurprisal]]: same columns, same

@@ -358,11 +358,13 @@ object StreamingJobs {
 
   /** STREAMING 4-gate ingest admission (r13) — the composed ONLINE
     * form of [[graft.Programs.admissionCut]]: every arriving doc runs
-    * the whole admission ladder in ONE streaming query.
+    * the whole admission ladder in ONE streaming query, under the batch
+    * cut's own geometry ([[graft.Programs.Admission]]) — the stream
+    * equals the cut row for row, so it can use no other.
     *
-    *   gate 1 — Bloom novelty ([[bloomNovelStream]]'s transform on the
-    *   batch contract's md5(text) digest): stateless broadcast probe.
-    *   gate 2 — minhash band anti-probe: the doc's `bands` band keys
+    *   gate 1 — Bloom novelty (the batch cut's own gate 1,
+    *   [[graft.Programs.Admission.bloomNovel]]): stateless broadcast probe.
+    *   gate 2 — minhash band anti-probe: the doc's band keys
     *   are row-local columns (the 44d scalar-signature projection) and
     *   the capped index anti-joins STREAM-STATIC once per band — LEFT
     *   ANTI is stateless against a static side, so the whole gate adds
@@ -384,57 +386,49 @@ object StreamingJobs {
     * n_spans) for admitted docs; a doc that was all standing content
     * drops here like in batch. */
   def ingestGateStream(docs: DataFrame, bits: DataFrame, bandIndex: DataFrame,
-      gramIndex: DataFrame, k: Int, perms: Int, bands: Int, spanWords: Int,
-      watermarkDelay: String, windowDur: String, maxBucket: Int = 10000,
-      bloomK: Int = 3, bloomWidth: Int = 1 << 20): DataFrame =
-    ingestGateStreamReleasable(docs, bits, bandIndex, gramIndex, k, perms,
-      bands, spanWords, watermarkDelay, windowDur, maxBucket, bloomK,
-      bloomWidth)._1
+      gramIndex: DataFrame, watermarkDelay: String, windowDur: String): DataFrame =
+    ingestGateStreamReleasable(docs, bits, bandIndex, gramIndex, watermarkDelay,
+      windowDur)._1
 
   /** [[ingestGateStream]] plus the release handle for ITS stream-static
-    * caches — the `bands` per-band key sets and gate 3's lane snapshot
-    * (the [[gramProbeStreamReleasable]] contract, applied to the
-    * composition that persists `bands`+1 relations per construction). */
+    * caches — the per-band key sets and gate 3's lane snapshot (the
+    * [[gramProbeStreamReleasable]] contract, applied to the composition
+    * that persists one relation per band plus one per construction). */
   def ingestGateStreamReleasable(docs: DataFrame, bits: DataFrame,
-      bandIndex: DataFrame, gramIndex: DataFrame, k: Int, perms: Int,
-      bands: Int, spanWords: Int, watermarkDelay: String, windowDur: String,
-      maxBucket: Int = 10000, bloomK: Int = 3,
-      bloomWidth: Int = 1 << 20): (DataFrame, () => Unit) = {
-    require(perms % bands == 0, s"perms ($perms) must be a multiple of bands ($bands)")
-    val rows = perms / bands
-    val fresh = graft.operators.Freq.bloomProbe(
-        bits, docs.withColumn("item", md5(col("text"))), bloomK, bloomWidth)
-      .filter(!col("maybe_member"))
-      .drop("item", "n_hits", "maybe_member")
+      bandIndex: DataFrame, gramIndex: DataFrame, watermarkDelay: String,
+      windowDur: String): (DataFrame, () => Unit) = {
+    val A = graft.Programs.Admission
+    val rows = A.Perms / A.Bands
+    val fresh = A.bloomNovel(bits, docs)
     // gate 2: per-band key columns via the compiled one-pass signature
     // (r14, plans/MinhashSigExpr.scala — null for sub-k-word docs, and a
     // null key never matches an anti-join, so short docs survive,
     // matching the batch probe's size(w) >= k filter)
     val keyed = fresh.withColumn("_sig",
       call_function("graft_minhash_sig", split(col("text"), " "),
-        lit(k), lit(perms)))
-    val withKeys = (0 until bands).foldLeft(keyed) { (df, b) =>
+        lit(A.ShingleK), lit(A.Perms)))
+    val withKeys = (0 until A.Bands).foldLeft(keyed) { (df, b) =>
       df.withColumn(s"_bk$b", when(col("_sig").isNotNull,
         md5(concat_ws("|", (0 until rows).map(r =>
           element_at(col("_sig"), b * rows + r + 1)): _*))))
     }
-    val capped = bandIndex.filter(col("bsz") <= maxBucket)
+    val capped = bandIndex.filter(col("bsz") <= A.MaxBucket)
     // the per-band distinct key sets are STATIC — cache them so each
     // micro-batch's anti-joins read materialized sets instead of
-    // re-aggregating the full corpus index `bands` times per batch
+    // re-aggregating the full corpus index once per band per batch
     // (r14, measured at sf1m: the uncached form re-ran 4 index-wide
     // distincts every 625-doc batch and dominated the gate cost; the
     // cache is the canonical stream-static-side treatment, spills to
     // disk if the key sets outgrow memory)
-    val keySets = (0 until bands).map(b =>
+    val keySets = (0 until A.Bands).map(b =>
       capped.filter(col("band") === b)
         .select(col("bk").as(s"_bk$b")).distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val novel = (0 until bands).foldLeft(withKeys) { (df, b) =>
+    val novel = (0 until A.Bands).foldLeft(withKeys) { (df, b) =>
       df.join(keySets(b), Seq(s"_bk$b"), "left_anti")
-    }.drop("_sig" +: (0 until bands).map(b => s"_bk$b"): _*)
+    }.drop("_sig" +: (0 until A.Bands).map(b => s"_bk$b"): _*)
     val (cut, releaseLanes) = gramProbeStreamReleasable(novel, gramIndex,
-      spanWords, watermarkDelay, windowDur, carry = Seq("source"))
+      A.SpanWords, watermarkDelay, windowDur, carry = Seq("source"))
     val out = cut
       .withColumn("text", col("clean_text"))
       .drop("clean_text")

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
+import graft.Programs.Admission
 import graft.sources.{JsonIO, MboxIO, Sinks}
 
 /** The application tier end-to-end: each program is run as a user would
@@ -178,12 +179,8 @@ class ProgramsSpec extends AnyFunSuite {
       .contains("PartitionFilters: [isnotnull(source"),
       "ingest store must prune by source partition")
     // the program adds plumbing only: store == direct core transform
-    val direct = Programs.ingestCore(
-      graft.operators.Freq.bloomBuild(
-        corpus.select(md5(col("text")).as("item")), 3, 1 << 20),
-      graft.operators.Dedup.minhashBandIndex(corpus, 3, 8, 4),
-      graft.operators.Dedup.gramIndex(corpus, spanWords = 10),
-      batch, 3L)
+    val direct = Programs.ingestCore(Admission.bloomBuild(corpus),
+      Admission.minhashBandIndex(corpus), Admission.gramIndex(corpus), batch, 3L)
     val a = accepted.select(col("doc_id"), col("qrank"), col("n_removed")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val b = direct.select(col("doc_id"), col("qrank"), col("n_removed")).collect()
@@ -196,11 +193,9 @@ class ProgramsSpec extends AnyFunSuite {
     val docs = graft.sources.Tables(spark, sfDir).documents
     val corpus = docs.filter(col("doc_id") % 10 =!= 0)
     val batch = docs.filter(col("doc_id") % 10 === 0)
-    val bits = graft.operators.Freq.bloomBuild(
-      corpus.select(md5(col("text")).as("item")), 3, 1 << 20).localCheckpoint()
-    val bandIdx = graft.operators.Dedup.minhashBandIndex(corpus, 3, 8, 4)
-      .localCheckpoint()
-    val gramIdx = graft.operators.Dedup.gramIndex(corpus, 10).localCheckpoint()
+    val bits = Admission.bloomBuild(corpus).localCheckpoint()
+    val bandIdx = Admission.minhashBandIndex(corpus).localCheckpoint()
+    val gramIdx = Admission.gramIndex(corpus).localCheckpoint()
     // what the pipeline STORES (post-quota, cut text — r14: appends must
     // derive from what the store actually carries; a quota-rejected doc
     // whose digest were marked seen could never enter the corpus later)
@@ -212,29 +207,20 @@ class ProgramsSpec extends AnyFunSuite {
       df.collect().map(_.toSeq.toVector).toSet
     // append ≡ rebuild, for each of the three standing artifacts — the
     // "incremental OR-in / append-able index" claims as checked algebra
-    assert(rows(graft.operators.Freq.bloomAppend(
-        bits, admitted.select(md5(col("text")).as("item")), 3, 1 << 20)) ==
-      rows(graft.operators.Freq.bloomBuild(
-        union.select(md5(col("text")).as("item")), 3, 1 << 20)))
-    assert(rows(graft.operators.Dedup.gramIndexAppend(gramIdx, admitted, 10)) ==
-      rows(graft.operators.Dedup.gramIndex(union, 10)))
-    assert(rows(graft.operators.Dedup.bandIndexAppend(bandIdx, admitted, 3, 8, 4)) ==
-      rows(graft.operators.Dedup.minhashBandIndex(union, 3, 8, 4)))
+    assert(rows(Admission.bloomAppend(bits, admitted)) == rows(Admission.bloomBuild(union)))
+    assert(rows(Admission.gramIndexAppend(gramIdx, admitted)) ==
+      rows(Admission.gramIndex(union)))
+    assert(rows(Admission.bandIndexAppend(bandIdx, admitted)) ==
+      rows(Admission.minhashBandIndex(union)))
     // the lifecycle point: a re-delivery of an ADMITTED doc under a
     // fresh id passes gate 1 against the STALE bit table but is refused
     // by the APPENDED one — the update is what closes the loop
     val redelivery = admitted.limit(3)
       .withColumn("doc_id", col("doc_id") + 9000000L)
-      .withColumn("item", md5(col("text")))
-    val staleFresh = graft.operators.Freq.bloomProbe(
-        bits, redelivery, 3, 1 << 20)
-      .filter(!col("maybe_member")).count()
+    val staleFresh = Admission.bloomNovel(bits, redelivery).count()
     assert(staleFresh > 0, "stale bits should not know the admitted docs")
-    val updatedBits = graft.operators.Freq.bloomAppend(
-      bits, admitted.select(md5(col("text")).as("item")), 3, 1 << 20)
-    val updatedFresh = graft.operators.Freq.bloomProbe(
-        updatedBits, redelivery, 3, 1 << 20)
-      .filter(!col("maybe_member")).count()
+    val updatedBits = Admission.bloomAppend(bits, admitted)
+    val updatedFresh = Admission.bloomNovel(updatedBits, redelivery).count()
     assert(updatedFresh == 0, "appended bits must refuse re-delivered admitted docs")
   }
 
@@ -252,25 +238,17 @@ class ProgramsSpec extends AnyFunSuite {
       (100L, "wholly novel alpha content one", "s"),
       (101L, "different fresh beta material two", "s"))
       .toDF("doc_id", "text", "source")
-    val bits = graft.operators.Freq.bloomBuild(
-      corpus.select(md5(col("text")).as("item")), 3, 1 << 20).localCheckpoint()
-    val stored = Programs.ingestCore(bits,
-      graft.operators.Dedup.minhashBandIndex(corpus, 3, 8, 4),
-      graft.operators.Dedup.gramIndex(corpus, 10),
-      batch, quotaPerSource = 1L).localCheckpoint()
+    val bits = Admission.bloomBuild(corpus).localCheckpoint()
+    val stored = Programs.ingestCore(bits, Admission.minhashBandIndex(corpus),
+      Admission.gramIndex(corpus), batch, quotaPerSource = 1L).localCheckpoint()
     assert(stored.count() == 1, "quota 1 must store exactly one of the pair")
     val rejected = batch.join(stored.select("doc_id"), Seq("doc_id"), "left_anti")
       .localCheckpoint()
     assert(rejected.count() == 1)
-    val updated = graft.operators.Freq.bloomAppend(bits,
-      stored.select(md5(col("text")).as("item")), 3, 1 << 20).localCheckpoint()
-    val rejectedFresh = graft.operators.Freq.bloomProbe(
-        updated, rejected.withColumn("item", md5(col("text"))), 3, 1 << 20)
-      .filter(!col("maybe_member")).count()
+    val updated = Admission.bloomAppend(bits, stored).localCheckpoint()
+    val rejectedFresh = Admission.bloomNovel(updated, rejected).count()
     assert(rejectedFresh == 1, "quota-rejected doc must NOT be tombstoned as seen")
-    val storedRefused = graft.operators.Freq.bloomProbe(
-        updated, stored.withColumn("item", md5(col("text"))), 3, 1 << 20)
-      .filter(!col("maybe_member")).count()
+    val storedRefused = Admission.bloomNovel(updated, stored).count()
     assert(storedRefused == 0, "stored doc's re-delivery must be refused")
   }
 

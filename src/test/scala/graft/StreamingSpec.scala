@@ -558,15 +558,12 @@ class StreamingSpec extends AnyFunSuite {
       lit(0L).as("n_chars"))
     val batchDocs = d.filter(col("doc_id") % 10 === 0)
       .unionByName(redelivered).unionByName(quoter)
-    val bits = graft.operators.Freq.bloomBuild(
-      corpus.select(md5(col("text")).as("item")), 3, 1 << 20).localCheckpoint()
-    val bandIndex = graft.operators.Dedup.minhashBandIndex(corpus, 3, 8, 4)
-      .localCheckpoint()
-    val gramIndex = graft.operators.Dedup.gramIndex(corpus, 10).localCheckpoint()
+    val bits = Programs.Admission.bloomBuild(corpus).localCheckpoint()
+    val bandIndex = Programs.Admission.minhashBandIndex(corpus).localCheckpoint()
+    val gramIndex = Programs.Admission.gramIndex(corpus).localCheckpoint()
     val in = MemoryStream[(Long, Timestamp, String, String)]
     val df = in.toDF().toDF("doc_id", "ts", "text", "source")
     val q = StreamingJobs.ingestGateStream(df, bits, bandIndex, gramIndex,
-        k = 3, perms = 8, bands = 4, spanWords = 10,
         watermarkDelay = "10 minutes", windowDur = "1 hour")
       .writeStream.format("memory").queryName("ingest_gate_out")
       .outputMode("append").start()
@@ -620,15 +617,12 @@ class StreamingSpec extends AnyFunSuite {
     val d = graft.sources.Tables(spark, sfDir).documents
     val corpus = d.filter(col("doc_id") % 10 =!= 0)
     val batchDocs = d.filter(col("doc_id") % 10 === 0)
-    val bits = graft.operators.Freq.bloomBuild(
-      corpus.select(md5(col("text")).as("item")), 3, 1 << 20).localCheckpoint()
-    val bandIndex = graft.operators.Dedup.minhashBandIndex(corpus, 3, 8, 4)
-      .localCheckpoint()
-    val gramIndex = graft.operators.Dedup.gramIndex(corpus, 10).localCheckpoint()
+    val bits = Programs.Admission.bloomBuild(corpus).localCheckpoint()
+    val bandIndex = Programs.Admission.minhashBandIndex(corpus).localCheckpoint()
+    val gramIndex = Programs.Admission.gramIndex(corpus).localCheckpoint()
     val in = MemoryStream[(Long, Timestamp, String, String)]
     val df = in.toDF().toDF("doc_id", "ts", "text", "source")
     val stage1 = StreamingJobs.ingestGateStream(df, bits, bandIndex, gramIndex,
-        k = 3, perms = 8, bands = 4, spanWords = 10,
         watermarkDelay = "10 minutes", windowDur = "1 hour")
       .writeStream.format("parquet")
       .option("path", s"$dir/admitted")
@@ -1069,8 +1063,7 @@ class StreamingSpec extends AnyFunSuite {
     val tD = (1 to 12).map(i => s"yw$i").mkString(" ")
     def step(id: Long, rows: (Long, String, String)*): Unit =
       Programs.ingestBatchStep(rows.toDF("doc_id", "text", "source"), dir,
-        id, quotaPerSource = 5L, spanWords = 10, maintainEvery = 2,
-        bloomK = 3, bloomWidth = 1 << 20)
+        id, quotaPerSource = 5L, maintainEvery = 2)
     def at(path: String) = spark.read.parquet(path).collect().map(_.toString).toSet
     def gram(v: Long) = spark.read.parquet(s"$dir/gram_index_v$v")
       .select("h1", "h2", "df").collect()
@@ -1254,8 +1247,7 @@ class StreamingSpec extends AnyFunSuite {
       for ((rows, id) <- batches.zipWithIndex) {
         plant(id.toLong)
         Programs.ingestBatchStep(rows.toDF("doc_id", "text", "source"), dir, id.toLong,
-          quotaPerSource = 5L, spanWords = 10, maintainEvery = 2, bloomK = 3,
-          bloomWidth = 1 << 20)
+          quotaPerSource = 5L, maintainEvery = 2)
       }
     }
     val clean = s"${scratch("ingest_crash")}/${System.nanoTime()}"
@@ -1329,8 +1321,7 @@ class StreamingSpec extends AnyFunSuite {
         (100L * b + 5, words(s"n${b}b", 20), "s1")).toDF("doc_id", "text", "source")
     }
     def step(b: Int) = jobsAndReads(Programs.ingestBatchStep(batch(b), dir, b.toLong,
-      quotaPerSource = 5L, spanWords = 10, maintainEvery = 4, bloomK = 3,
-      bloomWidth = 1 << 20, resolver))
+      quotaPerSource = 5L, maintainEvery = 4, resolver))
     val Version = ".*/((?:bits|band_index|gram_index)_v\\d+)".r
     def versions(reads: Seq[org.apache.spark.sql.execution.datasources.FileIndex]) =
       reads.flatMap(i => i.rootPaths.map(_.toString).collect { case Version(n) => n -> i })
@@ -1366,10 +1357,10 @@ class StreamingSpec extends AnyFunSuite {
     assert(versions(replayed).map(_._1).toSet == runs(3)._2.map(_._1).toSet)
   }
 
-  test("LM step job budget: a probe batch runs 1 job and a fold batch 4") {
+  test("LM step job budget: a probe batch runs 1 job and a fold batch 2") {
     // One resolver across the direct step calls, as the stream holds one,
     // so each model version is collected once. A probe batch's one job is
-    // its admitted write; the fold adds the model rewrite's three (its
+    // its admitted write; the fold adds the model rewrite's one (its
     // window's emptiness comes from parquet footers, which runs no job);
     // batches 0 and 4 also collect the model version they are the first
     // to serve.
@@ -1383,7 +1374,7 @@ class StreamingSpec extends AnyFunSuite {
           .toDF("doc_id", "text", "lang"), dir, b.toLong, keepBelowMb = Long.MaxValue,
         maintainEvery = 4, refLang = "en", resolver)).starts.size
     }
-    assert(jobs == Seq(2, 1, 1, 4, 2),
+    assert(jobs == Seq(2, 1, 1, 2, 2),
       "jobs per batch (batch 3 folds; batches 0 and 4 collect a model version)")
     assert(Store.versions(dir, "lm_model").committed == Seq(0L, 4L))
     assert(spark.read.parquet(s"$dir/admitted").count() == 5)

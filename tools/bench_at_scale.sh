@@ -6,20 +6,7 @@
 #   tools/bench_at_scale.sh <sfDir> <outTag> <q1,q2,...>
 set -e -o pipefail
 SF="$1"; TAG="$2"; QS="$3"
-# Idle-host gate (round 11, tightened round 12): rounds 10 AND 11 both
-# committed benches captured in contended windows — r11's load-3.39
-# start passed the old 4.0 bound yet distorted shuffle-heavy queries
-# ~2x. On 32 CPUs a 1-min load of 2 is idle; refuse to time above it,
-# and give up loudly after 30 min so a permanently-busy host is visible
-# rather than silently mismeasured.
-MAX_LOAD="${BENCH_MAX_LOAD:-2.0}"
-for i in $(seq 1 120); do
-  L=$(cut -d' ' -f1 /proc/loadavg)
-  awk -v l="$L" -v m="$MAX_LOAD" 'BEGIN{exit !(l<=m)}' && break
-  echo "host load $L > $MAX_LOAD, waiting for idle ($i/120)..."
-  sleep 15
-  [ "$i" = 120 ] && { echo "WARNING: host never idled; timings suspect"; }
-done
+# graft.Bench waits for an idle host itself before it times anything.
 AO=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic \

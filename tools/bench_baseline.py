@@ -1,43 +1,28 @@
 #!/usr/bin/env python3
 """Record the DuckDB baseline for the headline queries (BASELINE.md).
 
-Usage: python3 tools/bench_baseline.py <sfDir> <verifyOutDir>
-<verifyOutDir> must contain oracle_sql.json from a full graft.Verify run
-(the oracle SQL is the semantics-identical DuckDB twin of each query).
+Usage: python3 tools/bench_baseline.py <sfDir> <verifyOutDir> [q1,q2,...]
+<verifyOutDir> must contain oracle_sql.json and headline.json from a full
+graft.Verify run (the oracle SQL is the semantics-identical DuckDB twin of
+each query; headline.json lists SparkEntry.headline). The optional third
+argument replaces the headline list.
 Per query: 3 runs in one warm process, best kept — the same best-of
 policy as Bench.scala's steady-state number.
 """
 import sys, os, json, time
 import duckdb
 
-# keep in sync with SparkEntry.headline (51 queries as of round 15)
-HEADLINE = ["q1_agg", "q_join_star", "q_component_activity", "q_dedup_minhash",
-            "q_sim_topk", "q_text_quality", "q_session_windows",
-            "q_asof_join", "q_range_join", "q_dedup_spans", "q_freq_heavyhitters",
-            "q_sim_kmeans", "q_freq_cms", "q_corpus_diff", "q_zorder",
-            "q_pagerank", "q_bloom_probe", "q_sample_quota", "q_salted_join",
-            "q_funnel", "q_event_transitions", "q_simjoin_prefix",
-            "q_agg_incremental",
-            "q_hll_users", "q_audio_pcm", "q_pagerank_events", "q_sim_ivfpq",
-            "q_chunk_docs", "q_bpe_merges", "q_bpe_tokenize_served",
-            "q_image_pixels", "q_video_frames", "q_sim_ivfpq_served",
-            "q_image_jpeg", "q_video_demux", "q_dedup_substrings", "q_sim_recall",
-            "q_sim_recall_pq", "q_sim_recall_ivfpq", "q_video_demux_mp4",
-            "q_dedup_substr_served", "q_dedup_recall", "q_ingest_gates",
-            "q_ingest_gates_served", "q_ingest_recall",
-            "q_dedup_recall_geom", "q_dedup_semdedup",
-            "q_text_perplexity", "q_text_perplexity_served", "q_sample_mixture",
-            "q_dedup_semdedup_probe2"]
 
 def main():
     sfdir, outdir = sys.argv[1], sys.argv[2]
-    # optional: override the headline list (keep in sync with SparkEntry.headline)
-    headline = sys.argv[3].split(",") if len(sys.argv) > 3 else HEADLINE
+    if len(sys.argv) > 3:
+        headline = sys.argv[3].split(",")
+    else:
+        headline = json.load(open(os.path.join(outdir, "headline.json")))
     oracles = json.load(open(os.path.join(outdir, "oracle_sql.json")))
     missing = [q for q in headline if q not in oracles]
     if missing:
-        sys.exit(f"headline queries missing from oracle dump (drifted from "
-                 f"SparkEntry.headline?): {missing}")
+        sys.exit(f"headline queries missing from oracle dump: {missing}")
     con = duckdb.connect()
     con.execute("SET threads TO 32")
     for t in ["region", "nation", "customer", "supplier", "part", "orders",
