@@ -218,8 +218,8 @@ object Programs {
     * Accepted rows carry the cut audit columns (n_removed, n_spans)
     * alongside qrank.
     *
-    * `stage` is applied to each frame that two consumers read: gate 1's
-    * survivors (the band probe and its anti-join) and the cut (the
+    * `stage` is applied to each frame that two consumers read: gate 2's
+    * survivors (gate 3's gram stream and its join back) and the cut (the
     * quota's counts and its ranks). A query keeps the default, one lazy
     * plan; the streaming step passes a materialization, so each
     * batch-sized frame is computed once ([[ingestBatchStep]]). */
@@ -239,13 +239,13 @@ object Programs {
     * shared surface ends here. */
   def admissionCut(bits: DataFrame, bandIndex: DataFrame, gramIndex: DataFrame,
       batch: DataFrame, stage: DataFrame => DataFrame = identity): DataFrame = {
-    val fresh = stage(Admission.bloomNovel(bits, batch))
-    val nearDups = Admission.bandProbe(fresh, bandIndex)
-    // pinned sort-merge: the collided ids arrive hash-partitioned by
-    // their distinct, so AQE's switch to a broadcast would only add a job,
-    // and the doc_id partitioning the join leaves serves gate 3's join
-    // back to its flagged starts
-    val novel = fresh.join(nearDups.hint("merge"), Seq("doc_id"), "left_anti")
+    val fresh = Admission.bloomNovel(bits, batch)
+    // the collided ids are batch-sized: a broadcast keeps the anti-join
+    // on fresh's own partitioning, where a sort-merge join would
+    // re-shuffle both sides (a single-partition batch to the default
+    // shuffle width)
+    val novel = stage(fresh.join(broadcast(Admission.bandProbe(fresh, bandIndex)),
+      Seq("doc_id"), "left_anti"))
     Admission.gramProbe(novel, gramIndex)
       .withColumn("text", col("clean_text"))
       .drop("clean_text")
@@ -372,19 +372,20 @@ object Programs {
     * gate geometry is [[Admission]]'s, the one [[ingestStoreInit]] built
     * the store with; the stream sets only the quota and the fold cadence.
     *
-    *  - the BLOOM arm folds EVERY batch ([[graft.operators.Freq
-    *    .bloomAppend]]): the bit table is KB-scale, the OR-in is
-    *    set-union, and it is the gate that refuses exact re-deliveries
-    *    — freshest where staleness costs correctness, cheapest to keep
-    *    fresh.
-    *  - the GRAM and BAND arms fold at `maintainEvery`-batch CADENCE
-    *    (`gramIndexAppend` / `bandIndexAppend`) by the stores' one fold
-    *    rule: `<name>_v<N>` folds every admitted batch below N, so a fold
-    *    reads the admitted batches its family's version has not folded
-    *    ([[foldAdmitted]]). Their rewrite is index-sized I/O — the
-    *    compaction-cadence cost the append operators document — and
-    *    paying it per micro-batch is not the 100 TB shape. Between
-    *    folds, gates 2–3 run against the last fold's versions: a
+    *  - every arm — BLOOM, GRAM and BAND — folds at `maintainEvery`-batch
+    *    CADENCE (`bloomAppend` / `gramIndexAppend` / `bandIndexAppend`)
+    *    by the stores' one fold rule: `<name>_v<N>` folds every admitted
+    *    batch below N, so a fold reads the admitted batches its family's
+    *    version has not folded ([[foldAdmitted]]). The index rewrites are
+    *    index-sized I/O — the compaction-cadence cost the append
+    *    operators document — and paying them per micro-batch is not the
+    *    100 TB shape.
+    *  - gate 1 stays exact between folds: it probes `bits_v<ver>` plus the
+    *    items of the admitted batches `ver ≤ b < batchId`, the bit set a
+    *    per-batch append would have committed, so a re-delivery of
+    *    content admitted earlier in the SAME stream is refused in-flight
+    *    without a per-batch bit-table rewrite.
+    *  - between folds, gates 2–3 run against the last fold's versions: a
     *    NEAR-dup (not exact copy) of very recent admissions can slip
     *    gate 2 until the next fold — the deliberate freshness/cost
     *    boundary, priced per-gate instead of papered over (the
@@ -394,12 +395,14 @@ object Programs {
     * [[graft.sources.Store.Resolver]]: each committed artifact version is
     * resolved once (its schema taken from the family, so no read runs a
     * schema-inference job) and serves every batch until retention drops
-    * it. Each batch-sized frame is computed once: [[ingestCore]]
-    * checkpoints gate 1's survivors and the admission cut where two
-    * consumers read them, and the admitted write materializes the stored
-    * set, which the bloom rewrite reads back. A probe batch runs 17 Spark
-    * jobs; a fold batch 29, or 28 when no admitted doc lands in a
-    * standing band bucket (StreamingSpec pins both).
+    * it. A micro-batch is ONE partition from its input on: its frames are
+    * batch-sized, so its aggregates and windows plan no exchange and its
+    * batch-vs-batch joins broadcast — the bound is that one task holds a
+    * micro-batch, which a stream keeps by its trigger size. Each gate
+    * runs once: [[ingestCore]] checkpoints gate 2's survivors and the
+    * admission cut, where two consumers read them. A probe batch runs 12
+    * Spark jobs in 3 SQL executions and writes only its admitted batch;
+    * a fold batch runs 19 (StreamingSpec pins both).
     *
     * Maintenance appends derive from ingestCore's POST-QUOTA output —
     * what the store actually carries (the r13 ADVICE invariant: a
@@ -421,10 +424,11 @@ object Programs {
     * the SAME state it probed the first time and reproduces its
     * admissions and its per-batch-dir overwrite of `admitted`. Every
     * version the first run committed is SKIPPED on replay
-    * (`Versions.commit`): the bloom rewrite, and a cadence fold that
-    * committed before the crash. A fold that did not commit re-reads
-    * the same window (the fold rule fixes it by arithmetic), so no
-    * replay can double or drop docs' df counts. Keep-two retention is
+    * (`Versions.commit`): a cadence fold that committed before the crash.
+    * A fold that did not commit re-reads the same window, and gate 1 the
+    * same `[ver, batchId)` batches (the fold rule fixes both by
+    * arithmetic), so no replay can double or drop docs' df counts or
+    * refuse its own admissions. Keep-two retention is
     * exactly what guarantees the ≤ batchId version is still on disk:
     * Spark replays at most the last uncommitted batch. StreamingSpec drives
     * the replay windows through [[ingestBatchStep]] directly.
@@ -450,8 +454,8 @@ object Programs {
     * crash-replay windows can be driven directly (StreamingSpec): the
     * stream's foreachBatch delegates here verbatim, with the stream's
     * one `resolver`. Deterministic in (batchId, batch rows, versions ≤
-    * batchId, the admitted batches its fold window reads) — see the
-    * replay contract on [[ingestProgramStream]]. */
+    * batchId, the admitted batches its gate-1 and fold windows read) —
+    * see the replay contract on [[ingestProgramStream]]. */
   private[graft] def ingestBatchStep(batch: DataFrame, storeDir: String,
       batchId: Long, quotaPerSource: Long, maintainEvery: Int,
       resolver: Store.Resolver = new Store.Resolver): Unit = {
@@ -463,36 +467,49 @@ object Programs {
     // probe the artifacts its first run wrote (they contain its own
     // docs — it would refuse them and overwrite `admitted` empty)
     def read(v: Store.Versions) = resolver.frame(spark, v, resolver.latest(v, batchId))
-    val bits = read(bitsV)
+    val bitsVer = resolver.latest(bitsV, batchId)
+    val bits = resolver.frame(spark, bitsV, bitsVer)
     val bandIdx = read(bandV)
     val gramIdx = read(gramV)
-    // gate 1's survivors and the cut are checkpointed where ingestCore
-    // stages them, so each is computed once; the admitted write then
-    // materializes the stored set, and every later write reads it back,
-    // so no artifact is rewritten from a lazy plan over a replaced version
-    val core = ingestCore(bits, bandIdx, gramIdx, batch, quotaPerSource,
-      _.localCheckpoint())
-    val admitted = s"$storeDir/admitted/batch=$batchId"
-    core.write.mode("overwrite").parquet(admitted)
-    val stored = spark.read.schema(core.schema).parquet(admitted)
-    bitsV.commit(batchId + 1)(Admission.bloomAppend(bits, stored).write.parquet(_))
-    bitsV.retain()
+    // gate 1 probes the bit table the per-batch appends would have built:
+    // bits_v<ver> plus the items of the batches it has not folded yet,
+    // `ver ≤ b < batchId`
+    val seen = admittedWindow(spark, storeDir, TextOnly, bitsVer, batchId - 1)
+      .fold(bits)(Admission.bloomAppend(bits, _))
+    // gate 2's survivors and the cut are checkpointed where ingestCore
+    // stages them, so each gate runs once; a micro-batch is one partition
+    // from its input on, so no batch-sized frame plans an exchange, and
+    // the checkpoint restates the single partition its adaptive plan hides
+    val core = ingestCore(seen, bandIdx, gramIdx, batch.coalesce(1), quotaPerSource,
+      _.coalesce(1).localCheckpoint().coalesce(1))
+    core.write.mode("overwrite").parquet(s"$storeDir/admitted/batch=$batchId")
     if ((batchId + 1) % maintainEvery == 0)
       foldAdmitted(spark, resolver, storeDir, core.schema, batchId, "doc_id", "text")(
         (gramV, Admission.gramIndexAppend(gramIdx, _).write.parquet(_)),
-        (bandV, Admission.bandIndexAppend(bandIdx, _).write.parquet(_)))
+        (bandV, Admission.bandIndexAppend(bandIdx, _).write.parquet(_)),
+        (bitsV, Admission.bloomAppend(bits, _).write.parquet(_)))
+  }
+
+  private val TextOnly = StructType.fromDDL("text string")
+
+  /** The admitted batches `from..to` that hold rows, read with `schema`
+    * as one partition (a window is a few micro-batches), or None when
+    * none does. Each batch dir is looked up by id (a gap is skipped) and
+    * its emptiness read from its parquet footers, so this lists nothing
+    * else and runs no job. */
+  private def admittedWindow(spark: SparkSession, storeDir: String, schema: StructType,
+      from: Long, to: Long): Option[DataFrame] = {
+    val dirs = (from to to).map(b => s"$storeDir/admitted/batch=$b").filter(Fs.parquetRows(_) > 0)
+    Option.when(dirs.nonEmpty)(spark.read.schema(schema).parquet(dirs: _*).coalesce(1))
   }
 
   /** The program stores' one fold rule: `<name>_v<N>` folds every
     * per-batch output below N. A cadence fold at `batchId` commits
     * version `batchId + 1` of each arm's family from the admitted batches
     * its standing version `ver` (the newest committed ≤ batchId) has not
-    * folded — every `admitted/batch=b` with `ver ≤ b ≤ batchId`, read
-    * with `schema` and projected to `cols` — through the arm's
-    * `write(docs, path)`. The driver's work is the window's: each batch
-    * dir in it is looked up by id (a missing one, a gap, is skipped) and
-    * its emptiness read from its parquet footers, so a fold neither lists
-    * all of `admitted/` nor runs a job to find an empty window. Each
+    * folded — every `admitted/batch=b` with `ver ≤ b ≤ batchId`
+    * ([[admittedWindow]], read with `schema` and projected to `cols`) —
+    * through the arm's `write(docs, path)`. Each
     * arm's window follows its own family's version, so a crash between
     * two arms' commits still folds the second arm exactly on replay;
     * arms at one version share one window read. A
@@ -504,15 +521,12 @@ object Programs {
   private def foldAdmitted(spark: SparkSession, resolver: Store.Resolver, storeDir: String,
       schema: StructType, batchId: Long, cols: String*)(
       arms: (Store.Versions, (DataFrame, String) => Unit)*): Unit = {
-    for ((ver, same) <- arms.groupBy(arm => resolver.latest(arm._1, batchId))) {
-      val window = (ver to batchId).map(b => s"$storeDir/admitted/batch=$b")
-        .filter(Fs.parquetRows(_) > 0)
-      if (window.nonEmpty) {
-        val docs = spark.read.schema(schema).parquet(window: _*).select(cols.map(col): _*)
-        same.foreach { case (family, write) =>
-          family.commit(batchId + 1)(write(docs, _))
-          family.retain()
-        }
+    for ((ver, same) <- arms.groupBy(arm => resolver.latest(arm._1, batchId));
+        window <- admittedWindow(spark, storeDir, schema, ver, batchId)) {
+      val docs = window.select(cols.map(col): _*)
+      same.foreach { case (family, write) =>
+        family.commit(batchId + 1)(write(docs, _))
+        family.retain()
       }
     }
   }

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -159,28 +161,15 @@ object Dedup {
       .agg(countDistinct(col("doc_id")).as("df"))
       .select(col("h1").as("h1", spanWordsMeta(spanWords)), col("h2"), col("df"))
 
-  /** The build-time span width rides the index schema as column metadata
-    * on `h1` (parquet and `saveAsTable` both round-trip it), so a probe
-    * at a DIFFERENT width — whose digests would silently never match and
-    * cut nothing — fails loudly instead (r14 ADVICE on admissionCut's
-    * independent spanWords parameter). */
-  private def spanWordsMeta(spanWords: Int) =
-    new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong("graft.span_words", spanWords.toLong).build()
+  /** The build-time span width rides the index schema as metadata on
+    * `h1` ([[Geometry]]), so a probe at a DIFFERENT width — whose digests
+    * would silently never match and cut nothing — fails loudly instead. */
+  private def spanGeometry(spanWords: Int) = Seq("graft.span_words" -> spanWords.toLong)
 
-  /** Loud-mismatch check: enforced only when the index schema still
-    * carries the build-time width (a hand-built frame without it probes
-    * unchecked, the pre-r14 contract). */
-  private[graft] def requireSpanWords(index: DataFrame, spanWords: Int, op: String): Unit = {
-    val meta = index.schema.fields.find(_.name == "h1").map(_.metadata)
-    meta.filter(_.contains("graft.span_words")).foreach { m =>
-      val built = m.getLong("graft.span_words")
-      require(built == spanWords,
-        s"$op: gram index was built with spanWords=$built but is being " +
-          s"probed/appended with spanWords=$spanWords — digests would never " +
-          "match and the cut would silently do nothing")
-    }
-  }
+  private def spanWordsMeta(spanWords: Int) = Geometry.meta(spanGeometry(spanWords))
+
+  private[graft] def requireSpanWords(index: DataFrame, spanWords: Int, op: String): Unit =
+    Geometry.check(index, "h1", spanGeometry(spanWords), op, "gram index")
 
   /** APPEND an admitted batch into a standing gram index (r13 — the
     * maintenance half of the ingest lifecycle the index docs promise):
@@ -693,41 +682,53 @@ object Dedup {
       bands: Int): DataFrame =
     minhashBandKeys(corpus, k, perms, bands)
       .withColumn("bsz", count(lit(1)).over(Window.partitionBy(col("band"), col("bk"))))
+      .select(col("doc_id"), col("band"), bandKey(k, perms, bands), col("bsz"))
+
+  /** The build-time (k, perms, bands) ride the index schema as metadata
+    * on `bk` ([[Geometry]]): a probe or append under another geometry
+    * derives band keys no stored bucket holds, so it fails loudly. */
+  private def bandGeometry(k: Int, perms: Int, bands: Int) =
+    Seq("graft.shingle_k" -> k.toLong, "graft.perms" -> perms.toLong, "graft.bands" -> bands.toLong)
+
+  private def bandKey(k: Int, perms: Int, bands: Int): Column =
+    col("bk").as("bk", Geometry.meta(bandGeometry(k, perms, bands)))
+
+  private[graft] def requireBandGeometry(index: DataFrame, k: Int, perms: Int, bands: Int,
+      op: String): Unit =
+    Geometry.check(index, "bk", bandGeometry(k, perms, bands), op, "band index")
 
   /** APPEND an admitted batch into a standing band index (r13, the
     * [[gramIndexAppend]] posture): returns the index of
     * `corpus ∪ admitted` for disjoint doc-id sets — equivalence
     * property-tested. `bsz` is the build-time bucket population, so
-    * every EXISTING row of a touched bucket must also move: the delta's
-    * per-bucket counts are a batch-sized aggregate BROADCAST onto the
-    * standing rows (zero index-side shuffle, every old row updated
-    * row-locally), and the new rows take old-bucket-size + their own
-    * count. The index rewrite itself is maintenance-cadence I/O, as in
-    * [[gramIndexAppend]]. */
+    * every EXISTING row of a touched bucket must also move.
+    *
+    * The delta is batch-sized, so it is keyed ONCE, eagerly: one job
+    * derives and collects its band keys. The returned plan then scans the
+    * index once per side of one split: rows outside the delta's keys pass
+    * through unchanged, and the rows inside them join the delta's rows
+    * (a local relation) in one bucket window that re-counts exactly the
+    * touched buckets — a batch-bounded shuffle, never an index-sized
+    * one. The split filters on `bk` alone; a bucket of another band that
+    * shares one re-counts to its own size. The index rewrite itself is
+    * maintenance-cadence I/O, as in [[gramIndexAppend]]. */
   def bandIndexAppend(index: DataFrame, admitted: DataFrame, k: Int,
       perms: Int, bands: Int): DataFrame = {
-    val newKeys = minhashBandKeys(admitted, k, perms, bands)
-      .withColumn("new_n", count(lit(1)).over(Window.partitionBy(col("band"), col("bk"))))
-    val newCounts = newKeys.groupBy(col("band"), col("bk"))
-      .agg(max(col("new_n")).as("new_n"))
-    // old sizes are needed only for TOUCHED buckets: semi-join the index
-    // scan against the broadcast batch buckets first, so the aggregate
-    // (and the broadcast back) is batch-bounded, never index-sized
-    val touchedOldSizes = index
-      .join(broadcast(newCounts.select(col("band"), col("bk"))),
-        Seq("band", "bk"), "left_semi")
-      .groupBy(col("band"), col("bk"))
-      .agg(max(col("bsz")).as("old_bsz"))
-    val bumpedOld = index
-      .join(broadcast(newCounts), Seq("band", "bk"), "left")
-      .withColumn("bsz", col("bsz") + coalesce(col("new_n"), lit(0L)))
-      .drop("new_n")
-    val newRows = newKeys
-      .join(broadcast(touchedOldSizes), Seq("band", "bk"), "left")
-      .withColumn("bsz", col("new_n") + coalesce(col("old_bsz"), lit(0L)))
-      .select(col("doc_id"), col("band"), col("bk"), col("bsz"))
-    bumpedOld.select(col("doc_id"), col("band"), col("bk"), col("bsz"))
-      .unionByName(newRows)
+    requireBandGeometry(index, k, perms, bands, "bandIndexAppend")
+    val keyed = minhashBandKeys(admitted, k, perms, bands)
+    val keys = keyed.collect().toSeq
+    val touched = col("bk").isin(keys.map(_.getAs[Any]("bk")).distinct: _*)
+    val bucket = Window.partitionBy(col("band"), col("bk"))
+    val moved = index.filter(touched)
+      .select(col("doc_id"), col("band"), col("bk"), col("bsz").as("old"), lit(0L).as("new"))
+      .unionByName(index.sparkSession.createDataFrame(keys.asJava, keyed.schema)
+        .withColumn("old", lit(null).cast("long")).withColumn("new", lit(1L)))
+      .select(col("doc_id"), col("band"), col("bk"),
+        (coalesce(max(col("old")).over(bucket), lit(0L)) + sum(col("new")).over(bucket))
+          .as("bsz"))
+    index.filter(!touched).select(col("doc_id"), col("band"), col("bk"), col("bsz"))
+      .unionByName(moved)
+      .select(col("doc_id"), col("band"), bandKey(k, perms, bands), col("bsz"))
   }
 
   /** Probe a band index with a delta batch: for each delta doc that
@@ -747,7 +748,8 @@ object Dedup {
     * needed: hits dedup by (delta, corpus) pair, a delta-sized
     * distinct, not the n² pair stream of the full pipeline). */
   def probeBandIndex(delta: DataFrame, index: DataFrame, k: Int, perms: Int,
-      bands: Int, maxBucket: Int = 10000): DataFrame =
+      bands: Int, maxBucket: Int = 10000): DataFrame = {
+    requireBandGeometry(index, k, perms, bands, "probeBandIndex")
     minhashBandKeys(delta, k, perms, bands)
       .join(index.filter(col("bsz") <= maxBucket)
           .select(col("band"), col("bk"), col("doc_id").as("dup_of")),
@@ -756,6 +758,7 @@ object Dedup {
       .distinct()
       .groupBy(col("doc_id"))
       .agg(min(col("dup_of")).as("dup_of"), count(lit(1)).as("n_dups"))
+  }
 
   /** Incremental near-dup detection, inline form: build the corpus index
     * and probe it with `delta` in one plan (the oracle-checked shape;

@@ -255,7 +255,19 @@ object Freq {
     * next to the corpus and every future ingest batch probes it for the
     * cost of a broadcast. */
   def bloomBuild(items: DataFrame, k: Int, width: Int): DataFrame =
-    bitRows(items, k, width).distinct()
+    withGeometry(bitRows(items, k, width).distinct(), k, width)
+
+  /** The build-time (k, width) ride the bit table's schema as metadata
+    * on `pos` ([[Geometry]]): a probe or append under another geometry
+    * derives bit positions the table never set, so it fails loudly. */
+  private def bloomGeometry(k: Int, width: Int) =
+    Seq("graft.bloom_k" -> k.toLong, "graft.bloom_width" -> width.toLong)
+
+  private def withGeometry(bits: DataFrame, k: Int, width: Int): DataFrame =
+    bits.select(col("j"), col("pos").as("pos", Geometry.meta(bloomGeometry(k, width))))
+
+  private def requireBloomGeometry(bits: DataFrame, k: Int, width: Int, op: String): Unit =
+    Geometry.check(bits, "pos", bloomGeometry(k, width), op, "bit table")
 
   /** Every item's k (j, pos) rows, duplicates kept. */
   private def bitRows(items: DataFrame, k: Int, width: Int): DataFrame = {
@@ -273,8 +285,10 @@ object Freq {
     * batch's own bit derivation — maintenance is as cheap as the probe.
     * That bound is why the union dedups in ONE task: no shuffle, and the
     * rewrite is a single job. */
-  def bloomAppend(bits: DataFrame, items: DataFrame, k: Int, width: Int): DataFrame =
-    bits.unionByName(bitRows(items, k, width)).coalesce(1).distinct()
+  def bloomAppend(bits: DataFrame, items: DataFrame, k: Int, width: Int): DataFrame = {
+    requireBloomGeometry(bits, k, width, "bloomAppend")
+    withGeometry(bits.unionByName(bitRows(items, k, width)).coalesce(1).distinct(), k, width)
+  }
 
   // ---- HyperLogLog ---------------------------------------------------------
   //
@@ -416,6 +430,7 @@ object Freq {
     * probe. */
   def bloomProbe(bits: DataFrame, probes: DataFrame, k: Int, width: Int): DataFrame = {
     require(k >= 1 && width >= 2, s"bloomProbe: k=$k width=$width")
+    requireBloomGeometry(bits, k, width, "bloomProbe")
     val reserved = (0 until k).flatMap(j => Seq(s"_bp$j", s"_hit$j")) ++
       Seq("n_hits", "maybe_member")
     val clash = probes.columns.filter(reserved.contains)

@@ -222,6 +222,7 @@ object StreamingJobs {
       perms: Int, bands: Int, watermarkDelay: String, windowDur: String,
       maxBucket: Int = 10000): DataFrame = {
     require(perms % bands == 0, s"perms ($perms) must be a multiple of bands ($bands)")
+    graft.operators.Dedup.requireBandGeometry(index, k, perms, bands, "incrementalDedupStream")
     val rows = perms / bands
     // watermark at the SOURCE, not post-join: every arriving doc
     // advances the event clock, so windows close even when a batch has

@@ -70,6 +70,27 @@ object CurationProps extends Properties("CurationSemantics") {
       self == nEligible && none == 0
     }
 
+  /** A Bloom append is set union, so folding a window of batches at
+    * once probes exactly as appending them one by one: the bit sets and
+    * every verdict agree, false positives included (the narrow table
+    * makes them common). */
+  property("bloom: one append of a window probes as the chain of per-batch appends") =
+    Prop.forAll(Gen.listOfN(4, genText), Gen.listOfN(3, Gen.listOfN(3, genText)),
+        Gen.listOfN(4, genText)) { (corpus, batches, novel) =>
+      import graft.operators.Freq
+      val (k, width) = (3, 64)
+      def items(ts: List[String]) = docsOf(ts).select(col("text").as("item"))
+      val bits = Freq.bloomBuild(items(corpus), k, width)
+      val chain = batches.foldLeft(bits)((b, batch) => Freq.bloomAppend(b, items(batch), k, width))
+      val once = Freq.bloomAppend(bits, items(batches.flatten), k, width)
+      val probes = docsOf(corpus ++ batches.flatten ++ novel).withColumn("item", col("text"))
+      def bitSet(b: org.apache.spark.sql.DataFrame) =
+        b.collect().map(r => (r.getInt(0), r.getLong(1))).toSet
+      def verdicts(b: org.apache.spark.sql.DataFrame) = Freq.bloomProbe(b, probes, k, width)
+        .select(col("doc_id"), col("n_hits")).collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+      bitSet(once) == bitSet(chain) && verdicts(once) == verdicts(chain)
+    }
+
   // ---- sequence packing ----------------------------------------------------
 
   /** Order keys cluster (duplicates + sub-shard-boundary values), shards

@@ -12,7 +12,17 @@ object JobProbe {
 
   /** The jobs a block started on its thread, and the task ends of their
     * stages. */
-  final case class Jobs(starts: Seq[SparkListenerJobStart], taskEnds: Seq[SparkListenerTaskEnd])
+  final case class Jobs(starts: Seq[SparkListenerJobStart], taskEnds: Seq[SparkListenerTaskEnd]) {
+
+    /** Each job's SQL execution (`spark.sql.execution.id`), or None for a
+      * job no query ran, such as an RDD action. */
+    def executionOf(job: SparkListenerJobStart): Option[Long] =
+      Option(job.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+        .map(_.toLong)
+
+    /** The SQL executions the jobs ran under, in the order they started. */
+    def executions: Seq[Long] = starts.flatMap(executionOf).distinct
+  }
 
   /** Runs `f` and returns the jobs it ran on this thread. Jobs are tagged
     * with a local property; a marker job posted last drains the listener

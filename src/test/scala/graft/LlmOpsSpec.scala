@@ -590,6 +590,41 @@ class LlmOpsSpec extends AnyFunSuite {
       Dedup.probeGramIndex(delta, spark.read.parquet(pdir), spanWords = 12))
   }
 
+  test("the bloom bit table records its geometry: a probe or append under another one throws") {
+    import spark.implicits._
+    val items = Seq("alpha beta", "gamma delta", "epsilon").toDF("item")
+    val probes = Seq((1L, "alpha beta"), (2L, "zeta")).toDF("doc_id", "item")
+    val bits = Freq.bloomBuild(items, k = 3, width = 1024)
+    val e1 = intercept[IllegalArgumentException](Freq.bloomProbe(bits, probes, 3, 2048))
+    assert(e1.getMessage.contains("bloomWidth=1024"), e1.getMessage)
+    intercept[IllegalArgumentException](Freq.bloomProbe(bits, probes, 4, 1024))
+    intercept[IllegalArgumentException](Freq.bloomAppend(bits, probes.select("item"), 3, 2048))
+    // an append keeps the geometry, and parquet round-trips it
+    val pdir = s"${scratch("bloomgeom")}/${System.nanoTime()}"
+    Freq.bloomAppend(bits, probes.select("item"), 3, 1024).write.parquet(pdir)
+    intercept[IllegalArgumentException](Freq.bloomProbe(spark.read.parquet(pdir), probes, 3, 2048))
+    assert(Freq.bloomProbe(spark.read.parquet(pdir), probes, 3, 1024)
+      .filter(col("maybe_member")).count() == 2)
+  }
+
+  test("the minhash band index records its geometry: a probe or append under another one throws") {
+    import spark.implicits._
+    val corpus = Seq((1L, "a b c d e f g h i j"), (2L, "k l m n o p q r s t")).toDF("doc_id", "text")
+    val delta = Seq((3L, "a b c d e f g h i x")).toDF("doc_id", "text")
+    val idx = Dedup.minhashBandIndex(corpus, k = 3, perms = 8, bands = 4)
+    val e1 = intercept[IllegalArgumentException](Dedup.probeBandIndex(delta, idx, 3, 8, 2))
+    assert(e1.getMessage.contains("bands=4"), e1.getMessage)
+    intercept[IllegalArgumentException](Dedup.probeBandIndex(delta, idx, 2, 8, 4))
+    intercept[IllegalArgumentException](Dedup.bandIndexAppend(idx, delta, 3, 12, 4))
+    // an append keeps the geometry, and parquet round-trips it
+    val pdir = s"${scratch("bandgeom")}/${System.nanoTime()}"
+    Dedup.bandIndexAppend(idx, delta, 3, 8, 4).write.parquet(pdir)
+    intercept[IllegalArgumentException](
+      Dedup.probeBandIndex(delta, spark.read.parquet(pdir), 3, 8, 2))
+    assert(Dedup.probeBandIndex(delta, spark.read.parquet(pdir), 3, 8, 4)
+      .filter(col("doc_id") === 3L).count() == 1)
+  }
+
   test("served ingest pipeline equals the inline 4-gate form, rows and audits") {
     // the q_dedup_substr_served posture applied to the whole admission
     // pipeline: the served form probes PERSISTED bloom/band/gram

@@ -744,9 +744,10 @@ class StreamingSpec extends AnyFunSuite {
 
   test("online ingest closes the maintenance loop: same-stream re-delivery refused, quota rejects stay admissible, cadence folds the gram index") {
     // r14 (the r13 verdict's open-loop gap): ingestProgramStream folds
-    // what it ADMITS back into the standing artifacts — the bloom arm
-    // every batch, the gram/band arms at cadence — so the store the
-    // gates probe is the store the stream is building.
+    // what it ADMITS back into the standing artifacts at cadence, and
+    // gate 1 also probes the batches admitted since its bit table's
+    // fold — so the store the gates probe is the store the stream is
+    // building.
     implicit val ctx = spark.sqlContext
     import org.apache.spark.sql.functions._
     val dir = s"${scratch("ingest_online")}/${System.nanoTime()}"
@@ -772,8 +773,9 @@ class StreamingSpec extends AnyFunSuite {
       val keptText = b0.head._2
       val rejText = if (keptText == tA) tB else tA
       // batch 1: the STORED text re-delivered under a fresh id is
-      // refused IN-FLIGHT (the per-batch bloom fold — content admitted
-      // earlier in the SAME stream); the quota-REJECTED text is
+      // refused IN-FLIGHT (gate 1 probes the batches its bit table has
+      // not folded — content admitted earlier in the SAME stream); the
+      // quota-REJECTED text is
       // admitted (post-quota appends: no seen-but-unstored tombstone)
       in.addData((200L, keptText, "s"), (201L, rejText, "s2"))
       q.processAllAvailable()
@@ -801,8 +803,10 @@ class StreamingSpec extends AnyFunSuite {
       assert(!cutText.contains(passage) && cutText.contains("qw1") &&
         cutText.contains("qz2"),
         "the quoted passage must be cut, the doc's own words kept")
-      // the bloom arm versioned every batch; gram/band only at cadence
-      assert(new java.io.File(s"$dir/bits_v3/${Store.Marker}").isFile)
+      // every arm, the bloom arm included, folds at cadence
+      assert(new java.io.File(s"$dir/bits_v2/${Store.Marker}").isFile)
+      assert(!new java.io.File(s"$dir/bits_v3").exists,
+        "the bit table must fold at cadence, not per batch")
       assert(!new java.io.File(s"$dir/gram_index_v3").exists,
         "gram index must fold at cadence, not per batch")
     } finally q.stop()
@@ -1254,7 +1258,12 @@ class StreamingSpec extends AnyFunSuite {
     val dir = s"${clean}_planted"
     run(clean)(_ => ())
     run(dir) {
-      case 0L => plantCrashed(s"$dir/bits_v1")
+      case 0L =>
+        // a complete bit table of batch 1's own text at a version no batch
+        // commits (the bloom arm folds at cadence): read, it would refuse
+        // batch 1's doc at gate 1
+        Programs.Admission.bloomBuild(batches(1).map(r => (r._1, r._2)).toDF("doc_id", "text"))
+          .write.parquet(s"$dir/bits_v1")
       case _ =>
         Seq("bits_v2", "gram_index_v2", "band_index_v2").foreach(n => plantCrashed(s"$dir/$n"))
         // complete data at a version batch 1 would read if markers were
@@ -1264,19 +1273,20 @@ class StreamingSpec extends AnyFunSuite {
             batches(1).map(r => (r._1, r._2)).toDF("doc_id", "text"), 10)
           .write.parquet(s"$dir/gram_index_v1")
     }
-    for (n <- Seq("bits_v1", "bits_v2", "gram_index_v2", "band_index_v2")) {
+    for (n <- Seq("bits_v2", "gram_index_v2", "band_index_v2")) {
       assert(Fs.exists(s"$dir/$n/${Store.Marker}"), s"$n must be committed")
       assert(rowsAt(s"$dir/$n") == rowsAt(s"$clean/$n"), s"$n must equal the unplanted run")
     }
+    assert(!Fs.exists(s"$dir/bits_v1/${Store.Marker}"), "no batch commits bits_v1")
     assert(rowsAt(s"$clean/admitted").length == 2)
     assert(rowsAt(s"$dir/admitted") == rowsAt(s"$clean/admitted"),
-      "the uncommitted gram_index_v1 must never be read")
+      "the uncommitted bits_v1 and gram_index_v1 must never be read")
   }
 
   /** Runs `f` and returns the Spark jobs it ran on this thread
     * ([[JobProbe]]) and the file indexes its queries read. The suite runs
     * one query at a time, so every query event in the window is `f`'s. */
-  private def jobsAndReads(f: => Unit): (Int, Seq[org.apache.spark.sql.execution.datasources.FileIndex]) = {
+  private def jobsAndReads(f: => Unit): (JobProbe.Jobs, Seq[org.apache.spark.sql.execution.datasources.FileIndex]) = {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation}
     import org.apache.spark.sql.util.QueryExecutionListener
@@ -1294,20 +1304,20 @@ class StreamingSpec extends AnyFunSuite {
     }
     spark.listenerManager.register(queries)
     import scala.jdk.CollectionConverters._
-    try (JobProbe(f).starts.size, reads.asScala.toSeq)
+    try (JobProbe(f), reads.asScala.toSeq)
     finally spark.listenerManager.unregister(queries)
   }
 
-  test("ingest step job budget: a probe batch runs 17 jobs and a fold batch 28") {
+  test("ingest step job budget: a probe batch runs 12 jobs in 3 executions and a fold batch 19 in 7") {
     // One resolver across the direct step calls, as the stream holds
     // one: each version is resolved once per stream and only while
     // committed. Every batch meets every gate: a re-delivery (gate 1), a near
     // copy (gate 2), a quoted passage (gate 3) and novel docs, so no
-    // probe stage is skipped for an empty input. The fold's count is 28
-    // here: no admitted doc lands in a standing band bucket, so AQE skips
-    // bandIndexAppend's broadcast of touched-bucket sizes (29 when one
-    // does, as in the benchmark's ingest stream). The fold reads its
-    // window's emptiness from parquet footers, which runs no job.
+    // probe stage is skipped for an empty input. A probe batch runs three
+    // executions: gates 1-2 staged, gate 3's cut staged, and the admitted
+    // write. The fold adds the gram rewrite, the band append's key collect
+    // and rewrite, and the bloom rewrite. The fold reads its window's
+    // emptiness from parquet footers, which runs no job.
     val corpus = (1 to 12).map(i => (i.toLong, words(s"c${i}w", 30), s"s${i % 3}"))
       .toDF("doc_id", "text", "source")
     val dir = s"${scratch("ingest_jobs")}/${System.nanoTime()}"
@@ -1338,23 +1348,77 @@ class StreamingSpec extends AnyFunSuite {
       assert(spark.read.parquet(s"$dir/admitted/batch=$b").select("doc_id", "n_removed")
         .collect().map(r => r.getLong(0) - 100L * b -> r.getLong(1)).toSet ==
         Set(3L -> 12L, 4L -> 0L, 5L -> 0L), s"batch $b")
-      (jobs, versions(reads))
+      (jobs.starts.size, jobs.executions.size, versions(reads))
     }
-    assert(runs.map(_._1) == Seq(17, 17, 17, 28),
-      "jobs per batch (batch 3 folds): 17 per probe batch, 28 per fold batch")
+    assert(runs.map(r => (r._1, r._2)) == Seq((12, 3), (12, 3), (12, 3), (19, 7)),
+      "(jobs, executions) per batch (batch 3 folds): 12 in 3 per probe batch, 19 in 7 per fold batch")
     // batches 1 and 2 read band_index_v0 and gram_index_v0 through the
     // same file index: resolved once, not re-resolved per batch
     for (n <- Seq("band_index_v0", "gram_index_v0")) {
-      val (one, two) = (runs(1)._2.filter(_._1 == n), runs(2)._2.filter(_._1 == n))
+      val (one, two) = (runs(1)._3.filter(_._1 == n), runs(2)._3.filter(_._1 == n))
       assert(one.nonEmpty && two.nonEmpty && one.forall(a => two.forall(_._2 eq a._2)),
         s"$n was resolved again")
     }
-    assert(!Fs.exists(s"$dir/bits_v2") && Fs.exists(s"$dir/bits_v4"),
-      "retention dropped the early bits versions")
+    assert(Store.versions(dir, "bits").committed == Seq(0L, 4L),
+      "the bit table folds at cadence, beside the gram and band indexes")
     // a replay of the fold batch through the same resolver reads the
     // same versions its first run did, though newer ones now exist
     val (_, replayed) = step(3)
-    assert(versions(replayed).map(_._1).toSet == runs(3)._2.map(_._1).toSet)
+    assert(versions(replayed).map(_._1).toSet == runs(3)._3.map(_._1).toSet)
+  }
+
+  /** Every file under `dir` with its size and modification time. */
+  private def files(dir: String): Set[(String, Long, Long)] = {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val walk = Files.walk(Paths.get(dir))
+    try walk.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => (p.toString, Files.size(p), Files.getLastModifiedTime(p).toMillis)).toSet
+    finally walk.close()
+  }
+
+  test("ingest probe batch writes only its admitted batch: no per-batch artifact rewrite") {
+    val corpus = Seq((1L, words("cw", 30), "base")).toDF("doc_id", "text", "source")
+    val dir = s"${scratch("ingest_probe_writes")}/${System.nanoTime()}"
+    Programs.ingestStoreInit(corpus, dir)
+    val resolver = new Store.Resolver
+    for (b <- 0L to 2L) {
+      val before = files(dir)
+      Programs.ingestBatchStep(Seq((100L + b, words(s"n${b}w", 12), "s"))
+          .toDF("doc_id", "text", "source"), dir, b, quotaPerSource = 5L, maintainEvery = 4,
+        resolver)
+      val after = files(dir)
+      val touched = ((after -- before) ++ (before -- after)).map(_._1)
+      assert(touched.nonEmpty && touched.forall(_.startsWith(s"$dir/admitted/batch=$b/")),
+        s"probe batch $b wrote outside its admitted batch: ${touched.toSeq.sorted}")
+    }
+    for (n <- Seq("bits", "band_index", "gram_index"))
+      assert(Store.versions(dir, n).committed == Seq(0L), n)
+  }
+
+  test("ingest probe replay: a replayed probe batch reads the same gate-1 window and admits the same rows") {
+    // Gate 1 probes bits_v<ver> plus the admitted batches ver ≤ b < batchId.
+    // A probe batch replayed after its admitted write must not read its
+    // own batch: it would refuse its own docs and overwrite them empty.
+    val corpus = Seq((1L, words("cw", 30), "base")).toDF("doc_id", "text", "source")
+    val dir = s"${scratch("ingest_probe_replay")}/${System.nanoTime()}"
+    Programs.ingestStoreInit(corpus, dir)
+    val Admitted = ".*/admitted/batch=(\\d+)/?".r
+    def step(b: Long, rows: (Long, String, String)*): Set[Long] =
+      jobsAndReads(Programs.ingestBatchStep(rows.toDF("doc_id", "text", "source"), dir, b,
+          quotaPerSource = 5L, maintainEvery = 4))._2
+        .flatMap(_.rootPaths.map(_.toString)).collect { case Admitted(w) => w.toLong }.toSet
+    def admitted(b: Long) = spark.read.parquet(s"$dir/admitted/batch=$b")
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    val (tA, tB) = (words("aw", 12), words("bw", 12))
+    assert(step(0L, (100L, tA, "s")).isEmpty, "batch 0 has no window")
+    // batch 1 re-delivers batch 0's stored text under a fresh id
+    val first = step(1L, (200L, tA, "s"), (201L, tB, "s"))
+    assert(first == Set(0L) && admitted(1L) == Set(201L),
+      "gate 1 must refuse the re-delivery from the unfolded batch 0")
+    val replay = step(1L, (200L, tA, "s"), (201L, tB, "s"))
+    assert(replay == first, "the replay must read the same window")
+    assert(admitted(1L) == Set(201L), "the replay must admit the same rows")
   }
 
   test("LM step job budget: a probe batch runs 1 job and a fold batch 2") {
