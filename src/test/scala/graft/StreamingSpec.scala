@@ -1308,7 +1308,7 @@ class StreamingSpec extends AnyFunSuite {
     finally spark.listenerManager.unregister(queries)
   }
 
-  test("ingest step job budget: a probe batch runs 12 jobs in 3 executions and a fold batch 19 in 7") {
+  test("ingest step job budget: a probe batch runs 12 jobs and a fold batch 19") {
     // One resolver across the direct step calls, as the stream holds
     // one: each version is resolved once per stream and only while
     // committed. Every batch meets every gate: a re-delivery (gate 1), a near
